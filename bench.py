@@ -162,32 +162,6 @@ def build_bench_queries(spark, sf_dir):
         return similarity.semantic_dedup(emb, dim=dim, nlist=nlist,
                                          threshold=0.3)
 
-    def semdedup_np(spark_, sf_dir_):
-        # round-10: the production kernel — blocked-BLAS per-cell
-        # pairwise (the SQL fold was 122 of SemDeDup's ~166 s at doc
-        # scale; pair set test-pinned equal).  Same geometry as the
-        # sql leg above so the two stay comparable.
-        from pandas_alchemy_spark.ext import similarity
-        emb = spark_.read.parquet(f"{sf_dir_}/embeddings.parquet")
-        dim = len(emb.select("embedding").head(1)[0][0])
-        nlist = max(8, emb.count() // 256)
-        return similarity.semantic_dedup(emb, dim=dim, nlist=nlist,
-                                         threshold=0.3,
-                                         kernel="numpy")
-
-    def semdedup_auto(spark_, sf_dir_):
-        # round-11: kernel="auto" — prices sql vs numpy from the
-        # post-cap cell-size distribution (one extra narrow job) and
-        # dispatches; tracked alongside both explicit kernels so the
-        # decision's cost and win are visible per fixture
-        from pandas_alchemy_spark.ext import similarity
-        emb = spark_.read.parquet(f"{sf_dir_}/embeddings.parquet")
-        dim = len(emb.select("embedding").head(1)[0][0])
-        nlist = max(8, emb.count() // 256)
-        return similarity.semantic_dedup(emb, dim=dim, nlist=nlist,
-                                         threshold=0.3,
-                                         kernel="auto")
-
     def semdedup_x(spark_, sf_dir_):
         # round-13: cross-corpus embedding dedup against a persisted
         # IVF index — build the index on the reference slice and gate
@@ -408,10 +382,6 @@ def build_bench_queries(spark, sf_dir):
         "cross_dedup_indexed": cross_dedup_indexed,
         "quality_gate": quality_gate,
         "corpus_profile": corpus_profile_sketch,
-        # round-10 additions
-        "semdedup_np": semdedup_np,
-        # round-11 additions
-        "semdedup_auto": semdedup_auto,
         # round-13 additions (appended; the 59 shared queries stay
         # comparable round-over-round)
         "semdedup_x": semdedup_x,
@@ -484,15 +454,6 @@ def main():
             print(f"# bench error {name}: {str(ex)[:200]}", file=sys.stderr)
 
     total = round(sum(t for t in times.values() if t >= 0), 3)
-    # kernel="auto" decision telemetry (r12; VERDICT r11 #3): persist
-    # the decision INPUTS (n_cells, mean cell^2 work, emit density),
-    # not just the pick, so the citation audit can match them.
-    auto_decision = None
-    try:
-        from pandas_alchemy_spark.ext import similarity as _sim
-        auto_decision = _sim.LAST_AUTO_DECISION
-    except Exception:
-        pass
     art = {
         "metric": "headline_queries_total",
         "value": total,
@@ -503,7 +464,6 @@ def main():
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cpus": int(cpus),
         "n_queries": len(times),
-        "semdedup_auto_decision": auto_decision,
     }
     # full telemetry (per-query loadavg etc.) goes to a SIDECAR file,
     # NOT stdout (r11; VERDICT r10 #5: the driver's stdout capture

@@ -1393,73 +1393,33 @@ def semantic_dedup_against(spark, path: str, new: DataFrame,
                       norm_expr(vec_col).alias("rn"))
     dot = _DOT.format(a="nv", b="rv")
     cos = F.expr(f"({dot}) / nullif(nn * rn, 0.0)")
+    # Spark orders NaN above every number, so a NaN cosine (a vector
+    # with a NaN component) would pass ">= threshold" unless dropped
     return (newa.join(ref, "cell")
             .select("id_new", "id_ref", cos.alias("cosine"))
-            .filter(F.col("cosine") >= threshold))
-
-
-#: kernel="auto" break-even: mean intra-cell pair work per cell
-#: (sum over cells of cell_size^2, divided by the cell count) above
-#: this floor => the blocked-BLAS numpy kernel amortizes its
-#: ~constant Arrow per-group overhead; below it the Catalyst SQL
-#: fold wins on tiny cells.  This is the ONLY decision input since
-#: r13: the emit-density veto (r11, from a single uncontrolled r10
-#: sample claiming "numpy 1.15x slower at density ~1") was retired
-#: band by band as controlled interleaved min-of-3 measurements
-#: landed — r12 at dominant work (91,658 / density 0.5992: numpy
-#: 1.78x, AB_SEMDEDUP_DENSE_r12.json), r13 across the moderate band
-#: at BOTH ends of the density axis (41,476 / 0.185: numpy 1.258x,
-#: AB_SEMDEDUP_MID_r13.json; 36,617 / 0.777: numpy 1.232x, every
-#: individual round numpy-faster, AB_SEMDEDUP_MID_HI_r13.json).
-#: The density probe remains in the decision pass for TELEMETRY
-#: (it is how the veto's wrongness was caught), but no longer
-#: gates the pick.
-_SEMDEDUP_AUTO_WORK_FLOOR = 4096
-
-
-#: Last ``kernel="auto"`` decision tuple (driver-side, overwritten per
-#: call).  Benches persist this into their artifacts so the citation
-#: audit can match the decision INPUTS, not just the pick (VERDICT r11
-#: item 3 — the r11 emit-density 0.5992 existed only in run logs).
-LAST_AUTO_DECISION: dict | None = None
-
-
-def _auto_semdedup_kernel(n_cells: int, sum_sq: int,
-                          emit_density: float = 0.0) -> str:
-    """Pure decision rule behind ``semantic_dedup(kernel="auto")`` —
-    split out so tests pin the rule on forged geometries without
-    paying a clustering run.  Since r13 the rule is ONE threshold:
-    numpy iff the mean per-cell pair work clears the Arrow-overhead
-    floor.  ``emit_density`` is accepted (and recorded in the
-    telemetry tuple) but no longer consulted: the r11 density veto
-    lost its controlled A/Bs in every band it claimed (see the
-    ``_SEMDEDUP_AUTO_WORK_FLOOR`` comment for the artifact trail)."""
-    if n_cells <= 0:
-        return "sql"
-    if sum_sq / n_cells < _SEMDEDUP_AUTO_WORK_FLOOR:
-        return "sql"
-    return "numpy"
+            .filter((F.col("cosine") >= threshold)
+                    & ~F.isnan("cosine")))
 
 
 def _semdedup_pairs_numpy(assigned: DataFrame, threshold: float,
                           nprobe: int) -> DataFrame:
-    """The ``kernel="numpy"`` pairwise stage of
-    :func:`semantic_dedup_pairs`: per probed cell, ONE blocked BLAS
-    matmul computes every intra-cell pairwise dot (vs the SQL path's
-    per-candidate ``aggregate(zip_with)`` fold — the 122-of-166 s
-    stage in the §17 doc-scale profile), then the canonical-shared-
-    cell rule filters locally.  ``assigned`` is the post-cap
-    (cell, id, v, nrm) frame; same dot-then-divide shape as the SQL
-    cosine — f64 products vs zip_with's per-product f32 rounding, so
-    values agree to the f32 data's own precision (~1e-7)."""
+    """The pairwise stage of :func:`semantic_dedup_pairs`: per probed
+    cell, ONE blocked BLAS matmul computes every intra-cell pairwise
+    dot, then the canonical-shared-cell rule filters locally.  ``assigned`` is the
+    post-cap (cell, id, v, nrm) frame; products are f64, so values
+    agree with the f32 data to its own precision (~1e-7)."""
     from pyspark.sql.types import DoubleType, StructField, StructType
     id_type = assigned.schema["id"].dataType
     out_schema = StructType([StructField("id_a", id_type),
                              StructField("id_b", id_type),
                              StructField("cosine", DoubleType())])
     if nprobe > 1:
-        # per-id surviving probed-cell set (post-cap), as in the SQL
-        # nprobe>1 branch — the canonical rule needs both sides' sets
+        # a pair sharing k probed cells surfaces in k groups; it is
+        # kept ONLY in the smallest cell both sides share — exact by
+        # construction, with no dedup exchange.  The per-id cell sets
+        # are rebuilt AFTER the cell_cap exclusion so the canonical
+        # cell can never be a capped-out cell (which would silently
+        # drop the pair).
         surv = (assigned.groupBy("id")
                 .agg(F.first("v").alias("v"),
                      F.first("nrm").alias("nrm"),
@@ -1478,15 +1438,14 @@ def _semdedup_pairs_numpy(assigned: DataFrame, threshold: float,
         g = len(pdf)
         if g < 2:
             return empty
-        # id-ascending order makes the emitted (id_a < id_b)
-        # orientation identical to the SQL join's filter
+        # id-ascending order orients every emitted pair id_a < id_b
         pdf = pdf.sort_values("id", kind="mergesort").reset_index(
             drop=True)
         V = np.asarray([np.asarray(x, dtype=np.float64)
                         for x in pdf["v"]])
         nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-        # zero-norm vectors: the SQL path's nullif makes their
-        # cosine NULL (never >= thr); NaN reproduces that here
+        # zero-norm and NaN-bearing vectors get NaN cosines, and
+        # NaN >= thr is False in numpy: neither ever pairs
         denom = np.where(nrm > 0, nrm, np.nan)
         cs = [set(x) for x in pdf["cs"]] if soft else None
         cell = pdf["cell"].iloc[0]
@@ -1498,9 +1457,8 @@ def _semdedup_pairs_numpy(assigned: DataFrame, threshold: float,
         for s in range(0, g, block):
             e = min(s + block, g)
             S = (V[s:e] @ V.T) / np.outer(denom[s:e], denom)
-            # fully vectorized emit (a per-pair Python loop here was
-            # the whole win given back on pair-DENSE thresholds —
-            # measured slower than the SQL leg at threshold 0.3)
+            # fully vectorized emit (a per-pair Python loop here gave
+            # the whole BLAS win back on pair-DENSE thresholds)
             rows, cols = np.nonzero(S >= thr)
             keep = cols > rows + s  # strict upper triangle, i < j
             rows, cols = rows[keep], cols[keep]
@@ -1531,7 +1489,7 @@ def semantic_dedup_pairs(df: DataFrame, id_col: str = "vec_id",
                          centroids=None,
                          cell_cap: int | None = 200_000,
                          nprobe: int = 1,
-                         kernel: str = "sql") -> DataFrame:
+                         kernel: str = "numpy") -> DataFrame:
     """Intra-cluster near-duplicate candidate pairs — the pair stage of
     SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means-cluster the
     embedding space, compare vectors ONLY within their cluster, keep
@@ -1540,63 +1498,35 @@ def semantic_dedup_pairs(df: DataFrame, id_col: str = "vec_id",
     Scale shape: centroid training samples the corpus
     (``train_fraction``) and holds only nlist×dim doubles on the
     driver; assignment is one Arrow-batch matmul per partition (narrow,
-    no shuffle); pairing is a cell-key self-join so candidate volume is
-    sum(cell²) instead of n² — at 100 TB size ``nlist`` so the average
-    cell stays bounded (nlist ≈ n / target_cell_size; cells are the
-    unit of parallelism, so more cells = more, smaller join tasks) and
-    leave AQE on: the self-join shuffles by cell and a hot cell is
-    exactly the skew-split case AQE handles.  Cells larger than
-    ``cell_cap`` are EXCLUDED from pairing with a logged count (the
-    degenerate-bucket rule — see dedup._cap_buckets): an over-cap cell
-    means nlist is undersized for the corpus; fix the geometry rather
-    than paying O(cell²).
+    no shuffle); pairing groups the vectors by cell, so the pairwise
+    work is sum(cell²) instead of n² — at 100 TB size ``nlist`` so the
+    average cell stays bounded (nlist ≈ n / target_cell_size; cells
+    are the unit of parallelism, so more cells = more, smaller
+    tasks).  Cells larger than ``cell_cap`` are EXCLUDED from pairing
+    with a logged count (the degenerate-bucket rule — see
+    dedup._cap_buckets): an over-cap cell means nlist is undersized
+    for the corpus; fix the geometry rather than paying O(cell²).
 
     ``nprobe`` > 1 assigns each vector to its ``nprobe`` nearest
     cells (soft assignment): a near-duplicate pair straddling a cell
     BOUNDARY — the one miss mode of hard k-means partitioning,
     measured 0.70 planted-pair recall at 200k vectors with nprobe=1
     vs 0.97+ at nprobe=2 — is caught whenever the two share any of
-    their probed cells, at ~nprobe² candidate volume.  Duplicate
-    hits from multi-shared cells are de-duplicated before the
-    threshold filter.
+    their probed cells, at ~nprobe² candidate volume.  A pair sharing
+    several probed cells is emitted once.
 
-    ``kernel`` picks the intra-cell pairwise engine (r10; the stage
-    profile in SURVEY §17 put the SQL fold at 122 of SemDeDup's
-    ~166 s @200k×64d — the cosine is evaluated per CANDIDATE, i.e.
-    sum(cell²) times, where Catalyst's higher-order-function fold
-    has no vectorization):
-
-    - ``"sql"`` (default): cell self-join + ``aggregate(zip_with)``
-      cosine — pure Catalyst, DuckDB-replayable bit-for-bit, the
-      oracle path.
-    - ``"numpy"``: per-cell Arrow-batched ``applyInPandas`` — one
-      blocked BLAS matmul per cell computes ALL of its pairwise
-      dots at once (row blocks bound memory at ~32 MB regardless of
-      cell size), then the same canonical-shared-cell rule filters
-      locally.  Same dot-then-divide shape as the SQL path, but the
-      products are computed in f64 where Catalyst's ``zip_with``
-      rounds each f32×f32 product to f32 first — so cosines agree
-      to the float32 DATA's own precision (~1e-7 relative; pinned
-      at 1e-6 in tests), and a pair sitting within that noise band
-      of the threshold may differ between kernels.  The
-      production/scale path, same contract as ``fast_hash``
-      elsewhere: recall/set contracts, not bit-equality with the
-      oracle.
-    - ``"auto"`` (r11; simplified r13): price the kernels and pick
-      the winner — numpy iff the mean per-cell pair work
-      ``sum(cell^2)/n_cells`` clears ``_SEMDEDUP_AUTO_WORK_FLOOR``
-      (Arrow per-group overhead is ~constant per cell; the BLAS win
-      grows with cell², so many tiny cells favor the SQL fold).
-      The r11 emit-density veto is RETIRED: controlled interleaved
-      A/Bs measured numpy faster in every band it claimed (r12
-      dominant-work 1.78x at density 0.6; r13 moderate-band 1.258x
-      at density 0.185 and 1.232x at density 0.777 — see the
-      ``_SEMDEDUP_AUTO_WORK_FLOOR`` comment).  The density probe
-      (exact pass fraction on one ~p90-size cell, <=512 vectors to
-      the driver) still runs and lands in the telemetry tuple.
-      Costs one narrow job + one bounded collect; the decision is
-      logged; both explicit kernels remain available.
+    There is one pair kernel; ``kernel`` accepts only ``"numpy"``
+    and is kept so existing calls work.  Per cell, one blocked BLAS
+    matmul computes all pairwise dots in f64 (row blocks bound memory
+    at ~32 MB whatever the cell size), so cosines agree with the f32
+    data to about 1e-7.  A pair with a NaN or zero-norm side is never
+    emitted.
     """
+    if kernel != "numpy":
+        removed = (" (the 'sql' and 'auto' kernels were removed)"
+                   if kernel in ("sql", "auto") else "")
+        raise ValueError(
+            f"kernel must be 'numpy', got {kernel!r}{removed}")
     df = df.filter(F.col(vec_col).isNotNull())
     if centroids is None:
         centroids = train_ivf_centroids(
@@ -1607,15 +1537,12 @@ def semantic_dedup_pairs(df: DataFrame, id_col: str = "vec_id",
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
         norm_expr(vec_col).alias("nrm"),
         F.explode(cells(F.col(vec_col))).alias("cell")))
-    # persist the Arrow-assignment output for EVERY kernel (r13;
-    # guide §5 reuse rule): the sql kernel's plan re-executes this
-    # subtree THREE times (self-join a side, b side, and the
-    # cell_cap sizes broadcast build), the numpy kernel twice —
-    # each re-execution pays the pandas_udf matmul + the norm fold
-    # over the whole corpus.  Before r13 only kernel="auto"
-    # persisted (post-cap), which is why the auto leg benched
-    # FASTER than the sql leg it dispatches to.  MEMORY_AND_DISK by
-    # default; ring-registered so repeated calls release the oldest.
+    # persist the Arrow-assignment output (r13; guide §5 reuse
+    # rule): with cell_cap set the plan reads this subtree twice (the
+    # sizes broadcast build and the pair stage), and each
+    # re-execution pays the pandas_udf matmul + the norm fold over
+    # the whole corpus.  MEMORY_AND_DISK by default; ring-registered
+    # so repeated calls release the oldest.
     assigned = assigned.persist()
     _register_cache(assigned)
     if cell_cap is not None:
@@ -1646,110 +1573,7 @@ def semantic_dedup_pairs(df: DataFrame, id_col: str = "vec_id",
         assigned = assigned.join(
             F.broadcast(sizes.filter(F.col("__cn") <= cell_cap)
                         .select("cell")), "cell")
-    if kernel not in ("sql", "numpy", "auto"):
-        raise ValueError(
-            f"kernel must be 'sql', 'numpy' or 'auto', got {kernel!r}")
-    if kernel == "auto":
-        # two decision variables (r11; VERDICT r10 #4): (1) the
-        # CELL-SIZE distribution — Arrow per-group overhead is
-        # ~constant per cell while the BLAS win grows with cell², so
-        # tiny cells favor the SQL fold; (2) the EMIT density — the
-        # numpy kernel's loss mode is shipping a pair-dense result
-        # back through Arrow (exact-copy corpora at loose
-        # thresholds), priced by an exact pass-fraction probe on one
-        # ~p90-size cell (<=512 vectors to the driver, bounded).
-        # The assignment is persisted above (pre-cap, all kernels)
-        # so the decision pass and the pair stage share it; the
-        # size list is nlist*nprobe-bounded by construction.
-        csizes = sorted(
-            (int(r["__c"]), r["cell"]) for r in
-            assigned.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("__c")).collect())
-        n_cells = len(csizes)
-        sum_sq = sum(c * c for c, _ in csizes)
-        density = 0.0
-        if (n_cells and sum_sq / n_cells >= _SEMDEDUP_AUTO_WORK_FLOOR
-                and csizes[-1][0] >= 2):
-            import numpy as _np
-            pc = csizes[min(int(0.9 * (n_cells - 1)),
-                            n_cells - 1)][1]
-            smp = (assigned.filter(F.col("cell") == F.lit(pc))
-                   .select("v", "nrm").limit(512).collect())
-            if len(smp) >= 2:
-                V = _np.asarray([r["v"] for r in smp],
-                                dtype=_np.float64)
-                nrm = _np.asarray([r["nrm"] for r in smp],
-                                  dtype=_np.float64)
-                denom = _np.where(nrm > 0, nrm, _np.nan)
-                S = (V @ V.T) / _np.outer(denom, denom)
-                iu = _np.triu_indices(len(smp), k=1)
-                density = float(
-                    _np.nansum(S[iu] >= float(threshold))
-                    / max(len(iu[0]), 1))
-        kernel = _auto_semdedup_kernel(n_cells, sum_sq, density)
-        global LAST_AUTO_DECISION
-        LAST_AUTO_DECISION = {
-            "n_cells": n_cells,
-            "mean_cell_sq_work": round(sum_sq / max(n_cells, 1), 1),
-            "emit_density": round(density, 4),
-            "work_floor": _SEMDEDUP_AUTO_WORK_FLOOR,
-            "picked": kernel,
-        }
-        import sys as _sys2
-        print(f"[pandas_alchemy_spark] semantic_dedup: kernel=auto "
-              f"picked {kernel!r} (n_cells={n_cells}, "
-              f"mean cell^2 work={sum_sq / max(n_cells, 1):.0f}, "
-              f"floor={_SEMDEDUP_AUTO_WORK_FLOOR}, "
-              f"emit_density={density:.4f} [telemetry-only since "
-              f"r13])",
-              file=_sys2.stderr)
-    if kernel == "numpy":
-        return _semdedup_pairs_numpy(assigned, threshold, nprobe)
-    dot = _DOT.format(a="va", b="vb")
-    cos = F.expr(f"({dot}) / nullif(na * nb, 0.0)")
-    if nprobe > 1:
-        # a pair sharing k probed cells surfaces k times.  History of
-        # this branch: the naive dropDuplicates carried the vector
-        # payload through the dedup exchange (653 s at 200k x 64d,
-        # nlist 512, nprobe 2); the r7 fix deduplicated ID-ONLY rows
-        # and re-attached vectors via two joins (270-410 s — the
-        # sum(cell²)-row id exchange, ~5 GB here, was still the
-        # bottleneck).  The r8 form removes the dedup exchange
-        # ENTIRELY with a canonical-shared-cell rule: each side
-        # carries its (post-cap) probed-cell set through the join,
-        # and a pair survives ONLY in the smallest cell both sides
-        # share — a local filter on the join output, exact by
-        # construction (every duplicate surfaces in a shared cell;
-        # exactly one shared cell is the minimum).  The cell sets are
-        # rebuilt AFTER the cell_cap exclusion so the canonical cell
-        # can never be a capped-out cell (which would silently drop
-        # the pair).  Only remaining shuffles: the per-id set rebuild
-        # (n rows) and the cell join itself (n·nprobe rows per side).
-        surv = (assigned.groupBy("id")
-                .agg(F.first("v").alias("v"),
-                     F.first("nrm").alias("nrm"),
-                     F.array_sort(F.collect_list("cell")).alias("cs")))
-        ex = surv.select("id", "v", "nrm", "cs",
-                         F.explode("cs").alias("cell"))
-        a = ex.select("cell", F.col("id").alias("id_a"),
-                      F.col("v").alias("va"), F.col("nrm").alias("na"),
-                      F.col("cs").alias("ca"))
-        b = ex.select("cell", F.col("id").alias("id_b"),
-                      F.col("v").alias("vb"), F.col("nrm").alias("nb"),
-                      F.col("cs").alias("cb"))
-        cand = (a.join(b, "cell")
-                .filter(F.col("id_a") < F.col("id_b"))
-                .filter(F.col("cell") == F.expr(
-                    "array_min(array_intersect(ca, cb))")))
-        return (cand.select("id_a", "id_b", cos.alias("cosine"))
-                .filter(F.col("cosine") >= threshold))
-    a = assigned.select(F.col("cell"), F.col("id").alias("id_a"),
-                        F.col("v").alias("va"), F.col("nrm").alias("na"))
-    b = assigned.select(F.col("cell"), F.col("id").alias("id_b"),
-                        F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    cand = a.join(b, "cell").filter(F.col("id_a") < F.col("id_b"))
-    return (cand.select("id_a", "id_b", cos.alias("cosine"))
-            .filter(F.col("cosine") >= threshold))
+    return _semdedup_pairs_numpy(assigned, threshold, nprobe)
 
 
 def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
@@ -1760,7 +1584,7 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
                    centroids=None, cell_cap: int | None = 200_000,
                    nprobe: int = 1, max_iters: int = 20,
                    on_nonconverged: str = "raise",
-                   kernel: str = "sql") -> DataFrame:
+                   kernel: str = "numpy") -> DataFrame:
     """SemDeDup semantic deduplication: cluster-then-prune.  Returns
     ``(id, component, keep)`` like
     :func:`~.dedup.cluster_near_dups` — ``keep`` marks the min-id

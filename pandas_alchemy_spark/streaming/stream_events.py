@@ -563,9 +563,11 @@ def streaming_semantic_dedup_against(stream: DataFrame,
                     F.explode(cells(F.col(vec_col))).alias("cell")))
     dot = _DOT.format(a="nv", b="rv")
     cos = F.expr(f"({dot}) / nullif(nn * rn, 0.0)")
+    # NaN cosines dropped as in the batch twin (Spark: NaN >= t)
     out = (newa.join(ref, "cell")
            .select("id_new", "id_ref", cos.alias("cosine"))
-           .filter(F.col("cosine") >= threshold))
+           .filter((F.col("cosine") >= threshold)
+                   & ~F.isnan("cosine")))
     out._pas_pin_scope = pin_scope
     return out
 

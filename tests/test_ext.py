@@ -2090,12 +2090,62 @@ def test_reference_index_append_equals_rebuild(spark, docs):
         i.release()
 
 
+def _semdedup_pairs_sql(df, centroids, threshold, nprobe=1,
+                        id_col="vec_id", vec_col="embedding"):
+    """Oracle for ``similarity.semantic_dedup_pairs``: the cell
+    self-join + ``aggregate(zip_with)`` cosine fold that was the
+    product's default pair stage before the blocked-BLAS kernel became
+    the only one.  Pure Catalyst (DuckDB-replayable), no ``cell_cap``.
+
+    It keeps Spark's NaN ordering: ``NaN >= threshold`` is true, so a
+    vector with a NaN component pairs with every vector in its cell.
+    The product never emits NaN or zero-norm pairs, so compare the two
+    on finite input only."""
+    from pandas_alchemy_spark.ext.similarity import (
+        _DOT, _assign_cells_udf, norm_expr)
+    df = df.filter(F.col(vec_col).isNotNull())
+    cells = _assign_cells_udf(centroids, nprobe=nprobe)
+    assigned = (df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+        norm_expr(vec_col).alias("nrm"),
+        F.explode(cells(F.col(vec_col))).alias("cell")))
+    dot = _DOT.format(a="va", b="vb")
+    cos = F.expr(f"({dot}) / nullif(na * nb, 0.0)")
+    if nprobe > 1:
+        # canonical-shared-cell rule: a pair survives ONLY in the
+        # smallest cell both sides share
+        surv = (assigned.groupBy("id")
+                .agg(F.first("v").alias("v"),
+                     F.first("nrm").alias("nrm"),
+                     F.array_sort(F.collect_list("cell")).alias("cs")))
+        ex = surv.select("id", "v", "nrm", "cs",
+                         F.explode("cs").alias("cell"))
+        a = ex.select("cell", F.col("id").alias("id_a"),
+                      F.col("v").alias("va"), F.col("nrm").alias("na"),
+                      F.col("cs").alias("ca"))
+        b = ex.select("cell", F.col("id").alias("id_b"),
+                      F.col("v").alias("vb"), F.col("nrm").alias("nb"),
+                      F.col("cs").alias("cb"))
+        cand = (a.join(b, "cell")
+                .filter(F.col("id_a") < F.col("id_b"))
+                .filter(F.col("cell") == F.expr(
+                    "array_min(array_intersect(ca, cb))")))
+        return (cand.select("id_a", "id_b", cos.alias("cosine"))
+                .filter(F.col("cosine") >= threshold))
+    a = assigned.select(F.col("cell"), F.col("id").alias("id_a"),
+                        F.col("v").alias("va"), F.col("nrm").alias("na"))
+    b = assigned.select(F.col("cell"), F.col("id").alias("id_b"),
+                        F.col("v").alias("vb"), F.col("nrm").alias("nb"))
+    cand = a.join(b, "cell").filter(F.col("id_a") < F.col("id_b"))
+    return (cand.select("id_a", "id_b", cos.alias("cosine"))
+            .filter(F.col("cosine") >= threshold))
+
+
 def test_semantic_dedup_numpy_kernel_matches_sql(spark, emb):
-    """kernel="numpy" (r10; SURVEY §17 profile put the SQL fold at
-    122 of SemDeDup's ~166 s @200k×64d): the blocked-BLAS per-cell
-    pairwise must produce the SAME pair set as the SQL path at both
-    hard and soft assignment, cosines within the f32 data's own
-    precision (1e-6), and identical end-to-end labels/keep sets."""
+    """The blocked-BLAS pair kernel must produce the SAME pair set as
+    the SQL oracle at both hard and soft assignment, cosines within
+    the f32 data's own precision (1e-6), and the same end-to-end
+    labels/keep sets as components over the oracle's pairs."""
     base = emb.select("vec_id", "embedding")
     copies = base.limit(12).select(
         (F.col("vec_id") + 900000).alias("vec_id"), "embedding")
@@ -2103,29 +2153,83 @@ def test_semantic_dedup_numpy_kernel_matches_sql(spark, emb):
     dim = len(base.take(1)[0]["embedding"])
     cents = similarity.train_ivf_centroids(corpus, dim=dim, nlist=8)
     for nprobe in (1, 2):
-        sa = {(r.id_a, r.id_b): r.cosine
-              for r in similarity.semantic_dedup_pairs(
-                  corpus, dim=dim, nlist=8, threshold=0.8,
-                  nprobe=nprobe, centroids=cents).collect()}
+        oracle = _semdedup_pairs_sql(corpus, cents, 0.8, nprobe=nprobe)
+        sa = {(r.id_a, r.id_b): r.cosine for r in oracle.collect()}
         sb = {(r.id_a, r.id_b): r.cosine
               for r in similarity.semantic_dedup_pairs(
                   corpus, dim=dim, nlist=8, threshold=0.8,
-                  nprobe=nprobe, centroids=cents,
-                  kernel="numpy").collect()}
+                  nprobe=nprobe, centroids=cents).collect()}
         assert sa.keys() == sb.keys() and sa
         assert all(abs(sa[k] - sb[k]) < 1e-6 for k in sa)
-    la = (similarity.semantic_dedup(
-        corpus, dim=dim, nlist=8, threshold=0.8, nprobe=2,
-        centroids=cents).toPandas().set_index("id").sort_index())
+    comp = dedup.connected_components(oracle, src="id_a", dst="id_b")
+    la = (corpus.select(F.col("vec_id").alias("id"))
+          .join(comp, "id", "left")
+          .select("id", F.coalesce("component", F.col("id"))
+                  .alias("component"))
+          .toPandas().set_index("id").sort_index())
     lb = (similarity.semantic_dedup(
         corpus, dim=dim, nlist=8, threshold=0.8, nprobe=2,
-        centroids=cents, kernel="numpy").toPandas()
-        .set_index("id").sort_index())
+        centroids=cents).toPandas().set_index("id").sort_index())
+    assert (la.index == lb.index).all()
     assert (la.component == lb.component).all()
-    assert (la.keep == lb.keep).all()
-    with pytest.raises(ValueError, match="kernel"):
-        similarity.semantic_dedup_pairs(corpus, dim=dim, nlist=8,
-                                        kernel="blas")
+    assert (lb.keep == (lb.index == lb.component)).all()
+    assert (~lb.keep).any()
+
+
+def test_semantic_dedup_drops_nan_and_zero_vectors(spark):
+    """A vector with one NaN component, or all zeros, has no defined
+    cosine and must pair with nothing.  (Spark orders NaN above every
+    number, so a ``cosine >= threshold`` filter alone lets a NaN
+    vector pair with its whole cell.)"""
+    rng = np.random.default_rng(5)
+    vecs = rng.standard_normal((20, 8))
+    vecs[19] = vecs[3] * 1.0001 + 1e-4     # one planted near-copy
+    vecs[5, 2] = np.nan
+    vecs[7] = 0.0
+    sdf = spark.createDataFrame(
+        [(i, v.astype(np.float32).tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>")
+    cents = [[1.0] + [0.0] * 7, [-1.0] + [0.0] * 7]
+    V = vecs.astype(np.float32).astype(np.float64)
+    nrm = np.linalg.norm(V, axis=1)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        S = (V @ V.T) / np.outer(nrm, nrm)
+    cell = np.argmax(V @ np.asarray(cents).T, axis=1)
+    for nprobe in (1, 2):
+        want = {(i, j) for i in range(20) for j in range(i + 1, 20)
+                if S[i, j] >= 0.9 and (nprobe == 2 or cell[i] == cell[j])}
+        got = similarity.semantic_dedup_pairs(
+            sdf, dim=8, threshold=0.9, centroids=cents,
+            nprobe=nprobe).toPandas()
+        assert set(zip(got.id_a, got.id_b)) == want == {(3, 19)}
+        assert np.isfinite(got.cosine).all()
+    lab = similarity.semantic_dedup(sdf, dim=8, threshold=0.9,
+                                    centroids=cents).toPandas()
+    assert len(lab) == 20
+    assert set(lab[~lab.keep].id) == {19}
+
+
+def test_semdedup_bad_kernel_raises_before_spark_work(spark, emb):
+    """``kernel`` accepts only "numpy".  Any other value raises before
+    centroid training, the assignment persist or any Spark job."""
+    sc = spark.sparkContext
+    corpus = emb.select("vec_id", "embedding")
+    ring = [id(x) for x in similarity._CACHE_RING]
+    group = "semdedup-bad-kernel"
+    sc.setJobGroup(group, "kernel validation")
+    try:
+        for fn in (similarity.semantic_dedup_pairs,
+                   similarity.semantic_dedup):
+            for bad in ("blas", "av"):
+                with pytest.raises(ValueError, match="kernel must be"):
+                    fn(corpus, dim=64, nlist=8, kernel=bad)
+            for gone in ("sql", "auto"):
+                with pytest.raises(ValueError, match="removed"):
+                    fn(corpus, dim=64, nlist=8, kernel=gone)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert [id(x) for x in similarity._CACHE_RING] == ring
 
 
 # ---------------------------------------------------------------------------
@@ -2276,53 +2380,6 @@ def test_langid_classifier_null_text_and_agreement(spark,
                               .alias("lang_heur")), "doc_id"))
     agree = both.filter("lang_pred = lang_heur").count() / both.count()
     assert agree >= 0.9, agree
-
-
-def test_semdedup_auto_kernel(spark, emb):
-    """kernel='auto' (r11): the pure decision rule picks numpy for
-    big-cell geometries and sql for tiny-cell ones, and the auto
-    path produces the same keep set as both explicit kernels."""
-    from pandas_alchemy_spark.ext.similarity import (
-        _SEMDEDUP_AUTO_WORK_FLOOR, _auto_semdedup_kernel)
-    # forged geometries around the floor
-    assert _auto_semdedup_kernel(0, 0) == "sql"
-    assert _auto_semdedup_kernel(
-        100, 100 * (_SEMDEDUP_AUTO_WORK_FLOOR - 1)) == "sql"
-    assert _auto_semdedup_kernel(
-        100, 100 * _SEMDEDUP_AUTO_WORK_FLOOR) == "numpy"
-    # tiny cells -> sql; a few fat cells -> numpy
-    assert _auto_semdedup_kernel(10_000, 10_000 * 4) == "sql"
-    assert _auto_semdedup_kernel(4, 4 * 300 * 300) == "numpy"
-    # the density veto is RETIRED (r13): above the work floor the
-    # pick is numpy at ANY emit density — the controlled moderate-
-    # band A/Bs measured numpy 1.258x at density 0.185 and 1.232x at
-    # density 0.777 (AB_SEMDEDUP_MID_r13.json /
-    # AB_SEMDEDUP_MID_HI_r13.json), closing the r11 veto's last band
-    mod = 4 * 40_000  # squarely inside the former moderate band
-    assert _auto_semdedup_kernel(4, mod, 0.0) == "numpy"
-    assert _auto_semdedup_kernel(4, mod, 0.5) == "numpy"
-    assert _auto_semdedup_kernel(4, mod, 1.0) == "numpy"
-    # RECORDED geometries (artifact-backed): r12 exact-copy/dense
-    # (AB_SEMDEDUP_DENSE_r12.json), r12 near-dup/sparse
-    # (BENCH_r12_dedup_sf10.json), and both r13 mid-band fixtures
-    assert _auto_semdedup_kernel(760, 760 * 91657.9, 0.5992) == "numpy"
-    assert _auto_semdedup_kernel(
-        512, 512 * 624467.0, 0.0) == "numpy"  # sparse, fat cells
-    assert _auto_semdedup_kernel(502, 502 * 41475.7, 0.185) == "numpy"
-    assert _auto_semdedup_kernel(402, 402 * 36616.9, 0.777) == "numpy"
-    corpus = emb.select("vec_id", "embedding")
-    dim = len(corpus.take(1)[0]["embedding"])
-    cents = similarity.train_ivf_centroids(corpus, dim=dim, nlist=8)
-    frames = {k: similarity.semantic_dedup(
-        corpus, dim=dim, nlist=8, threshold=0.3, centroids=cents,
-        kernel=k).toPandas().set_index("id").sort_index()
-        for k in ("auto", "sql", "numpy")}
-    # both kernels agree on this fixture, so auto matches whichever
-    # side of the floor the geometry lands on
-    assert (frames["sql"].keep == frames["numpy"].keep).all()
-    assert (frames["auto"].keep == frames["sql"].keep).all()
-    with pytest.raises(ValueError, match="kernel"):
-        similarity.semantic_dedup_pairs(corpus, dim=dim, kernel="av")
 
 
 def test_reference_index_deep_append_chain_and_compaction(spark, docs):
@@ -2567,28 +2624,6 @@ def test_build_ivf_index_append_mode_merges_accounting(
     got = search_ivf_index(spark, path, qs, k=3, nprobe=8).collect()
     assert {r["query_id"] for r in got} == {
         r["vec_id"] for r in qs.collect()}
-
-
-def test_semdedup_auto_decision_telemetry(spark, emb):
-    """kernel='auto' records its decision tuple (inputs AND pick) in
-    similarity.LAST_AUTO_DECISION so benches persist it into their
-    artifacts (r12; VERDICT r11 #3 — the r11 emit-density existed
-    only in run logs and the citation audit could not match it)."""
-    similarity.LAST_AUTO_DECISION = None
-    lab = similarity.semantic_dedup(
-        emb, dim=len(emb.take(1)[0]["embedding"]), nlist=8,
-        threshold=0.3, kernel="auto")
-    lab.count()
-    d = similarity.LAST_AUTO_DECISION
-    assert d is not None
-    assert set(d) == {"n_cells", "mean_cell_sq_work", "emit_density",
-                      "work_floor", "picked"}
-    assert d["picked"] in ("sql", "numpy")
-    from pandas_alchemy_spark.ext.similarity import (
-        _auto_semdedup_kernel)
-    assert d["picked"] == _auto_semdedup_kernel(
-        d["n_cells"], d["mean_cell_sq_work"] * d["n_cells"],
-        d["emit_density"])
 
 
 def test_reference_index_tombstone_append_compact_append(spark, docs):

@@ -1138,6 +1138,8 @@ def test_streaming_semantic_dedup_against_batch_twin(spark, tmp_path):
     new_rows += [(2000 + i,
                   rng.standard_normal(16).astype(float).tolist())
                  for i in range(10)]
+    # a NaN component leaves the cosine undefined: never a pair
+    new_rows.append((3000, [float("nan")] + ref_rows[0][1][1:]))
     nd = tmp_path / "wave"
     spark.createDataFrame(
         new_rows, "vec_id long, embedding array<float>") \
@@ -1161,6 +1163,7 @@ def test_streaming_semantic_dedup_against_batch_twin(spark, tmp_path):
                 spark, idx, spark.read.parquet(str(nd)),
                 threshold=0.5, nprobe=2).collect()}
     assert got == want
+    assert 3000 not in {a for a, _, _ in got}
     # every planted near-copy is gated against its source
     assert {(1000 + i, i) for i in range(0, 40, 2)} <= {
         (a, b) for a, b, _ in got}

@@ -113,7 +113,7 @@ def main():
     # this measures exactly what the driver's bench sees
     import bench as _bench
     qs = _bench.build_bench_queries(spark, "/root/testdata/sf0.1")
-    for name in ("semdedup", "semdedup_np", "semdedup_auto"):
+    for name in ("semdedup",):
         times = {"driver": [], "dist": []}
         for _ in range(3):
             for leg, floor in (("driver", default_floor), ("dist", 0)):

@@ -155,43 +155,6 @@ def main():
 
     run("semantic_dedup", _sd)
 
-    # r10: kernel="numpy" — the §17 stage profile put 122 of the
-    # ~166 s in the SQL per-candidate cosine fold; the blocked-BLAS
-    # per-cell kernel computes each cell's pairwise dots in one
-    # matmul (pair set pinned equal in tests).  The SQL leg above
-    # stays as the oracle-replayable comparable; this leg times the
-    # production path end to end (own centroid training included).
-    def _sd_np():
-        sd_holder["lab_np"] = similarity.semantic_dedup(
-            emb, dim=dim, nlist=512, threshold=0.93, cell_cap=20_000,
-            nprobe=2, kernel="numpy")
-        noop(sd_holder["lab_np"])
-
-    run("semantic_dedup_numpy", _sd_np)
-
-    # r11: kernel="auto" must pick the WINNER on this fixture (the
-    # decision is logged by the operator; the artifact records which
-    # kernel it chose so the calibration is auditable per fixture)
-    def _sd_auto():
-        import io
-        from contextlib import redirect_stderr
-        buf = io.StringIO()
-        with redirect_stderr(buf):
-            lab = similarity.semantic_dedup(
-                emb, dim=dim, nlist=512, threshold=0.93,
-                cell_cap=20_000, nprobe=2, kernel="auto")
-            noop(lab)
-        msg = buf.getvalue()
-        sys.stderr.write(msg)
-        m = re.search(r"picked '(\w+)'", msg)
-        extra["semdedup_auto_picked"] = m.group(1) if m else None
-        # r12 (VERDICT r11 #3): persist the decision tuple — inputs
-        # AND pick — so the calibration numbers cited in SURVEY are
-        # artifact-backed, not log-only.
-        extra["semdedup_auto_decision"] = similarity.LAST_AUTO_DECISION
-
-    run("semantic_dedup_auto", _sd_auto)
-
     # --- recall at document scale (VERDICT r6 item 1): the
     # planes="auto" geometry fix is only time-verified at the scale it
     # exists for.  ~200 sampled query vectors, brute-force cosine
@@ -351,24 +314,6 @@ def main():
             kept = sd_holder["lab"].filter("keep").count()
             extra["semdedup_n_kept"] = int(kept)
             extra["semdedup_n_vecs"] = int(n_vecs)
-        # the numpy-kernel leg must hold the SAME recall contract
-        # (r10; its pair set is test-pinned equal, but this run's
-        # centroids are trained independently — the recall is the
-        # honest end-to-end check)
-        if sd_holder.get("lab_np") is not None:
-            lab = sd_holder["lab_np"]
-            la = lab.select(F.col("id").alias("id_a"),
-                            F.col("component").alias("ca"))
-            lb = lab.select(F.col("id").alias("id_b"),
-                            F.col("component").alias("cb"))
-            agg = (pl.join(la, "id_a").join(lb, "id_b")
-                   .agg(F.count(F.lit(1)).alias("n"),
-                        F.sum((F.col("ca") == F.col("cb"))
-                              .cast("long")).alias("hit")).first())
-            extra["semdedup_np_planted_recall"] = round(
-                (agg["hit"] or 0) / max(agg["n"], 1), 4)
-            extra["semdedup_np_n_kept"] = int(
-                lab.filter("keep").count())
     extra["recall_n_queries"] = n_q
 
     total = round(sum(t for t in times.values() if t >= 0), 2)

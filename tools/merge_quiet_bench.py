@@ -53,11 +53,6 @@ def main():
         "sf": runs[0].get("sf"),
         "cpus": runs[0].get("cpus"),
         "n_queries": len(queries),
-        # r12 (VERDICT r11 #3): the auto-kernel decision tuple rides
-        # into the quiet artifact too (per-run, they should agree —
-        # the decision is a pure function of the data's geometry)
-        "semdedup_auto_decision_per_run": [
-            r.get("semdedup_auto_decision") for r in runs],
         # r12: per-run samples, not just the min — jitter-band
         # adjudications (e.g. the r11 semdedup watch item) need the
         # spread to be artifact-backed, not quoted from run logs

@@ -6,12 +6,12 @@ prefixes of the pipeline, so stage cost = t_k - t_{k-1} (no persists;
 each materialization recomputes its prefix, which is exactly what the
 un-cached operator pays).
 
-Stages mirror ext/similarity.py semantic_dedup_pairs (nprobe=2
-branch, similarity.py:860) + semantic_dedup's components/label join:
+Stages mirror ext/similarity.py semantic_dedup_pairs (nprobe=2)
++ semantic_dedup's components/label join:
   1 train     train_ivf_centroids (sampled k-means, driver matmul)
   2 assign    soft cell assignment + cell_cap exclusion join
   3 surv      per-id surviving-cell-set rebuild (groupBy, carries v)
-  4 pairs     cell self-join + canonical-cell filter + exact cosine
+  4 pairs     per-cell BLAS pairwise + canonical-cell filter
   5 cc        connected_components over the pairs
   6 label     left-join labels back to all ids (+ keep flag)
 
@@ -49,7 +49,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     from pandas_alchemy_spark.ext import dedup, similarity
     from pandas_alchemy_spark.ext.similarity import (
-        _DOT, _assign_cells_udf, norm_expr, train_ivf_centroids)
+        _assign_cells_udf, norm_expr, train_ivf_centroids)
 
     emb = spark.read.parquet(f"{docs_dir}/embeddings.parquet")
     emb.count()  # warm footers
@@ -70,7 +70,7 @@ def main():
         emb, dim=dim, nlist=NLIST)))
     cents = cents_holder["c"]
 
-    # mirrors semantic_dedup_pairs(nprobe=2) — similarity.py:860
+    # mirrors semantic_dedup_pairs(nprobe=2)
     def assigned_frame():
         df = emb.filter(F.col("embedding").isNotNull())
         cells = _assign_cells_udf(cents, nprobe=NPROBE)

@@ -1,6 +1,6 @@
-"""Per-stage timing of the BENCH semdedup legs at sf0.1 geometry
-(nlist = n/256, threshold 0.3, nprobe 1) — where do the ~8.7 s of the
-sql leg go?  Cumulative-prefix method (stage cost = t_k - t_{k-1}, no
+"""Per-stage timing of the BENCH semdedup leg at sf0.1 geometry
+(nlist = n/256, threshold 0.3, nprobe 1) — where does its time go?
+Cumulative-prefix method (stage cost = t_k - t_{k-1}, no
 persists beyond what the operator itself does), same as
 tools/profile_semdedup.py but at the bench fixture and bench params.
 
@@ -70,13 +70,13 @@ def main():
     stages["2_assign_once"] = round(time.perf_counter() - t0, 3)
     reset()
 
-    # pair stage alone (sql kernel), via the public API with
-    # precomputed centroids — includes cap + self-join + fold
+    # pair stage alone, via the public API with precomputed
+    # centroids — includes cap + per-cell pair kernel
     t0 = time.perf_counter()
     pairs = similarity.semantic_dedup_pairs(
         emb, dim=dim, nlist=nlist, threshold=0.3, centroids=cents)
     noop(pairs)
-    stages["3_pairs_sql"] = round(time.perf_counter() - t0, 3)
+    stages["3_pairs"] = round(time.perf_counter() - t0, 3)
     reset()
 
     # pairs + connected components
@@ -94,14 +94,7 @@ def main():
     out = similarity.semantic_dedup(emb, dim=dim, nlist=nlist,
                                     threshold=0.3)
     noop(out)
-    stages["5_full_sql"] = round(time.perf_counter() - t0, 3)
-    reset()
-
-    t0 = time.perf_counter()
-    out = similarity.semantic_dedup(emb, dim=dim, nlist=nlist,
-                                    threshold=0.3, kernel="numpy")
-    noop(out)
-    stages["6_full_numpy"] = round(time.perf_counter() - t0, 3)
+    stages["5_full"] = round(time.perf_counter() - t0, 3)
     reset()
 
     art = {"sf_dir": sf_dir, "n": n, "dim": dim, "nlist": nlist,
