@@ -164,6 +164,28 @@ class BaseFrame:
         scalable partition-offset variant, not a global window."""
         return with_rowid(sdf, name)
 
+    def _value_at(self, row: int, col: int):
+        """Scalar at positional (row, data column ``col``) — the ``iat``
+        body of DataFrame and Series (reference alchemy.py:146-163,
+        374-383): a rowid filter + take(1) rather than LIMIT/OFFSET.
+        ``len()`` runs only for a negative row, or to build pandas'
+        out-of-range message once take(1) comes back empty."""
+        size = len(self) if row < 0 else None
+        pos = row if size is None else row + size
+        rows = []
+        if pos >= 0:
+            body = self._sdf
+            if self._positional_reordered():
+                body = body.orderBy(F.col(I.idx_name(0)).asc())
+            rows = (with_rowid(body, I.ROWID)
+                    .filter(F.col(I.ROWID) == pos)
+                    .select(I.col_name(col)).take(1))
+        if not rows:
+            size = len(self) if size is None else size
+            raise IndexError(f"index {row} is out of bounds for "
+                             f"axis 0 with size {size}")
+        return rows[0][0]
+
     def _densify(self) -> None:
         """Replace a provisional mid-index with contiguous 0-based
         rowids in current physical order (one O(#partitions) count
@@ -184,6 +206,17 @@ class BaseFrame:
         order = [I.idx_name(0)] + [c for c in body.columns]
         self._sdf = rid.select(*order)
         self._mid_index = False
+
+    def _to_index_order(self) -> None:
+        """Put the plan in index order and densify a mid, in place, so
+        that 0-based positions follow the rows export shows and keep
+        pandas' positional labels (iloc[10:15] shows index 10..14, and
+        the positions become real index values before a selection
+        rather than being re-ranked within it at export)."""
+        if self._positional_reordered():
+            self._sdf = self._sdf.orderBy(F.col(I.idx_name(0)).asc())
+            self._rows_reordered = False
+        self._densify()
 
     def _densified(self) -> "BaseFrame":
         if not self._mid_index:

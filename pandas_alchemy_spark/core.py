@@ -33,7 +33,6 @@ from . import base, generic, internal as I, ops_mixin, utils
 from .functions import coercion
 from .indexer import (_AtIndexer, _iAtIndexer, _iLocIndexer,
                       _LocIndexer)
-from .operators.rowid import with_rowid
 from .relational import (RelationalMixin, ReshapeMixin,
                          SeriesAggMixin, SeriesRelationalMixin)
 from .session import get_session
@@ -292,8 +291,8 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         return _LocIndexer(self)
 
     def _get_value(self, index, col, takeable=False):
-        """Scalar at (row, col) (reference alchemy.py:146-163) — rowid
-        filter + take(1) rather than LIMIT/OFFSET."""
+        """Scalar at (row, col) (reference alchemy.py:146-163) — see
+        ``BaseFrame._value_at``; no row count for ``index >= 0``."""
         if not takeable:
             raise NotImplementedError
         col = utils.wrap(col, self._n_cols())
@@ -302,17 +301,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             # (reference alchemy.py:149-155).
             raise IndexError(f"index {col} is out of bounds for "
                              f"axis 0 with size {self._n_cols()}")
-        row_count = len(self)
-        index = utils.wrap(index, row_count)
-        if index < 0 or index >= row_count:
-            raise IndexError(f"index {index} is out of bounds for "
-                             f"axis 0 with size {row_count}")
-        body = self._sdf
-        if self._positional_reordered():
-            body = body.orderBy(F.col(I.idx_name(0)).asc())
-        rid = with_rowid(body, I.ROWID)
-        rows = rid.filter(F.col(I.ROWID) == index).select(I.col_name(col)).take(1)
-        return rows[0][0]
+        return self._value_at(index, col)
 
     # -- the broadcast dispatch (9 rules) ---------------------------------
 
@@ -1541,21 +1530,12 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         return _LocIndexer(self)
 
     def _get_value(self, label, takeable=False):
-        # reference alchemy.py:374-383; note the reference's off-by-one
-        # (`label > row_count`) is fixed to `>=` per SURVEY.md §2.6.
+        """Scalar at position ``label`` (reference alchemy.py:374-383;
+        its off-by-one ``label > row_count`` is gone, SURVEY.md §2.6) —
+        see ``BaseFrame._value_at``; no row count for ``label >= 0``."""
         if not takeable:
             raise NotImplementedError
-        row_count = len(self)
-        label = utils.wrap(label, row_count)
-        if label < 0 or label >= row_count:
-            raise IndexError(f"index {label} is out of bounds for "
-                             f"axis 0 with size {row_count}")
-        body = self._sdf
-        if self._positional_reordered():
-            body = body.orderBy(F.col(I.idx_name(0)).asc())
-        rid = with_rowid(body, I.ROWID)
-        rows = rid.filter(F.col(I.ROWID) == label).select(I.col_name(0)).take(1)
-        return rows[0][0]
+        return self._value_at(label, 0)
 
     # -- broadcast dispatch ------------------------------------------------
 

@@ -82,13 +82,16 @@ class GenericMixin:
             self._lineage = None
 
     @copied
-    def head(self, n: int = 5) -> None:
+    def head(self, n: int = 5):
         # LIMIT n (reference generic.py:46-48).  When the plan was
         # reordered under a positional index (window verbs, joins) the
         # limit must follow index order or head() returns different
         # rows than to_pandas()'s first rows — orderBy+limit compiles
         # to TakeOrderedAndProject, a one-pass top-k, never a full
         # sort.  The common scan path keeps the early-exit LIMIT.
+        # Negative n: all rows but the last |n| (pandas contract).
+        if n < 0:
+            return self.iloc[:n]
         if self._positional_reordered():
             self._sdf = self._sdf.orderBy(
                 F.col(I.idx_name(0)).asc()).limit(n)
@@ -97,35 +100,31 @@ class GenericMixin:
         self._drop_lineage()
 
     @copied
-    def tail(self, n: int = 5) -> None:
-        """Last n rows.  The reference does count() + LIMIT/OFFSET — two
-        queries (generic.py:50-57).  Dense-mid frames (true file
-        positions) do it in ONE pass: top-n by rowid descending
-        compiles to TakeOrderedAndProject, and export re-sorts
-        ascending client-side — no count job at all.  Other frames
-        keep the count + rowid-predicate form."""
-        if (getattr(self, "_mid_dense", False)
-                and not self._explicit_order):
+    def tail(self, n: int = 5):
+        """Last n rows, as one lazy top-n: the reference's count() +
+        LIMIT/OFFSET (generic.py:50-57) becomes a TakeOrderedAndProject
+        in the final query, and the verb itself runs no job (except the
+        count pass that densifies a monotonic mid, which keeps pandas'
+        positional labels).  When export re-sorts by the index, the
+        top n by index descending are the last rows; otherwise export
+        follows plan order, so each row is tagged with its
+        monotonically_increasing_id (plan order, partition by
+        partition), the top n tags taken and re-sorted ascending.
+        Negative n: all rows but the first |n| (pandas contract)."""
+        if n < 0:
+            return self.iloc[-n:]
+        if getattr(self, "_mid_index", False):
+            self._to_index_order()
+        if self._positional_export():
             self._sdf = self._sdf.orderBy(
                 F.col(I.idx_name(0)).desc()).limit(n)
             self._rows_reordered = True  # plan is desc; export resorts
-            self._drop_lineage()
-            return
-        if self._positional_reordered():
-            # rowids below must be assigned in INDEX order, not the
-            # reordered plan order
-            self._sdf = self._sdf.orderBy(F.col(I.idx_name(0)).asc())
-            self._rows_reordered = False
-        if getattr(self, "_mid_index", False):
-            # positional parity: tail keeps the original index values
-            self._densify()
-        total = self._sdf.count()
-        skip = max(0, total - n)
-        if skip == 0:
-            return
-        from .operators.rowid import with_rowid
-        rid = with_rowid(self._sdf, I.ROWID)
-        self._sdf = rid.filter(F.col(I.ROWID) >= skip).drop(I.ROWID)
+        else:
+            tag = F.col(I.ROWID)
+            self._sdf = (self._sdf
+                         .withColumn(I.ROWID, F.monotonically_increasing_id())
+                         .orderBy(tag.desc()).limit(n)
+                         .orderBy(tag.asc()).drop(I.ROWID))
         self._drop_lineage()
 
     # -- per-column appliers ----------------------------------------------

@@ -2,16 +2,17 @@
 beyond-reference ``.loc`` / ``.iloc``.
 
 ``.iloc[slice]`` is a rowid range filter — on a positional frame the
-predicate lands on the synthesized rowid, one narrow pass, no
-collect.  ``.loc`` supports boolean-mask rows (in-plan filter) and
-label rows (index equality filter), each optionally with a column
-list / single column."""
+predicate lands on the synthesized rowid: one per-partition count
+collect, then a narrow filter, no shuffle.  ``.loc`` supports
+boolean-mask rows (in-plan filter) and label rows (index equality
+filter), each optionally with a column list / single column."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from . import internal as I
+from .operators.rowid import with_rowid
 
 
 class _iLocIndexer:
@@ -64,7 +65,6 @@ class _iLocIndexer:
         membership predicate, no shuffle).  Rows come back in INDEX
         order, not list order (the engine's standing row-order
         contract); negative positions count from the end."""
-        from .operators.rowid import with_rowid
         obj = self._obj
         if not all(isinstance(p, int) for p in positions):
             raise TypeError("iloc list entries must be integers")
@@ -72,13 +72,8 @@ class _iLocIndexer:
             n = len(obj)
             positions = [p + n if p < 0 else p for p in positions]
         new = obj._shallow_copy()
-        if obj._positional_reordered():
-            new._sdf = new._sdf.orderBy(F.col(I.idx_name(0)).asc())
-            new._rows_reordered = False
-        if getattr(new, "_mid_index", False):
-            new._densify()
-        rid = with_rowid(new._sdf, I.ROWID)
-        new._sdf = rid.filter(
+        new._to_index_order()
+        new._sdf = with_rowid(new._sdf, I.ROWID).filter(
             F.col(I.ROWID).isin([int(p) for p in positions])) \
             .drop(I.ROWID)
         if hasattr(new, "_drop_lineage"):
@@ -86,7 +81,6 @@ class _iLocIndexer:
         return new
 
     def _slice_rows(self, sl: slice):
-        from .operators.rowid import with_rowid
         obj = self._obj
         start, stop = sl.start, sl.stop
         if (start is not None and start < 0) or (stop is not None and stop < 0):
@@ -96,17 +90,7 @@ class _iLocIndexer:
             start = None if start is None else max(0, start + n) if start < 0 else start
             stop = None if stop is None else max(0, stop + n) if stop < 0 else stop
         new = obj._shallow_copy()
-        if obj._positional_reordered():
-            # rowids must follow index order, not the reordered plan
-            new._sdf = new._sdf.orderBy(F.col(I.idx_name(0)).asc())
-            new._rows_reordered = False
-        if getattr(new, "_mid_index", False):
-            # pandas iloc keeps the original positional labels (e.g.
-            # iloc[10:15] shows index 10..14): densify BEFORE slicing
-            # so positions materialize as real index values instead of
-            # being re-ranked 0-based within the slice at export
-            new._densify()
-        rid = with_rowid(new._sdf, I.ROWID)
+        new._to_index_order()
         cond = None
         if start:
             cond = F.col(I.ROWID) >= start
@@ -117,7 +101,9 @@ class _iLocIndexer:
             c = F.pmod(F.col(I.ROWID) - F.lit(start or 0),
                        F.lit(sl.step)) == 0
             cond = c if cond is None else (cond & c)
-        new._sdf = rid.filter(cond).drop(I.ROWID) if cond is not None else new._sdf
+        if cond is not None:
+            new._sdf = with_rowid(new._sdf, I.ROWID).filter(cond) \
+                .drop(I.ROWID)
         if hasattr(new, "_drop_lineage"):
             new._drop_lineage()
         return new

@@ -6,17 +6,26 @@ joins (base.py:58-62).  A bare ``row_number() OVER ()`` in Spark is a
 single-partition window — every row funnels through one task, which is
 the canonical 100 TB scale hazard (SURVEY.md §4.2).
 
-We instead use the classic two-pass *partition-offset* trick:
+We instead read each row's position from the bits of
+``monotonically_increasing_id()``: Spark puts the partition index in the
+upper 31 bits and the record number within the partition in the lower
+33, so ``pid = id >> 33`` and ``rec = id - (pid << 33)``.
 
-  1. per-partition local ``row_number`` ordered by
-     ``monotonically_increasing_id()`` (preserves intra-partition order,
-     no shuffle);
-  2. a tiny per-partition count aggregate (`#partitions` rows) collected
-     to the driver, turned into cumulative offsets, and mapped back with
-     a broadcast join.
+  1. one ``groupBy(spark_partition_id()).count()`` collect gives the
+     per-partition sizes (``#partitions`` rows), turned into cumulative
+     offsets on the driver;
+  2. the final query adds ``offsets[pid] + rec``, the offsets shipped as
+     one literal array read with ``element_at``.
 
-Total cost: one narrow pass + one O(#partitions) aggregate.  No global
-shuffle, no single-task window, works identically on 1000 executors.
+Total cost: the counts job plus one projection in the final query — no
+window, no exchange, no join.  Rowids follow the input's physical order,
+partition by partition.
+
+The single assumption: the counts query and the final query partition
+the input the same way (the same partitions, holding the same rows in
+the same order).  Deterministic scans and shuffles give that; an input
+whose partitioning changes between two executions of the same plan
+would not.
 
 When a caller *does* have a meaningful total order (an ``order_by``
 column list), we emit a global ``row_number`` over that order only if
@@ -26,45 +35,43 @@ default.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _PART = "__pa_part"
-_LOCAL = "__pa_local_rn"
-_OFFSET = "__pa_part_offset"
+_ID = "__pa_mono_id"
+#: bits of monotonically_increasing_id() that hold the record number
+_REC_BITS = 33
 
 
 def with_rowid(sdf: DataFrame, name: str, order_by: list | None = None) -> DataFrame:
     """Attach a 0-based ``long`` rowid column called ``name``.
 
-    ``order_by=None`` -> scalable partition-offset rowid following
-    current partition order (the analogue of the reference's
-    order-of-the-query rowid).  ``order_by=[cols]`` -> deterministic
-    global row_number over that order (single-partition window: only for
-    small/test frames or already-aggregated data).
+    ``order_by=None`` -> scalable rowid following current partition
+    order (the analogue of the reference's order-of-the-query rowid):
+    one per-partition count collect, then a narrow projection.
+    ``order_by=[cols]`` -> deterministic global row_number over that
+    order (single-partition window: only for small/test frames or
+    already-aggregated data).
     """
     if order_by:
         w = Window.orderBy(*order_by)
         return sdf.withColumn(name, F.row_number().over(w).cast("long") - 1)
 
-    part = sdf.withColumn(_PART, F.spark_partition_id()).withColumn(
-        _LOCAL,
-        F.row_number().over(
-            Window.partitionBy(_PART).orderBy(F.monotonically_increasing_id())
-        ),
-    )
     # O(#partitions) rows: safe to collect on any cluster size.
-    counts = part.groupBy(_PART).count().collect()
-    offsets, acc = {}, 0
-    for row in sorted(counts, key=lambda r: r[_PART]):
-        offsets[row[_PART]] = acc
-        acc += row["count"]
-    spark = sdf.sparkSession
-    offset_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], f"{_PART} int, {_OFFSET} long"
-    )
+    counts = dict(sdf.groupBy(F.spark_partition_id().alias(_PART))
+                  .count().collect())
+    sizes = np.zeros(max(counts, default=0) + 1, dtype=np.int64)
+    for part, n in counts.items():
+        sizes[part] = n
+    offsets = np.cumsum(sizes) - sizes
+    mono = F.col(_ID)
+    pid = F.shiftright(mono, _REC_BITS)
+    rec = mono - F.shiftleft(pid, _REC_BITS)
     return (
-        part.join(F.broadcast(offset_df), _PART)
-        .withColumn(name, (F.col(_LOCAL).cast("long") - 1 + F.col(_OFFSET)))
-        .drop(_PART, _LOCAL, _OFFSET)
+        sdf.withColumn(_ID, F.monotonically_increasing_id())
+        .withColumn(name, F.element_at(F.lit(offsets), pid.cast("int") + 1)
+                    + rec)
+        .drop(_ID)
     )
