@@ -82,7 +82,7 @@ class GenericMixin:
             self._lineage = None
 
     @copied
-    def head(self, n: int = 5):
+    def head(self, n: int = 5) -> None:
         # LIMIT n (reference generic.py:46-48).  When the plan was
         # reordered under a positional index (window verbs, joins) the
         # limit must follow index order or head() returns different
@@ -91,7 +91,8 @@ class GenericMixin:
         # sort.  The common scan path keeps the early-exit LIMIT.
         # Negative n: all rows but the last |n| (pandas contract).
         if n < 0:
-            return self.iloc[:n]
+            self.__dict__.update(self.iloc[:n].__dict__)
+            return
         if self._positional_reordered():
             self._sdf = self._sdf.orderBy(
                 F.col(I.idx_name(0)).asc()).limit(n)
@@ -100,22 +101,27 @@ class GenericMixin:
         self._drop_lineage()
 
     @copied
-    def tail(self, n: int = 5):
+    def tail(self, n: int = 5) -> None:
         """Last n rows, as one lazy top-n: the reference's count() +
         LIMIT/OFFSET (generic.py:50-57) becomes a TakeOrderedAndProject
         in the final query, and the verb itself runs no job (except the
         count pass that densifies a monotonic mid, which keeps pandas'
-        positional labels).  When export re-sorts by the index, the
-        top n by index descending are the last rows; otherwise export
-        follows plan order, so each row is tagged with its
+        positional labels).  When the labels are unique positions (a
+        densified mid) or the plan was reordered away from index order,
+        the top n by index descending are the last rows.  Otherwise the
+        last rows are the last in plan order — labels may repeat (after
+        ``explode`` or ``concat``) — so each row is tagged with its
         monotonically_increasing_id (plan order, partition by
         partition), the top n tags taken and re-sorted ascending.
         Negative n: all rows but the first |n| (pandas contract)."""
         if n < 0:
-            return self.iloc[-n:]
+            self.__dict__.update(self.iloc[-n:].__dict__)
+            return
+        by_label = (getattr(self, "_mid_index", False)
+                    or self._positional_reordered())
         if getattr(self, "_mid_index", False):
             self._to_index_order()
-        if self._positional_export():
+        if by_label and self._positional_export():
             self._sdf = self._sdf.orderBy(
                 F.col(I.idx_name(0)).desc()).limit(n)
             self._rows_reordered = True  # plan is desc; export resorts

@@ -56,11 +56,13 @@ def _inputs(spark):
         "post_groupby": base.groupBy((F.col("v") % 37).alias("k"))
         .agg(F.count("*").alias("n")).withColumnRenamed("k", "id"),
         "sorted": base.repartition(5).orderBy(F.col("v").desc(), "id"),
+        "tiny_partitions": spark.range(0, 600, numPartitions=300),
     }
 
 
 @pytest.mark.parametrize("case", ["repartition7", "emptied_partitions",
-                                  "zero_rows", "post_groupby", "sorted"])
+                                  "zero_rows", "post_groupby", "sorted",
+                                  "tiny_partitions"])
 def test_with_rowid_matches_window_oracle(spark, case):
     sdf = _inputs(spark)[case]
     got = sorted(tuple(r) for r in
@@ -72,10 +74,22 @@ def test_with_rowid_matches_window_oracle(spark, case):
 
 
 def test_with_rowid_plan_is_narrow(spark):
-    sdf = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    plan = physical_plan(with_rowid(sdf, "rid"))
-    for node in ("Exchange", "Window", "BroadcastHashJoin"):
-        assert node not in plan, plan
+    scan = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    for sdf in (scan, spark.range(0, 600, numPartitions=300)):
+        plan = physical_plan(with_rowid(sdf, "rid"))
+        for node in ("Exchange", "Window", "BroadcastHashJoin"):
+            assert node not in plan, plan
+
+
+def test_with_rowid_literal_follows_frame_shape(spark):
+    # few large partitions: the offsets as an array literal; many tiny
+    # ones: as binary text, which each task copies instead of unboxing
+    wide = physical_plan(
+        with_rowid(spark.range(0, 10_000, numPartitions=4), "rid"))
+    tiny = physical_plan(
+        with_rowid(spark.range(0, 600, numPartitions=300), "rid"))
+    assert "element_at" in wide and "substr" not in wide
+    assert "substr" in tiny and "element_at" not in tiny
 
 
 # -- negative head / tail ------------------------------------------------
@@ -173,3 +187,37 @@ def test_tail_after_rank_on_multi_file_scan(spark, tmp_path):
     assert rk._mid_index and not rk._mid_dense
     pd.testing.assert_series_equal(rk.tail(4).to_pandas(),
                                    rk.to_pandas().tail(4), check_dtype=False)
+
+
+# -- tail under repeated labels, inplace negative n -------------------------
+
+
+@pytest.mark.parametrize("k", [1, 2, 5, 8])
+def test_tail_after_explode_follows_plan_order(spark, k):
+    # explode repeats the default-index labels: the last rows are the
+    # last in plan order, not the largest labels
+    ps = pd.Series([[3 * i, 3 * i + 1, 3 * i + 2] for i in range(6)])
+    got = pas.Series.from_pandas(ps).explode().tail(k).to_pandas()
+    want = ps.explode().tail(k)
+    assert got.tolist() == want.tolist()
+    assert got.index.tolist() == want.index.tolist()
+
+
+@pytest.mark.parametrize("k", [1, 3, 5])
+def test_tail_after_concat_follows_plan_order(spark, k):
+    a = pd.DataFrame({"x": range(5)})
+    b = pd.DataFrame({"x": range(10, 15)})
+    got = pas.concat([pas.DataFrame.from_pandas(a),
+                      pas.DataFrame.from_pandas(b)]).tail(k).to_pandas()
+    pd.testing.assert_frame_equal(got, pd.concat([a, b]).tail(k),
+                                  check_dtype=False, check_index_type=False)
+
+
+@pytest.mark.parametrize("verb,n", [("head", -2), ("tail", -2),
+                                    ("head", 2), ("tail", 2)])
+def test_head_tail_inplace_any_sign(spark, verb, n):
+    pdf = pd.DataFrame({"x": range(5)})
+    df = pas.DataFrame.from_pandas(pdf)
+    assert getattr(df, verb)(n, inplace=True) is None
+    pd.testing.assert_frame_equal(df.to_pandas(), getattr(pdf, verb)(n),
+                                  check_dtype=False, check_index_type=False)
