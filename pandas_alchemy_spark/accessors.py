@@ -260,9 +260,8 @@ class StringMethods:
                 fn(F.col(f"l_{I.col_name(0)}"),
                    F.col(f"r_{I.col_name(0)}"))
                 .alias(I.col_name(0)))
-            out = type(s)(s._index, None, body, s.name)
-            out._rows_reordered = True
-            return out
+            return type(s)(s._index, None, body,
+                           s.name)._carry(reordered=True)
         return self._map(lambda c: fn(c, F.lit(str(others))))
 
     def join(self, sep: str):
@@ -618,7 +617,7 @@ class CategoricalMethods:
         sel.append(F.coalesce(F.col("__cat_code"), F.lit(-1))
                    .cast("int").alias(I.col_name(0)))
         new._sdf = joined.select(*sel)
-        new._rows_reordered = True
+        new._streamed()
         if hasattr(new, "_drop_lineage"):
             new._drop_lineage()
         return new

@@ -5,7 +5,12 @@ The reference's frame is a triple ``(_index, _columns, _cte)``
 relational query addressed positionally.  Ours is the same triple with
 the CTE replaced by a lazy PySpark DataFrame whose columns follow the
 reserved layout of :mod:`..internal` — index levels first, then data
-columns, exactly the reference's positional convention (base.py:18-23).
+columns, exactly the reference's positional convention (base.py:18-23)
+— plus one immutable :class:`IndexState` (``_state``): what the index
+column holds and whether the plan's row order is the one export shows.
+Only this module creates or changes that state; verbs name one of its
+transitions (``_carry``, ``_fresh_mid``, ``_join_state``,
+``_impose_order``).
 
 All alignment joins (the reference's internal machinery for pandas
 index alignment, base.py:64-128) are implemented here as Spark joins:
@@ -24,6 +29,8 @@ execute.
 
 from __future__ import annotations
 
+from dataclasses import dataclass, replace
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame as SparkDF
 from pyspark.sql import functions as F
@@ -32,57 +39,138 @@ from . import internal as I
 from .operators.rowid import with_rowid
 from .utils import wrap
 
+# IndexState.mid
+DENSE, MONOTONIC = "dense", "monotonic"
+# IndexState.order
+INDEX, REORDERED, EXPLICIT = "index", "reordered", "explicit"
+
+
+@dataclass(frozen=True)
+class IndexState:
+    """What a frame's index column holds, and which row order export
+    shows.  Each part is one field with one value, so a dense flag
+    without a mid, or a reordered plan under an explicit order, cannot
+    be written down; the one cross-field rule (only a monotonic mid
+    has an origin) is checked at construction.
+
+    **The mid** (``mid``) — a *provisional* rowid in ``__idx_0`` instead
+    of real labels:
+
+    - ``None``: the index column holds real labels.
+    - ``MONOTONIC``: a ``monotonically_increasing_id`` captured at scan
+      time — unique, order-correlated, NOT contiguous.  The contiguous
+      0-based values the reference synthesizes eagerly
+      (``row_number() OVER () - 1``, alchemy.py:332-334) are produced
+      only when index values become observable: export (ranked
+      client-side on the fetched rows), positional access, or
+      alignment against a value-indexed frame (``_densify``, one
+      O(#partitions) count pass).  This keeps a plain
+      scan->project->agg pipeline free of rowid jobs — the
+      100 TB-relevant property (no count pass, no broadcast join
+      under every query).  ``origin`` is its identity token: the ids
+      encode partition layout, so raw values are comparable only
+      between frames minted by the SAME scan (file scans are
+      deterministically partitioned within a session, so a file-set
+      key works across re-reads of the same path).  Frames derived
+      from one another share the token through ``_carry``.  ``None``
+      means "never directly comparable" — alignment densifies.
+    - ``DENSE``: TRUE file positions (parquet ``_metadata.row_index``
+      on a single-file scan).  The mid IS the pandas RangeIndex, so no
+      densify pass is ever needed (densify is a metadata flip), and
+      export keeps the raw values — after a filter that yields pandas'
+      sparse original labels exactly, where ranked monotonic mids
+      would renumber.  Dense mids are comparable across any two scans
+      and carry no origin.
+
+    Positional access (tail/iloc) numbers rows after
+    ``_to_index_order``, which densifies any mid; ``iat`` numbers the
+    plan's rows directly.
+
+    **The row order** (``order``):
+
+    - ``INDEX``: row order IS index order.  Export of a positional
+      frame (see ``_positional_export``) re-sorts the fetched rows by
+      the index client-side, which makes the materialized order immune
+      to plan-level reordering (window partitionBy, join shuffles) —
+      something the reference never faced, because its RDBMS never
+      reordered single-table scans (SURVEY.md §2.6 "no ORDER BY is
+      ever emitted").
+    - ``REORDERED``: as ``INDEX``, but a verb may have moved rows in
+      the PLAN away from index order (window evaluation sorts by
+      value/key, joins shuffle).  Export re-sorts anyway; the
+      positional accessors (head/tail/iloc/iat) read this through
+      ``_positional_reordered`` and re-sort plan-side first, so they
+      return the rows export shows.  A plain scan->project->filter
+      stays ``INDEX``, so ``head()`` stays an early-exit LIMIT (no
+      full-scan TakeOrdered under every repr).
+    - ``EXPLICIT``: the user imposed a row order (sort_values,
+      sort_index, nlargest, value_counts, part-major concat, or a
+      non-default index on ingest): export and positional access
+      follow PLAN order.
+
+    **Transitions** — verbs never set fields; they name one of these
+    (the ``BaseFrame`` methods that apply them):
+
+    - *carry* (``_carry``): the result keeps its source's state — any
+      verb that keeps plan order (projection, in-plan filter,
+      mapInPandas).  ``reordered=True`` marks the plan reordered; an
+      explicit order is then lost, so the result falls back to index
+      order (window verbs, joins, shuffles).
+    - *fresh mid* (``_fresh_mid``): a new monotonic mid with a new
+      origin token (merge, groupby.apply, concat(ignore_index),
+      reset_index, merge_asof, ...), or a scan's mid.
+    - *joined* (``_join_state``): two aligned frames joined on their
+      index.  The mid survives only when the pair joined on raw mids
+      (both dense, or monotonic of one origin); the plan is reordered.
+    - *streamed* (``_streamed``): our rows streamed through a join
+      against a small other side (a pasted list, an update or lookup
+      table).  They stay in plan order when that side broadcasts, but
+      a shuffle join moves them: an explicit order is kept (it has
+      nothing better to fall back to), an index order is marked
+      reordered.
+    - *explicit* (``_impose_order``): a sort verb.
+    - ``_densify`` drops the mid; ``_to_index_order`` re-sorts a
+      reordered plan back to index order."""
+
+    mid: str | None = None
+    origin: object = None
+    order: str = INDEX
+
+    def __post_init__(self):
+        if self.mid not in (None, DENSE, MONOTONIC):
+            raise ValueError(f"unknown mid kind {self.mid!r}")
+        if self.order not in (INDEX, REORDERED, EXPLICIT):
+            raise ValueError(f"unknown row order {self.order!r}")
+        if self.origin is not None and self.mid != MONOTONIC:
+            raise ValueError("only a monotonic mid has an origin")
+
+    @property
+    def reordered(self) -> bool:
+        return self.order == REORDERED
+
+    def comparable(self, other: "IndexState") -> bool:
+        """True when both mids' raw values join directly."""
+        if self.mid is None or self.mid != other.mid:
+            return False
+        return self.mid == DENSE or (self.origin is not None
+                                     and self.origin == other.origin)
+
+    def reorder(self) -> "IndexState":
+        return replace(self, order=REORDERED)
+
+    def streamed(self) -> "IndexState":
+        return self if self.order == EXPLICIT else self.reorder()
+
+    def joined(self, other: "IndexState") -> "IndexState":
+        if self.comparable(other):
+            return IndexState(self.mid, self.origin, REORDERED)
+        return IndexState(order=REORDERED)
+
 
 class BaseFrame:
     ndim: int
 
-    #: True when __idx_0 holds a *provisional* rowid — a
-    #: monotonically_increasing_id captured at scan time (unique,
-    #: order-correlated, NOT contiguous).  The contiguous 0-based values
-    #: the reference synthesizes eagerly (row_number() OVER () - 1,
-    #: alchemy.py:332-334) are only produced when index *values* become
-    #: observable: export, positional ops, or alignment against a
-    #: value-indexed frame.  This keeps a plain scan->project->agg
-    #: pipeline completely free of rowid jobs — the 100 TB-relevant
-    #: property (no count pass, no broadcast join under every query).
-    _mid_index = False
-
-    #: True when the user imposed a row order (sort_values/sort_index/
-    #: nlargest, or a non-default index on ingest): export then follows
-    #: PLAN order.  False (default) means row order IS index order, so
-    #: export re-sorts client-side by the index — this makes the
-    #: materialized order immune to plan-level reordering (window
-    #: partitionBy, join shuffles), which the reference never faced
-    #: because its RDBMS never reordered single-table scans
-    #: (SURVEY.md §2.6 "no ORDER BY is ever emitted").
-    _explicit_order = False
-
-    #: True when a verb may have reordered rows in the PLAN relative to
-    #: the positional index (window evaluation sorts by value/key,
-    #: joins shuffle).  Export already re-sorts positional frames
-    #: client-side (_fetch_pandas); positional ACCESSORS (head/tail/
-    #: iloc/iat) consult this flag to re-sort plan-side first, so they
-    #: return the same rows the export shows.  Kept False on the plain
-    #: scan->project->filter path so head() stays an early-exit LIMIT
-    #: (no full-scan TakeOrdered under every repr).
-    _rows_reordered = False
-
-    #: True when the provisional mid-index holds TRUE file positions
-    #: (parquet _metadata.row_index on a single-file scan) rather than
-    #: arbitrary monotonic ids.  Then no densify pass is ever needed
-    #: (the mid IS the pandas RangeIndex), and export keeps the raw
-    #: values — after a filter that yields pandas' sparse original
-    #: labels exactly, where ranked monotonic mids would renumber.
-    _mid_dense = False
-
-    #: Identity token for NON-dense mids: monotonically_increasing_id
-    #: encodes partition layout, so raw values are only comparable
-    #: between frames whose mids were minted by the SAME scan (file
-    #: scans are deterministically partitioned within a session, so a
-    #: file-set key works across re-reads of the same path).  Frames
-    #: derived from one another share the token via _shallow_copy.
-    #: ``None`` means "never directly comparable" — alignment densifies.
-    _mid_origin = None
+    _state = IndexState()
 
     def __init__(self, index: pd.Index, columns: pd.Index | None, sdf: SparkDF):
         # index: pd.Index of *level names* (values live in the plan),
@@ -132,6 +220,50 @@ class BaseFrame:
         new = object.__new__(type(self))
         new.__dict__.update(self.__dict__)
         return new
+
+    # -- index state (IndexState transitions; each returns self) ----------
+
+    @property
+    def _mid_index(self) -> bool:
+        return self._state.mid is not None
+
+    @property
+    def _mid_dense(self) -> bool:
+        return self._state.mid == DENSE
+
+    def _carry(self, src: "BaseFrame | None" = None,
+               reordered: bool = False) -> "BaseFrame":
+        """Take ``src``'s index state (default: keep our own), marking
+        the plan reordered when asked."""
+        state = (self if src is None else src)._state
+        self._state = state.reorder() if reordered else state
+        return self
+
+    def _fresh_mid(self, dense: bool = False,
+                   origin: object = None) -> "BaseFrame":
+        """A new mid in ``__idx_0``; a monotonic one gets ``origin`` or
+        a token of its own."""
+        if dense:
+            self._state = IndexState(DENSE)
+        else:
+            self._state = IndexState(
+                MONOTONIC, object() if origin is None else origin)
+        return self
+
+    def _streamed(self) -> "BaseFrame":
+        """Our rows went through a join against a small other side."""
+        self._state = self._state.streamed()
+        return self
+
+    def _join_state(self, a: "BaseFrame", b: "BaseFrame") -> "BaseFrame":
+        """The state of ``a`` index-joined with ``b``."""
+        self._state = a._state.joined(b._state)
+        return self
+
+    def _impose_order(self) -> "BaseFrame":
+        """Export and positional access follow plan order from now on."""
+        self._state = replace(self._state, order=EXPLICIT)
+        return self
 
     def _level_of(self, level) -> int:
         """Resolve a level name/position (reference base.py:25-37)."""
@@ -190,22 +322,18 @@ class BaseFrame:
         """Replace a provisional mid-index with contiguous 0-based
         rowids in current physical order (one O(#partitions) count
         pass).  Mirrors the reference's on-demand rowid re-synthesis
-        (base.py:58-62).  In place; no-op when already dense.
+        (base.py:58-62).  In place; no-op without a mid.
 
-        A ``_mid_dense`` mid already HOLDS the true positional labels
-        (parquet row_index), so densify is a pure metadata flip — zero
-        jobs — and filtered frames keep pandas' sparse original
-        labels."""
-        if not self._mid_index:
+        A dense mid already HOLDS the true positional labels (parquet
+        row_index), so densify is a pure metadata flip — zero jobs —
+        and filtered frames keep pandas' sparse original labels."""
+        if self._state.mid is None:
             return
-        if self._mid_dense:
-            self._mid_index = False
-            return
-        body = self._sdf.drop(I.idx_name(0))
-        rid = with_rowid(body, I.idx_name(0))
-        order = [I.idx_name(0)] + [c for c in body.columns]
-        self._sdf = rid.select(*order)
-        self._mid_index = False
+        if self._state.mid == MONOTONIC:
+            body = self._sdf.drop(I.idx_name(0))
+            rid = with_rowid(body, I.idx_name(0))
+            self._sdf = rid.select(I.idx_name(0), *body.columns)
+        self._state = replace(self._state, mid=None, origin=None)
 
     def _to_index_order(self) -> None:
         """Put the plan in index order and densify a mid, in place, so
@@ -215,11 +343,11 @@ class BaseFrame:
         rather than being re-ranked within it at export)."""
         if self._positional_reordered():
             self._sdf = self._sdf.orderBy(F.col(I.idx_name(0)).asc())
-            self._rows_reordered = False
+            self._state = replace(self._state, order=INDEX)
         self._densify()
 
     def _densified(self) -> "BaseFrame":
-        if not self._mid_index:
+        if self._state.mid is None:
             return self
         new = self._shallow_copy()
         new._densify()
@@ -229,33 +357,25 @@ class BaseFrame:
         """Make two frames' indexes label-comparable for an
         index-equality join, densifying provisional mids that are not.
 
-        Raw mids join directly ONLY when (a) both are dense (true file
-        positions — comparable across any two scans) or (b) both are
-        monotonic ids minted by the SAME scan (``_mid_origin`` match —
-        monotonically_increasing_id encodes partition layout, so values
-        from two different scans pair arbitrary rows).  Everything else
-        (mixed mid/value, mixed dense/monotonic, monotonic mids of
-        different or unknown origin) densifies the mid side(s) first:
-        contiguous 0-based positions ARE comparable across plans."""
-        a, b = self._mid_index, other._mid_index
-        if not a and not b:
+        Raw mids join directly ONLY when ``IndexState.comparable``:
+        (a) both are dense (true file positions — comparable across any
+        two scans) or (b) both are monotonic ids minted by the SAME
+        scan (origin match — monotonically_increasing_id encodes
+        partition layout, so values from two different scans pair
+        arbitrary rows).  Everything else (mixed mid/value, mixed
+        dense/monotonic, monotonic mids of different or unknown origin)
+        densifies the mid side(s) first: contiguous 0-based positions
+        ARE comparable across plans."""
+        if ((self._state.mid is None and other._state.mid is None)
+                or self._state.comparable(other._state)):
             return self, other
-        if a and b:
-            if self._mid_dense and getattr(other, "_mid_dense", False):
-                return self, other
-            if (not self._mid_dense
-                    and not getattr(other, "_mid_dense", False)
-                    and self._mid_origin is not None
-                    and self._mid_origin == getattr(other, "_mid_origin",
-                                                    None)):
-                return self, other
         return self._densified(), other._densified()
 
     def _align_mids_with(self, other: "BaseFrame") -> "BaseFrame":
         """In-place twin of ``_mids_aligned`` for callers that mutate a
         copied self: densify SELF when the pair requires it and return
-        the (possibly densified) other, so the caller's post-join flag
-        bookkeeping reads post-alignment state."""
+        the (possibly densified) other, so the caller's ``_join_state``
+        reads post-alignment state."""
         a, b = self._mids_aligned(other)
         if a is not self:
             self._densify()
@@ -266,9 +386,9 @@ class BaseFrame:
     def _positional_export(self) -> bool:
         """True when ``_fetch_pandas`` re-sorts rows by ``__idx_0`` at
         export (the positional contract: row order IS index order)."""
-        if self._explicit_order or self._n_idx() != 1:
+        if self._state.order == EXPLICIT or self._n_idx() != 1:
             return False
-        if self._mid_index:
+        if self._state.mid is not None:
             return True
         if self._index[0] is not None:
             return False
@@ -281,7 +401,15 @@ class BaseFrame:
         """True when a positional accessor (head/tail/iloc/iat) must
         re-sort the plan by the index before slicing: the export
         contract is index order, but the plan may not be in it."""
-        return self._rows_reordered and self._positional_export()
+        return self._state.reordered and self._positional_export()
+
+    def _index_labels(self, values: pd.Series) -> pd.Series:
+        """Labels for fetched ``__idx_0`` values: arbitrary monotonic
+        mids rank into 0-based positions; dense mids already ARE the
+        positional labels."""
+        if self._state.mid == MONOTONIC:
+            return values.rank(method="first").astype("int64") - 1
+        return values
 
     # -- alignment joins ---------------------------------------------------
 
@@ -434,10 +562,7 @@ class BaseFrame:
         0-based contiguous index the reference synthesizes in-query."""
         pdf = self._fetch()
         n = self._n_idx()
-        if (not self._explicit_order and n == 1 and len(pdf) > 1
-                and (self._mid_index
-                     or (self._index[0] is None
-                         and pd.api.types.is_integer_dtype(pdf.iloc[:, 0])))):
+        if len(pdf) > 1 and self._positional_export():
             # positional frame: row order is index order by contract;
             # re-sort the fetched rows (client-side, data already here)
             # so plan-level reordering (window/join shuffles) never
@@ -449,11 +574,6 @@ class BaseFrame:
             index = pd.MultiIndex.from_frame(idx_part)
             index.names = list(self._index)
         else:
-            values = idx_part.iloc[:, 0]
-            if self._mid_index and not self._mid_dense:
-                # arbitrary monotonic mids -> rank into 0-based labels;
-                # dense mids already ARE the positional labels
-                values = values.rank(method="first").astype("int64") - 1
-            index = pd.Index(values)
+            index = pd.Index(self._index_labels(idx_part.iloc[:, 0]))
             index.name = self._index[0]
         return index, data_part

@@ -194,14 +194,8 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         sdf = self._sdf.select(
             *[F.col(I.idx_name(k)) for k in range(self._n_idx())],
             self._col_at(i).alias(I.col_name(0)))
-        s = Series(self._index, pd.Index([name]), sdf, name,
-                   lineage=(self._sdf, self._col_at(i)))
-        s._mid_index = self._mid_index
-        s._mid_dense = self._mid_dense
-        s._mid_origin = self._mid_origin
-        s._rows_reordered = self._rows_reordered
-        s._explicit_order = self._explicit_order
-        return s
+        return Series(self._index, pd.Index([name]), sdf, name,
+                      lineage=(self._sdf, self._col_at(i)))._carry(self)
 
     def __getitem__(self, key):
         # label -> Series; list of labels -> projection; boolean Series
@@ -214,15 +208,9 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             sdf = self._sdf.select(
                 *[F.col(I.idx_name(k)) for k in range(self._n_idx())],
                 *[self._col_at(p).alias(I.col_name(j)) for j, p in enumerate(positions)])
-            out = DataFrame(self._index, pd.Index(key), sdf)
-            out._mid_index = self._mid_index
-            out._mid_dense = self._mid_dense
-            out._mid_origin = self._mid_origin
-            out._rows_reordered = self._rows_reordered
             # a projection never reorders rows: a sorted frame stays
             # sorted through df[cols] (and through drop(columns=))
-            out._explicit_order = self._explicit_order
-            return out
+            return DataFrame(self._index, pd.Index(key), sdf)._carry(self)
         return self._seq_at(self._columns.get_loc(key))
 
     def __setitem__(self, key, value):
@@ -366,10 +354,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                     for i in range(self._n_cols())]
             self._sdf = base.BaseFrame(idx_names, self._columns, joined)._project(idx, cols)
             self._index = idx_names
-            self._mid_index = self._mid_index and other._mid_index
-            self._mid_dense = self._mid_dense and getattr(
-                other, "_mid_dense", False)
-            self._rows_reordered = True
+            self._join_state(self, other)
             return
 
         # rule 4: DataFrame operand -> align columns and rows
@@ -390,10 +375,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             self._sdf = base.BaseFrame(idx_names, joined_labels, joined)._project(idx, cols)
             self._index = idx_names
             self._columns = joined_labels
-            self._mid_index = self._mid_index and other._mid_index
-            self._mid_dense = self._mid_dense and getattr(
-                other, "_mid_dense", False)
-            self._rows_reordered = True
+            self._join_state(self, other)
             return
 
         # rules 5-6: plain list-likes
@@ -425,7 +407,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                            all(isinstance(v, bool) for v in other))
                     for i in range(self._n_cols())]
             self._sdf = base.BaseFrame(self._index, self._columns, joined)._project(idx, cols)
-            self._rows_reordered = True
+            self._streamed()
             return
 
         # rule 9 (reference alchemy.py:235-236)
@@ -519,13 +501,9 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                 res[I.col_name(0)] = user.apply(func, axis=1)
                 yield res
 
+        # mapInPandas keeps plan order: a sorted frame stays sorted
         body = named.mapInPandas(run, out_schema)
-        out = Series(self._index, None, body, None)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return Series(self._index, None, body, None)._carry(self)
 
     def interpolate(self, method: str = "linear", limit=None,
                     limit_direction=None):
@@ -559,12 +537,8 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             *[F.col(out_names.get(I.col_name(i), I.col_name(i)))
               .alias(I.col_name(i))
               for i in range(self._n_cols())])
-        out = DataFrame(self._index, self._columns, final)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return DataFrame(self._index, self._columns,
+                         final)._carry(self, reordered=True)
 
     # -- frame-level global scans (one fused pass for all columns) ---------
 
@@ -588,12 +562,8 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             *[F.col(out_names.get(I.col_name(i), I.col_name(i)))
               .alias(I.col_name(i))
               for i in range(self._n_cols())])
-        out = DataFrame(self._index, self._columns, final)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return DataFrame(self._index, self._columns,
+                         final)._carry(self, reordered=True)
 
     def _require_numeric(self, verb):
         bad = [str(self._columns[i]) for i, t in enumerate(self._dtypes())
@@ -759,9 +729,6 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                     "elementwise Python use applymap")
             cols.append(res._lineage_expr)
         idx = [self._idx_at(i) for i in range(self._n_idx())]
-        # _shallow_copy keeps every order/mid flag (a hand-built
-        # DataFrame here silently dropped _explicit_order and
-        # _rows_reordered, un-sorting sorted inputs on export)
         out = self._shallow_copy()
         out._sdf = self._project(idx, cols)
         if hasattr(out, "_drop_lineage"):
@@ -836,15 +803,11 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         root = mask._lineage_root
         if root is not None and root is self._sdf:
             cond = mask._lineage_expr
-            out = DataFrame(self._index, self._columns, self._sdf.filter(cond))
-            out._mid_index = self._mid_index
-            out._mid_dense = self._mid_dense
-            out._mid_origin = self._mid_origin
             # a window-backed mask expression evaluates the window in
             # this plan -> rows come out in window order
-            out._rows_reordered = (self._rows_reordered
-                                   or mask._rows_reordered)
-            return out
+            return DataFrame(self._index, self._columns,
+                             self._sdf.filter(cond))._carry(
+                self, reordered=mask._state.reordered)
         # general path: inner join on index equality over ALL levels —
         # level-0-only equality would mis-align MultiIndex frames
         # (duplicate level-0 values multiply rows).  Null-safe so NULL
@@ -861,15 +824,9 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             cond = c if cond is None else (cond & c)
         joined = this._sdf.join(m, cond, "inner").filter(
             F.col(f"m_{I.col_name(0)}"))
-        out = DataFrame(this._index, this._columns,
-                        joined.select(this._sdf.columns))
-        out._mid_index = this._mid_index and mask._mid_index
-        out._mid_dense = (getattr(this, "_mid_dense", False)
-                          and getattr(mask, "_mid_dense", False))
-        if out._mid_index and not out._mid_dense:
-            out._mid_origin = this._mid_origin
-        out._rows_reordered = True
-        return out
+        return DataFrame(this._index, this._columns,
+                         joined.select(this._sdf.columns)) \
+            ._join_state(this, mask)
 
     def assign(self, **kwargs) -> "DataFrame":
         """Append computed columns (beyond reference; standard pandas
@@ -899,17 +856,12 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                 labels.append(name)
                 exprs.append(expr)
         sdf = self._project(self._idx_cols(), exprs)
-        out = DataFrame(self._index, pd.Index(labels), sdf)
-        out._mid_index = self._mid_index
-        out._mid_dense = self._mid_dense
-        out._mid_origin = self._mid_origin
         # a window-backed Series value (rank/cumsum/...) makes the
         # projected plan evaluate that window -> rows come out in
         # window order, not index order
-        out._rows_reordered = self._rows_reordered or any(
-            isinstance(v, Series) and v._rows_reordered
-            for v in kwargs.values())
-        return out
+        return DataFrame(self._index, pd.Index(labels), sdf)._carry(
+            self, reordered=any(isinstance(v, Series) and v._state.reordered
+                                for v in kwargs.values()))
 
     def _assign_aligned(self, name, value: "Series") -> "DataFrame":
         """Append a Series from ANOTHER frame: LEFT join on index
@@ -939,14 +891,8 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         sel = [joined[I.idx_name(i)].alias(I.idx_name(i))
                for i in range(this._n_idx())]
         sel += [e.alias(I.col_name(j)) for j, e in enumerate(exprs)]
-        out = DataFrame(this._index, pd.Index(labels), joined.select(*sel))
-        out._mid_index = this._mid_index and val._mid_index
-        out._mid_dense = (getattr(this, "_mid_dense", False)
-                          and getattr(val, "_mid_dense", False))
-        if out._mid_index and not out._mid_dense:
-            out._mid_origin = this._mid_origin
-        out._rows_reordered = True
-        return out
+        return DataFrame(this._index, pd.Index(labels),
+                         joined.select(*sel))._join_state(this, val)
 
     # -- materialization ---------------------------------------------------
 
@@ -988,10 +934,10 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         sdf = _nan_to_null(sdf)
         out = DataFrame(index, df.columns, sdf)
         # a non-default index means "row order is NOT index order";
-        # export must then follow plan order (base._explicit_order)
-        default_idx = (n_idx == 1 and df.index.name is None
-                       and df.index.equals(pd.RangeIndex(len(df))))
-        out._explicit_order = not default_idx
+        # export must then follow plan order
+        if not (n_idx == 1 and df.index.name is None
+                and df.index.equals(pd.RangeIndex(len(df)))):
+            out._impose_order()
         return out
 
     @staticmethod
@@ -1028,10 +974,11 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         (shared by from_table and the sources.io readers)."""
         cols = list(sdf.columns)
         mid = dense = False
+        origin = None
         if index is None:
             # provisional rowid, densified to the reference's 0-based
             # contiguous form only when index values become observable
-            # (base.BaseFrame._mid_index).  Single-file scans use the
+            # (base.IndexState).  Single-file scans use the
             # parquet reader's _metadata.row_index: it is the TRUE file
             # position (so the provisional index is already the pandas
             # RangeIndex — no densify pass ever needed) and, unlike
@@ -1069,9 +1016,10 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             # monotonic mids are comparable between frames of the same
             # file set (deterministic scan partitioning within a
             # session); unknown inputs get a unique token so only
-            # frames DERIVED from this one (sharing it via
-            # _shallow_copy) join on raw mids
-            origin = ("scan",) + tuple(files) if files else object()
+            # frames DERIVED from this one (sharing it via _carry)
+            # join on raw mids
+            if files:
+                origin = ("scan",) + tuple(files)
         else:
             if not pd.api.types.is_list_like(index):
                 index = (index,)
@@ -1088,11 +1036,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         sel = [e.alias(I.idx_name(i)) for i, e in enumerate(idx_exprs)]
         sel += [F.col(c).alias(I.col_name(i)) for i, c in enumerate(columns)]
         out = DataFrame(index, columns, sdf.select(*sel))
-        out._mid_index = mid
-        out._mid_dense = dense
-        if mid and not dense:
-            out._mid_origin = origin
-        return out
+        return out._fresh_mid(dense, origin) if mid else out
 
 
 def _concat_columns(objs):
@@ -1110,17 +1054,8 @@ def _concat_columns(objs):
         exprs = [lcol(i) for i in range(len(this._columns))]
         exprs += [rcol(i) for i in range(len(o._columns))]
         sdf = base.BaseFrame(idx_names, None, joined)._project(idx, exprs)
-        nxt = DataFrame(this._index, pd.Index(labels), sdf)
-        # mids survive only when the pair joined on raw mids (same
-        # origin / both dense) — otherwise the index now holds real
-        # labels and the default flags are right
-        nxt._mid_index = this._mid_index and o._mid_index
-        nxt._mid_dense = (getattr(this, "_mid_dense", False)
-                          and getattr(o, "_mid_dense", False))
-        if nxt._mid_index and not nxt._mid_dense:
-            nxt._mid_origin = this._mid_origin
-        nxt._rows_reordered = True
-        out = nxt
+        out = DataFrame(this._index, pd.Index(labels), sdf) \
+            ._join_state(this, o)
     return out
 
 
@@ -1149,7 +1084,7 @@ def concat(objs, axis=0, ignore_index: bool = False):
         for lab in o._columns:
             if lab not in labels:
                 labels.append(lab)
-    any_mid = any(getattr(o, "_mid_index", False) for o in objs)
+    any_mid = any(o._mid_index for o in objs)
     if any_mid and not ignore_index:
         # pandas keeps each part's own labels (0..n-1, 0..m-1, ...) in
         # part order.  Materialize them per part BEFORE the union
@@ -1179,16 +1114,15 @@ def concat(objs, axis=0, ignore_index: bool = False):
         body = body.select(
             F.monotonically_increasing_id().alias(I.idx_name(0)),
             *[I.col_name(j) for j in range(len(labels))])
-        out = DataFrame(pd.Index((None,)), pd.Index(labels), body)
-        out._mid_index = True
-        out._mid_origin = object()
+        out = DataFrame(pd.Index((None,)), pd.Index(labels),
+                        body)._fresh_mid()
     elif any_mid:
         # parts were densified above: index values are true per-part
         # positions (duplicated across parts), and pandas row order is
         # part-major — which IS the plan order (unionAll concatenates
         # children's partitions, a narrow op).  Export must follow
         # plan order, not re-sort by the duplicated positional index.
-        out._explicit_order = True
+        out._impose_order()
     return out
 
 
@@ -1250,12 +1184,8 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
     def to_frame(self, name=None):
         """1-column DataFrame from this Series (plan unchanged)."""
         label = name if name is not None else (self.name or 0)
-        out = DataFrame(self._index, pd.Index([label]), self._sdf)
-        out._mid_index = self._mid_index
-        out._mid_dense = self._mid_dense
-        out._mid_origin = self._mid_origin
-        out._rows_reordered = self._rows_reordered
-        return out
+        return DataFrame(self._index, pd.Index([label]),
+                         self._sdf)._carry(self)
 
     def _zip_with(self, other, fn):
         """Align with another Series and apply a binary column
@@ -1278,9 +1208,7 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         new._sdf = base.BaseFrame(idx_names, None, joined)._project(
             idx, [fn(lcol(0), rcol(0))])
         new._lineage = None
-        new._mid_index = False
-        new._rows_reordered = True
-        return new
+        return new._join_state(new, other)
 
     def where(self, cond, other=None):
         """pandas Series.where: keep values where ``cond`` is True,
@@ -1319,12 +1247,8 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         body = root.select(
             *[F.col(I.idx_name(i)) for i in range(n)],
             expr.alias(I.col_name(0)))
-        out = Series(self._index, None, body, self.name,
-                     lineage=(root, expr))
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        return out
+        return Series(self._index, None, body, self.name,
+                      lineage=(root, expr))._carry(self)
 
     def combine_first(self, other):
         """pandas combine_first: self's values, with holes filled from
@@ -1604,10 +1528,7 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             self._sdf = base.BaseFrame(idx_names, None, joined)._project(idx, [col])
             self._index = idx_names
             self._lineage = None
-            self._mid_index = self._mid_index and other._mid_index
-            self._mid_dense = self._mid_dense and getattr(
-                other, "_mid_dense", False)
-            self._rows_reordered = True
+            self._join_state(self, other)
             self.name = self.name if self.name == other.name else None
             return
 
@@ -1644,7 +1565,7 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                          all(isinstance(v, bool) for v in other))
             self._sdf = base.BaseFrame(self._index, None, joined)._project(idx, [col])
             self._lineage = None
-            self._rows_reordered = True
+            self._streamed()
             return
 
         raise TypeError(f"Cannot broadcast np.ndarray with "
@@ -1726,9 +1647,9 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         flat.columns = I.idx_names(seq.index.nlevels) + [I.col_name(0)]
         sdf = _nan_to_null(spark.createDataFrame(flat))
         out = Series(index, pd.Index([name]), sdf, name)
-        default_idx = (seq.index.nlevels == 1 and seq.index.name is None
-                       and seq.index.equals(pd.RangeIndex(len(seq))))
-        out._explicit_order = not default_idx
+        if not (seq.index.nlevels == 1 and seq.index.name is None
+                and seq.index.equals(pd.RangeIndex(len(seq)))):
+            out._impose_order()
         return out
 
     @staticmethod

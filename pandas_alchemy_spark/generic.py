@@ -46,11 +46,7 @@ class GenericMixin:
             idx = pd.MultiIndex.from_frame(pdf)
             idx.names = list(self._index)
             return idx
-        values = pdf.iloc[:, 0]
-        if (getattr(self, "_mid_index", False)
-                and not getattr(self, "_mid_dense", False)):
-            values = values.rank(method="first").astype("int64") - 1
-        idx = pd.Index(values)
+        idx = pd.Index(self._index_labels(pdf.iloc[:, 0]))
         idx.name = self._index[0]
         return idx
 
@@ -117,14 +113,13 @@ class GenericMixin:
         if n < 0:
             self.__dict__.update(self.iloc[-n:].__dict__)
             return
-        by_label = (getattr(self, "_mid_index", False)
-                    or self._positional_reordered())
-        if getattr(self, "_mid_index", False):
+        by_label = self._mid_index or self._positional_reordered()
+        if self._mid_index:
             self._to_index_order()
         if by_label and self._positional_export():
             self._sdf = self._sdf.orderBy(
                 F.col(I.idx_name(0)).desc()).limit(n)
-            self._rows_reordered = True  # plan is desc; export resorts
+            self._carry(reordered=True)  # plan is desc; export resorts
         else:
             tag = F.col(I.ROWID)
             self._sdf = (self._sdf

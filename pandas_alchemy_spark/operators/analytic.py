@@ -381,12 +381,7 @@ class SeriesWindow(_WindowVerbs):
         out = build(tmp, [I.idx_name(i) for i in range(n)])
         body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
                           F.col("__out").alias(I.col_name(0)))
-        res = Series(s._index, None, body, s.name)
-        res._mid_index = getattr(s, "_mid_index", False)
-        res._mid_dense = getattr(s, "_mid_dense", False)
-        res._mid_origin = getattr(s, "_mid_origin", None)
-        res._rows_reordered = True
-        return res
+        return Series(s._index, None, body, s.name)._carry(s, reordered=True)
 
     def _cum_scan(self, op):
         from .segscan import cum_scan
@@ -476,12 +471,7 @@ class SeriesWindow(_WindowVerbs):
                                 min_periods, "__out")
         body = out.select(F.col(I.idx_name(0)),
                           F.col("__out").alias(I.col_name(0)))
-        res = Series(s._index, None, body, s.name)
-        res._mid_index = getattr(s, "_mid_index", False)
-        res._mid_dense = getattr(s, "_mid_dense", False)
-        res._mid_origin = getattr(s, "_mid_origin", None)
-        res._rows_reordered = True
-        return res
+        return Series(s._index, None, body, s.name)._carry(s, reordered=True)
 
     def _window(self, *_):
         # every public global verb is overridden with a segmented
@@ -497,9 +487,7 @@ class SeriesWindow(_WindowVerbs):
     _tie_window = _window
 
     def _wrap(self, fn):
-        out = self._s._app(fn)
-        out._rows_reordered = True
-        return out
+        return self._s._app(fn)._carry(reordered=True)
 
 
 class SeriesGroupBy(_WindowVerbs):
@@ -604,12 +592,8 @@ class SeriesGroupBy(_WindowVerbs):
                .applyInPandas(per_group, schema))
         body = out.select(*[F.col(nm) for nm in idx_names],
                           F.col("__out").alias(I.col_name(0)))
-        s = self._Series(df._index, None, body, self._label)
-        s._mid_index = getattr(df, "_mid_index", False)
-        s._mid_dense = getattr(df, "_mid_dense", False)
-        s._mid_origin = getattr(df, "_mid_origin", None)
-        s._rows_reordered = True
-        return s
+        return self._Series(df._index, None, body,
+                            self._label)._carry(df, reordered=True)
 
     def _wrap(self, fn):
         df = self._df
@@ -623,13 +607,8 @@ class SeriesGroupBy(_WindowVerbs):
         # (base._fetch_pandas), and lineage consumers (df.assign) keep
         # the parent plan anyway — no cluster-side sort here
         body = df._sdf.select(*sel)
-        out = self._Series(df._index, None, body, self._label,
-                           lineage=(df._sdf, expr))
-        out._mid_index = getattr(df, "_mid_index", False)
-        out._mid_dense = getattr(df, "_mid_dense", False)
-        out._mid_origin = getattr(df, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return self._Series(df._index, None, body, self._label,
+                            lineage=(df._sdf, expr))._carry(df, reordered=True)
 
     def ewm(self, alpha: float):
         """pandas ``groupby(k)[c].ewm(alpha).mean()`` — the JVM window
@@ -716,12 +695,8 @@ class _GroupedEwm:
                       [f"__k_{j}" for j in range(len(keys))])
         body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
                           F.col("__ewm").alias(I.col_name(0)))
-        s = sgb._Series(df._index, None, body, sgb._label)
-        s._mid_index = getattr(df, "_mid_index", False)
-        s._mid_dense = getattr(df, "_mid_dense", False)
-        s._mid_origin = getattr(df, "_mid_origin", None)
-        s._rows_reordered = True
-        return s
+        return sgb._Series(df._index, None, body,
+                           sgb._label)._carry(df, reordered=True)
 
     def mean(self, exact: bool = False):
         """Grouped EWM mean.  Default: the codegen'd window pow-trick
@@ -804,11 +779,7 @@ class Ewm:
                        self._alpha, out_col="__ewm")
         body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
                           F.col("__ewm").alias(I.col_name(0)))
-        res = Series(s._index, None, body, s.name)
-        res._mid_index = getattr(s, "_mid_index", False)
-        res._mid_dense = getattr(s, "_mid_dense", False)
-        res._mid_origin = getattr(s, "_mid_origin", None)
-        return res
+        return Series(s._index, None, body, s.name)._carry(s)
 
     def var(self, bias: bool = False):
         """pandas ``ewm(alpha).var(bias=)`` — the mean scan's
@@ -868,11 +839,7 @@ class Ewm:
                       bias=bias)
         body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
                           F.col("__ewm").alias(I.col_name(0)))
-        res = Series(s._index, None, body, s.name)
-        res._mid_index = getattr(s, "_mid_index", False)
-        res._mid_dense = getattr(s, "_mid_dense", False)
-        res._mid_origin = getattr(s, "_mid_origin", None)
-        return res
+        return Series(s._index, None, body, s.name)._carry(s)
 
 
 _OFFSET_UNITS_US = {
@@ -1104,9 +1071,7 @@ class Rolling:
             body = out.select(
                 *[F.col(I.idx_name(i)) for i in range(n)],
                 F.col("__out").alias(I.col_name(0)))
-            res = Series(names, None, body, s.name)
-            res._rows_reordered = True
-            return res
+            return Series(names, None, body, s.name)._join_state(s, other)
         # grouped: other must name a column of the parent frame
         label = other if isinstance(other, str) else \
             getattr(other, "name", None)
@@ -1233,9 +1198,7 @@ class Expanding:
             body = out.select(
                 *[F.col(I.idx_name(i)) for i in range(n)],
                 F.col("__out").alias(I.col_name(0)))
-            res = Series(names, None, body, s.name)
-            res._rows_reordered = True
-            return res
+            return Series(names, None, body, s.name)._join_state(s, other)
         label = other if isinstance(other, str) else \
             getattr(other, "name", None)
         df = sw._df

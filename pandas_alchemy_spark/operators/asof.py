@@ -124,7 +124,5 @@ def merge_asof(left, right, on: str, by=None, direction: str = "backward",
     labels = joined.columns
     sel = [F.monotonically_increasing_id().alias(I.idx_name(0))]
     sel += [F.col(c).alias(I.col_name(j)) for j, c in enumerate(labels)]
-    out = DataFrame(pd.Index((None,)), pd.Index(labels), joined.select(*sel))
-    out._mid_index = True
-    out._mid_origin = object()
-    return out
+    return DataFrame(pd.Index((None,)), pd.Index(labels),
+                     joined.select(*sel))._fresh_mid()

@@ -159,11 +159,8 @@ class GroupBy:
         sel = [F.monotonically_increasing_id().alias(I.idx_name(0))]
         sel += [F.col(c).alias(I.col_name(j))
                 for j, c in enumerate(out_labels)]
-        res = DataFrame(pd.Index((None,)), pd.Index(out_labels),
-                        out.select(*sel))
-        res._mid_index = True
-        res._mid_origin = object()
-        return res
+        return DataFrame(pd.Index((None,)), pd.Index(out_labels),
+                         out.select(*sel))._fresh_mid()
 
     def filter(self, fn):
         """pandas groupby filter: keep the member ROWS of every group
@@ -206,12 +203,8 @@ class GroupBy:
         sel = [F.col(nm) for nm in idx_names]
         sel += [F.col(f"__d_{i}").alias(I.col_name(i))
                 for i in range(len(labels))]
-        res = DataFrame(df._index, df._columns, out.select(*sel))
-        res._mid_index = getattr(df, "_mid_index", False)
-        res._mid_dense = getattr(df, "_mid_dense", False)
-        res._mid_origin = getattr(df, "_mid_origin", None)
-        res._rows_reordered = True
-        return res
+        return DataFrame(df._index, df._columns,
+                         out.select(*sel))._carry(df, reordered=True)
 
     def _simple(self, fn):
         labels = [c for c in self._df._columns if c not in self._by]
@@ -328,13 +321,8 @@ class GroupBy:
                     "grouped flavor; use the per-column form "
                     "gb[col].<verb>() instead")
             sel.append(expr.alias(I.col_name(j)))
-        out = DataFrame(df._index, pd.Index(labels),
-                        df._sdf.select(*sel))
-        out._mid_index = getattr(df, "_mid_index", False)
-        out._mid_dense = getattr(df, "_mid_dense", False)
-        out._mid_origin = getattr(df, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return DataFrame(df._index, pd.Index(labels),
+                         df._sdf.select(*sel))._carry(df, reordered=True)
 
     def _transform_frame(self, verb, *args, **kw):
         return self._transform_frame_fn(
@@ -460,12 +448,8 @@ class GroupBy:
         sel = [df._idx_at(i).alias(I.idx_name(i)) for i in range(n)]
         sel.append((F.row_number().over(w) - F.lit(1))
                    .alias(I.col_name(0)))
-        out = Series(df._index, None, df._sdf.select(*sel), None)
-        out._mid_index = getattr(df, "_mid_index", False)
-        out._mid_dense = getattr(df, "_mid_dense", False)
-        out._mid_origin = getattr(df, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return Series(df._index, None, df._sdf.select(*sel),
+                      None)._carry(df, reordered=True)
 
     def ngroup(self):
         """Group number in sorted-key order (pandas sort=True
@@ -504,12 +488,8 @@ class GroupBy:
         sel.append(pred(rn, cnt).alias("__keep"))
         out = (df._sdf.select(*sel).where(F.col("__keep"))
                .drop("__keep"))
-        res = DataFrame(df._index, df._columns, out)
-        res._mid_index = getattr(df, "_mid_index", False)
-        res._mid_dense = getattr(df, "_mid_dense", False)
-        res._mid_origin = getattr(df, "_mid_origin", None)
-        res._rows_reordered = True
-        return res
+        return DataFrame(df._index, df._columns,
+                         out)._carry(df, reordered=True)
 
     def head(self, n: int = 5):
         """First ``n`` member rows of every group (negative ``n``:
@@ -663,9 +643,8 @@ class GroupBy:
                 *[I.idx_name(i) for i in range(nk + len(labels))],
                 F.col("__n").alias(I.col_name(0)))
             name = "count"
-        s = Series(pd.Index(self._by + labels), None, out, name)
-        s._rows_reordered = True
-        return s
+        return Series(pd.Index(self._by + labels), None, out,
+                      name)._carry(reordered=True)
 
     def sample(self, frac: float, key: str = None,
                fast_hash: bool = False):
@@ -942,15 +921,13 @@ class RelationalMixin:
             order.append(c.asc() if asc else c.desc())
         new = self._shallow_copy()
         new._sdf = self._sdf.orderBy(*order)
-        new._explicit_order = True
-        return new
+        return new._impose_order()
 
     def sort_index(self, ascending=True):
         order = [c.asc() if ascending else c.desc() for c in self._idx_cols()]
         new = self._shallow_copy()
         new._sdf = self._sdf.orderBy(*order)
-        new._explicit_order = True
-        return new
+        return new._impose_order()
 
     @staticmethod
     def _dup_keys_exist(frame, keys) -> bool:
@@ -1046,12 +1023,8 @@ class RelationalMixin:
                    for i in range(self._n_idx())]
             sel += [l[f"l_{I.col_name(i)}"].alias(I.col_name(i))
                     for i in range(len(self._columns))]
-            out = DataFrame(self._index, self._columns, joined.select(*sel))
-            out._mid_index = self._mid_index
-            out._mid_dense = getattr(self, "_mid_dense", False)
-            out._mid_origin = getattr(self, "_mid_origin", None)
-            out._rows_reordered = True
-            return out
+            return DataFrame(self._index, self._columns,
+                             joined.select(*sel))._carry(self, reordered=True)
         joined = l.crossJoin(r) if how == "cross" else l.join(r, cond, how)
         # result columns: left data cols + right data cols (minus
         # right-side join keys when joining `on` shared labels)
@@ -1090,11 +1063,8 @@ class RelationalMixin:
         # silently consume data columns as index levels on export.
         sel = [F.monotonically_increasing_id().alias(I.idx_name(0))]
         sel += [e.alias(I.col_name(k)) for k, e in enumerate(out_exprs)]
-        out = DataFrame(pd.Index((None,)), pd.Index(out_labels),
-                        joined.select(*sel))
-        out._mid_index = True
-        out._mid_origin = object()
-        return out
+        return DataFrame(pd.Index((None,)), pd.Index(out_labels),
+                         joined.select(*sel))._fresh_mid()
 
     def join(self, other, how="left", lsuffix="", rsuffix=""):
         """pandas DataFrame.join: join on the INDEX (all levels,
@@ -1140,17 +1110,11 @@ class RelationalMixin:
             exprs.append(joined[f"r_{I.col_name(j)}"])
         sel = [e.alias(I.idx_name(i)) for i, e in enumerate(idx)]
         sel += [e.alias(I.col_name(k)) for k, e in enumerate(exprs)]
-        out = DataFrame(this._index, pd.Index(labels), joined.select(*sel))
-        # _mids_aligned guarantees: if either side is still mid-indexed
-        # here, BOTH are, same flavor (both dense, or same-origin
-        # monotonic) — the output index holds those mid values, so the
-        # flags/origin must ride along or raw mids leak as labels
-        out._mid_index = this._mid_index
-        out._mid_dense = getattr(this, "_mid_dense", False)
-        if out._mid_index and not out._mid_dense:
-            out._mid_origin = this._mid_origin
-        out._rows_reordered = True
-        return out
+        # when both sides still hold mids they joined on them raw, so
+        # the output index holds mid values: the state must say so or
+        # raw mids leak as labels
+        return DataFrame(this._index, pd.Index(labels),
+                         joined.select(*sel))._join_state(this, oth)
 
     def explode(self, column):
         """pandas DataFrame.explode: unnest one array column, other
@@ -1331,9 +1295,7 @@ class RelationalMixin:
                 *[e.alias(I.col_name(i))
                   for i, e in enumerate(exprs)])
             out = DataFrame(self._index, pd.Index(out_labels), body)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
+        out._carry(self)
         return out
 
     def nunique(self):
@@ -1482,13 +1444,8 @@ class RelationalMixin:
             sel.append(F.when(flag, c).otherwise(oth)
                        .alias(I.col_name(i)))
         from .core import DataFrame
-        out = DataFrame(self._index, self._columns,
-                        new._sdf.select(*sel))
-        out._mid_index = getattr(new, "_mid_index", False)
-        out._mid_dense = getattr(new, "_mid_dense", False)
-        out._mid_origin = getattr(new, "_mid_origin", None)
-        out._rows_reordered = getattr(new, "_rows_reordered", False)
-        return out
+        return DataFrame(self._index, self._columns,
+                         new._sdf.select(*sel))._carry(new)
 
     def pivot(self, index=None, columns=None, values=None):
         """pandas ``df.pivot``: reshape WITHOUT aggregation — raises
@@ -1612,11 +1569,8 @@ class RelationalMixin:
         sel = [self._idx_at(i).alias(I.idx_name(i))
                for i in range(self._n_idx())]
         sel.append(expr.alias(I.col_name(0)))
-        out = Series(self._index, None, self._sdf.select(*sel), None)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        return out
+        return Series(self._index, None, self._sdf.select(*sel),
+                      None)._carry(self)
 
     def sum(self, axis=0, numeric_only=True):
         """Column sums (axis=0, a one-row aggregate) or row sums
@@ -1736,12 +1690,8 @@ class RelationalMixin:
         idx = [self._idx_at(i) for i in range(self._n_idx())]
         sel = [e.alias(I.idx_name(i)) for i, e in enumerate(idx)]
         sel.append(expr.alias(I.col_name(0)))
-        out = Series(self._index, None, self._sdf.select(*sel), None)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return Series(self._index, None, self._sdf.select(*sel),
+                      None)._carry(self, reordered=True)
 
     def drop_duplicates(self, subset=None):
         """Exact dedup.  With ``subset``, keeps one arbitrary row per
@@ -1752,10 +1702,8 @@ class RelationalMixin:
             sdf = self._sdf.select(*data).dropDuplicates()
             sdf = sdf.select(F.monotonically_increasing_id().alias(I.idx_name(0)),
                              *[I.col_name(i) for i in range(self._n_cols())])
-            out = DataFrame(pd.Index((None,)), self._columns, sdf)
-            out._mid_index = True
-            out._mid_origin = object()
-            return out
+            return DataFrame(pd.Index((None,)), self._columns,
+                             sdf)._fresh_mid()
         keys = [self._col_at(self._columns.get_loc(s)).alias(f"__k_{j}")
                 for j, s in enumerate(subset)]
         others = F.struct(*self._idx_cols(), *self._data_cols()).alias("__all")
@@ -1892,11 +1840,9 @@ class RelationalMixin:
         sel += [self._idx_at(i).alias(I.col_name(i)) for i in range(self._n_idx())]
         sel += [self._col_at(i).alias(I.col_name(self._n_idx() + i))
                 for i in range(self._n_cols())]
-        out = DataFrame(pd.Index((None,)), pd.Index(idx_labels + list(self._columns)),
-                        self._sdf.select(*sel))
-        out._mid_index = True
-        out._mid_origin = object()
-        return out
+        labels = pd.Index(idx_labels + list(self._columns))
+        return DataFrame(pd.Index((None,)), labels,
+                         self._sdf.select(*sel))._fresh_mid()
 
     # -- alignment-based frame verbs (pandas parity batch) -------------
 
@@ -1913,9 +1859,8 @@ class RelationalMixin:
         from . import base
         sdf = base.BaseFrame(idx_names, joined_labels,
                              joined)._project(idx, cols)
-        out = DataFrame(idx_names, joined_labels, sdf)
-        out._rows_reordered = True
-        return out
+        return DataFrame(idx_names, joined_labels,
+                         sdf)._join_state(self, other)
 
     def update(self, other):
         """pandas ``df.update(other)`` (in place): other's non-null
@@ -1947,7 +1892,7 @@ class RelationalMixin:
         self._sdf = base.BaseFrame(self._index, self._columns,
                                    joined)._project([joined[lk]],
                                                     cols)
-        self._rows_reordered = True
+        self._streamed()
         return None
 
     def equals(self, other):
@@ -1999,10 +1944,9 @@ class RelationalMixin:
         # the any-diff flag rides as one extra projected column, then
         # filters and drops — no second join
         flag = I.col_name(len(labels))
-        out = DataFrame(idx_names, pd.Index(labels),
-                        marked.where(F.col(flag)).drop(flag))
-        out._rows_reordered = True
-        return out
+        return DataFrame(idx_names, pd.Index(labels),
+                         marked.where(F.col(flag)).drop(flag)) \
+            ._join_state(self, other)
 
     def reindex(self, index):
         """Conform to a new index: LEFT join from the requested labels
@@ -2020,9 +1964,8 @@ class RelationalMixin:
         lit = spark.createDataFrame(
             pd.DataFrame({I.idx_name(0): labels}))
         joined = lit.join(self._sdf, on=I.idx_name(0), how="left")
-        out = DataFrame(self._index, self._columns, joined)
-        out._rows_reordered = True
-        return out
+        return DataFrame(self._index, self._columns,
+                         joined)._carry(reordered=True)
 
     def rename_axis(self, name):
         """Rename the index level(s) — metadata only."""
@@ -2143,12 +2086,8 @@ class RelationalMixin:
                                                            out_lab]))
                 expr = term if expr is None else expr + term
             sel.append(expr.alias(I.col_name(j)))
-        out = DataFrame(self._index, pd.Index(list(w.columns)),
-                        self._sdf.select(*sel))
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        return out
+        return DataFrame(self._index, pd.Index(list(w.columns)),
+                         self._sdf.select(*sel))._carry(self)
 
     def align(self, other, join="outer"):
         """pandas ``df.align(other)``: both frames conformed onto the
@@ -2165,9 +2104,8 @@ class RelationalMixin:
         def side(col_fn, positions):
             sdf = base.BaseFrame(names, joined_labels, joined) \
                 ._project(idx, [col_fn(p) for p in positions])
-            out = DataFrame(names, joined_labels, sdf)
-            out._rows_reordered = True
-            return out
+            return DataFrame(names, joined_labels,
+                             sdf)._join_state(self, other)
 
         return side(lcol, lpos), side(rcol, rpos)
 
@@ -2212,9 +2150,8 @@ class RelationalMixin:
         sdf = pair_sdf.select(
             *[F.col(I.idx_name(i)) for i in range(n)],
             *[e.alias(I.col_name(m)) for m, e in enumerate(cols)])
-        out = DataFrame(names, joined_labels, sdf)
-        out._rows_reordered = True
-        return out
+        return DataFrame(names, joined_labels,
+                         sdf)._join_state(self, other)
 
     def mode(self, max_modes=10_000):
         """Per-column mode(s), pandas-shaped (columns padded with NaN
@@ -2285,10 +2222,8 @@ class RelationalMixin:
               for m, k in enumerate(keep)],
             *[self._col_at(i).alias(I.col_name(i))
               for i in range(self._n_cols())])
-        out = DataFrame(pd.Index([self._index[k] for k in keep]),
-                        self._columns, body)
-        out._rows_reordered = getattr(self, "_rows_reordered", False)
-        return out
+        return DataFrame(pd.Index([self._index[k] for k in keep]),
+                         self._columns, body)._carry(self)
 
     def divide(self, other, fill_value=None):
         return self.div(other, fill_value=fill_value)
@@ -2346,9 +2281,8 @@ class RelationalMixin:
         labels = other._sdf.select(
             other._idx_at(0).alias(I.idx_name(0))).distinct()
         joined = labels.join(self._sdf, on=I.idx_name(0), how="left")
-        out = DataFrame(self._index, self._columns, joined)
-        out._rows_reordered = True
-        return out
+        return DataFrame(self._index, self._columns,
+                         joined)._carry(reordered=True)
 
     def filter(self, items=None, like=None, regex=None, axis=1):
         """pandas ``df.filter``: select columns by label (axis=1 —
@@ -2562,11 +2496,8 @@ def get_dummies(ser, prefix=None, categories=None, max_categories=64):
     labels = [f"{base}_{v}" if base else str(v) for v in categories]
     idx = [ser._idx_at(i) for i in range(ser._n_idx())]
     data = [(ser._the_col == F.lit(v)).cast("int") for v in categories]
-    out = DataFrame(ser._index, pd.Index(labels), ser._project(idx, data))
-    out._mid_index = ser._mid_index
-    out._mid_dense = getattr(ser, "_mid_dense", False)
-    out._mid_origin = getattr(ser, "_mid_origin", None)
-    return out
+    return DataFrame(ser._index, pd.Index(labels),
+                     ser._project(idx, data))._carry(ser)
 
 
 class ReshapeMixin:
@@ -2709,10 +2640,8 @@ class ReshapeMixin:
         sel = [F.monotonically_increasing_id().alias(I.idx_name(0))]
         sel += [F.col(c).alias(I.col_name(j)) for j, c in enumerate(labels)]
         from .core import DataFrame as DF
-        out = DF(pd.Index((None,)), pd.Index(labels), un.select(*sel))
-        out._mid_index = True
-        out._mid_origin = object()
-        return out
+        return DF(pd.Index((None,)), pd.Index(labels),
+                  un.select(*sel))._fresh_mid()
 
     def describe(self, percentiles=(0.25, 0.5, 0.75)):
         """pandas describe() for numeric columns: ONE Spark aggregate
@@ -2977,7 +2906,7 @@ class SeriesAggMixin:
         new = self._shallow_copy()
         c = new._the_col
         new._sdf = new._sdf.orderBy(c.asc() if ascending else c.desc())
-        new._explicit_order = True
+        new._impose_order()
         if hasattr(new, "_drop_lineage"):
             new._drop_lineage()
         return new
@@ -3016,9 +2945,8 @@ class SeriesAggMixin:
         order = (F.col(I.col_name(0)).asc() if ascending
                  else F.col(I.col_name(0)).desc())
         sdf = agged.select(I.idx_name(0), val).orderBy(order)
-        out = Series(pd.Index([self.name]), pd.Index([label]), sdf, label)
-        out._explicit_order = True
-        return out
+        return Series(pd.Index([self.name]), pd.Index([label]), sdf,
+                      label)._impose_order()
 
 
 class SeriesRelationalMixin:
@@ -3048,7 +2976,7 @@ class SeriesRelationalMixin:
                  for i in range(self._n_idx())]
         new = self._shallow_copy()
         new._sdf = self._sdf.orderBy(*order)
-        new._explicit_order = True
+        new._impose_order()
         if hasattr(new, "_drop_lineage"):
             new._drop_lineage()
         return new
@@ -3087,13 +3015,8 @@ class SeriesRelationalMixin:
         sel = [self._idx_at(i).alias(I.idx_name(i))
                for i in range(self._n_idx())]
         sel.append(expr.alias(I.col_name(0)))
-        out = Series(self._index, None, self._sdf.select(*sel),
-                     self.name)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return Series(self._index, None, self._sdf.select(*sel),
+                      self.name)._carry(self, reordered=True)
 
     def drop_duplicates(self, keep="first"):
         """Keep one occurrence per distinct value (first/last in index
@@ -3114,7 +3037,7 @@ class SeriesRelationalMixin:
         new = self._shallow_copy()
         new._sdf = (self._sdf.withColumn("__keep", cond)
                     .filter(F.col("__keep")).drop("__keep"))
-        new._rows_reordered = True
+        new._carry(reordered=True)
         if hasattr(new, "_drop_lineage"):
             new._drop_lineage()
         return new
@@ -3133,9 +3056,7 @@ class SeriesRelationalMixin:
         def side(col_fn, name):
             body = joined.select(*sel_idx,
                                  col_fn(0).alias(I.col_name(0)))
-            s = Series(names, None, body, name)
-            s._rows_reordered = True
-            return s
+            return Series(names, None, body, name)._join_state(self, other)
 
         return side(lcol, self.name), side(rcol, other.name)
 
@@ -3159,10 +3080,7 @@ class SeriesRelationalMixin:
             body = self._sdf.select(
                 expr.alias(I.idx_name(0)),
                 self._the_col.alias(I.col_name(0)))
-            out = Series(self._index, None, body, self.name)
-            out._rows_reordered = getattr(self, "_rows_reordered",
-                                          False)
-            return out
+            return Series(self._index, None, body, self.name)._carry(self)
         new = self._shallow_copy()
         new.name = name
         return new
@@ -3225,7 +3143,7 @@ class SeriesRelationalMixin:
                        joined[f"l_{I.col_name(0)}"])
             .alias(I.col_name(0)))
         self._sdf = body
-        self._rows_reordered = True
+        self._streamed()
         return None
 
     def repeat(self, repeats: int):
@@ -3240,9 +3158,8 @@ class SeriesRelationalMixin:
             F.col(I.idx_name(0)),
             F.explode(F.array_repeat(self._the_col,
                                      repeats)).alias(I.col_name(0)))
-        out = Series(self._index, None, body, self.name)
-        out._rows_reordered = True
-        return out
+        return Series(self._index, None, body,
+                      self.name)._carry(reordered=True)
 
     def searchsorted(self, value, side: str = "left"):
         """Insertion point(s) that keep a SORTED series sorted:
@@ -3355,13 +3272,11 @@ class SeriesRelationalMixin:
             raise ValueError(
                 f"errors must be 'raise' or 'ignore', got {errors!r}")
         body = self._sdf.filter(~idx.isin(labels))
-        out = Series(self._index, None,
-                     body.select(
-                         *[F.col(I.idx_name(i))
-                           for i in range(self._n_idx())],
-                         F.col(I.col_name(0))), self.name)
-        out._rows_reordered = getattr(self, "_rows_reordered", False)
-        return out
+        return Series(self._index, None,
+                      body.select(
+                          *[F.col(I.idx_name(i))
+                            for i in range(self._n_idx())],
+                          F.col(I.col_name(0))), self.name)._carry(self)
 
     def filter(self, items=None, like=None, regex=None):
         """Rows by index label (in-plan predicate, like the frame's
@@ -3496,8 +3411,7 @@ class SeriesRelationalMixin:
 
     def _arg_extreme_pos(self, first: bool):
         s = self.reset_index(drop=True)
-        if getattr(s, "_mid_index", False):
-            s._densify()
+        s._densify()
         return int(s.idxmin() if first else s.idxmax())
 
     def case_when(self, caselist):
@@ -3536,12 +3450,8 @@ class SeriesRelationalMixin:
         body = root.select(
             *[F.col(I.idx_name(i)) for i in range(n)],
             expr.alias(I.col_name(0)))
-        out = Series(self._index, None, body, self.name,
-                     lineage=(root, expr))
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        return out
+        return Series(self._index, None, body, self.name,
+                      lineage=(root, expr))._carry(self)
 
     def groupby(self, by=None, level=None):
         """``series.groupby(key_series)`` / ``groupby(level=i)`` — the
@@ -3584,9 +3494,7 @@ class SeriesRelationalMixin:
         if key == "__v":
             key = "__key"
         frame = DataFrame(self._index, pd.Index([key, "__v"]), body)
-        frame._mid_index = getattr(self, "_mid_index", False)
-        frame._mid_dense = getattr(self, "_mid_dense", False)
-        frame._mid_origin = getattr(self, "_mid_origin", None)
+        frame._carry(self)
         return SeriesGroupBy(frame, [key], "__v")
 
     def unstack(self, level=-1, agg: str = "first",
@@ -3710,9 +3618,8 @@ class SeriesRelationalMixin:
             self._sdf.select(self._idx_at(0).alias(I.idx_name(0)),
                              self._the_col.alias(I.col_name(0))),
             on=I.idx_name(0), how="left")
-        out = Series(self._index, None, joined, self.name)
-        out._rows_reordered = True
-        return out
+        return Series(self._index, None, joined,
+                      self.name)._carry(reordered=True)
 
     def set_axis(self, labels):
         """Replace the index with the given labels, positionally — a
@@ -3729,8 +3636,7 @@ class SeriesRelationalMixin:
                 f"Length mismatch: expected {n} labels, "
                 f"got {len(labels)}")
         flat = self.reset_index(drop=True)
-        if getattr(flat, "_mid_index", False):
-            flat._densify()
+        flat._densify()
         spark = self._sdf.sparkSession
         lit = spark.createDataFrame(
             pd.DataFrame({"__pos": range(n), "__lab": labels}))
@@ -3740,9 +3646,8 @@ class SeriesRelationalMixin:
                       "inner")
                 .select(F.col("__lab").alias(I.idx_name(0)),
                         F.col(I.col_name(0))))
-        out = Series(pd.Index([None]), None, body, self.name)
-        out._rows_reordered = True
-        return out
+        return Series(pd.Index([None]), None, body,
+                      self.name)._carry(reordered=True)
 
     def xs(self, key, level=0):
         """Cross-section of a MultiIndex series."""
@@ -3861,12 +3766,8 @@ def json_normalize(ser, schema: str):
     sel = [parsed._idx_at(i).alias(I.idx_name(i)) for i in range(n)]
     sel += [parsed._the_col.getField(f).alias(I.col_name(j))
             for j, f in enumerate(fields)]
-    out = DataFrame(parsed._index, pd.Index(list(fields)),
-                    parsed._sdf.select(*sel))
-    out._mid_index = getattr(ser, "_mid_index", False)
-    out._mid_dense = getattr(ser, "_mid_dense", False)
-    out._mid_origin = getattr(ser, "_mid_origin", None)
-    return out
+    return DataFrame(parsed._index, pd.Index(list(fields)),
+                     parsed._sdf.select(*sel))._carry(ser)
 
 
 def to_numeric(ser, errors: str = "raise"):
@@ -3929,7 +3830,5 @@ def wide_to_long(df, stubnames, i: str, j: str, sep: str = ""):
            F.col("__e.__j").alias(I.idx_name(1))]
     sel += [F.col(f"__e.{s}").alias(I.col_name(k))
             for k, s in enumerate(stubs)]
-    out = DataFrame(pd.Index([i, j]), pd.Index(stubs),
-                    exploded.select(*sel))
-    out._rows_reordered = True
-    return out
+    return DataFrame(pd.Index([i, j]), pd.Index(stubs),
+                     exploded.select(*sel))._carry(reordered=True)

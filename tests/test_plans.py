@@ -104,7 +104,7 @@ def test_interval_join_no_cartesian(spark):
 
 def test_scan_head_stays_cheap_limit(spark):
     # a plain scan's head() must remain an early-exit LIMIT (no sort,
-    # no TakeOrdered over the full table) — the _rows_reordered flag
+    # no TakeOrdered over the full table) — the REORDERED index state
     # only forces ordering when a reordering verb intervened
     li = pas.read_parquet(f"{SF_DIR}/lineitem.parquet")
     h = li.head(5)
