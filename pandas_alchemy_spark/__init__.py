@@ -113,7 +113,13 @@ def sql(query: str, index=None, **frames):
 
 def read_parquet(path, columns=None, index=None):
     """Parquet scan as an engine DataFrame (supersedes the reference's
-    SQLAlchemy-URL connector surface, SURVEY.md §2.1)."""
+    SQLAlchemy-URL connector surface, SURVEY.md §2.1).
+
+    The path's schema is inferred on its first read in a session and
+    reused while nothing under the path and no SQL conf of the session
+    has changed (see ``DataFrame.from_table``); a changed, added or
+    removed file, a changed conf, ``close_db()``, a URI or a glob path
+    infers again."""
     return DataFrame.from_table(path, columns=columns, index=index)
 
 

@@ -130,7 +130,8 @@ class IndexState:
       reordered.
     - *explicit* (``_impose_order``): a sort verb.
     - ``_densify`` drops the mid; ``_to_index_order`` re-sorts a
-      reordered plan back to index order."""
+      reordered plan back to index order (``_in_export_order`` on a
+      copy)."""
 
     mid: str | None = None
     origin: object = None
@@ -335,16 +336,26 @@ class BaseFrame:
             self._sdf = rid.select(I.idx_name(0), *body.columns)
         self._state = replace(self._state, mid=None, origin=None)
 
-    def _to_index_order(self) -> None:
+    def _to_index_order(self, densify: bool = True) -> None:
         """Put the plan in index order and densify a mid, in place, so
         that 0-based positions follow the rows export shows and keep
         pandas' positional labels (iloc[10:15] shows index 10..14, and
         the positions become real index values before a selection
-        rather than being re-ranked within it at export)."""
+        rather than being re-ranked within it at export).
+        ``densify=False`` keeps a mid."""
         if self._positional_reordered():
             self._sdf = self._sdf.orderBy(F.col(I.idx_name(0)).asc())
             self._state = replace(self._state, order=INDEX)
-        self._densify()
+        if densify:
+            self._densify()
+
+    def _in_export_order(self, densify: bool) -> "BaseFrame":
+        """A copy whose plan row order is the order export shows, so
+        that plan order can stand for it (each part of a part-major
+        concat); see ``_to_index_order``."""
+        new = self._shallow_copy()
+        new._to_index_order(densify)
+        return new
 
     def _densified(self) -> "BaseFrame":
         if self._state.mid is None:

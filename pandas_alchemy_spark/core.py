@@ -35,7 +35,7 @@ from .indexer import (_AtIndexer, _iAtIndexer, _iLocIndexer,
                       _LocIndexer)
 from .relational import (RelationalMixin, ReshapeMixin,
                          SeriesAggMixin, SeriesRelationalMixin)
-from .session import get_session
+from .session import get_session, parquet_scan
 
 _REPR_ROWS = 10
 
@@ -950,13 +950,23 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         the scan), ``index`` promotes named columns to index levels;
         with no index a 0-based rowid is synthesized via the scalable
         partition-offset pass (operators/rowid.py), not a global window.
+
+        A parquet path's schema is inferred (a Spark job that reads the
+        footers) on its first read in a session and reused after that,
+        as the reference reflects a table once into its ``MetaData``:
+        Spark still lists the files on every read but reads no footer.
+        The path is inferred again when a file under it is added,
+        removed, resized, rewritten or touched, when any SQL conf of the
+        session changes, and after ``close_db()``.  URIs (``s3a://``,
+        ``hdfs://``, ``file:``) and globs are inferred on every read.
         """
         spark = get_session()
         if isinstance(table, str) and (
                 "/" in table or table.endswith(".parquet")):
-            sdf = spark.read.parquet(table)
-        else:
-            sdf = spark.read.table(table if schema is None else f"{schema}.{table}")
+            sdf, layout = parquet_scan(spark, table, _scan_layout)
+            return DataFrame._from_spark_scan(
+                sdf, columns=columns, index=index, layout=layout)
+        sdf = spark.read.table(table if schema is None else f"{schema}.{table}")
         return DataFrame._from_spark_scan(sdf, columns=columns, index=index)
 
     @staticmethod
@@ -969,74 +979,70 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                                           index=index)
 
     @staticmethod
-    def _from_spark_scan(sdf, columns=None, index=None):
+    def _from_spark_scan(sdf, columns=None, index=None, layout=None):
         """Wrap an arbitrary Spark scan in the positional layout
-        (shared by from_table and the sources.io readers)."""
+        (shared by from_table and the sources.io readers) with one
+        ``selectExpr``.  ``layout`` is the scan's ``_scan_layout`` when
+        the caller already knows it."""
         cols = list(sdf.columns)
-        mid = dense = False
-        origin = None
         if index is None:
             # provisional rowid, densified to the reference's 0-based
             # contiguous form only when index values become observable
-            # (base.IndexState).  Single-file scans use the
-            # parquet reader's _metadata.row_index: it is the TRUE file
-            # position (so the provisional index is already the pandas
-            # RangeIndex — no densify pass ever needed) and, unlike
-            # monotonically_increasing_id, it is DETERMINISTIC.  That
-            # determinism is what keeps predicate pushdown alive:
-            # Catalyst refuses to move filters below a projection
-            # containing a nondeterministic expression, so a monotonic
-            # rowid silently pins every downstream mask filter ABOVE
-            # the scan (no PushedFilters).  Multi-file scans fall back
-            # to the monotonic id (row_index repeats per file); their
-            # masks should be applied before wrapping when pushdown
-            # matters.
-            try:
-                files = sorted(sdf.inputFiles())
-            except Exception:
-                files = []
-            if len(files) == 1 and _metadata_resolvable(sdf):
-                # parquet only — CSV/JSON metadata has no row_index.
-                # The resolvability check is a PLAN walk, not a
-                # try/except (r13; VERDICT r12 #5): a DERIVED frame
-                # that still reports one input file (e.g. post-pivot)
-                # made the attach throw a full JVM AnalysisException
-                # per wrap — caught, but each one emitted an
-                # ERROR-level DataFrameQueryContextLogger block and
-                # paid a wasted analyzer pass.
-                sdf = sdf.withColumn(
-                    I.ROWID, F.col("_metadata.row_index"))
-                dense = True
-            else:
-                sdf = sdf.withColumn(
-                    I.ROWID, F.monotonically_increasing_id())
-            idx_exprs = [F.col(I.ROWID)]
-            index = pd.Index((None,))
-            mid = True
-            # monotonic mids are comparable between frames of the same
-            # file set (deterministic scan partitioning within a
-            # session); unknown inputs get a unique token so only
-            # frames DERIVED from this one (sharing it via _carry)
-            # join on raw mids
-            if files:
-                origin = ("scan",) + tuple(files)
+            # (base.IndexState); see _scan_layout for which kind
+            files, dense = _scan_layout(sdf) if layout is None else layout
+            idx_exprs = ["_metadata.row_index" if dense
+                         else "monotonically_increasing_id()"]
         else:
             if not pd.api.types.is_list_like(index):
                 index = (index,)
-            index = pd.Index(index)
             for i in index:
                 cols.pop(cols.index(i))
-            idx_exprs = [F.col(i) for i in index]
+            idx_exprs = [_quoted(i) for i in index]
         if columns is None:
             columns = pd.Index(cols)
         else:
             columns = pd.Index(columns)
             for c in columns:
                 cols.index(c)  # raises ValueError on unknown, as reference
-        sel = [e.alias(I.idx_name(i)) for i, e in enumerate(idx_exprs)]
-        sel += [F.col(c).alias(I.col_name(i)) for i, c in enumerate(columns)]
-        out = DataFrame(index, columns, sdf.select(*sel))
-        return out._fresh_mid(dense, origin) if mid else out
+        sel = [f"{e} AS {I.idx_name(i)}" for i, e in enumerate(idx_exprs)]
+        sel += [f"{_quoted(c)} AS {I.col_name(i)}"
+                for i, c in enumerate(columns)]
+        if index is not None:
+            return DataFrame(pd.Index(index), columns, sdf.selectExpr(*sel))
+        out = DataFrame(pd.Index((None,)), columns, sdf.selectExpr(*sel))
+        # monotonic mids are comparable between frames of the same
+        # file set (deterministic scan partitioning within a session);
+        # unknown inputs get a unique token so only frames DERIVED from
+        # this one (sharing it via _carry) join on raw mids
+        return out._fresh_mid(dense, ("scan",) + files if files else None)
+
+
+def _quoted(name) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + str(name).replace("`", "``") + "`"
+
+
+def _scan_layout(sdf) -> tuple:
+    """(sorted input files, whether the index is the parquet reader's
+    ``_metadata.row_index``) of a scan.
+
+    Single-file scans use ``_metadata.row_index``: it is the TRUE file
+    position (so the provisional index is already the pandas
+    RangeIndex — no densify pass ever needed) and, unlike
+    monotonically_increasing_id, it is DETERMINISTIC.  That determinism
+    is what keeps predicate pushdown alive: Catalyst refuses to move
+    filters below a projection containing a nondeterministic
+    expression, so a monotonic rowid silently pins every downstream
+    mask filter ABOVE the scan (no PushedFilters).  Multi-file scans
+    fall back to the monotonic id (row_index repeats per file); their
+    masks should be applied before wrapping when pushdown matters.
+    Only parquet has a row_index (CSV/JSON metadata does not); the
+    check is a plan walk, not a try/except (``_metadata_resolvable``)."""
+    try:
+        files = tuple(sorted(sdf.inputFiles()))
+    except Exception:
+        files = ()
+    return files, len(files) == 1 and _metadata_resolvable(sdf)
 
 
 def _concat_columns(objs):
@@ -1084,17 +1090,15 @@ def concat(objs, axis=0, ignore_index: bool = False):
         for lab in o._columns:
             if lab not in labels:
                 labels.append(lab)
-    any_mid = any(o._mid_index for o in objs)
-    if any_mid and not ignore_index:
-        # pandas keeps each part's own labels (0..n-1, 0..m-1, ...) in
-        # part order.  Materialize them per part BEFORE the union
-        # (metadata flip for dense mids, one count pass for monotonic
-        # ones): per-part positions repeat across parts, so the result
-        # can NOT be a mid-index — a mid claims "index order == row
-        # order" and export would re-sort, interleaving the parts —
-        # nor are the duplicated values usable by the dense tail()/
-        # iloc fast paths.
-        objs = [o._densified() for o in objs]
+    # pandas concat is part-major, each part in its own export order:
+    # put each part's plan in that order, union them (unionAll
+    # concatenates the children's partitions, a narrow op) and export
+    # in plan order.  Without ignore_index pandas keeps each part's own
+    # labels (0..n-1, 0..m-1, ...): mids are materialized per part
+    # BEFORE the union (metadata flip for dense mids, one count pass
+    # for monotonic ones) — per-part positions repeat across parts, so
+    # the result can not be a mid-index.
+    objs = [o._in_export_order(densify=not ignore_index) for o in objs]
     parts = []
     for o in objs:
         sel = [o._idx_at(i).alias(I.idx_name(i)) for i in range(n_idx)]
@@ -1116,12 +1120,9 @@ def concat(objs, axis=0, ignore_index: bool = False):
             *[I.col_name(j) for j in range(len(labels))])
         out = DataFrame(pd.Index((None,)), pd.Index(labels),
                         body)._fresh_mid()
-    elif any_mid:
-        # parts were densified above: index values are true per-part
-        # positions (duplicated across parts), and pandas row order is
-        # part-major — which IS the plan order (unionAll concatenates
-        # children's partitions, a narrow op).  Export must follow
-        # plan order, not re-sort by the duplicated positional index.
+    else:
+        # labels may repeat across parts: export must follow plan
+        # order, not re-sort by a positional index
         out._impose_order()
     return out
 

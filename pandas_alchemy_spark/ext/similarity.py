@@ -33,6 +33,17 @@ def norm_expr(a: str):
     return F.expr(_NORM.format(a=a))
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best (query_id, neighbor_id, cosine) rows,
+    ranked 1..k.  Spark orders NaN above every number, so a NaN cosine
+    (a vector with a NaN component) is dropped, not ranked first."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return (scored.filter(~F.isnan("cosine"))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
 def cosine_topk(df: DataFrame, queries: DataFrame, k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
@@ -52,10 +63,7 @@ def cosine_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     scored = (c.join(F.broadcast(q))
               .filter(F.col("neighbor_id") != F.col("query_id"))
               .select("query_id", "neighbor_id", cos.alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(scored, k)
 
 
 _CACHE_RING: "list" = []
@@ -219,10 +227,7 @@ def lsh_topk(df: DataFrame, queries: DataFrame, k: int = 10,
               .filter(F.col("neighbor_id") != F.col("query_id"))
               .dropDuplicates(["query_id", "neighbor_id"])
               .select("query_id", "neighbor_id", cos.alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(scored, k)
 
 
 def lsh_collision_prob(threshold: float) -> float:
@@ -923,10 +928,7 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     scored = (c.join(F.broadcast(q), "cell")
               .filter(F.col("neighbor_id") != F.col("query_id"))
               .select("query_id", "neighbor_id", cos.alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(scored, k)
 
 
 def build_ivf_index(df: DataFrame, path: str, dim: int,
@@ -1310,10 +1312,7 @@ def search_ivf_index(spark, path: str, queries: DataFrame,
     scored = (c.join(F.broadcast(q), "cell")
               .filter(F.col("neighbor_id") != F.col("query_id"))
               .select("query_id", "neighbor_id", cos.alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(scored, k)
 
 
 def semantic_dedup_against(spark, path: str, new: DataFrame,

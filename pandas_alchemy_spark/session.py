@@ -15,15 +15,35 @@ Scale notes (100 TB / 1000-executor design intent):
 - Arrow is enabled so `to_pandas`/`from_pandas` interop is columnar,
   not row-at-a-time (the reference ships literal rows as UNION ALL
   SQL text — an anti-pattern we deliberately do not reproduce).
+
+Building a frame is driver-only work, as the reference's query
+composition is client-only:
+
+- PySpark's DataFrame call-site capture
+  (``spark.python.sql.dataFrameDebugging.enabled``) is off.  It wraps
+  every Column and DataFrame call with several py4j round trips to
+  record the calling line for error messages, and the line it records
+  is one inside this package, never the user's code.  Pass
+  ``init_db(**{"spark.python.sql.dataFrameDebugging.enabled": "true"})``
+  to turn it back on.
+- A parquet path's inferred schema is kept with the session, the
+  analogue of the reference reflecting a table once into its global
+  ``MetaData`` (db.py:12-19): see :func:`parquet_scan`.
+  :func:`close_db` drops it.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 
+import pyspark.errors.utils as _pyspark_errors_utils
 from pyspark.sql import SparkSession
 
 _SESSION: SparkSession | None = None
+
+#: absolute parquet path -> (key, facts) of its last schema inference
+_PARQUET_SCANS: dict[str, tuple] = {}
 
 
 def _default_parallelism() -> str:
@@ -52,6 +72,7 @@ def init_db(master: str | None = None, app_name: str = "pandas_alchemy_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.ansi.enabled", "false")
         # driver testdata uses nanosecond parquet timestamps
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -64,6 +85,9 @@ def init_db(master: str | None = None, app_name: str = "pandas_alchemy_spark",
         builder = builder.config(k, v)
     _SESSION = builder.getOrCreate()
     _SESSION.sparkContext.setLogLevel("WARN")
+    # pyspark reads the call-site conf once per process and caches it;
+    # clear that cache so this session's setting is the one in force
+    _pyspark_errors_utils._enable_debugging_cache = None
     return _SESSION
 
 
@@ -74,6 +98,7 @@ def close_db() -> None:
         raise RuntimeError("Session not initialized")
     _SESSION.stop()
     _SESSION = None
+    _PARQUET_SCANS.clear()
 
 
 def get_session() -> SparkSession:
@@ -85,3 +110,56 @@ def get_session() -> SparkSession:
     if active is not None:
         return active
     raise RuntimeError("No SparkSession; call init_db() first")
+
+
+def _parquet_key(spark: SparkSession, path: str):
+    """What a parquet path's inferred schema depends on: every file
+    under it as (relative name, size, mtime_ns, inode), and the
+    session's SQL confs.  None for a path that cannot be stat'ed here
+    (a URI such as ``s3a://``, a glob, a missing path)."""
+    if "://" in path or path.startswith("file:") or glob.has_magic(path):
+        return None
+    root = os.path.abspath(path)
+    if os.path.isfile(root):
+        walk = [(os.path.dirname(root), [os.path.basename(root)])]
+    elif os.path.isdir(root):
+        walk = [(d, files) for d, _, files in os.walk(root)]
+    else:
+        return None
+    entries = []
+    try:
+        for d, files in walk:
+            for name in files:
+                st = os.stat(os.path.join(d, name))
+                entries.append((os.path.relpath(os.path.join(d, name), root),
+                                st.st_size, st.st_mtime_ns, st.st_ino))
+    except FileNotFoundError:  # deleted while we walked
+        return None
+    confs = spark._jsparkSession.sessionState().conf().getAllConfs()
+    return tuple(sorted(entries)), confs.toString()
+
+
+def parquet_scan(spark: SparkSession, path: str, describe):
+    """A Spark scan of the parquet ``path`` and ``describe(scan)``.
+
+    The path's schema and description come from a fresh scan (a Spark
+    job that reads the parquet footers) on its first read, and are
+    reused while neither the files under the path nor the session's SQL
+    confs have changed: the scan is then built from the known schema,
+    which lists the files but reads no footer.  Any change to either
+    scans afresh, as does every read of a path that cannot be stat'ed
+    locally.  One entry per path."""
+    key = _parquet_key(spark, path)
+    root = os.path.abspath(path)
+    hit = _PARQUET_SCANS.get(root) if key is not None else None
+    if hit is not None and hit[0] == key:
+        schema, facts = hit[1]
+        return spark.read.schema(schema).parquet(path), facts
+    # the key is taken BEFORE the scan: a file changed in between then
+    # leaves an entry whose key no later read matches, never a stale
+    # schema under the new key
+    sdf = spark.read.parquet(path)
+    facts = describe(sdf)
+    if key is not None:
+        _PARQUET_SCANS[root] = (key, (sdf.schema, facts))
+    return sdf, facts

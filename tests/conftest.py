@@ -23,6 +23,20 @@ def lineitem_pdf(spark) -> pd.DataFrame:
     return pd.read_parquet(f"{SF_DIR}/lineitem.parquet")
 
 
+def jobs_started_by(spark, group: str, fn):
+    """Run ``fn()`` in its own Spark job group; return its result and
+    the ids of the Spark jobs it started (read once the listener bus
+    has delivered every job event)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_series_equal_sorted(ours, theirs, **kw):
     """Compare engine output against pandas ignoring row order (the
     engine, like the reference, does not promise an ordering)."""

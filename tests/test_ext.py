@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pandas_alchemy_spark.ext import dedup, events, multimodal, similarity, text
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_started_by
 
 
 @pytest.fixture(scope="module")
@@ -86,6 +86,35 @@ def test_cosine_topk_vs_numpy(emb):
         want_ids = [i for i, _ in order[:5]]
         got_ids = list(got[got.query_id == qid].sort_values("rank").neighbor_id)
         assert got_ids == want_ids
+
+
+_NAN_ROWS = [(1, [1.0, 0.0]), (2, [0.9, 0.1]),
+             (3, [float("nan"), 1.0]), (4, [0.0, 1.0])]
+_NAN_TOPK = {
+    "cosine_topk": lambda spark, e, q, path: similarity.cosine_topk(e, q, k=3),
+    "lsh_topk": lambda spark, e, q, path: similarity.lsh_topk(
+        e, q, k=3, dim=2, planes=1, tables=1),
+    "ivf_topk": lambda spark, e, q, path: similarity.ivf_topk(
+        e, q, k=3, dim=2, nprobe=2, centroids=[[1.0, 0.0], [0.0, 1.0]]),
+    "search_ivf_index": lambda spark, e, q, path: similarity.search_ivf_index(
+        spark, path, q, k=3, nprobe=2,
+        centroids=similarity.build_ivf_index(
+            e, path, dim=2, centroids=[[1.0, 0.0], [0.0, 1.0]])),
+}
+
+
+@pytest.mark.parametrize("search", sorted(_NAN_TOPK))
+def test_topk_drops_nan_cosines(spark, tmp_path, search):
+    # Spark orders NaN above every number: a vector with a NaN
+    # component must not come back as the best neighbour
+    e = spark.createDataFrame(_NAN_ROWS, "vec_id long, embedding array<double>")
+    got = (_NAN_TOPK[search](spark, e, e.filter("vec_id = 1"),
+                             str(tmp_path / "ivf"))
+           .toPandas().sort_values("rank"))
+    assert got.neighbor_id.tolist() == [2, 4]
+    assert got["rank"].tolist() == [1, 2]
+    np.testing.assert_allclose(got.cosine, [0.9 / math.sqrt(0.82), 0.0],
+                               atol=1e-12)
 
 
 def test_lsh_topk_recall(emb):
@@ -2212,12 +2241,10 @@ def test_semantic_dedup_drops_nan_and_zero_vectors(spark):
 def test_semdedup_bad_kernel_raises_before_spark_work(spark, emb):
     """``kernel`` accepts only "numpy".  Any other value raises before
     centroid training, the assignment persist or any Spark job."""
-    sc = spark.sparkContext
     corpus = emb.select("vec_id", "embedding")
     ring = [id(x) for x in similarity._CACHE_RING]
-    group = "semdedup-bad-kernel"
-    sc.setJobGroup(group, "kernel validation")
-    try:
+
+    def validate():
         for fn in (similarity.semantic_dedup_pairs,
                    similarity.semantic_dedup):
             for bad in ("blas", "av"):
@@ -2226,9 +2253,7 @@ def test_semdedup_bad_kernel_raises_before_spark_work(spark, emb):
             for gone in ("sql", "auto"):
                 with pytest.raises(ValueError, match="removed"):
                     fn(corpus, dim=64, nlist=8, kernel=gone)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert jobs_started_by(spark, "semdedup-bad-kernel", validate)[1] == []
     assert [id(x) for x in similarity._CACHE_RING] == ring
 
 

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 import pandas_alchemy_spark as pas
 from pandas_alchemy_spark.operators.rowid import with_rowid
 from pandas_alchemy_spark.plans import physical_plan
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_started_by
 
 _PART = "__pa_part"
 _LOCAL = "__pa_local_rn"
@@ -162,16 +162,12 @@ def test_iat_out_of_range_message(spark):
 
 
 def test_tail_runs_no_job_in_the_verb(spark):
-    sc = spark.sparkContext
     o = pas.read_parquet(f"{SF_DIR}/orders.parquet")
-    group = "lazy-tail"
-    sc.setJobGroup(group, "tail is a plan rewrite")
-    try:
-        sorted_tail = o.sort_values(["o_totalprice", "o_orderkey"]).tail(5)
-        dense_tail = o.tail(5)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    (sorted_tail, dense_tail), jobs = jobs_started_by(
+        spark, "lazy-tail",
+        lambda: (o.sort_values(["o_totalprice", "o_orderkey"]).tail(5),
+                 o.tail(5)))
+    assert jobs == []
     assert "TakeOrderedAndProject" in physical_plan(sorted_tail)
     assert "TakeOrderedAndProject" in physical_plan(dense_tail)
 
@@ -211,6 +207,40 @@ def test_tail_after_concat_follows_plan_order(spark, k):
                       pas.DataFrame.from_pandas(b)]).tail(k).to_pandas()
     pd.testing.assert_frame_equal(got, pd.concat([a, b]).tail(k),
                                   check_dtype=False, check_index_type=False)
+
+
+def _concat_parts():
+    a = pd.DataFrame({"t": list("abcde"), "x": [3.0, 1.0, 4.0, 1.5, 9.0]})
+    b = pd.DataFrame({"t": list("vwxyz"), "x": [2.0, 7.0, 1.0, 8.0, 2.5]})
+    return a, b
+
+
+@pytest.mark.parametrize("k", [None, 3, 5, 7])
+def test_concat_of_default_index_frames_is_part_major(spark, k):
+    # both parts hold the labels 0..4: export and tail follow part-major
+    # plan order, never a re-sort by the repeated labels
+    a, b = _concat_parts()
+    got = pas.concat([pas.DataFrame.from_pandas(a),
+                      pas.DataFrame.from_pandas(b)])
+    want = pd.concat([a, b])
+    if k is not None:
+        got, want = got.tail(k), want.tail(k)
+    pd.testing.assert_frame_equal(got.to_pandas(), want,
+                                  check_dtype=False, check_index_type=False)
+
+
+@pytest.mark.parametrize("ignore_index", [False, True])
+def test_concat_part_keeps_its_own_export_order(spark, ignore_index):
+    # rank() sorts the first part's plan by value; the part still joins
+    # the union in the order its own export shows
+    a, b = _concat_parts()
+    ranked = pas.DataFrame.from_pandas(a).x.rank().to_frame()
+    got = pas.concat([ranked, pas.DataFrame.from_pandas(b[["x"]])],
+                     ignore_index=ignore_index).to_pandas()
+    want = pd.concat([a.x.rank().to_frame(), b[["x"]]],
+                     ignore_index=ignore_index)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False,
+                                  check_index_type=False)
 
 
 @pytest.mark.parametrize("verb,n", [("head", -2), ("tail", -2),
