@@ -89,16 +89,13 @@ class StringMethods:
 
         def norm(bound, c):
             """CPython ``slice.indices()`` normalization as a Column:
-            negative bounds count from the end, then clamp to the
-            valid range for the step direction."""
+            a negative bound counts from the end, then clamps to the
+            valid range for the step direction (the sign of a bound is
+            known here, so only its arm is emitted)."""
             L = F.length(c)
-            b = F.lit(bound)
-            if s > 0:
-                lo, hi = F.lit(0), L
-            else:
-                lo, hi = F.lit(-1), L - 1
-            return (F.when(b < 0, F.greatest(L + b, lo))
-                    .otherwise(F.least(b, hi)))
+            if bound < 0:
+                return F.greatest(L + bound, F.lit(0 if s > 0 else -1))
+            return F.least(F.lit(bound), L if s > 0 else L - 1)
 
         if s == 1:
             def fn(c):
@@ -618,8 +615,6 @@ class CategoricalMethods:
                    .cast("int").alias(I.col_name(0)))
         new._sdf = joined.select(*sel)
         new._streamed()
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     # -- domain edits ------------------------------------------------------
@@ -894,14 +889,14 @@ def to_datetime(arg, format=None, errors="raise"):
             return F.try_to_timestamp(c)
         return F.try_to_timestamp(c, F.lit(pattern))
 
-    parsed = arg._app(parse)
     if errors == "raise":
         from . import internal as I
-        bad = parsed._sdf.where(
-            F.col(I.col_name(0)).isNull()
-            & arg._the_col.isNotNull()).limit(1).collect()
+        # one projection holds the raw and the parsed value
+        raw = arg._the_col
+        bad = arg._sdf.where(
+            parse(raw).isNull() & raw.isNotNull()).limit(1).collect()
         if bad:
             raise ValueError(
                 "time data doesn't match format; first offending "
                 f"index: {bad[0][I.idx_name(0)]}")
-    return parsed
+    return arg._app(parse)

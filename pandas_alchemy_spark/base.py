@@ -29,6 +29,7 @@ execute.
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass, replace
 
 import pandas as pd
@@ -168,6 +169,19 @@ class IndexState:
         return IndexState(order=REORDERED)
 
 
+#: Spark DataFrame -> its schema.  A Dataset's schema is fixed when it
+#: is created, but PySpark fetches it from the JVM on every ``.schema``
+_SCHEMAS = weakref.WeakKeyDictionary()
+
+
+def schema_of(sdf: SparkDF):
+    """``sdf.schema``, fetched once per Spark DataFrame object."""
+    schema = _SCHEMAS.get(sdf)
+    if schema is None:
+        schema = _SCHEMAS[sdf] = sdf.schema
+    return schema
+
+
 class BaseFrame:
     ndim: int
 
@@ -210,12 +224,12 @@ class BaseFrame:
 
     def _dtypes(self) -> list:
         """Spark dtypes of the data columns, positional."""
-        schema = {f.name: f.dataType for f in self._sdf.schema.fields}
-        return [schema[I.col_name(i)] for i in range(self._n_cols())]
+        schema = schema_of(self._sdf)
+        return [schema[I.col_name(i)].dataType for i in range(self._n_cols())]
 
     def _idx_dtypes(self) -> list:
-        schema = {f.name: f.dataType for f in self._sdf.schema.fields}
-        return [schema[I.idx_name(i)] for i in range(self._n_idx())]
+        schema = schema_of(self._sdf)
+        return [schema[I.idx_name(i)].dataType for i in range(self._n_idx())]
 
     def _shallow_copy(self):
         new = object.__new__(type(self))

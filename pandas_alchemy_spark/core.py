@@ -85,6 +85,43 @@ def _is_bool_dtype(dt) -> bool:
     return isinstance(dt, T.BooleanType)
 
 
+class Lineage:
+    """A Series as one expression over its root: ``expr`` over the Spark
+    DataFrame ``root``, whose first ``n_idx`` columns are the Series'
+    index.  ``source`` is what is known of the expression's type without
+    asking Spark: a Spark type, the name of the root column the
+    expression reads as is (its type is in the root's schema), or None
+    (unknown).  ``sdf``, the projection of the index and the
+    expression, is made on first use and shared by every copy of a
+    Series that holds this lineage."""
+
+    __slots__ = ("root", "expr", "n_idx", "source", "_sdf")
+
+    def __init__(self, root, expr, n_idx: int, source=None):
+        self.root, self.expr, self.n_idx = root, expr, n_idx
+        self.source = source
+        self._sdf = None
+
+    def derive(self, expr, source=None) -> "Lineage":
+        """Another expression over the same root."""
+        return Lineage(self.root, expr, self.n_idx, source)
+
+    @property
+    def sdf(self):
+        if self._sdf is None:
+            root = self.root
+            self._sdf = root.select(
+                *[root[I.idx_name(k)] for k in range(self.n_idx)],
+                self.expr.alias(I.col_name(0)))
+        return self._sdf
+
+    def dtype(self):
+        """The expression's Spark type, or None when not known here."""
+        if isinstance(self.source, str):
+            return base.schema_of(self.root)[self.source].dataType
+        return self.source
+
+
 def _scalar_lit(value):
     """Literal column from a Python/NumPy scalar, NA -> NULL."""
     if value is None or value is pd.NA or (isinstance(value, float) and pd.isna(value)):
@@ -191,11 +228,10 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         (reference alchemy.py:113-118)."""
         if name is None:
             name = self._columns[i]
-        sdf = self._sdf.select(
-            *[F.col(I.idx_name(k)) for k in range(self._n_idx())],
-            self._col_at(i).alias(I.col_name(0)))
-        return Series(self._index, pd.Index([name]), sdf, name,
-                      lineage=(self._sdf, self._col_at(i)))._carry(self)
+        lineage = Lineage(self._sdf, self._col_at(i), self._n_idx(),
+                          I.col_name(i))
+        return Series(self._index, pd.Index([name]), None, name,
+                      lineage=lineage)._carry(self)
 
     def __getitem__(self, key):
         # label -> Series; list of labels -> projection; boolean Series
@@ -731,8 +767,6 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         idx = [self._idx_at(i) for i in range(self._n_idx())]
         out = self._shallow_copy()
         out._sdf = self._project(idx, cols)
-        if hasattr(out, "_drop_lineage"):
-            out._drop_lineage()
         return out
 
     def rolling(self, window: int, min_periods: int | None = None):
@@ -951,21 +985,29 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         with no index a 0-based rowid is synthesized via the scalable
         partition-offset pass (operators/rowid.py), not a global window.
 
-        A parquet path's schema is inferred (a Spark job that reads the
-        footers) on its first read in a session and reused after that,
-        as the reference reflects a table once into its ``MetaData``:
-        Spark still lists the files on every read but reads no footer.
-        The path is inferred again when a file under it is added,
-        removed, resized, rewritten or touched, when any SQL conf of the
-        session changes, and after ``close_db()``.  URIs (``s3a://``,
-        ``hdfs://``, ``file:``) and globs are inferred on every read.
+        A parquet path is scanned (a Spark job that reads the footers
+        for the schema) on its first read in a session, as the reference
+        reflects a table once into its ``MetaData``; later reads reuse
+        that scan and the plan built over it for the same ``columns``
+        and ``index``, so they send Spark nothing.  The path is scanned
+        again when a file under it is added, removed, resized, rewritten
+        or touched, when any SQL conf of the session changes, and after
+        ``close_db()``.  URIs (``s3a://``, ``hdfs://``, ``file:``) and
+        globs are scanned on every read.
         """
         spark = get_session()
         if isinstance(table, str) and (
                 "/" in table or table.endswith(".parquet")):
-            sdf, layout = parquet_scan(spark, table, _scan_layout)
-            return DataFrame._from_spark_scan(
-                sdf, columns=columns, index=index, layout=layout)
+            sdf, layout, frames = parquet_scan(spark, table, _scan_layout)
+            key = (None if columns is None else tuple(columns),
+                   None if index is None else
+                   tuple(index) if pd.api.types.is_list_like(index)
+                   else (index,))
+            if key not in frames:
+                frames[key] = DataFrame._from_spark_scan(
+                    sdf, columns=columns, index=index, layout=layout)
+            # a fresh frame over the kept plan: frames are mutable
+            return frames[key]._shallow_copy()
         sdf = spark.read.table(table if schema is None else f"{schema}.{table}")
         return DataFrame._from_spark_scan(sdf, columns=columns, index=index)
 
@@ -1130,7 +1172,17 @@ def concat(objs, axis=0, ignore_index: bool = False):
 class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
              SeriesAggMixin, SeriesRelationalMixin):
     """1-D labeled array backed by a lazy Spark plan
-    (reference Series, alchemy.py:353-517)."""
+    (reference Series, alchemy.py:353-517).
+
+    A Series is either a plan of its own or a :class:`Lineage`: one
+    expression over the plan of the frame it came from.  A lineage is
+    the whole representation of such a Series — its operators, ``.str``
+    and ``.dt`` build one expression over the root and analyse no plan,
+    a mask of it filters its root in-plan, and ``assign`` adds it to
+    its root without a join.  ``_sdf`` is then a projection of the
+    expression made when something needs it, once for the Series and
+    its copies.  Setting ``_sdf`` makes that plan the Series and drops
+    the lineage."""
 
     ndim = 1
     name = None  # class default; __init__ sets the instance value
@@ -1139,18 +1191,29 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
     def __init__(self, index, columns, sdf, name, lineage=None):
         super().__init__(index, columns, sdf)
         self.name = name
-        # (root_sdf, Column) when this Series is a projection/expression
-        # over a parent frame's plan — enables in-plan filter/assign
-        # without a self-join.
         self._lineage = lineage
 
     @property
+    def _sdf(self):
+        lineage = self._lineage
+        return self._plan if lineage is None else lineage.sdf
+
+    @_sdf.setter
+    def _sdf(self, sdf):
+        self._plan = sdf
+        self._lineage = None
+
+    @property
     def _lineage_root(self):
-        return self._lineage[0] if self._lineage else None
+        return self._lineage.root if self._lineage else None
 
     @property
     def _lineage_expr(self):
-        return self._lineage[1] if self._lineage else None
+        return self._lineage.expr if self._lineage else None
+
+    def _dtypes(self) -> list:
+        dtype = self._lineage.dtype() if self._lineage else None
+        return [dtype] if dtype is not None else super()._dtypes()
 
     def _get_axis(self, axis):
         num = self._AXIS_MAPPER.get(axis)
@@ -1198,17 +1261,12 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             other = Series.from_pandas(other)
         if (new._lineage is not None and other._lineage is not None
                 and new._lineage_root is other._lineage_root):
-            root = new._lineage_root
-            expr = fn(new._lineage_expr, other._lineage_expr)
-            new._sdf = root.select(
-                *[root[I.idx_name(k)] for k in range(new._n_idx())],
-                expr.alias(I.col_name(0)))
-            new._lineage = (root, expr)
+            new._lineage = new._lineage.derive(
+                fn(new._lineage_expr, other._lineage_expr))
             return new
         joined, lcol, rcol, idx, idx_names = new._join_idx(other)
         new._sdf = base.BaseFrame(idx_names, None, joined)._project(
             idx, [fn(lcol(0), rcol(0))])
-        new._lineage = None
         return new._join_state(new, other)
 
     def where(self, cond, other=None):
@@ -1244,12 +1302,8 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                    other._lineage_expr)
         expr = (F.when(m, c).otherwise(o) if keep_on_true
                 else F.when(m, o).otherwise(c))
-        n = self._n_idx()
-        body = root.select(
-            *[F.col(I.idx_name(i)) for i in range(n)],
-            expr.alias(I.col_name(0)))
-        return Series(self._index, None, body, self.name,
-                      lineage=(root, expr))._carry(self)
+        return Series(self._index, None, None, self.name,
+                      lineage=self._lineage.derive(expr))._carry(self)
 
     def combine_first(self, other):
         """pandas combine_first: self's values, with holes filled from
@@ -1264,7 +1318,6 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         new = self._shallow_copy()
         idx = [new._idx_at(i) for i in range(new._n_idx())]
         new._sdf = new._project(idx, [F.explode_outer(new._the_col)])
-        new._drop_lineage()
         return new
 
     # -- accessor namespaces (beyond-reference; SURVEY.md §2.9) ------------
@@ -1469,8 +1522,13 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             reverse=False, lax=True):
         if axis is not None:
             self._get_axis(axis)  # validation only (reference alchemy.py:395-398)
-        my_bool = _is_bool_dtype(self._dtypes()[0])
         is_cmp = op in coercion.COMPARISONS
+        # only some ops read the operands' bool hints; a lineage knows
+        # its type in Python when it is a column or a mask
+        hinted = op in coercion.BOOL_HINTED
+        my_bool = hinted and _is_bool_dtype(self._dtypes()[0])
+        source = (T.BooleanType() if is_cmp or op in coercion.LOGICAL
+                  else None)
 
         def app_op(lhs, rhs, l_bool, r_bool):
             if fill_value is not None and not is_cmp:
@@ -1489,16 +1547,14 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
 
         # rule 1: scalar (reference alchemy.py:407-410)
         if _is_scalar(other):
-            col = app_op(self._the_col, _scalar_lit(other), my_bool,
-                         isinstance(other, bool))
-            new_lineage = None
-            if self._lineage is not None:
-                # keep lineage so masks like (s != 0) stay in-plan
-                root, expr = self._lineage
-                new_lineage = (root, app_op(expr, _scalar_lit(other), my_bool,
-                                            isinstance(other, bool)))
-            self._sdf = self._project(self._idx_cols(), [col])
-            self._lineage = new_lineage
+            lineage = self._lineage
+            col = app_op(self._the_col if lineage is None else lineage.expr,
+                         _scalar_lit(other), my_bool, isinstance(other, bool))
+            if lineage is None:
+                self._sdf = self._project(self._idx_cols(), [col])
+            else:
+                # masks like (s != 0) stay expressions over the root
+                self._lineage = lineage.derive(col, source)
             return
 
         # rule 7: Series × Series -> full-outer index join
@@ -1509,26 +1565,19 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             # lineage fast path: both sides projections of the same
             # parent plan -> no join at all (the reference cannot do
             # this; it always full-outer-joins, SURVEY.md §4.1)
+            o_bool = hinted and _is_bool_dtype(other._dtypes()[0])
             if (self._lineage is not None and other._lineage is not None
                     and self._lineage_root is other._lineage_root):
-                o_bool = _is_bool_dtype(other._dtypes()[0])
                 expr = app_op(self._lineage_expr, other._lineage_expr,
                               my_bool, o_bool)
-                root = self._lineage_root
-                idx_exprs = [root[I.idx_name(k)] for k in range(self._n_idx())]
-                self._sdf = root.select(
-                    *[e.alias(I.idx_name(k)) for k, e in enumerate(idx_exprs)],
-                    expr.alias(I.col_name(0)))
-                self._lineage = (root, expr)
+                self._lineage = self._lineage.derive(expr, source)
                 self.name = self.name if self.name == other.name else None
                 return
-            o_bool = _is_bool_dtype(other._dtypes()[0])
             other = self._align_mids_with(other)
             joined, lcol, rcol, idx, idx_names = self._join_idx(other)
             col = app_op(lcol(0), rcol(0), my_bool, o_bool)
             self._sdf = base.BaseFrame(idx_names, None, joined)._project(idx, [col])
             self._index = idx_names
-            self._lineage = None
             self._join_state(self, other)
             self.name = self.name if self.name == other.name else None
             return
@@ -1565,7 +1614,6 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             col = app_op(lcol(0), rcol(0), my_bool,
                          all(isinstance(v, bool) for v in other))
             self._sdf = base.BaseFrame(self._index, None, joined)._project(idx, [col])
-            self._lineage = None
             self._streamed()
             return
 
@@ -1593,11 +1641,7 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
     @utils.copied
     def clip(self, lower=None, upper=None, axis=None, *args, **kwargs):
         # reference alchemy.py:465-468
-        self._sdf = self._project(self._idx_cols(),
-                                  [_clip_col(self._the_col, lower, upper)])
-        if self._lineage is not None:
-            root, expr = self._lineage
-            self._lineage = (root, _clip_col(expr, lower, upper))
+        self._app(lambda c: _clip_col(c, lower, upper), inplace=True)
 
     # -- prefix/suffix: concat onto *index values* (query rewrite,
     #    reference alchemy.py:470-478 — intended semantics; the
@@ -1607,13 +1651,11 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
     def add_prefix(self, prefix):
         idx = [F.concat(F.lit(str(prefix)), self._idx_at(0).cast("string"))]
         self._sdf = self._project(idx, [self._the_col])
-        self._lineage = None
 
     @utils.copied
     def add_suffix(self, suffix):
         idx = [F.concat(self._idx_at(0).cast("string"), F.lit(str(suffix)))]
         self._sdf = self._project(idx, [self._the_col])
-        self._lineage = None
 
     # -- materialization ---------------------------------------------------
 

@@ -486,9 +486,13 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
                         F.col("n").alias("nb"))
         dot = _DOT.format(a="va", b="vb")
         cos = F.expr(f"({dot}) / nullif(na * nb, 0.0)")
+        # Spark orders NaN above every number, so a NaN cosine (a
+        # vector with a NaN component) would pass ">= threshold"
+        # unless dropped
         out = (pairs.join(a, "id_a").join(b, "id_b")
                .select("id_a", "id_b", cos.alias("cosine"))
-               .filter(F.col("cosine") >= threshold))
+               .filter((F.col("cosine") >= threshold)
+                       & ~F.isnan("cosine")))
     else:
         raise ValueError(f"verify_kernel must be 'auto', 'numpy' or "
                          f"'sql', got {verify_kernel!r}")
@@ -515,9 +519,11 @@ def _near_dup_bucket_verify(base: DataFrame, threshold: float,
     accumulated left-to-right in f64; the kernel multiplies in f32 and
     accumulates column-by-column in f64 — the same rounding at every
     step.  Norms arrive PRE-COMPUTED from the Catalyst ``norm_expr``
-    column, so they carry the oracle path's exact bits.  Spark's
-    NaN-is-largest comparison semantics (``NaN >= t`` is true) and the
-    ``nullif(na*nb, 0.0)`` zero-norm drop are replicated explicitly.
+    column, so they carry the oracle path's exact bits.  A pair whose
+    cosine is NaN (a vector with a NaN component) is dropped by both
+    kernels (numpy's ``NaN >= t`` is false; the SQL path filters
+    ``isnan``), and the ``nullif(na*nb, 0.0)`` zero-norm drop is
+    replicated explicitly.
 
     Over-cap buckets are excluded BEFORE the member exchange by a
     broadcast of the (tbl, code) survivors (same sizes-aggregate +
@@ -583,16 +589,10 @@ def _near_dup_bucket_verify(base: DataFrame, threshold: float,
         spark.sparkContext.defaultParallelism, "__sb")
     idt = base.schema["id"].dataType.simpleString()
     kernel = _bucket_pair_verify_kernel(threshold)
-    out = (member.groupBy("__sb")
-           .applyInPandas(kernel,
-                          schema=f"id_a {idt}, id_b {idt}, cosine double")
-           .dropDuplicates(["id_a", "id_b"]))
-    # Arrow's pandas->Spark conversion turns float NaN into NULL; the
-    # kernel never emits a genuine NULL (zero-norm pairs are excluded
-    # before emission), so any NULL here IS a NaN cosine — restore it
-    # to match the SQL path, where ``NaN >= t`` keeps the row as NaN
-    return out.withColumn(
-        "cosine", F.coalesce(F.col("cosine"), F.lit(float("nan"))))
+    return (member.groupBy("__sb")
+            .applyInPandas(kernel,
+                           schema=f"id_a {idt}, id_b {idt}, cosine double")
+            .dropDuplicates(["id_a", "id_b"]))
 
 
 _NEAR_DUP_SUPERBUCKETS = 1024
@@ -671,11 +671,9 @@ def _bucket_pair_verify_kernel(threshold: float,
                 prod = N[sa] * N[sb]
                 with np.errstate(divide="ignore", invalid="ignore"):
                     cos = dot / prod
-                # Spark semantics: nullif(prod, 0.0) -> NULL drops
-                # the pair; NaN >= threshold is TRUE (NaN sorts
-                # largest)
-                keep = ((prod != 0.0)
-                        & ((cos >= threshold) | np.isnan(cos)))
+                # nullif(prod, 0.0) -> NULL drops the pair; a NaN
+                # cosine fails >= threshold and drops too
+                keep = (prod != 0.0) & (cos >= threshold)
                 if keep.any():
                     outs.append(pd.DataFrame({"id_a": ids[sa[keep]],
                                               "id_b": ids[sb[keep]],

@@ -198,6 +198,12 @@ _BOOL_COERCING = {"add", "sub", "mul", "truediv", "div", "floordiv", "mod", "pow
 
 COMPARISONS = frozenset({"eq", "ne", "le", "lt", "ge", "gt"})
 
+#: ops whose result is boolean without reading the bool hints
+LOGICAL = frozenset({"and", "or", "xor"})
+
+#: ops whose result depends on the ``l_bool``/``r_bool`` hints
+BOOL_HINTED = frozenset(_BOOL_COERCING) | COMPARISONS
+
 
 def _debool(c: Column) -> Column:
     """Bool -> int before arithmetic, mirroring the reference's

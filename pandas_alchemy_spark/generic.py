@@ -73,10 +73,6 @@ class GenericMixin:
 
     # -- limits ------------------------------------------------------------
 
-    def _drop_lineage(self) -> None:
-        if getattr(self, "_lineage", None) is not None:
-            self._lineage = None
-
     @copied
     def head(self, n: int = 5) -> None:
         # LIMIT n (reference generic.py:46-48).  When the plan was
@@ -94,7 +90,6 @@ class GenericMixin:
                 F.col(I.idx_name(0)).asc()).limit(n)
         else:
             self._sdf = self._sdf.limit(n)
-        self._drop_lineage()
 
     @copied
     def tail(self, n: int = 5) -> None:
@@ -126,28 +121,24 @@ class GenericMixin:
                          .withColumn(I.ROWID, F.monotonically_increasing_id())
                          .orderBy(tag.desc()).limit(n)
                          .orderBy(tag.asc()).drop(I.ROWID))
-        self._drop_lineage()
 
     # -- per-column appliers ----------------------------------------------
 
-    @copied
-    def _cast(self, new_type) -> None:
+    def _cast(self, new_type):
         # CAST every data column (reference generic.py:59-62).
-        self._sdf = self._project(
-            self._idx_cols(), [c.cast(new_type) for c in self._data_cols()])
-        if getattr(self, "_lineage", None) is not None:
-            root, expr = self._lineage
-            self._lineage = (root, expr.cast(new_type))
+        return self._app(lambda c: c.cast(new_type))
 
     @copied
     def _app(self, func) -> None:
         # apply a scalar expression fn to every data column
-        # (reference generic.py:64-67).
+        # (reference generic.py:64-67); a Series that is an expression
+        # over its root becomes fn of that expression
+        lineage = getattr(self, "_lineage", None)
+        if lineage is not None:
+            self._lineage = lineage.derive(func(lineage.expr))
+            return
         self._sdf = self._project(
             self._idx_cols(), [func(c) for c in self._data_cols()])
-        if getattr(self, "_lineage", None) is not None:
-            root, expr = self._lineage
-            self._lineage = (root, func(expr))
 
     # -- NA / scalar functions --------------------------------------------
 
@@ -181,8 +172,6 @@ class GenericMixin:
                 for c in range(new._n_cols())]
         new._sdf = new._sdf.select(*sel)
         new._index = pd.Index(names)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def droplevel(self, level):
@@ -201,8 +190,6 @@ class GenericMixin:
                 for c in range(new._n_cols())]
         new._sdf = new._sdf.select(*sel)
         new._index = pd.Index(names)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def replace(self, to_replace, value=None):

@@ -76,8 +76,6 @@ class _iLocIndexer:
         new._sdf = with_rowid(new._sdf, I.ROWID).filter(
             F.col(I.ROWID).isin([int(p) for p in positions])) \
             .drop(I.ROWID)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def _slice_rows(self, sl: slice):
@@ -104,8 +102,6 @@ class _iLocIndexer:
         if cond is not None:
             new._sdf = with_rowid(new._sdf, I.ROWID).filter(cond) \
                 .drop(I.ROWID)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
 
@@ -141,8 +137,6 @@ class _LocIndexer:
                 cond = c if cond is None else (cond & c)
             if cond is not None:
                 new._sdf = new._sdf.filter(cond)
-            if hasattr(new, "_drop_lineage"):
-                new._drop_lineage()
             out = new
         else:
             # label row selection: index equality filter
@@ -150,8 +144,6 @@ class _LocIndexer:
             new = obj._shallow_copy()
             new._sdf = new._sdf.filter(
                 new._sdf[I.idx_name(0)].isin(labels))
-            if hasattr(new, "_drop_lineage"):
-                new._drop_lineage()
             out = new
         if cols is not None and obj.ndim == 2:
             out = out[cols if isinstance(cols, list) else cols]

@@ -596,19 +596,16 @@ class SeriesGroupBy(_WindowVerbs):
                             self._label)._carry(df, reordered=True)
 
     def _wrap(self, fn):
+        from ..core import Lineage
         df = self._df
         col = df._col_at(df._columns.get_loc(self._label))
-        expr = fn(col)
-        n = df._n_idx()
-        sel = [df._idx_at(i).alias(I.idx_name(i)) for i in range(n)]
-        sel.append(expr.alias(I.col_name(0)))
         # partitionBy shuffles rows into key order in the plan; export
         # re-establishes index order client-side for positional frames
         # (base._fetch_pandas), and lineage consumers (df.assign) keep
         # the parent plan anyway — no cluster-side sort here
-        body = df._sdf.select(*sel)
-        return self._Series(df._index, None, body, self._label,
-                            lineage=(df._sdf, expr))._carry(df, reordered=True)
+        lineage = Lineage(df._sdf, fn(col), df._n_idx())
+        return self._Series(df._index, None, None, self._label,
+                            lineage=lineage)._carry(df, reordered=True)
 
     def ewm(self, alpha: float):
         """pandas ``groupby(k)[c].ewm(alpha).mean()`` — the JVM window

@@ -671,8 +671,6 @@ class GroupBy:
             new = df._shallow_copy()
             new._sdf = df._sdf.filter(
                 bucket < F.lit(_hash_threshold(frac, scale)))
-            if hasattr(new, "_drop_lineage"):
-                new._drop_lineage()
             return new
         return df.sample(frac, key=key, fast_hash=fast_hash)
 
@@ -697,8 +695,6 @@ class GroupBy:
             cond = c if cond is None else (cond & c)
         new = df._shallow_copy()
         new._sdf = df._sdf.filter(cond)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     @property
@@ -899,8 +895,6 @@ class RelationalMixin:
                         if num_partitions else self._sdf.repartition(*cols))
         else:
             new._sdf = self._sdf.repartition(num_partitions)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def to_parquet(self, path, mode="overwrite", partition_by=None):
@@ -1126,8 +1120,6 @@ class RelationalMixin:
         data = [F.explode_outer(new._col_at(i)) if i == pos
                 else new._col_at(i) for i in range(new._n_cols())]
         new._sdf = new._project(idx, data)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def sample(self, frac, key=None, seed=None, fast_hash=False):
@@ -1159,8 +1151,6 @@ class RelationalMixin:
                 ).cast("long")
                 cond = bucket < F.lit(_hash_threshold(frac, 1 << 60))
             new._sdf = new._sdf.filter(cond)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def sample_stratified(self, fracs, by, key, fast_hash=False):
@@ -1192,8 +1182,6 @@ class RelationalMixin:
             thr = F.when(s == F.lit(v), F.lit(_hash_threshold(fr, scale))) \
                 .otherwise(thr)
         new._sdf = new._sdf.filter(bucket < thr)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def drop(self, labels=None, axis=1, columns=None, index=None,
@@ -1221,8 +1209,6 @@ class RelationalMixin:
                         f"labels {to_drop} not found in axis")
             new = self._shallow_copy()
             new._sdf = self._sdf.filter(~idx.isin(to_drop))
-            if hasattr(new, "_drop_lineage"):
-                new._drop_lineage()
             return new
         to_drop = columns if columns is not None else labels
         if not isinstance(to_drop, list):
@@ -1250,8 +1236,6 @@ class RelationalMixin:
               for i, lab in enumerate(labels)])
         new = self._shallow_copy()
         new._sdf = back
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def eval(self, expr):
@@ -1341,8 +1325,6 @@ class RelationalMixin:
             sel.append(F.coalesce(expr, F.lit(False))
                        .alias(I.col_name(i)))
         new._sdf = self._sdf.select(*sel)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def select_dtypes(self, include=None, exclude=None):
@@ -2204,8 +2186,6 @@ class RelationalMixin:
                 else (tod >= F.lit(lo)) | (tod <= F.lit(hi)))
         new = self._shallow_copy()
         new._sdf = self._sdf.filter(cond)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def xs(self, key, level=0):
@@ -2313,8 +2293,6 @@ class RelationalMixin:
                 cond = idx.cast("string").rlike(regex)
             new = self._shallow_copy()
             new._sdf = self._sdf.filter(cond)
-            if hasattr(new, "_drop_lineage"):
-                new._drop_lineage()
             return new
         raise ValueError(f"No axis named {axis}")
 
@@ -2329,8 +2307,6 @@ class RelationalMixin:
             cond = cond & (idx <= F.lit(after))
         new = self._shallow_copy()
         new._sdf = self._sdf.filter(cond)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def convert_dtypes(self):
@@ -2907,8 +2883,6 @@ class SeriesAggMixin:
         c = new._the_col
         new._sdf = new._sdf.orderBy(c.asc() if ascending else c.desc())
         new._impose_order()
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def describe(self, percentiles=(0.25, 0.5, 0.75)):
@@ -2966,8 +2940,6 @@ class SeriesRelationalMixin:
         """Drop null rows — a pure filter (pushdown-eligible)."""
         new = self._shallow_copy()
         new._sdf = self._sdf.filter(self._the_col.isNotNull())
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def sort_index(self, ascending: bool = True):
@@ -2977,8 +2949,6 @@ class SeriesRelationalMixin:
         new = self._shallow_copy()
         new._sdf = self._sdf.orderBy(*order)
         new._impose_order()
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def sample(self, frac, seed=None):
@@ -2987,8 +2957,6 @@ class SeriesRelationalMixin:
         determinism)."""
         new = self._shallow_copy()
         new._sdf = self._sdf.sample(fraction=frac, seed=seed)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def duplicated(self, keep="first"):
@@ -3038,8 +3006,6 @@ class SeriesRelationalMixin:
         new._sdf = (self._sdf.withColumn("__keep", cond)
                     .filter(F.col("__keep")).drop("__keep"))
         new._carry(reordered=True)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def align(self, other, join="outer"):
@@ -3294,8 +3260,6 @@ class SeriesRelationalMixin:
             cond = idx.cast("string").rlike(regex)
         new = self._shallow_copy()
         new._sdf = self._sdf.filter(cond)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def truncate(self, before=None, after=None):
@@ -3307,8 +3271,6 @@ class SeriesRelationalMixin:
             cond = cond & (idx <= F.lit(after))
         new = self._shallow_copy()
         new._sdf = self._sdf.filter(cond)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     def first_valid_index(self):
@@ -3446,12 +3408,8 @@ class SeriesRelationalMixin:
                     else expr.when(c, v))
         expr = expr.otherwise(self._lineage_expr)
         from .core import Series
-        n = self._n_idx()
-        body = root.select(
-            *[F.col(I.idx_name(i)) for i in range(n)],
-            expr.alias(I.col_name(0)))
-        return Series(self._index, None, body, self.name,
-                      lineage=(root, expr))._carry(self)
+        return Series(self._index, None, None, self.name,
+                      lineage=self._lineage.derive(expr))._carry(self)
 
     def groupby(self, by=None, level=None):
         """``series.groupby(key_series)`` / ``groupby(level=i)`` — the
@@ -3565,8 +3523,6 @@ class SeriesRelationalMixin:
                 else (tod >= F.lit(lo)) | (tod <= F.lit(hi)))
         new = self._shallow_copy()
         new._sdf = self._sdf.filter(cond)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
         return new
 
     @property
@@ -3604,8 +3560,6 @@ class SeriesRelationalMixin:
         val = (rows[0][I.col_name(0)] if len(rows) == 1
                else self.get(label))
         self._sdf = self._sdf.filter(~(idx == F.lit(label)))
-        if hasattr(self, "_drop_lineage"):
-            self._drop_lineage()
         return val
 
     def reindex_like(self, other):
@@ -3778,16 +3732,17 @@ def to_numeric(ser, errors: str = "raise"):
     if errors not in ("raise", "coerce"):
         raise ValueError(f"errors must be 'raise' or 'coerce', "
                          f"got {errors!r}")
-    parsed = ser._app(lambda c: c.try_cast("double"))
     if errors == "raise":
-        bad = parsed._sdf.where(
-            F.col(I.col_name(0)).isNull()
-            & ser._the_col.isNotNull()).limit(1).collect()
+        # one projection holds the raw and the parsed value
+        raw = ser._the_col
+        bad = ser._sdf.where(
+            raw.try_cast("double").isNull()
+            & raw.isNotNull()).limit(1).collect()
         if bad:
             raise ValueError(
                 f"Unable to parse value at index "
                 f"{bad[0][I.idx_name(0)]}")
-    return parsed
+    return ser._app(lambda c: c.try_cast("double"))
 
 
 def date_range(start, end=None, periods=None, freq="D", name=None):

@@ -26,10 +26,9 @@ composition is client-only:
   is one inside this package, never the user's code.  Pass
   ``init_db(**{"spark.python.sql.dataFrameDebugging.enabled": "true"})``
   to turn it back on.
-- A parquet path's inferred schema is kept with the session, the
-  analogue of the reference reflecting a table once into its global
-  ``MetaData`` (db.py:12-19): see :func:`parquet_scan`.
-  :func:`close_db` drops it.
+- A parquet path's scan is kept with the session, the analogue of the
+  reference reflecting a table once into its global ``MetaData``
+  (db.py:12-19): see :func:`parquet_scan`.  :func:`close_db` drops it.
 """
 
 from __future__ import annotations
@@ -42,7 +41,7 @@ from pyspark.sql import SparkSession
 
 _SESSION: SparkSession | None = None
 
-#: absolute parquet path -> (key, facts) of its last schema inference
+#: absolute parquet path -> (key, scan, facts, frames) of its last scan
 _PARQUET_SCANS: dict[str, tuple] = {}
 
 
@@ -113,9 +112,9 @@ def get_session() -> SparkSession:
 
 
 def _parquet_key(spark: SparkSession, path: str):
-    """What a parquet path's inferred schema depends on: every file
-    under it as (relative name, size, mtime_ns, inode), and the
-    session's SQL confs.  None for a path that cannot be stat'ed here
+    """What a parquet path's scan depends on: every file under it as
+    (relative name, size, mtime_ns, inode), and the session's SQL
+    confs.  None for a path that cannot be stat'ed here
     (a URI such as ``s3a://``, a glob, a missing path)."""
     if "://" in path or path.startswith("file:") or glob.has_magic(path):
         return None
@@ -140,26 +139,25 @@ def _parquet_key(spark: SparkSession, path: str):
 
 
 def parquet_scan(spark: SparkSession, path: str, describe):
-    """A Spark scan of the parquet ``path`` and ``describe(scan)``.
+    """``(scan, describe(scan), frames)`` for the parquet ``path``.
 
-    The path's schema and description come from a fresh scan (a Spark
-    job that reads the parquet footers) on its first read, and are
-    reused while neither the files under the path nor the session's SQL
-    confs have changed: the scan is then built from the known schema,
-    which lists the files but reads no footer.  Any change to either
-    scans afresh, as does every read of a path that cannot be stat'ed
-    locally.  One entry per path."""
+    The first read of a path makes the scan (a Spark job that reads the
+    parquet footers for the schema, and lists the files).  Later reads
+    return that same scan Dataset, its description and ``frames``, a
+    dict the caller keeps the frames it builds over the scan in, while
+    neither the files under the path nor the session's SQL confs have
+    changed.  Any change to either scans afresh, as does every read of
+    a path that cannot be stat'ed locally.  One entry per path."""
     key = _parquet_key(spark, path)
     root = os.path.abspath(path)
     hit = _PARQUET_SCANS.get(root) if key is not None else None
     if hit is not None and hit[0] == key:
-        schema, facts = hit[1]
-        return spark.read.schema(schema).parquet(path), facts
+        return hit[1:]
     # the key is taken BEFORE the scan: a file changed in between then
     # leaves an entry whose key no later read matches, never a stale
-    # schema under the new key
+    # scan under the new key
     sdf = spark.read.parquet(path)
-    facts = describe(sdf)
+    entry = (sdf, describe(sdf), {})
     if key is not None:
-        _PARQUET_SCANS[root] = (key, (sdf.schema, facts))
-    return sdf, facts
+        _PARQUET_SCANS[root] = (key,) + entry
+    return entry

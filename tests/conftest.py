@@ -1,7 +1,11 @@
 from __future__ import annotations
 
+import collections
+import gc
+
 import pandas as pd
 import pytest
+from py4j.clientserver import ClientServerConnection
 
 import pandas_alchemy_spark as pas
 
@@ -35,6 +39,32 @@ def jobs_started_by(spark, group: str, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def py4j_commands(fn):
+    """Run ``fn()``; return its result and the py4j commands it sent to
+    the JVM, counted by command: a call by its method name (``filter``,
+    ``select``, ...), anything else by command and subcommand (``m d``
+    releases a JVM object, ``r u`` is a reflection look-up).  Python's
+    cyclic garbage collector is held off meanwhile, so that objects of
+    earlier work it would free are not counted against ``fn``."""
+    counts = collections.Counter()
+    send = ClientServerConnection.send_command
+
+    def counted(conn, command):
+        lines = command.split("\n")
+        counts[lines[2] if lines[0] == "c" else " ".join(lines[:2])] += 1
+        return send(conn, command)
+
+    gc.collect()
+    gc.disable()
+    ClientServerConnection.send_command = counted
+    try:
+        out = fn()
+    finally:
+        ClientServerConnection.send_command = send
+        gc.enable()
+    return out, counts
 
 
 def assert_series_equal_sorted(ours, theirs, **kw):

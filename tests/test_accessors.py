@@ -51,6 +51,10 @@ STR_CASES = [
     ("replace_re", lambda s: s.str.replace(r"[0-9]", "#", regex=True)),
     ("slice", lambda s: s.str.slice(1, 4)),
     ("slice_open", lambda s: s.str.slice(2)),
+    ("slice_neg_start", lambda s: s.str.slice(-3)),
+    ("slice_neg_stop", lambda s: s.str.slice(1, -1)),
+    ("slice_reversed", lambda s: s.str.slice(None, None, -1)),
+    ("slice_neg_stepped", lambda s: s.str.slice(-4, -1, 2)),
     ("get", lambda s: s.str.get(1)),
     ("zfill", lambda s: s.str.zfill(6)),
     ("pad_r", lambda s: s.str.pad(10, side="right", fillchar=".")),

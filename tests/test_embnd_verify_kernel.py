@@ -5,9 +5,9 @@ formulation (kept as verify_kernel="sql").
 The numpy kernel replicates Catalyst's fold exactly — f32 products
 (zip_with rounds each FloatType product to f32) accumulated
 left-to-right in f64, norms taken from the SAME Catalyst norm_expr
-column — plus Spark's comparison semantics at the filter (NaN sorts
-largest so ``NaN >= t`` keeps the row; ``nullif(na*nb, 0.0)`` drops
-zero-norm pairs).  This file pins those claims on an adversarial
+column — plus the filter's rules: a NaN cosine is dropped (the SQL
+path filters ``isnan``, since Spark sorts NaN above every number) and
+``nullif(na*nb, 0.0)`` drops zero-norm pairs.  This file pins those claims on an adversarial
 fixture the real testdata doesn't exercise: dense planted near-dup
 clusters (hundreds of surviving pairs), a zero vector, a NaN element,
 exact duplicates (cosine at the 1.0 boundary), and an over-cap
@@ -73,8 +73,7 @@ def _adversarial_df(spark, dim=8, seed=7):
         rows.append((vid, list(d))); vid += 1
     # a zero vector: nullif(na*nb, 0.0) must drop every pair it forms
     rows.append((vid, [0.0] * dim)); vid += 1
-    # a NaN element: its cosines are NaN -> Spark KEEPS them
-    # (NaN >= t is true under NaN-sorts-largest)
+    # a NaN element: its cosines are NaN, and both kernels drop them
     rows.append((vid, [float("nan")] + [1.0] * (dim - 1))); vid += 1
     return spark.createDataFrame(rows, "vec_id long, "
                                        "embedding array<float>"), dim
@@ -109,11 +108,13 @@ def test_numpy_kernel_nan_and_zero_norm_semantics(spark):
         df, dim=dim, planes=1, tables=2, threshold=0.9,
         bucket_cap=None, verify_kernel="sql"))
     _assert_bit_equal(got, want)
-    # the zero vector forms NO pairs (NULL cosine dropped)...
-    assert not any(zero_id in k for k in got)
-    # ...while the NaN vector's pairs survive the >= filter as NaN
-    nan_pairs = [k for k in got if nan_id in k]
-    assert nan_pairs and all(math.isnan(got[k]) for k in nan_pairs)
+    assert got, "the one-bucket geometry must still produce pairs"
+    for pairs in (got, want):
+        # the zero vector forms NO pairs (NULL cosine dropped), nor
+        # does the NaN vector (NaN cosine dropped)
+        assert not any(zero_id in k for k in pairs)
+        assert not any(nan_id in k for k in pairs)
+        assert not any(math.isnan(v) for v in pairs.values())
 
 
 def test_numpy_kernel_bucket_cap_drops_flood(spark):

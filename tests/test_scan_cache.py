@@ -1,8 +1,8 @@
-"""``read_parquet`` reuses a path's inferred schema within a session.
+"""``read_parquet`` reuses a path's scan within a session.
 
 Every case compares the engine's scan with a fresh ``spark.read.parquet``
-of the same path: the same schema and the same rows, whether the schema
-came from the cache or from a new inference.
+of the same path: the same schema and the same rows, whether the scan
+came from the cache or was made anew.
 """
 
 from __future__ import annotations
@@ -107,28 +107,94 @@ def test_column_names_that_need_quoting(spark, tmp_path):
     assert keyed.to_pandas().to_dict() == {"e f": {1: "x", 2: "y"}}
 
 
-def test_same_path_twice_merges_and_aligns(spark, tmp_path):
-    # the second read comes from the cache; both single-file and
-    # multi-file (monotonic mid) scans must still pair row for row
-    d = tmp_path / "m"
-    d.mkdir()
-    pdf = pd.DataFrame({"k": range(8), "x": [float(i) for i in range(8)],
-                        "y": [2.0, 4.0, 0.0, 1.0, 5.0, 3.0, 6.0, 7.0]})
-    pdf.iloc[:5].to_parquet(d / "p0.parquet")
-    single = str(d / "p0.parquet")
-    pdf.iloc[5:].to_parquet(d / "p1.parquet")
-    for path in (single, str(d)):
-        want = spark.read.parquet(path).toPandas()  # Spark's row order
-        a = pas.read_parquet(path)
-        b = pas.read_parquet(path)
-        got = a.merge(b, on="k").to_pandas()
-        pd.testing.assert_frame_equal(
-            got.sort_values("k").reset_index(drop=True),
-            want.merge(want, on="k").sort_values("k")
-            .reset_index(drop=True))
-        pd.testing.assert_series_equal(
-            (a.x / b.y).to_pandas(), want.x / want.y,
-            check_names=False, check_index_type=False)
+#: verbs over two reads ``a`` and ``b`` of one path; the pandas twin
+#: runs on two copies of Spark's own read of the path
+TWO_READS = {
+    "merge_on_key": lambda a, b, pd_: a.merge(b, on="k"),
+    "merge_left_right": lambda a, b, pd_: a.merge(b, left_on="k",
+                                                   right_on="y"),
+    "add": lambda a, b, pd_: a.x + b.x,
+    "div": lambda a, b, pd_: a.x / b.y,
+    "foreign_mask": lambda a, b, pd_: a[b.x > 2.5],
+    "concat": lambda a, b, pd_: pd_.concat([a, b]),
+    "join": lambda a, b, pd_: a.join(b, rsuffix="_r"),
+    "div_by_masked": lambda a, b, pd_: a.x / b[b.y > 1].x,
+}
+
+
+@pytest.fixture(scope="module")
+def two_layouts(tmp_path_factory):
+    """A single-file path (dense mid: the parquet row index) and a
+    two-file directory (monotonic mid) of the same rows."""
+    d = tmp_path_factory.mktemp("shared")
+    pdf = pd.DataFrame({"k": range(8),
+                        "x": [0.5, 3.0, 1.5, 4.5, 2.0, 6.0, 2.5, 7.5],
+                        "y": [2, 4, 0, 1, 5, 3, 6, 7]})
+    pdf.to_parquet(d / "one.parquet")
+    (d / "two").mkdir()
+    pdf.iloc[:5].to_parquet(d / "two" / "p0.parquet")
+    pdf.iloc[5:].to_parquet(d / "two" / "p1.parquet")
+    return {"single": str(d / "one.parquet"), "multi": str(d / "two")}
+
+
+#: a filter of a monotonic mid exports its rows renumbered 0..m-1, not
+#: with pandas' sparse labels (``base.IndexState``); the values match
+_RENUMBERED = pytest.mark.xfail(
+    strict=True, reason="filtered monotonic mids export renumbered labels")
+
+
+@pytest.mark.parametrize("layout,verb", [
+    pytest.param(layout, verb, marks=(
+        _RENUMBERED if (layout, verb) == ("multi", "foreign_mask") else ()))
+    for layout in ("single", "multi") for verb in TWO_READS])
+def test_two_reads_of_one_path_match_pandas(spark, two_layouts, layout,
+                                            verb):
+    # the second read shares the first one's scan and plan; every verb
+    # that pairs the two must still treat them as two equal frames
+    path = two_layouts[layout]
+    want_a = spark.read.parquet(path).toPandas()  # Spark's row order
+    a, b = pas.read_parquet(path), pas.read_parquet(path)
+    assert a._sdf is b._sdf
+    got = TWO_READS[verb](a, b, pas).to_pandas()
+    want = TWO_READS[verb](want_a, want_a.copy(), pd)
+    if verb.startswith("merge"):
+        got, want = (f.sort_values(list(f.columns)).reset_index(drop=True)
+                     for f in (got, want))
+    if isinstance(want, pd.Series):
+        pd.testing.assert_series_equal(got, want, check_names=False,
+                                       check_index_type=False)
+    else:
+        pd.testing.assert_frame_equal(got, want, check_index_type=False)
+
+
+def test_close_db_and_rewrite_scan_afresh(tmp_path):
+    # in a session of its own: closing the shared test session would
+    # stop it under every later test
+    path = str(tmp_path / "t.parquet")
+    pd.DataFrame({"k": [1, 2], "a": [1.0, 2.0]}).to_parquet(path)
+    script = textwrap.dedent(f"""
+        import os
+        import pandas as pd
+        import pandas_alchemy_spark as pas
+        pas.init_db(master="local[1]")
+        first = pas.read_parquet({path!r})
+        assert pas.read_parquet({path!r})._sdf is first._sdf
+        pd.DataFrame({{"k": [3, 4, 5], "a": [3.0, 4.0, 5.0]}}).to_parquet(
+            {path!r})
+        os.utime({path!r}, ns=(1, 1))  # a new mtime even on coarse clocks
+        again = pas.read_parquet({path!r})
+        assert again._sdf is not first._sdf
+        assert again.k.to_pandas().tolist() == [3, 4, 5]
+        pas.close_db()
+        pas.init_db(master="local[1]")
+        fresh = pas.read_parquet({path!r})
+        assert fresh._sdf is not again._sdf
+        assert fresh.a.to_pandas().tolist() == [3.0, 4.0, 5.0]
+        pas.close_db()
+    """)
+    run = subprocess.run([sys.executable, "-c", script], cwd=ROOT,
+                         capture_output=True, text=True, timeout=300)
+    assert run.returncode == 0, run.stderr[-3000:]
 
 
 def test_frame_errors_keep_their_class(spark):
