@@ -401,19 +401,9 @@ def main():
     # 1g default heap OOMs sort buffers above sf0.1; size it like a
     # real executor would be
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .appName("pandas_alchemy_spark_bench")
-             .config("spark.driver.memory", mem)
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .config("spark.sql.optimizer.excludedRules",
-                     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="pandas_alchemy_spark_bench",
+                        **{"spark.driver.memory": mem})
     spark.sparkContext.setLogLevel("ERROR")
 
     bench_queries = build_bench_queries(spark, sf_dir)

@@ -17,6 +17,7 @@ pandas semantic notes encoded here:
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import internal as I
 
@@ -293,32 +294,33 @@ class DatetimeProperties:
     def __init__(self, series):
         self._s = series
 
-    def _map(self, fn):
-        return self._s._app(fn)
+    def _map(self, fn, dtype=None):
+        return self._s._app(fn, dtype)
 
+    # the integer fields are typed here, so comparing one analyses no plan
     @property
     def year(self):
-        return self._map(F.year)
+        return self._map(F.year, T.IntegerType())
 
     @property
     def month(self):
-        return self._map(F.month)
+        return self._map(F.month, T.IntegerType())
 
     @property
     def day(self):
-        return self._map(F.dayofmonth)
+        return self._map(F.dayofmonth, T.IntegerType())
 
     @property
     def hour(self):
-        return self._map(F.hour)
+        return self._map(F.hour, T.IntegerType())
 
     @property
     def minute(self):
-        return self._map(F.minute)
+        return self._map(F.minute, T.IntegerType())
 
     @property
     def second(self):
-        return self._map(F.second)
+        return self._map(F.second, T.IntegerType())
 
     @property
     def is_quarter_start(self):

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import collections
+import functools
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -152,6 +153,26 @@ def _clip_col(c, lower, upper):
     if upper is not None:
         out = F.least(out, _scalar_lit(upper))
     return F.when(c.isNull(), c).otherwise(out)
+
+
+def _binary_op(op, lhs, rhs, l_bool, r_bool, fill_value=None,
+               reverse=False):
+    """``lhs <op> rhs`` (operands swapped when ``reverse``); with a
+    ``fill_value`` a NULL operand is filled first, and a row NULL on
+    both sides stays NULL, as in pandas (comparisons ignore it)."""
+    if fill_value is not None and op not in coercion.COMPARISONS:
+        both_null = lhs.isNull() & rhs.isNull()
+        fv = _scalar_lit(fill_value)
+        lhs2, rhs2 = F.coalesce(lhs, fv), F.coalesce(rhs, fv)
+        if reverse:
+            lhs2, rhs2 = rhs2, lhs2
+            l_bool, r_bool = r_bool, l_bool
+        res = coercion.apply_op(op, lhs2, rhs2, l_bool=l_bool, r_bool=r_bool)
+        return F.when(both_null, F.lit(None)).otherwise(res)
+    if reverse:
+        lhs, rhs = rhs, lhs
+        l_bool, r_bool = r_bool, l_bool
+    return coercion.apply_op(op, lhs, rhs, l_bool=l_bool, r_bool=r_bool)
 
 
 def dataframe_op(name):
@@ -334,22 +355,8 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             reverse=False):
         axis = 1 if axis is None else self._get_axis(axis)
         dtypes = self._dtypes()
-        is_cmp = op in coercion.COMPARISONS
-
-        def app_op(lhs, rhs, l_bool, r_bool):
-            if fill_value is not None and not is_cmp:
-                both_null = lhs.isNull() & rhs.isNull()
-                fv = _scalar_lit(fill_value)
-                lhs2, rhs2 = F.coalesce(lhs, fv), F.coalesce(rhs, fv)
-                if reverse:
-                    lhs2, rhs2 = rhs2, lhs2
-                    l_bool, r_bool = r_bool, l_bool
-                res = coercion.apply_op(op, lhs2, rhs2, l_bool=l_bool, r_bool=r_bool)
-                return F.when(both_null, F.lit(None)).otherwise(res)
-            if reverse:
-                lhs, rhs = rhs, lhs
-                l_bool, r_bool = r_bool, l_bool
-            return coercion.apply_op(op, lhs, rhs, l_bool=l_bool, r_bool=r_bool)
+        app_op = functools.partial(_binary_op, op, fill_value=fill_value,
+                                   reverse=reverse)
 
         # rule 1: scalar -> every data column (reference alchemy.py:183-186)
         if _is_scalar(other):
@@ -744,10 +751,6 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                partition_by=None):
         from .sources.io import to_orc
         return to_orc(self, path, mode=mode, partition_by=partition_by)
-
-    def to_string(self, *args, **kwargs):
-        """Materializer: collect and render via pandas."""
-        return self.to_pandas().to_string(*args, **kwargs)
 
     def transform(self, func):
         """pandas ``df.transform(func)``: ``func`` applied to every
@@ -1529,21 +1532,8 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         my_bool = hinted and _is_bool_dtype(self._dtypes()[0])
         source = (T.BooleanType() if is_cmp or op in coercion.LOGICAL
                   else None)
-
-        def app_op(lhs, rhs, l_bool, r_bool):
-            if fill_value is not None and not is_cmp:
-                both_null = lhs.isNull() & rhs.isNull()
-                fv = _scalar_lit(fill_value)
-                lhs2, rhs2 = F.coalesce(lhs, fv), F.coalesce(rhs, fv)
-                if reverse:
-                    lhs2, rhs2 = rhs2, lhs2
-                    l_bool, r_bool = r_bool, l_bool
-                res = coercion.apply_op(op, lhs2, rhs2, l_bool=l_bool, r_bool=r_bool)
-                return F.when(both_null, F.lit(None)).otherwise(res)
-            if reverse:
-                lhs, rhs = rhs, lhs
-                l_bool, r_bool = r_bool, l_bool
-            return coercion.apply_op(op, lhs, rhs, l_bool=l_bool, r_bool=r_bool)
+        app_op = functools.partial(_binary_op, op, fill_value=fill_value,
+                                   reverse=reverse)
 
         # rule 1: scalar (reference alchemy.py:407-410)
         if _is_scalar(other):

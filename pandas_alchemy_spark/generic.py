@@ -2,13 +2,16 @@
 
 Mirrors reference pandas_alchemy/generic.py:7-96: len/shape/size/empty,
 head/tail, isna/notna family, abs/round, pipe, bool, the index property,
-plus the internal per-column appliers ``_app``/``_cast``.
+plus the internal per-column appliers ``_app``/``_cast``, and the thin
+verbs whose body is the same for both (copy, take, truncate,
+at_time/between_time, to_numpy, ...).
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from . import internal as I
 from .utils import copied
@@ -126,16 +129,18 @@ class GenericMixin:
 
     def _cast(self, new_type):
         # CAST every data column (reference generic.py:59-62).
-        return self._app(lambda c: c.cast(new_type))
+        return self._app(lambda c: c.cast(new_type),
+                         new_type if isinstance(new_type, DataType) else None)
 
     @copied
-    def _app(self, func) -> None:
+    def _app(self, func, dtype: DataType | None = None) -> None:
         # apply a scalar expression fn to every data column
         # (reference generic.py:64-67); a Series that is an expression
-        # over its root becomes fn of that expression
+        # over its root becomes fn of that expression, of type ``dtype``
+        # when the caller knows it
         lineage = getattr(self, "_lineage", None)
         if lineage is not None:
-            self._lineage = lineage.derive(func(lineage.expr))
+            self._lineage = lineage.derive(func(lineage.expr), dtype)
             return
         self._sdf = self._project(
             self._idx_cols(), [func(c) for c in self._data_cols()])
@@ -204,6 +209,107 @@ class GenericMixin:
                 out = F.when(c == F.lit(k), F.lit(v)).otherwise(out)
             return out
         return self._app(fn)
+
+    # -- thin verbs (one body for frame and Series) -----------------------
+
+    def aggregate(self, *args, **kwargs):
+        return self.agg(*args, **kwargs)
+
+    def copy(self, deep=True):
+        """A new handle over the same (immutable) plan — plans never
+        mutate, so pandas' deep/shallow distinction vanishes."""
+        return self._shallow_copy()
+
+    def divide(self, other, fill_value=None):
+        return self.div(other, fill_value=fill_value)
+
+    def multiply(self, other, fill_value=None):
+        return self.mul(other, fill_value=fill_value)
+
+    def subtract(self, other, fill_value=None):
+        return self.sub(other, fill_value=fill_value)
+
+    def convert_dtypes(self):
+        """No-op: the engine is already typed (Spark schema)."""
+        return self
+
+    def rename_axis(self, name):
+        """Rename the index level(s) — metadata only."""
+        names = [name] if not isinstance(name, list) else name
+        if len(names) != self._n_idx():
+            raise ValueError(
+                f"Length of new names must be {self._n_idx()}, "
+                f"got {len(names)}")
+        new = self._shallow_copy()
+        new._index = pd.Index(names)
+        return new
+
+    # -- index-range filters -------------------------------------------------
+
+    def truncate(self, before=None, after=None):
+        """Rows with index label in [before, after] — an in-plan
+        range predicate (parquet-pushable on a sorted index)."""
+        idx = self._idx_at(0)
+        cond = F.lit(True)
+        if before is not None:
+            cond = cond & (idx >= F.lit(before))
+        if after is not None:
+            cond = cond & (idx <= F.lit(after))
+        new = self._shallow_copy()
+        new._sdf = self._sdf.filter(cond)
+        return new
+
+    def at_time(self, time_str: str):
+        """Rows whose (datetime) index is exactly at a time of day —
+        in-plan predicate."""
+        return self._time_of_day_filter(time_str, time_str)
+
+    def between_time(self, start: str, end: str):
+        """Rows whose time-of-day falls in [start, end] (inclusive) —
+        in-plan predicate; a wrapped range (end < start) selects the
+        overnight complement, like pandas."""
+        return self._time_of_day_filter(start, end)
+
+    def _time_of_day_filter(self, start: str, end: str):
+        t = self._idx_dtypes()[0].simpleString()
+        if not t.startswith("timestamp"):
+            raise TypeError(
+                f"at_time/between_time need a DatetimeIndex, got {t}")
+        tod = F.date_format(self._idx_at(0).cast("timestamp"),
+                            "HH:mm:ss")
+
+        def norm(s):
+            parts = s.split(":")
+            while len(parts) < 3:
+                parts.append("00")
+            return ":".join(p.zfill(2) for p in parts)
+
+        lo, hi = norm(start), norm(end)
+        cond = ((tod >= F.lit(lo)) & (tod <= F.lit(hi)) if lo <= hi
+                else (tod >= F.lit(lo)) | (tod <= F.lit(hi)))
+        new = self._shallow_copy()
+        new._sdf = self._sdf.filter(cond)
+        return new
+
+    def take(self, positions):
+        """Positional row selection — ``iloc[[...]]`` (a rowid IN
+        filter; rows come back in index order, the engine's standing
+        row-order contract)."""
+        return self.iloc[list(positions)]
+
+    # -- materializers -------------------------------------------------------
+
+    def to_numpy(self):
+        """Materializer: collect to a numpy array."""
+        return self.to_pandas().to_numpy()
+
+    @property
+    def values(self):
+        return self.to_numpy()
+
+    def to_string(self, *args, **kwargs):
+        """Materializer: collect and render via pandas."""
+        return self.to_pandas().to_string(*args, **kwargs)
 
     # -- plumbing ----------------------------------------------------------
 

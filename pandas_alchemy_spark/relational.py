@@ -1949,17 +1949,6 @@ class RelationalMixin:
         return DataFrame(self._index, self._columns,
                          joined)._carry(reordered=True)
 
-    def rename_axis(self, name):
-        """Rename the index level(s) — metadata only."""
-        names = [name] if not isinstance(name, list) else name
-        if len(names) != self._n_idx():
-            raise ValueError(
-                f"Length of new names must be {self._n_idx()}, "
-                f"got {len(names)}")
-        new = self._shallow_copy()
-        new._index = pd.Index(names)
-        return new
-
     def squeeze(self):
         """1-column frame -> Series (1x1 -> scalar), like pandas."""
         if self._n_cols() == 1:
@@ -2148,46 +2137,6 @@ class RelationalMixin:
 
     # -- mechanical pandas-parity batch (aliases + thin wrappers) ------
 
-    def aggregate(self, *args, **kwargs):
-        return self.agg(*args, **kwargs)
-
-    def copy(self, deep=True):
-        """A new frame handle over the same (immutable) plan — plans
-        never mutate, so pandas' deep/shallow distinction vanishes."""
-        return self._shallow_copy()
-
-    def at_time(self, time_str: str):
-        """Rows whose (datetime) index is exactly at a time of day —
-        in-plan predicate."""
-        return self._time_of_day_filter(time_str, time_str)
-
-    def between_time(self, start: str, end: str):
-        """Rows whose time-of-day falls in [start, end] (inclusive) —
-        in-plan predicate; a wrapped range (end < start) selects the
-        overnight complement, like pandas."""
-        return self._time_of_day_filter(start, end)
-
-    def _time_of_day_filter(self, start: str, end: str):
-        t = self._idx_dtypes()[0].simpleString()
-        if not t.startswith("timestamp"):
-            raise TypeError(
-                f"at_time/between_time need a DatetimeIndex, got {t}")
-        tod = F.date_format(self._idx_at(0).cast("timestamp"),
-                            "HH:mm:ss")
-
-        def norm(s):
-            parts = s.split(":")
-            while len(parts) < 3:
-                parts.append("00")
-            return ":".join(p.zfill(2) for p in parts)
-
-        lo, hi = norm(start), norm(end)
-        cond = ((tod >= F.lit(lo)) & (tod <= F.lit(hi)) if lo <= hi
-                else (tod >= F.lit(lo)) | (tod <= F.lit(hi)))
-        new = self._shallow_copy()
-        new._sdf = self._sdf.filter(cond)
-        return new
-
     def xs(self, key, level=0):
         """Cross-section: rows where MultiIndex ``level`` equals
         ``key``, with that level dropped — one filter + projection."""
@@ -2204,15 +2153,6 @@ class RelationalMixin:
               for i in range(self._n_cols())])
         return DataFrame(pd.Index([self._index[k] for k in keep]),
                          self._columns, body)._carry(self)
-
-    def divide(self, other, fill_value=None):
-        return self.div(other, fill_value=fill_value)
-
-    def multiply(self, other, fill_value=None):
-        return self.mul(other, fill_value=fill_value)
-
-    def subtract(self, other, fill_value=None):
-        return self.sub(other, fill_value=fill_value)
 
     def map(self, func, na_action=None):
         """pandas 2.1 name for elementwise ``applymap``."""
@@ -2296,39 +2236,8 @@ class RelationalMixin:
             return new
         raise ValueError(f"No axis named {axis}")
 
-    def truncate(self, before=None, after=None):
-        """Rows with index label in [before, after] — an in-plan
-        range predicate (parquet-pushable on a sorted index)."""
-        idx = self._idx_at(0)
-        cond = F.lit(True)
-        if before is not None:
-            cond = cond & (idx >= F.lit(before))
-        if after is not None:
-            cond = cond & (idx <= F.lit(after))
-        new = self._shallow_copy()
-        new._sdf = self._sdf.filter(cond)
-        return new
-
-    def convert_dtypes(self):
-        """No-op: the engine is already typed (Spark schema)."""
-        return self
-
     def infer_objects(self):
         return self
-
-    def take(self, positions):
-        """Positional row selection — ``iloc[[...]]`` (a rowid IN
-        filter; rows come back in index order, the engine's standing
-        row-order contract)."""
-        return self.iloc[list(positions)]
-
-    def to_numpy(self):
-        """Materializer: collect to a numpy array."""
-        return self.to_pandas().to_numpy()
-
-    @property
-    def values(self):
-        return self.to_numpy()
 
     def info(self):
         """Schema summary without collecting data (one count job)."""
@@ -3165,21 +3074,6 @@ class SeriesRelationalMixin:
 
     # -- mechanical pandas-parity batch (aliases + thin wrappers) ------
 
-    def aggregate(self, *args, **kwargs):
-        return self.agg(*args, **kwargs)
-
-    def copy(self, deep=True):
-        return self._shallow_copy()
-
-    def divide(self, other, fill_value=None):
-        return self.div(other, fill_value=fill_value)
-
-    def multiply(self, other, fill_value=None):
-        return self.mul(other, fill_value=fill_value)
-
-    def subtract(self, other, fill_value=None):
-        return self.sub(other, fill_value=fill_value)
-
     def pad(self):
         """pandas alias of ffill."""
         return self.ffill()
@@ -3262,17 +3156,6 @@ class SeriesRelationalMixin:
         new._sdf = self._sdf.filter(cond)
         return new
 
-    def truncate(self, before=None, after=None):
-        idx = self._idx_at(0)
-        cond = F.lit(True)
-        if before is not None:
-            cond = cond & (idx >= F.lit(before))
-        if after is not None:
-            cond = cond & (idx <= F.lit(after))
-        new = self._shallow_copy()
-        new._sdf = self._sdf.filter(cond)
-        return new
-
     def first_valid_index(self):
         """Index label of the first non-null value (index order) —
         one filtered min_by aggregate."""
@@ -3329,19 +3212,6 @@ class SeriesRelationalMixin:
         out.name = self.name
         return out
 
-    def rename_axis(self, name):
-        names = [name] if not isinstance(name, list) else name
-        if len(names) != self._n_idx():
-            raise ValueError(
-                f"Length of new names must be {self._n_idx()}, "
-                f"got {len(names)}")
-        new = self._shallow_copy()
-        new._index = pd.Index(names)
-        return new
-
-    def take(self, positions):
-        return self.iloc[list(positions)]
-
     def to_dict(self):
         return self.to_pandas().to_dict()
 
@@ -3349,13 +3219,6 @@ class SeriesRelationalMixin:
         return self.to_pandas().tolist()
 
     tolist = to_list
-
-    def to_numpy(self):
-        return self.to_pandas().to_numpy()
-
-    @property
-    def values(self):
-        return self.to_numpy()
 
     def to_csv(self, path, mode: str = "overwrite",
                header: bool = True):
@@ -3493,48 +3356,12 @@ class SeriesRelationalMixin:
             return out[0]
         return pd.Series(out, index=pd.Index(probes))
 
-    def at_time(self, time_str: str):
-        """Rows whose (datetime) index label is exactly at the given
-        time of day — an in-plan predicate."""
-        return self._time_of_day_filter(time_str, time_str)
-
-    def between_time(self, start: str, end: str):
-        """Rows whose time-of-day falls in [start, end] (inclusive,
-        like pandas defaults) — an in-plan predicate, no shuffle."""
-        return self._time_of_day_filter(start, end)
-
-    def _time_of_day_filter(self, start: str, end: str):
-        t = self._idx_dtypes()[0].simpleString()
-        if not t.startswith("timestamp"):
-            raise TypeError(
-                "at_time/between_time need a DatetimeIndex, got "
-                f"{t}")
-        tod = F.date_format(self._idx_at(0).cast("timestamp"),
-                            "HH:mm:ss")
-
-        def norm(s):
-            parts = s.split(":")
-            while len(parts) < 3:
-                parts.append("00")
-            return ":".join(p.zfill(2) for p in parts)
-
-        lo, hi = norm(start), norm(end)
-        cond = ((tod >= F.lit(lo)) & (tod <= F.lit(hi)) if lo <= hi
-                else (tod >= F.lit(lo)) | (tod <= F.lit(hi)))
-        new = self._shallow_copy()
-        new._sdf = self._sdf.filter(cond)
-        return new
-
     @property
     def T(self):
         """Series transpose is the identity (pandas parity)."""
         return self
 
     def transpose(self):
-        return self
-
-    def convert_dtypes(self):
-        """No-op: the engine is already typed."""
         return self
 
     def compare(self, other):
@@ -3613,9 +3440,6 @@ class SeriesRelationalMixin:
     def to_json(self, path, mode: str = "overwrite"):
         name = self.name if self.name is not None else "0"
         return self.to_frame(name).to_json(path, mode=mode)
-
-    def to_string(self, *args, **kwargs):
-        return self.to_pandas().to_string(*args, **kwargs)
 
     def argsort(self):
         """Positions that would sort the series — an inherently

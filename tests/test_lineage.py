@@ -33,6 +33,22 @@ def test_mask_build_on_a_reread_path_sends_one_filter(spark, lineitem_pdf):
                                & (li.l_discount <= 0.05)).sum())
 
 
+def test_dt_field_comparison_analyses_no_plan(spark):
+    orders = f"{SF_DIR}/orders.parquet"
+
+    def build():
+        o = pas.read_parquet(orders)
+        return o[o.o_orderdate.dt.year == 1995]
+
+    build()  # the first read scans the path
+    masked, sent = py4j_commands(build)
+    # the integer field's type is known, so the mask is not projected
+    # only to learn that it is not boolean
+    assert sent["select"] == 0 and sent["schema"] == 0, sent
+    want = pd.read_parquet(orders).o_orderdate.dt.year == 1995
+    assert len(masked) == int(want.sum())
+
+
 def test_series_type_is_known_without_spark(spark):
     df = pas.read_parquet(LINEITEM)
     q = df.l_quantity

@@ -256,6 +256,11 @@ def test_time_of_day_and_xs(spark):
     got = df.between_time("22:00", "01:00").to_pandas().sort_index()
     want = pdf.between_time("22:00", "01:00").sort_index()
     assert got["v"].tolist() == want["v"].tolist()
+    # the Series path shares the frame's body
+    got = df.v.at_time("09:00").to_pandas().sort_index()
+    assert got.tolist() == pdf.v.at_time("09:00").tolist()
+    got = df.v.between_time("22:00", "01:00").to_pandas().sort_index()
+    assert got.tolist() == pdf.v.between_time("22:00", "01:00").tolist()
     # xs on a MultiIndex frame
     pm = pd.DataFrame({"r": ["a", "a", "b"], "c": ["p", "q", "p"],
                        "v": [1, 2, 3]})

@@ -3,8 +3,10 @@ memory sink, compared against the batch twin."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
+import time
 
 import pandas as pd
 import pytest
@@ -12,6 +14,21 @@ import pytest
 from pandas_alchemy_spark.ext import events
 from pandas_alchemy_spark.streaming import stream_events
 from tests.conftest import SF_DIR
+
+
+def _write_ts_chunks(pdf, d):
+    """Write the ts-sorted ``pdf`` as four parquet chunks that a
+    one-file-per-trigger stream replays in event order.  The file
+    source orders files by modification time (milliseconds); chunks
+    written within one millisecond tie and replay in directory order,
+    so each chunk is stamped one second after the one before."""
+    n, t0 = len(pdf), time.time() - 4
+    for i in range(4):
+        path = d / f"part-{i:02d}.parquet"
+        pdf.iloc[i * n // 4:(i + 1) * n // 4].to_parquet(
+            path, index=False, coerce_timestamps="us",
+            allow_truncated_timestamps=True)
+        os.utime(path, (t0 + i, t0 + i))
 
 
 @pytest.fixture(scope="module")
@@ -257,12 +274,7 @@ def test_stateful_ewm_matches_batch(spark, tmp_path):
     pdf["value"] = pdf["value"].fillna(0.0)
     d = tmp_path / "ewm_stream"
     d.mkdir()
-    n = len(pdf)
-    for i in range(4):
-        chunk = pdf.iloc[i * n // 4:(i + 1) * n // 4]
-        chunk.to_parquet(d / f"part-{i:02d}.parquet", index=False,
-                         coerce_timestamps="us",
-                         allow_truncated_timestamps=True)
+    _write_ts_chunks(pdf, d)
 
     stream = stream_events.read_event_stream(spark, str(d),
                                              max_files_per_trigger=1)
@@ -303,12 +315,7 @@ def test_stateful_gap_fill_matches_batch(spark, tmp_path):
     pdf.loc[pdf.index % 3 == 0, "value"] = None
     d = tmp_path / "fill_stream"
     d.mkdir()
-    n = len(pdf)
-    for i in range(4):
-        chunk = pdf.iloc[i * n // 4:(i + 1) * n // 4]
-        chunk.to_parquet(d / f"part-{i:02d}.parquet", index=False,
-                         coerce_timestamps="us",
-                         allow_truncated_timestamps=True)
+    _write_ts_chunks(pdf, d)
 
     stream = stream_events.read_event_stream(spark, str(d),
                                              max_files_per_trigger=1)
@@ -345,12 +352,7 @@ def test_stateful_rolling_matches_batch(spark, tmp_path):
            .reset_index(drop=True))
     d = tmp_path / "roll_stream"
     d.mkdir()
-    n = len(pdf)
-    for i in range(4):
-        chunk = pdf.iloc[i * n // 4:(i + 1) * n // 4]
-        chunk.to_parquet(d / f"part-{i:02d}.parquet", index=False,
-                         coerce_timestamps="us",
-                         allow_truncated_timestamps=True)
+    _write_ts_chunks(pdf, d)
 
     stream = stream_events.read_event_stream(spark, str(d),
                                              max_files_per_trigger=1)

@@ -34,16 +34,10 @@ def main():
     docs_dir = (sys.argv[1] if len(sys.argv) > 1
                 else ".scratch/docs10")
     n_waves = int(sys.argv[2]) if len(sys.argv) > 2 else 20
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .appName("append_longevity")
-             .config("spark.driver.memory", "24g")
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="append_longevity",
+                        **{"spark.driver.memory": "24g"})
     spark.sparkContext.setLogLevel("ERROR")
     from pandas_alchemy_spark.ext import dedup, similarity
     import bench

@@ -86,11 +86,9 @@ def audit_plan(plan: str):
 
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[4]")
-             .config("spark.sql.shuffle.partitions", "4")
-             .config("spark.ui.showConsoleProgress", "false")
-             .getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="audit_expr_reuse",
+                        **{"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as E
 

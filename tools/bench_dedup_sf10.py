@@ -32,21 +32,14 @@ def main():
     gate = _gate_on_load(
         float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0")),
         float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "600")))
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
-    spark = (SparkSession.builder.master("local[32]")
-             .appName("dedup_sf10")
-             .config("spark.driver.memory", "24g")
-             .config("spark.sql.shuffle.partitions", "64")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.coalescePartitions.enabled",
-                     "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.eventLog.enabled", "true")
-             .config("spark.eventLog.compress", "false")
-             .config("spark.eventLog.dir", EVDIR)
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="dedup_sf10", **{
+        "spark.driver.memory": "24g",
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.dir": EVDIR,
+    })
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
 
@@ -318,7 +311,7 @@ def main():
 
     total = round(sum(t for t in times.values() if t >= 0), 2)
     load = [round(x, 2) for x in os.getloadavg()]
-    spark.stop()  # flush the event log
+    pas.close_db()  # flush the event log
 
     # --- skew: per-stage max/median task duration from the event log
     import statistics

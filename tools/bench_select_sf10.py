@@ -35,21 +35,14 @@ def main():
     gate = _gate_on_load(
         float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0")),
         float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "600")))
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
-    spark = (SparkSession.builder.master("local[32]")
-             .appName("select_sf10")
-             .config("spark.driver.memory", "24g")
-             .config("spark.sql.shuffle.partitions", "64")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.coalescePartitions.enabled",
-                     "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.eventLog.enabled", "true")
-             .config("spark.eventLog.compress", "false")
-             .config("spark.eventLog.dir", EVDIR)
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="select_sf10", **{
+        "spark.driver.memory": "24g",
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.dir": EVDIR,
+    })
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
 
@@ -435,7 +428,7 @@ def main():
 
     total = round(sum(t for t in times.values() if t >= 0), 2)
     load = [round(x, 2) for x in os.getloadavg()]
-    spark.stop()
+    pas.close_db()
 
     stages: dict[int, list[int]] = {}
     files = []

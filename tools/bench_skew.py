@@ -33,28 +33,19 @@ def main():
     skew_dir = (sys.argv[1] if len(sys.argv) > 1
                 else "/root/repo/.scratch/skewed_sf1")
     os.makedirs(EVDIR, exist_ok=True)
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
-    spark = (SparkSession.builder.master("local[32]")
-             .appName("skew_stress")
-             .config("spark.driver.memory", "24g")
-             .config("spark.sql.shuffle.partitions", "64")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             # local[32] shuffle partitions are small; drop the skew
-             # thresholds so the rewrite CAN fire at sf1 the way it
-             # would at 100 TB defaults (256MB partitions)
-             .config("spark.sql.adaptive.skewJoin."
-                     "skewedPartitionThresholdInBytes", "8m")
-             .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                     "4m")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .config("spark.eventLog.enabled", "true")
-             .config("spark.eventLog.compress", "false")
-             .config("spark.eventLog.dir", EVDIR)
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="skew_stress", **{
+        "spark.driver.memory": "24g",
+        # local shuffle partitions are small; drop the skew thresholds
+        # so the rewrite CAN fire at sf1 the way it would at 100 TB
+        # defaults (256MB partitions)
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8m",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.dir": EVDIR,
+    })
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
 
@@ -209,7 +200,7 @@ def main():
 
     total = round(sum(v for v in times.values() if v >= 0), 2)
     load = [round(x, 2) for x in os.getloadavg()]
-    spark.stop()  # flush event log
+    pas.close_db()  # flush event log
 
     # --- event-log audit: per-stage max/median task time + AQE skew
     stages: dict[int, list[int]] = {}

@@ -50,14 +50,9 @@ def main():
     gate = _gate_on_load(
         float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0")),
         float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "600")))
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[32]")
-             .appName("streaming_bench")
-             .config("spark.driver.memory", "24g")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="streaming_bench",
+                        **{"spark.driver.memory": "24g"})
     spark.sparkContext.setLogLevel("ERROR")
 
     from pandas_alchemy_spark.streaming import stateful, stream_events

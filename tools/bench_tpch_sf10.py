@@ -26,21 +26,13 @@ EVDIR = "/root/repo/.scratch/eventlog"
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf10"
     os.makedirs(EVDIR, exist_ok=True)
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[32]")
-             .appName("tpch_sf10")
-             .config("spark.driver.memory", "24g")
-             .config("spark.sql.shuffle.partitions", "64")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.coalescePartitions.enabled",
-                     "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .config("spark.eventLog.enabled", "true")
-             .config("spark.eventLog.compress", "false")
-             .config("spark.eventLog.dir", EVDIR)
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="tpch_sf10", **{
+        "spark.driver.memory": "24g",
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.dir": EVDIR,
+    })
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
 
@@ -67,7 +59,7 @@ def main():
         print(f"{name}: {times[name]}s", file=sys.stderr)
     total = round(time.time() - t_all, 2)
     load = [round(x, 2) for x in os.getloadavg()]
-    spark.stop()  # flush the event log
+    pas.close_db()  # flush the event log
 
     # --- skew: per-stage max/median task duration from the event log
     import statistics

@@ -28,26 +28,14 @@ def main():
     args = ap.parse_args()
     only = set(args.names)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", f"r{args.round}")
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .appName(f"pas_capture_plans_r{args.round}")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .config("spark.sql.optimizer.excludedRules",
-                     "org.apache.spark.sql.catalyst.optimizer."
-                     "InferFiltersFromGenerate")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name=f"pas_capture_plans_r{args.round}", **{
+        "spark.driver.memory":
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")})
     spark.sparkContext.setLogLevel("ERROR")
 
     import bench

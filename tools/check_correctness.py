@@ -53,6 +53,7 @@ def main():
 
     import __spark_entry__ as E
     from pyspark.sql import SparkSession
+    # not init_db: the gate it replicates adds only _prep's confs
     spark = (SparkSession.builder.master("local[8]")
              .appName("check_correctness")
              .config("spark.sql.shuffle.partitions", "8")

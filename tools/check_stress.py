@@ -15,16 +15,13 @@ import tools.check_correctness as C
 def main():
     import duckdb, time
     import __spark_entry__ as E
-    from pyspark.sql import SparkSession
+    import pandas_alchemy_spark as pas
     sf_dir = "/root/testdata/sf0.01"
-    spark = (SparkSession.builder.master("local[8]")
-             .appName("check_stress")
-             .config("spark.sql.shuffle.partitions", "3")
-             .config("spark.default.parallelism", "3")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    spark = pas.init_db(app_name="check_stress", **{
+        "spark.sql.shuffle.partitions": "3",
+        "spark.default.parallelism": "3",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
+    })
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in C.TABLES:

@@ -25,6 +25,8 @@ from __future__ import annotations
 import os
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 OFFSET = 10_000_000
 SET_A = "abcdefghij"
 SET_B = "klmnopqrst"
@@ -38,12 +40,10 @@ def _rot(s: str, k: int) -> str:
 def main():
     src, dst = sys.argv[1], sys.argv[2]
     k = int(sys.argv[3]) if len(sys.argv) > 3 else 100
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
-    spark = (SparkSession.builder.master("local[16]")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.driver.memory", "12g")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="make_scaled_docs",
+                        **{"spark.driver.memory": "12g"})
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(dst, exist_ok=True)
 

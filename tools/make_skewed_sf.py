@@ -24,6 +24,8 @@ from __future__ import annotations
 import os
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 # (table, key column) -> (hot fraction, unique row-id columns for the
 # deterministic hash — NEVER monotonically_increasing_id: it is
 # nondeterministic, so Catalyst re-evaluates it per `when` branch and
@@ -62,13 +64,10 @@ def zipf_remap(df, key, frac, uniq):
 
 def main():
     src, dst = sys.argv[1], sys.argv[2]
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
-    spark = (SparkSession.builder.master("local[16]")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .config("spark.driver.memory", "16g")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="make_skewed_sf",
+                        **{"spark.driver.memory": "16g"})
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(dst, exist_ok=True)
 

@@ -32,20 +32,15 @@ def main():
     docs_dir = (sys.argv[1] if len(sys.argv) > 1
                 else "/root/repo/.scratch/docs10")
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from bench import _gate_on_load
     gate = _gate_on_load(
         float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0")),
         float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "600")))
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.driver.memory", "48g")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.ui.enabled", "false")
-             .appName("profile_semdedup").getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="profile_semdedup",
+                        **{"spark.driver.memory": "48g"})
     spark.sparkContext.setLogLevel("ERROR")
     from pandas_alchemy_spark.ext import dedup, similarity
     from pandas_alchemy_spark.ext.similarity import (
@@ -124,7 +119,7 @@ def main():
     if out_path:
         with open(out_path, "w") as fh:
             fh.write(line + "\n")
-    spark.stop()
+    pas.close_db()
 
 
 if __name__ == "__main__":

@@ -28,12 +28,9 @@ def make_series(spark, n):
 
 
 def main():
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[32]")
-             .appName("scale_fill_limit")
-             .config("spark.driver.memory", "24g")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="scale_fill_limit",
+                        **{"spark.driver.memory": "24g"})
     spark.sparkContext.setLogLevel("ERROR")
     from pandas_alchemy_spark.operators import segscan
 

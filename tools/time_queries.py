@@ -25,20 +25,9 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .appName("pas_time_queries")
-             .config("spark.driver.memory", mem)
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .config("spark.sql.optimizer.excludedRules",
-                     "org.apache.spark.sql.catalyst.optimizer."
-                     "InferFiltersFromGenerate")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    import pandas_alchemy_spark as pas
+    spark = pas.init_db(app_name="pas_time_queries",
+                        **{"spark.driver.memory": mem})
     spark.sparkContext.setLogLevel("ERROR")
 
     import bench
