@@ -27,13 +27,20 @@ def _materialize(df):
     df.sparkSession.catalog.clearCache()
 
 
-def _gate_on_load(max_load: float, wait_s: float) -> dict:
+def _gate_on_load(wait_s: float = 300.0) -> dict:
     """Quiet-by-construction: if the box is already busy (another
-    tenant), poll the 1-min loadavg for up to ``wait_s`` before
-    starting, so the run measures THIS code, not neighbors.  Returns
-    the gate telemetry to embed in the output JSON (three of round 5's
-    five apparent regressions were tenant noise that cost a session of
-    post-hoc A/B adjudication)."""
+    tenant), poll the 1-min loadavg for up to ``wait_s`` seconds
+    (``SPARK_GRAFT_LOAD_WAIT`` overrides) before starting, so the run
+    measures THIS code, not neighbors.  The threshold is
+    ``SPARK_GRAFT_MAX_LOAD``, by default a quarter of the cores: an
+    absolute load means little without the core count (a 4-core box
+    at load 1.99 is half busy).  Returns the gate telemetry to embed
+    in the output JSON (three of round 5's five apparent regressions
+    were tenant noise that cost a session of post-hoc A/B
+    adjudication)."""
+    max_load = float(os.environ.get("SPARK_GRAFT_MAX_LOAD",
+                                    0.25 * (os.cpu_count() or 1)))
+    wait_s = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", wait_s))
     start_load = os.getloadavg()[0]
     waited = 0.0
     while os.getloadavg()[0] > max_load and waited < wait_s:
@@ -393,9 +400,7 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    gate = _gate_on_load(
-        float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0")),
-        float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "300")))
+    gate = _gate_on_load()
 
     # local[N] puts driver AND all executor threads in ONE JVM — the
     # 1g default heap OOMs sort buffers above sf0.1; size it like a

@@ -304,6 +304,27 @@ class BaseFrame:
         sel += [e.alias(I.col_name(i)) for i, e in enumerate(data_exprs)]
         return self._sdf.select(*sel)
 
+    def _scan(self, kernel, *args, cols=None, **kw) -> "BaseFrame":
+        """One global segmented scan in index order: the one path of
+        every global window verb, a Series being the one-column case.
+        ``kernel(sdf, values, order, *args, out_cols=..., **kw)`` (an
+        ``operators.segscan``/``scan`` ``*_multi`` kernel) reads the
+        index levels and data columns under their internal names,
+        scans the columns at positions ``cols`` (default: all; the
+        rest pass through) and appends one output per scanned column,
+        which takes its input's place."""
+        order = [I.idx_name(i) for i in range(self._n_idx())]
+        names = [I.col_name(i) for i in range(self._n_cols())]
+        vals = names if cols is None else [names[i] for i in cols]
+        outs = {c: f"{c}__o" for c in vals}
+        scanned = kernel(self._project(self._idx_cols(), self._data_cols()),
+                         vals, order, *args, out_cols=list(outs.values()),
+                         **kw)
+        out = self._shallow_copy()
+        out._sdf = scanned.select(
+            *order, *[F.col(outs.get(c, c)).alias(c) for c in names])
+        return out._carry(reordered=True)
+
     # -- rowid -------------------------------------------------------------
 
     def _add_rowid(self, sdf: SparkDF, name: str = I.ROWID) -> SparkDF:

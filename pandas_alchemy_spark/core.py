@@ -553,60 +553,21 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         """pandas ``df.interpolate()``: linear interpolation of every
         NUMERIC column's null holes in index order; non-numeric
         columns pass through unchanged (pandas 2.x behavior).  All
-        columns run in ONE fused segmented scan
-        (segscan.interpolate_scan_multi) — one range shuffle and one
-        pass regardless of column count; the carry is two (position,
-        value) scalars per column per partition.  Numeric columns
-        come back as double (pandas promotes)."""
+        columns run in ONE fused segmented scan — one range shuffle
+        and one pass regardless of column count; the carry is two
+        (position, value) scalars per column per partition.  Numeric
+        columns come back as double (pandas promotes)."""
         from .operators.analytic import _check_interp_args
         from .operators.segscan import interpolate_scan_multi
         ld = _check_interp_args(method, limit, limit_direction)
-        num_types = ("bigint", "int", "smallint", "tinyint", "double",
-                     "float")
-        n = self._n_idx()
-        idx_names = [I.idx_name(i) for i in range(n)]
-        sel = [self._idx_at(i).alias(I.idx_name(i)) for i in range(n)]
-        val_names = []
-        for i, t in enumerate(self._dtypes()):
-            sel.append(self._col_at(i).alias(I.col_name(i)))
-            if t.simpleString() in num_types:
-                val_names.append(I.col_name(i))
-        tmp = self._sdf.select(*sel)
-        out_names = {c: f"{c}__o" for c in val_names}
-        scanned = interpolate_scan_multi(tmp, val_names, idx_names,
-                                         ld, limit, out_names)
-        final = scanned.select(
-            *[F.col(nm) for nm in idx_names],
-            *[F.col(out_names.get(I.col_name(i), I.col_name(i)))
-              .alias(I.col_name(i))
-              for i in range(self._n_cols())])
-        return DataFrame(self._index, self._columns,
-                         final)._carry(self, reordered=True)
+        num = [i for i, t in enumerate(self._dtypes())
+               if t.simpleString() in self._NUM_TYPES]
+        return self._scan(interpolate_scan_multi, ld, limit, cols=num)
 
     # -- frame-level global scans (one fused pass for all columns) ---------
 
     _NUM_TYPES = ("bigint", "int", "smallint", "tinyint", "double",
                   "float")
-
-    def _named_with_idx(self):
-        """(tmp_sdf, idx_names): every index level and data column
-        aliased to its internal name — the layout the multi-column
-        scans read."""
-        n = self._n_idx()
-        idx_names = [I.idx_name(i) for i in range(n)]
-        sel = [self._idx_at(i).alias(I.idx_name(i)) for i in range(n)]
-        sel += [self._col_at(i).alias(I.col_name(i))
-                for i in range(self._n_cols())]
-        return self._sdf.select(*sel), idx_names
-
-    def _pack_scanned(self, scanned, idx_names, out_names):
-        final = scanned.select(
-            *[F.col(nm) for nm in idx_names],
-            *[F.col(out_names.get(I.col_name(i), I.col_name(i)))
-              .alias(I.col_name(i))
-              for i in range(self._n_cols())])
-        return DataFrame(self._index, self._columns,
-                         final)._carry(self, reordered=True)
 
     def _require_numeric(self, verb):
         bad = [str(self._columns[i]) for i, t in enumerate(self._dtypes())
@@ -619,18 +580,12 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
     def _frame_cum(self, op):
         from .operators.segscan import cum_scan_multi
         self._require_numeric("cum" + op)
-        tmp, idx_names = self._named_with_idx()
-        vals = [I.col_name(i) for i in range(self._n_cols())]
-        out_names = {c: f"{c}__o" for c in vals}
-        scanned = cum_scan_multi(tmp, vals, idx_names, op,
-                                 [out_names[c] for c in vals])
-        return self._pack_scanned(scanned, idx_names, out_names)
+        return self._scan(cum_scan_multi, op)
 
     def cumsum(self):
         """pandas ``df.cumsum()``: every column's global running sum
-        in ONE fused segmented scan (segscan.cum_scan_multi) — one
-        range shuffle and one pass regardless of column count, no
-        single-partition window."""
+        in ONE fused segmented scan — one range shuffle and one pass
+        regardless of column count, no single-partition window."""
         return self._frame_cum("sum")
 
     def cumprod(self):
@@ -646,13 +601,8 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         from .operators.segscan import shift_delta_scan_multi
         if kind != "shift":
             self._require_numeric(verb)
-        tmp, idx_names = self._named_with_idx()
-        vals = [I.col_name(i) for i in range(self._n_cols())]
-        out_names = {c: f"{c}__o" for c in vals}
-        scanned = shift_delta_scan_multi(
-            tmp, vals, idx_names, periods, kind, fill_value,
-            [out_names[c] for c in vals])
-        return self._pack_scanned(scanned, idx_names, out_names)
+        return self._scan(shift_delta_scan_multi, periods, kind,
+                          fill_value)
 
     def shift(self, periods: int = 1, fill_value=None):
         """pandas ``df.shift()``: every column (any dtype) lagged in
@@ -668,10 +618,9 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
 
     def ffill(self, limit=None):
         """pandas ``df.ffill()``: every column's forward fill in ONE
-        fused scan (segscan.fill_scan_multi — all columns' carries
-        travel in a single partials row).  Fills in INDEX order (the
-        engine's global-scan contract; sort_values affects export
-        order only).  ``limit=`` rides a (value, age) carry, so a
+        fused scan (all columns' carries travel in a single partials
+        row).  Fills in INDEX order (the engine's global-scan
+        contract; sort_values affects export order only).  ``limit=`` rides a (value, age) carry, so a
         null run spanning partitions fills exactly its first
         ``limit`` positions."""
         return self._frame_fill("ffill", limit)
@@ -681,13 +630,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
 
     def _frame_fill(self, direction, limit=None):
         from .operators.segscan import fill_scan_multi
-        tmp, idx_names = self._named_with_idx()
-        vals = [I.col_name(i) for i in range(self._n_cols())]
-        out_names = {c: f"{c}__o" for c in vals}
-        scanned = fill_scan_multi(tmp, vals, idx_names, direction,
-                                  [out_names[c] for c in vals],
-                                  limit=limit)
-        return self._pack_scanned(scanned, idx_names, out_names)
+        return self._scan(fill_scan_multi, direction, limit)
 
     def asof(self, where):
         """pandas ``df.asof(where)``: the last row with NO missing
@@ -774,11 +717,10 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
 
     def rolling(self, window: int, min_periods: int | None = None):
         """pandas ``df.rolling(n)`` over the NUMERIC columns: every
-        column's windows in ONE fused border-exchange scan
-        (segscan.rolling_scan_multi — all columns' n-1 border rows
-        travel together, one range shuffle).  Count-based windows;
-        for time offsets or other dtypes use the per-column Series
-        form."""
+        column's windows in ONE fused border-exchange scan (all
+        columns' n-1 border rows travel together, one range shuffle).
+        Count-based windows; for time offsets or other dtypes use the
+        per-column Series form."""
         if isinstance(window, str):
             raise NotImplementedError(
                 "frame-level rolling takes a row count; time-offset "
@@ -797,29 +739,19 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
     def ewm(self, alpha: float):
         """pandas ``df.ewm(alpha)`` (mean only) over the numeric
         columns: every column's exact recurrence in ONE fused
-        segmented scan (scan.ewm_mean_multi — one carry row per
-        partition holding all columns' weighted tails)."""
+        segmented scan (one carry row per partition holding all
+        columns' weighted tails)."""
         return _FrameEwm(self, alpha)
 
     def rank(self, method: str = "min", ascending: bool = True,
              pct: bool = False):
         """pandas ``df.rank()``: each numeric column ranked globally.
-        Ranks of different columns need DIFFERENT value orders, so the
-        fused one-shuffle form cannot exist; this chains one
-        distributed rank scan per column (k columns -> k range
-        shuffles, no single-partition window, no joins — each scan
-        carries the other columns through)."""
-        from .operators.segscan import rank_scan
+        Ranks of different columns need DIFFERENT value orders, so
+        this chains one distributed rank scan per column (k columns
+        -> k range shuffles, no single-partition window)."""
+        from .operators.segscan import rank_scan_multi
         self._require_numeric("rank")
-        tmp, idx_names = self._named_with_idx()
-        out_names = {}
-        cur = tmp
-        for i in range(self._n_cols()):
-            c = I.col_name(i)
-            out_names[c] = f"{c}__o"
-            cur = rank_scan(cur, c, idx_names, method, ascending,
-                            out_col=f"{c}__o", pct=pct)
-        return self._pack_scanned(cur, idx_names, out_names)
+        return self._scan(rank_scan_multi, method, ascending, pct)
 
     # -- relabeling (metadata-only; reference alchemy.py:277-285) ----------
 
@@ -1383,10 +1315,10 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         line between their non-null neighbors, edge holes the nearest
         value constant, gated by ``limit_direction``
         ('forward'/'backward'/'both') and ``limit``.  Distributed as a
-        two-(position,value)-scalar-carry segmented scan
-        (operators/segscan.interpolate_scan) — no single-partition
-        window.  Grouped flavor: ``df.groupby(k)[c].interpolate()``
-        (one shuffle, pure JVM windows)."""
+        two-(position,value)-scalar-carry segmented scan — no
+        single-partition window.  Grouped flavor:
+        ``df.groupby(k)[c].interpolate()`` (one shuffle, pure JVM
+        windows)."""
         return self._win().interpolate(method, limit, limit_direction)
 
     def cumsum(self):
@@ -1727,16 +1659,17 @@ class _FrameRolling:
         self._window = int(window)
         self._mp = min_periods
 
-    def _agg(self, name):
+    def _agg(self, name, **kw):
         from .operators.segscan import rolling_scan_multi
-        df = self._df
-        tmp, idx_names = df._named_with_idx()
-        vals = [I.col_name(i) for i in range(df._n_cols())]
-        out_names = {c: f"{c}__o" for c in vals}
-        scanned = rolling_scan_multi(
-            tmp, vals, idx_names, self._window, name, self._mp,
-            [out_names[c] for c in vals])
-        return df._pack_scanned(scanned, idx_names, out_names)
+        return self._df._scan(rolling_scan_multi, self._window, name,
+                              self._mp, **kw)
+
+    def quantile(self, q: float = 0.5):
+        from .operators.analytic import nan_quantile
+        return self._agg("apply", apply_fn=nan_quantile(q))
+
+    def apply(self, func, raw: bool = True):
+        return self._agg("apply", apply_fn=func, raw=raw)
 
     def __getattr__(self, name):
         if name in self._AGGS:
@@ -1757,10 +1690,4 @@ class _FrameEwm:
 
     def mean(self):
         from .operators.scan import ewm_mean_multi
-        df = self._df
-        tmp, idx_names = df._named_with_idx()
-        vals = [I.col_name(i) for i in range(df._n_cols())]
-        out_names = {c: f"{c}__o" for c in vals}
-        scanned = ewm_mean_multi(tmp, vals, idx_names, self._alpha,
-                                 [out_names[c] for c in vals])
-        return df._pack_scanned(scanned, idx_names, out_names)
+        return self._df._scan(ewm_mean_multi, self._alpha)

@@ -426,6 +426,18 @@ def _minhash_kernel_fn(text_col: str, id_col: str, num_hashes: int,
     return fn
 
 
+def _spread(sel: DataFrame) -> DataFrame:
+    """``sel`` re-spread to ``defaultParallelism`` partitions when it
+    has fewer — the input of a map-side Arrow kernel, whose only
+    parallelism is its input's.  The probe is ``rdd``'s partition
+    count: free on a plain scan, but it runs Spark jobs eagerly on a
+    shuffled (``groupBy``/``orderBy``) input."""
+    par = sel.sparkSession.sparkContext.defaultParallelism
+    if sel.rdd.getNumPartitions() < par:
+        return sel.repartition(par)
+    return sel
+
+
 def _minhash_base_kernel(df, text_col, id_col, num_hashes,
                          shingle_n) -> DataFrame:
     """Arrow transport of :func:`_minhash_base` (md5 family only).
@@ -439,10 +451,7 @@ def _minhash_base_kernel(df, text_col, id_col, num_hashes,
     proxy for this pipeline — and is skipped when the scan is already
     wide enough."""
     from pyspark.sql import types as T
-    sel = df.select(id_col, text_col)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if sel.rdd.getNumPartitions() < par:
-        sel = sel.repartition(par)
+    sel = _spread(df.select(id_col, text_col))
     id_field = [f for f in df.schema.fields if f.name == id_col][0]
     schema = T.StructType([
         id_field,
@@ -651,10 +660,7 @@ def _simhash_signature_kernel(df, text_col, id_col, bits) -> DataFrame:
     single-/few-file scan re-spread to ``defaultParallelism`` first
     (all kernel work is map-side)."""
     from pyspark.sql import types as T
-    sel = df.select(id_col, text_col)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if sel.rdd.getNumPartitions() < par:
-        sel = sel.repartition(par)
+    sel = _spread(df.select(id_col, text_col))
     id_field = [f for f in df.schema.fields if f.name == id_col][0]
     schema = T.StructType([id_field,
                            T.StructField("sh", T.LongType())])

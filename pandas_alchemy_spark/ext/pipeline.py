@@ -436,11 +436,8 @@ def _dsir_bucket_kernel(df: DataFrame, text_col: str,
                 yield pd.DataFrame({id_col: ids_out, "b": bs,
                                     "c": cs})
 
-    sel = df.select(*([id_col] if id_col is not None else []),
-                    text_col)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if sel.rdd.getNumPartitions() < par:
-        sel = sel.repartition(par)
+    sel = dedup._spread(df.select(
+        *([id_col] if id_col is not None else []), text_col))
     fields = []
     if id_col is not None:
         fields.append([f for f in df.schema.fields

@@ -10,10 +10,10 @@ different scale profiles:
   per group.  This is the 100 TB path; per-key cardinality bounds the
   partition size.
 - **Global** (``series.shift()`` etc.): pandas semantics need a total
-  row order, which in Spark is a single-partition window — fine for
-  small/aggregated frames, a deliberate bottleneck on raw 100 TB input
-  (use the grouped flavor there).  We still provide it for parity; the
-  plan warns via Spark's own WindowExec single-partition warning.
+  row order.  No global verb uses a single-partition window: each is
+  one distributed segmented scan (``operators.segscan``) run through
+  ``BaseFrame._scan``, the same path ``df.shift()`` takes — a Series
+  is the one-column case.
 """
 
 from __future__ import annotations
@@ -352,7 +352,8 @@ class _WindowVerbs:
 class SeriesWindow(_WindowVerbs):
     """Global (whole-series) analytic verbs, ordered by the index.
 
-    EVERY verb here routes through ``operators.segscan`` — the
+    EVERY verb here routes through ``BaseFrame._scan`` (the path the
+    DataFrame verbs take, over the one column) into the
     distributed two-pass segmented machinery (range-pinned partitions,
     scalar or k-row border carries via the driver, per-partition
     vectorized pandas pass) — so NO global verb needs a
@@ -368,25 +369,9 @@ class SeriesWindow(_WindowVerbs):
     def __init__(self, series):
         self._s = series
 
-    def _scan_series(self, build):
-        """Package a segscan (idx cols + ``__out``) as a Series — the
-        same plan-rewrite shape as Ewm.mean (no lineage: the scan
-        materializes a pinned layout, so assign falls back to the
-        index-aligned join instead of inlining)."""
-        from ..core import Series
-        s = self._s
-        n = s._n_idx()
-        idx = [s._idx_at(i).alias(I.idx_name(i)) for i in range(n)]
-        tmp = s._sdf.select(*idx, s._the_col.alias("__v"))
-        out = build(tmp, [I.idx_name(i) for i in range(n)])
-        body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
-                          F.col("__out").alias(I.col_name(0)))
-        return Series(s._index, None, body, s.name)._carry(s, reordered=True)
-
     def _cum_scan(self, op):
-        from .segscan import cum_scan
-        return self._scan_series(
-            lambda tmp, oc: cum_scan(tmp, "__v", oc, op, "__out"))
+        from .segscan import cum_scan_multi
+        return self._s._scan(cum_scan_multi, op)
 
     def cumsum(self):
         return self._cum_scan("sum")
@@ -402,60 +387,47 @@ class SeriesWindow(_WindowVerbs):
 
     def rank(self, method: str = "min", ascending: bool = True,
              pct: bool = False):
-        from .segscan import rank_scan
-        return self._scan_series(
-            lambda tmp, oc: rank_scan(tmp, "__v", oc, method,
-                                      ascending, "__out", pct=pct))
+        from .segscan import rank_scan_multi
+        return self._s._scan(rank_scan_multi, method, ascending, pct)
 
     def shift(self, periods: int = 1, fill_value=None):
-        from .segscan import shift_scan
-        return self._scan_series(
-            lambda tmp, oc: shift_scan(tmp, "__v", oc, periods,
-                                       fill_value, "__out"))
+        from .segscan import shift_delta_scan_multi
+        return self._s._scan(shift_delta_scan_multi, periods, "shift",
+                             fill_value)
 
     def diff(self, periods: int = 1):
-        from .segscan import delta_scan
-        return self._scan_series(
-            lambda tmp, oc: delta_scan(tmp, "__v", oc, periods,
-                                       "diff", "__out"))
+        from .segscan import shift_delta_scan_multi
+        return self._s._scan(shift_delta_scan_multi, periods, "diff")
 
     def pct_change(self, periods: int = 1):
-        from .segscan import delta_scan
-        return self._scan_series(
-            lambda tmp, oc: delta_scan(tmp, "__v", oc, periods,
-                                       "pct", "__out"))
+        from .segscan import shift_delta_scan_multi
+        return self._s._scan(shift_delta_scan_multi, periods, "pct")
 
     def ffill(self, limit=None):
-        """Global forward fill — a (value, age) carry per partition
-        (segscan.fill_scan), so ``limit=`` holds across partition
-        borders exactly as single-node pandas."""
-        from .segscan import fill_scan
-        return self._scan_series(
-            lambda tmp, oc: fill_scan(tmp, "__v", oc, "ffill",
-                                      "__out", limit=limit))
+        """Global forward fill — a (value, age) carry per partition,
+        so ``limit=`` holds across partition borders exactly as
+        single-node pandas."""
+        from .segscan import fill_scan_multi
+        return self._s._scan(fill_scan_multi, "ffill", limit)
 
     def bfill(self, limit=None):
-        from .segscan import fill_scan
-        return self._scan_series(
-            lambda tmp, oc: fill_scan(tmp, "__v", oc, "bfill",
-                                      "__out", limit=limit))
+        from .segscan import fill_scan_multi
+        return self._s._scan(fill_scan_multi, "bfill", limit)
 
     def interpolate(self, method: str = "linear", limit=None,
                     limit_direction=None):
         """Global linear interpolation as a segmented scan — the carry
-        is two (position, value) scalars per partition (segscan
-        .interpolate_scan), no single-partition window."""
+        is two (position, value) scalars per partition, no
+        single-partition window."""
+        from .segscan import interpolate_scan_multi
         ld = _check_interp_args(method, limit, limit_direction)
-        from .segscan import interpolate_scan
-        return self._scan_series(
-            lambda tmp, oc: interpolate_scan(tmp, "__v", oc, ld,
-                                             limit, "__out"))
+        return self._s._scan(interpolate_scan_multi, ld, limit)
 
-    def _rolling_named(self, name: str, window: int, min_periods):
-        from .segscan import rolling_scan
-        return self._scan_series(
-            lambda tmp, oc: rolling_scan(tmp, "__v", oc, window, name,
-                                         min_periods, "__out"))
+    def _rolling_named(self, name: str, window: int, min_periods,
+                       **kw):
+        from .segscan import rolling_scan_multi
+        return self._s._scan(rolling_scan_multi, window, name,
+                             min_periods, **kw)
 
     def _rolling_time_named(self, name: str, offset_us: int,
                             min_periods: int):
@@ -752,8 +724,8 @@ class _GroupedEwm:
 
 
 class Ewm:
-    """``series.ewm(alpha)`` handle (mean only) — the EXACT distributed
-    segmented scan (operators/scan.ewm_mean): range-partitioned on the
+    """``series.ewm(alpha)`` handle — the EXACT distributed segmented
+    scan (operators/scan.ewm_mean_multi): range-partitioned on the
     index order, per-partition recurrence, one scalar carry per
     partition to the driver, second pass rebuilds the global
     recurrence.  No single-partition window — unlike the global cum*
@@ -766,17 +738,8 @@ class Ewm:
         self._alpha = float(alpha)
 
     def mean(self):
-        from ..core import Series
-        from .scan import ewm_mean
-        s = self._s
-        n = s._n_idx()
-        idx = [s._idx_at(i).alias(I.idx_name(i)) for i in range(n)]
-        tmp = s._sdf.select(*idx, s._the_col.alias("__v"))
-        out = ewm_mean(tmp, "__v", [I.idx_name(i) for i in range(n)],
-                       self._alpha, out_col="__ewm")
-        body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
-                          F.col("__ewm").alias(I.col_name(0)))
-        return Series(s._index, None, body, s.name)._carry(s)
+        from .scan import ewm_mean_multi
+        return self._s._scan(ewm_mean_multi, self._alpha)
 
     def var(self, bias: bool = False):
         """pandas ``ewm(alpha).var(bias=)`` — the mean scan's
@@ -852,6 +815,22 @@ _OFFSET_UNITS_US = {
 }
 
 
+def nan_quantile(q: float):
+    """The per-window function of a global ``rolling(n).quantile(q)``
+    (pandas' linear interpolation over the window's non-null values):
+    Spark's percentile aggregates refuse window frames, so the scan
+    evaluates it as a rolling ``apply``."""
+    import numpy as np
+    q = float(q)
+    if not 0.0 <= q <= 1.0:
+        raise ValueError(f"q must be in [0, 1], got {q}")
+
+    def nanq(a):
+        ok = ~np.isnan(a)
+        return np.quantile(a[ok], q) if ok.any() else np.nan
+    return nanq
+
+
 def parse_offset_us(off: str) -> int:
     """'7D' / '24H' / '30min' / '10S' -> microseconds.  Fixed-width
     offsets only — calendar offsets (M/Y) have no constant width and
@@ -902,8 +881,8 @@ class Rolling:
             self._window_n = window
         self._min_periods = min_periods
 
-    def _agg(self, name: str, min_periods=None):
-        mp = min_periods if min_periods is not None else self._min_periods
+    def _agg(self, name: str):
+        mp = self._min_periods
         if self._by_time:
             return self._sw._rolling_time_named(name, self._offset_us,
                                                 mp or 1)
@@ -931,7 +910,9 @@ class Rolling:
         return self._agg("median")
 
     def count(self):
-        return self._agg("count", self._min_periods or 1)
+        """pandas ``rolling(n).count()``: like every count-based
+        aggregate, null until ``min_periods`` (default ``n``) rows."""
+        return self._agg("count")
 
     def _named_pandas(self, name: str):
         """Count-based-only aggregates evaluated by pandas' own
@@ -1002,8 +983,7 @@ class Rolling:
         Arrow passes — the global form via the k-row border exchange,
         the grouped form per group.  Count-based windows only."""
         q = float(q)
-        if not 0.0 <= q <= 1.0:
-            raise ValueError(f"q must be in [0, 1], got {q}")
+        nanq = nan_quantile(q)
         if self._by_time:
             raise NotImplementedError(
                 "rolling(offset).quantile is not supported — use a "
@@ -1013,17 +993,7 @@ class Rolling:
         sw = self._sw
         win = self._window_n
         if isinstance(sw, SeriesWindow):
-            import numpy as np
-
-            def nanq(a):
-                ok = ~np.isnan(a)
-                return np.quantile(a[ok], q) if ok.any() else np.nan
-
-            from .segscan import rolling_scan
-            return sw._scan_series(
-                lambda tmp, oc: rolling_scan(
-                    tmp, "__v", oc, win, "apply", mp, "__out",
-                    apply_fn=nanq, raw=True))
+            return sw._rolling_named("apply", win, mp, apply_fn=nanq)
         return sw._apply_grouped(
             lambda pdf: pdf["__v"].astype("float64")
             .rolling(win, min_periods=mp).quantile(q))
@@ -1107,11 +1077,8 @@ class Rolling:
         sw = self._sw
         win = self._window_n
         if isinstance(sw, SeriesWindow):
-            from .segscan import rolling_scan
-            return sw._scan_series(
-                lambda tmp, oc: rolling_scan(
-                    tmp, "__v", oc, win, "apply", mp, "__out",
-                    apply_fn=func, raw=raw))
+            return sw._rolling_named("apply", win, mp, apply_fn=func,
+                                     raw=raw)
         return sw._apply_grouped(
             lambda pdf: pdf["__v"].astype("float64")
             .rolling(win, min_periods=mp).apply(func, raw=raw))
@@ -1129,16 +1096,21 @@ class Expanding:
                     else SeriesWindow(series))
         self._min_periods = min_periods
 
+    def _global(self, name):
+        """The global flavor: one (count, sum/max/min or moment)
+        prefix-carry scan over the series' one column."""
+        from .segscan import expanding_scan
+        mp = self._min_periods
+        return self._sw._s._scan(
+            lambda sdf, vals, order, out_cols: expanding_scan(
+                sdf, vals[0], order, name, mp, out_cols[0]))
+
     def _exp(self, agg, name):
         # global flavor: segmented scan (round 5 — same machinery as
         # cum*/rank, so no expanding verb needs the single-partition
         # window anymore); grouped flavor: partitioned window
         if isinstance(self._sw, SeriesWindow):
-            from .segscan import expanding_scan
-            mp = self._min_periods
-            return self._sw._scan_series(
-                lambda tmp, oc: expanding_scan(tmp, "__v", oc, name,
-                                               mp, "__out"))
+            return self._global(name)
         w = self._sw._window().rowsBetween(Window.unboundedPreceding,
                                            Window.currentRow)
         mp = self._min_periods
@@ -1238,11 +1210,7 @@ class Expanding:
         Global flavor rides the same (count, mean, M2) moment carry
         as var/std; grouped is one window expression."""
         if isinstance(self._sw, SeriesWindow):
-            from .segscan import expanding_scan
-            mp = self._min_periods
-            return self._sw._scan_series(
-                lambda tmp, oc: expanding_scan(tmp, "__v", oc, "sem",
-                                               mp, "__out"))
+            return self._global("sem")
         w = self._sw._window().rowsBetween(Window.unboundedPreceding,
                                            Window.currentRow)
         mp = max(self._min_periods, 2)

@@ -14,7 +14,8 @@ formulations, picked by shape:
   the small-bounded-groups fast path.
 - ``ewm_mean`` with ``by=``: applyInPandas per group — pandas' own
   stable recurrence, any group length, state bounded by the group.
-- ``ewm_mean`` global: an exact two-pass segmented scan.  Pass A
+- ``ewm_mean_multi`` (``ewm_mean`` without ``by=``): an exact
+  two-pass segmented scan over one or many columns.  Pass A
   computes one carry per partition (the partition-local unnormalized
   tail sum); the driver folds the P carries into prefix states (P ~
   thousands, scalars only — never row data); pass B rebuilds the
@@ -101,29 +102,6 @@ def ewm_mean_grouped(sdf: SparkDF, value_col: str, order_cols,
     return d.withColumn(out_col, guarded).drop("__rn")
 
 
-def _partition_scan(it, alpha, out):
-    """Per-partition pass A: fold every Arrow batch through pandas'
-    ewm recurrence, emitting ONE carry row (pid, n_rows, tail_num)."""
-    w = 1.0 - alpha
-    num_end = 0.0
-    n = 0
-    pid = None
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        pid = int(pdf["__pid"].iloc[0])
-        x = pdf["__x"].astype("float64")
-        mean = x.ewm(alpha=alpha, adjust=True).mean()
-        k = len(x)
-        # batch-local unnormalized tail: mean_end * den_end
-        den_end = (1.0 - w ** k) / (1.0 - w) if w != 0.0 else 1.0
-        local_tail = float(mean.iloc[-1]) * den_end
-        num_end = num_end * (w ** k) + local_tail
-        n += k
-    if pid is not None:
-        yield pd.DataFrame({"pid": [pid], "n": [n], "tail": [num_end]})
-
-
 def ewm_mean(sdf: SparkDF, value_col: str, order_cols, alpha: float,
              by=None, out_col: str = "ewm",
              num_partitions: int | None = None,
@@ -132,8 +110,8 @@ def ewm_mean(sdf: SparkDF, value_col: str, order_cols, alpha: float,
 
     ``by=`` groups: one applyInPandas per group (exact for any group
     length; ``stat`` may also be "sum" there — same recurrence minus
-    the weight normalization).  Global: exact segmented scan (see
-    module docstring; mean only — Ewm.sum composes it with the
+    the weight normalization).  Global: :func:`ewm_mean_multi` over
+    the one column (mean only — Ewm.sum composes it with the
     closed-form weight total).  Null values in ``value_col`` are not
     supported — filter first (pandas' ignore_na semantics need a
     weight channel we don't carry).
@@ -162,61 +140,9 @@ def ewm_mean(sdf: SparkDF, value_col: str, order_cols, alpha: float,
         return (sdf.groupBy(*byl).applyInPandas(per_group, schema)
                 .select(*cols, out_col))
 
-    w = 1.0 - alpha
-    # range-partition on the scan order, then pin the layout so both
-    # passes see the same rows per partition (repartitionByRange
-    # samples; localCheckpoint makes the layout a fact).  Shares the
-    # segscan memo: an EWM over the same series/order as other scan
-    # verbs reuses their shuffle+checkpoint.
-    from .segscan import _pin
-    base = _pin(sdf, [F.col(c) for c in order_cols], num_partitions)
-
-    # pass A: one scalar carry per partition — P rows to the driver,
-    # never row data
-    carries = (base.select("__pid", F.col(value_col).cast("double")
-                           .alias("__x"))
-               .mapInPandas(lambda it: _partition_scan(it, alpha, "t"),
-                            "pid int, n long, tail double")
-               .collect())
-    carries.sort(key=lambda r: r["pid"])
-    prefix_num: dict[int, float] = {}
-    prefix_n: dict[int, int] = {}
-    pref, off = 0.0, 0
-    for r in carries:
-        prefix_num[r["pid"]] = pref
-        prefix_n[r["pid"]] = off
-        pref = pref * (w ** r["n"]) + r["tail"]
-        off += r["n"]
-
-    out_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in sdf.schema.fields) + f", {out_col} double"
-
-    def pass_b(it):
-        carry = None  # (num_tail, t_local) across batches of a partition
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            if carry is None:
-                carry = (prefix_num.get(pid, 0.0), 0)
-            num_in, t0 = carry
-            x = pdf[value_col].astype("float64")
-            k = len(x)
-            mean = x.ewm(alpha=alpha, adjust=True).mean()
-            den_local = (1.0 - w ** pd.Series(range(1, k + 1),
-                                              index=x.index)) / (1.0 - w)
-            num_local = mean.to_numpy() * den_local.to_numpy()
-            decay = w ** pd.Series(range(1, k + 1), index=x.index)
-            num = num_local + num_in * decay.to_numpy()
-            gpos = prefix_n.get(pid, 0) + t0 + pd.Series(
-                range(1, k + 1), index=x.index)
-            den = (1.0 - w ** gpos.to_numpy()) / (1.0 - w)
-            res = pdf.drop(columns=["__pid"]).copy()
-            res[out_col] = num / den
-            carry = (num_in * (w ** k) + num_local[-1], t0 + k)
-            yield res
-
-    return base.mapInPandas(pass_b, out_fields)
+    return ewm_mean_multi(sdf, [value_col], order_cols, alpha,
+                          out_cols=[out_col],
+                          num_partitions=num_partitions)
 
 
 def _partition_scan2(it, alpha):
@@ -381,21 +307,21 @@ def _partition_scan_multi(it, alpha, ncols):
 
 
 def ewm_mean_multi(sdf: SparkDF, value_cols, order_cols, alpha: float,
-                   out_cols=None,
+                   *, out_cols,
                    num_partitions: int | None = None) -> SparkDF:
-    """Frame-level exact EWM mean: every column's recurrence in ONE
-    segmented scan — per-partition weighted tails for all columns
-    travel in a single carry row (the EWM sibling of
-    :func:`segscan.cum_scan_multi`).  Same null contract as
-    :func:`ewm_mean` (filter nulls first)."""
+    """Global exact EWM mean as a two-pass segmented scan: every
+    column's recurrence in ONE scan.  Range-partition on the scan
+    order and pin the layout (``segscan._pin``: repartitionByRange
+    samples, the checkpoint makes the layout a fact, and an EWM over
+    the same frame and order as other scan verbs reuses their
+    shuffle); pass A folds each partition into one carry row holding
+    every column's weighted tail (P rows to the driver, never row
+    data); pass B rebuilds the exact global recurrence from each
+    partition's prefix.  Same null contract as :func:`ewm_mean`
+    (filter nulls first)."""
     _check_alpha(alpha)
     w = 1.0 - alpha
-    value_cols = list(value_cols)
     ncols = len(value_cols)
-    out_cols = (list(out_cols) if out_cols is not None
-                else [f"{c}__o" for c in value_cols])
-    order_cols = ([order_cols] if isinstance(order_cols, str)
-                  else list(order_cols))
     from .segscan import _pin
     base = _pin(sdf, [F.col(c) for c in order_cols], num_partitions)
     proj = base.select(

@@ -3,14 +3,15 @@
 pandas' global ``cumsum``/``cummax``/``rank`` need a TOTAL row order;
 the naive Spark form is an unpartitioned window — one task sees every
 row, the known scale cliff of the parity layer.  This module ports the
-``scan.ewm_mean`` two-pass segmented technique to the whole cum*/rank
-family:
+``scan.ewm_mean_multi`` two-pass segmented technique to the whole
+cum*/rank family:
 
 - **Pin the layout**: range-partition on the scan order (index for
   cum*, value for rank), sort within partitions, ``localCheckpoint``
   so both passes see identical partitions (same trade as
-  ``scan.ewm_mean``: the checkpoint stores partitions on executors; at
-  a real cluster scale point a reliable checkpoint dir instead).
+  ``scan.ewm_mean_multi``: the checkpoint stores partitions on
+  executors; at a real cluster scale point a reliable checkpoint dir
+  instead).
 - **Pass A (JVM)**: one aggregate row per partition (sum/max/count/
   countDistinct of the partition) — P scalars to the driver, never row
   data.
@@ -48,6 +49,14 @@ a k-row window border (or one non-null scalar) rather than a prefix:
   row within ``offset`` of a partition's min timestamp), so pass A
   first collects per-partition min timestamps (P scalars), then a
   filter pass emits exactly the qualifying border rows.
+
+One segmented scan per window verb: every global kernel a verb
+calls (``cum_scan_multi``, ``shift_delta_scan_multi``,
+``fill_scan_multi``, ``interpolate_scan_multi``,
+``rolling_scan_multi``, ``rank_scan_multi``, ``scan.ewm_mean_multi``)
+takes ``(sdf, value_cols, order_cols, ..., out_cols=)`` over the
+layout ``BaseFrame._scan`` projects, and a Series is its one-column
+case.
 
 No counterpart in the reference (pandas-alchemy has no analytic
 verbs); the pandas API contract is the spec.
@@ -123,13 +132,15 @@ def _pin_key(sdf: SparkDF, order_exprs, n_part: int) -> tuple:
     key; the JSON is complete) + semanticHash (the JSON elides
     LogicalRDD / LocalRelation payloads, but the hash covers the
     backing RDD identity — verified: different from_pandas data ->
-    different hash).  A false hit therefore needs a sha256 collision
-    AND a 32-bit semanticHash collision on the same key; the hit-time
-    guards in _pin catch even that."""
+    different hash) + the output column names (canonicalization
+    erases alias names, so ``(i, v AS a)`` and ``(i, v AS b)`` share
+    the hash and the JSON).  A false hit therefore needs a sha256
+    collision AND a 32-bit semanticHash collision on the same key;
+    the hit-time guards in _pin catch even that."""
     plan_json = (sdf._jdf.queryExecution().analyzed()
                  .canonicalized().toJSON())
     return (sdf.sparkSession.sparkContext.applicationId,
-            sdf.semanticHash(),
+            tuple(sdf.columns), sdf.semanticHash(),
             hashlib.sha256(plan_json.encode()).hexdigest(),
             tuple(str(e) for e in order_exprs), n_part)
 
@@ -192,17 +203,6 @@ def _pin(sdf: SparkDF, order_exprs, num_partitions=None) -> SparkDF:
         while len(_PIN_CACHE) > _PIN_CACHE_MAX:
             _PIN_CACHE.pop(next(iter(_PIN_CACHE)))
     return pinned
-
-
-def cum_scan(sdf: SparkDF, value_col: str, order_cols, op: str,
-             out_col: str = "cum", num_partitions=None) -> SparkDF:
-    """Global cumulative ``op`` (sum/prod/max/min) of ``value_col`` in
-    ``order_cols`` order — single-column wrapper over
-    :func:`cum_scan_multi` (one pin, one partials pass, one carry).
-    pandas NaN-hole semantics: null rows stay null, the running value
-    skips them."""
-    return cum_scan_multi(sdf, [value_col], order_cols, op,
-                          [out_col], num_partitions)
 
 
 def expanding_scan(sdf: SparkDF, value_col: str, order_cols, agg: str,
@@ -525,6 +525,20 @@ def rank_scan(sdf: SparkDF, value_col: str, order_cols, method: str,
     return base.mapInPandas(pass_b, out_fields)
 
 
+def rank_scan_multi(sdf: SparkDF, value_cols, order_cols, method: str,
+                    ascending: bool, pct: bool = False, *,
+                    out_cols) -> SparkDF:
+    """Ranks of every column in ``value_cols``: each column needs its
+    OWN value order, so no fused one-shuffle form exists — one
+    :func:`rank_scan` per column (k columns -> k range shuffles, no
+    single-partition window, no joins: each scan carries the other
+    columns through)."""
+    for c, oc in zip(value_cols, out_cols):
+        sdf = rank_scan(sdf, c, order_cols, method, ascending, oc,
+                        pct=pct)
+    return sdf
+
+
 # ---------------------------------------------------------------------------
 # border-exchange scans: shift/diff/pct_change/rolling/ffill/bfill
 # ---------------------------------------------------------------------------
@@ -550,15 +564,6 @@ def _whole_partition(it):
         return None
     return (chunks[0] if len(chunks) == 1
             else pd.concat(chunks, ignore_index=True))
-
-
-def _collect_edges(base: SparkDF, value_col: str, k_head: int,
-                   k_tail: int):
-    """Single-column wrapper over :func:`_collect_edges_multi` —
-    returns (heads, tails): pid -> list of values in partition
-    order."""
-    return _collect_edges_multi(base, [value_col], k_head,
-                                k_tail)[value_col]
 
 
 def _chain_borders(pids, heads, tails, k_before: int, k_after: int):
@@ -590,102 +595,24 @@ def _to_nullable(s: pd.Series, spark_type: str) -> pd.Series:
     return s
 
 
-def shift_scan(sdf: SparkDF, value_col: str, order_cols,
-               periods: int = 1, fill_value=None, out_col: str = "sh",
-               num_partitions=None) -> SparkDF:
-    """Global ``Series.shift`` as a border-exchange segmented scan —
-    single-column wrapper over :func:`shift_delta_scan_multi`."""
-    return shift_delta_scan_multi(sdf, [value_col], order_cols,
-                                  periods, "shift", fill_value,
-                                  [out_col], num_partitions)
-
-
-def delta_scan(sdf: SparkDF, value_col: str, order_cols,
-               periods: int = 1, kind: str = "diff",
-               out_col: str = "dl", num_partitions=None) -> SparkDF:
-    """Global ``Series.diff`` / ``pct_change`` via the border
-    exchange — single-column wrapper over
-    :func:`shift_delta_scan_multi`.  ``diff`` keeps integer inputs
-    exact (masked Int64); ``pct_change`` is always double with IEEE
-    division (x/0 -> inf), matching the engine's truediv contract."""
-    if kind not in ("diff", "pct"):
-        raise ValueError(f"kind must be 'diff' or 'pct', got {kind!r}")
-    return shift_delta_scan_multi(sdf, [value_col], order_cols,
-                                  periods, kind, None, [out_col],
-                                  num_partitions)
-
-
 _ROLL_AGGS = ("sum", "mean", "max", "min", "count", "std", "var",
               "median", "sem", "skew", "kurt", "rank")
 
 
 def _roll_out_type(agg: str, in_type: str) -> str:
     if agg in ("mean", "std", "var", "median", "sem", "skew",
-               "kurt", "rank"):
+               "kurt", "rank", "apply"):
         return "double"
     if agg == "count":
         return "bigint"
     return in_type  # sum/max/min follow the input like Spark windows
 
 
-def rolling_scan(sdf: SparkDF, value_col: str, order_cols, window: int,
-                 agg: str, min_periods: int | None = None,
-                 out_col: str = "rl", num_partitions=None,
-                 apply_fn=None, raw: bool = True) -> SparkDF:
-    """Global count-based ``Series.rolling(n).agg()`` as a
-    border-exchange segmented scan: each partition receives the n-1
-    preceding values and computes its windows locally.  Integer sums
-    run exactly in int64 via cumsum differences; max/min/std go
-    through float64 (|x| < 2^53 caveat, same as the cum* scans).
-    ``min_periods`` gates on non-null observations in the frame (the
-    Spark window ``F.count(c) >= mp`` contract == pandas)."""
-    if agg == "apply":
-        if apply_fn is None:
-            raise ValueError("rolling agg 'apply' needs apply_fn")
-    elif agg not in _ROLL_AGGS:
-        raise ValueError(f"unsupported rolling agg {agg!r}")
-    if window < 1:
-        raise ValueError(f"window must be >= 1, got {window}")
-    mp = window if min_periods is None else max(int(min_periods), 0)
-    order_cols = ([order_cols] if isinstance(order_cols, str)
-                  else list(order_cols))
-    base = _pin(sdf, [F.col(c) for c in order_cols], num_partitions)
-    in_type = sdf.schema[value_col].dataType.simpleString()
-    out_type = "double" if agg == "apply" else _roll_out_type(agg,
-                                                              in_type)
-    fields = _out_fields(sdf, out_col, out_type)
-    k = window - 1
-    if k:
-        _, tails = _collect_edges(base, value_col, 0, k)
-        before, _ = _chain_borders(sorted(tails), {}, tails, k, 0)
-    else:
-        before = {}
-    integral = in_type in _INTEGRAL
-
-    def pass_b(it):
-        pdf = _whole_partition(it)
-        if pdf is None:
-            return
-        pid = int(pdf["__pid"].iloc[0])
-        b = pd.Series(before.get(pid, []), dtype="float64")
-        xf = pd.concat([b, pdf[value_col].astype("float64")],
-                       ignore_index=True)
-        out = _roll_one(xf, agg, window, mp, integral,
-                        apply_fn, raw)
-        out = out.iloc[len(b):].reset_index(drop=True)
-        res = pdf.drop(columns=["__pid"]).reset_index(drop=True)
-        res[out_col] = _to_nullable(out, out_type)
-        yield res
-
-    return base.mapInPandas(pass_b, fields)
-
-
 def _roll_one(xf: pd.Series, agg: str, window: int, mp: int,
               integral: bool, apply_fn=None, raw: bool = True):
-    """Vectorized rolling aggregate over a border-extended column
-    (shared by the single- and multi-column scans).  ``mp`` may be 0
-    (pandas ``min_periods=0``): sum/count then emit 0 over windows
-    with no valid observations instead of null."""
+    """Vectorized rolling aggregate over a border-extended column.
+    ``mp`` may be 0 (pandas ``min_periods=0``): sum/count then emit 0
+    over windows with no valid observations instead of null."""
     nn = xf.notna().astype("int64").cumsum()
     nwin = nn - nn.shift(window, fill_value=0)
     if agg == "count":
@@ -717,22 +644,26 @@ def _roll_one(xf: pd.Series, agg: str, window: int, mp: int,
 
 
 def rolling_scan_multi(sdf: SparkDF, value_cols, order_cols,
-                       window: int, agg: str,
-                       min_periods: int | None = None,
-                       out_cols=None, num_partitions=None) -> SparkDF:
-    """Frame-level global rolling: every column's windows in ONE
-    border-exchange pass (all columns' n-1 border rows travel
-    together) — the rolling sibling of :func:`cum_scan_multi`."""
-    if agg not in _ROLL_AGGS:
+                       window: int, agg: str, min_periods: int | None,
+                       *, out_cols, num_partitions=None,
+                       apply_fn=None, raw: bool = True) -> SparkDF:
+    """Global count-based ``rolling(n).agg()`` as a border-exchange
+    segmented scan: one pass ships every column's n-1 border rows
+    together, and each partition computes its windows locally after
+    prepending them.  Integer sums run exactly in int64 via cumsum
+    differences; max/min/std go through float64 (|x| < 2^53 caveat,
+    same as the cum* scans).  ``min_periods`` gates on non-null
+    observations in the frame (the Spark window ``F.count(c) >= mp``
+    contract == pandas).  ``agg='apply'`` evaluates ``apply_fn`` per
+    window (pandas ``rolling.apply(raw=)``, double output)."""
+    if agg == "apply":
+        if apply_fn is None:
+            raise ValueError("rolling agg 'apply' needs apply_fn")
+    elif agg not in _ROLL_AGGS:
         raise ValueError(f"unsupported rolling agg {agg!r}")
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     mp = window if min_periods is None else max(int(min_periods), 0)
-    value_cols = list(value_cols)
-    out_cols = (list(out_cols) if out_cols is not None
-                else [f"{c}__o" for c in value_cols])
-    order_cols = ([order_cols] if isinstance(order_cols, str)
-                  else list(order_cols))
     base = _pin(sdf, [F.col(c) for c in order_cols], num_partitions)
     in_types = [sdf.schema[c].dataType.simpleString()
                 for c in value_cols]
@@ -763,7 +694,7 @@ def rolling_scan_multi(sdf: SparkDF, value_cols, order_cols,
             b = pd.Series(before[c].get(pid, []), dtype="float64")
             xf = pd.concat([b, pdf[c].astype("float64")],
                            ignore_index=True)
-            out = _roll_one(xf, agg, window, mp, intg)
+            out = _roll_one(xf, agg, window, mp, intg, apply_fn, raw)
             out = out.iloc[len(b):].reset_index(drop=True)
             res[oc] = _to_nullable(out, out_t)
         yield res
@@ -949,13 +880,16 @@ def _interp_fill(x: pd.Series, pos: np.ndarray, prev, nxt,
     return pd.Series(out)
 
 
-def interpolate_scan(sdf: SparkDF, value_col: str, order_cols,
-                     limit_direction: str = "forward", limit=None,
-                     out_col: str = "itp",
-                     num_partitions=None) -> SparkDF:
-    """Global ``Series.interpolate(method='linear')`` as a segmented
-    scan — single-column wrapper over :func:`interpolate_scan_multi`
-    (one pin + one pass regardless of column count).
+def interpolate_scan_multi(sdf: SparkDF, value_cols, order_cols,
+                           limit_direction: str = "forward",
+                           limit=None, *, out_cols,
+                           num_partitions=None) -> SparkDF:
+    """Global ``interpolate(method='linear')`` in ONE segmented scan:
+    the carry is TWO (position, value) scalars PER COLUMN per
+    partition (first/last non-null + global offsets), chained on the
+    driver — so k columns cost one range shuffle and one pass, not k.
+    Pass B needs the whole partition (a null run's filler can live in
+    a later Arrow batch — the bfill contract).
 
     pandas semantics (differential-tested): interior holes get the
     linear interpolation between neighbors, edge holes the nearest
@@ -963,22 +897,6 @@ def interpolate_scan(sdf: SparkDF, value_col: str, order_cols,
     ('forward' leaves leading nulls, 'backward' trailing, 'both'
     neither) and ``limit`` caps the fill distance from the allowed
     direction(s).  Output is always double (pandas promotes)."""
-    return interpolate_scan_multi(sdf, [value_col], order_cols,
-                                  limit_direction, limit,
-                                  {value_col: out_col}, num_partitions)
-
-
-def interpolate_scan_multi(sdf: SparkDF, value_cols, order_cols,
-                           limit_direction: str = "forward",
-                           limit=None, out_names=None,
-                           num_partitions=None) -> SparkDF:
-    """Multi-column linear interpolation in ONE segmented scan: the
-    carry is TWO (position, value) scalars PER COLUMN per partition
-    (first/last non-null + global offsets), chained on the driver —
-    so ``df.interpolate()`` over k columns costs one range shuffle
-    and one pass, not k.  Pass B needs the whole partition (a null
-    run's filler can live in a later Arrow batch — the bfill
-    contract)."""
     if limit_direction not in ("forward", "backward", "both"):
         raise ValueError(
             "limit_direction must be 'forward', 'backward' or 'both', "
@@ -986,14 +904,10 @@ def interpolate_scan_multi(sdf: SparkDF, value_cols, order_cols,
     if limit is not None and (not isinstance(limit, int) or limit < 1):
         raise ValueError(f"limit must be a positive integer, "
                          f"got {limit!r}")
-    value_cols = list(value_cols)
-    out_names = out_names or {c: f"{c}__itp" for c in value_cols}
-    order_cols = ([order_cols] if isinstance(order_cols, str)
-                  else list(order_cols))
     base = _pin(sdf, [F.col(c) for c in order_cols], num_partitions)
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in sdf.schema.fields)
-    fields += "".join(f", {out_names[c]} double" for c in value_cols)
+    fields += "".join(f", {oc} double" for oc in out_cols)
 
     # pass A: per-partition row count + per-column first/last
     # non-null (local offset, value) — 4k+1 scalars per partition
@@ -1064,41 +978,27 @@ def interpolate_scan_multi(sdf: SparkDF, value_cols, order_cols,
         pos = np.arange(len(pdf), dtype="int64") + start.get(pid, 0)
         pv = prev.get(pid, [None] * k)
         nv = nxt.get(pid, [None] * k)
-        for j, c in enumerate(value_cols):
+        for j, (c, oc) in enumerate(zip(value_cols, out_cols)):
             x = pdf[c].astype("float64").reset_index(drop=True)
-            res[out_names[c]] = _interp_fill(x, pos, pv[j], nv[j],
-                                             limit_direction, limit)
+            res[oc] = _interp_fill(x, pos, pv[j], nv[j],
+                                   limit_direction, limit)
         yield res
 
     return base.mapInPandas(pass_b, fields)
 
 
-def fill_scan(sdf: SparkDF, value_col: str, order_cols,
-              direction: str = "ffill", out_col: str = "fl",
-              num_partitions=None, limit=None) -> SparkDF:
-    """Global ``Series.ffill``/``bfill`` as a segmented scan (a
-    (value, age) scalar carry per partition) — single-column wrapper
-    over :func:`fill_scan_multi`."""
-    return fill_scan_multi(sdf, [value_col], order_cols, direction,
-                           [out_col], num_partitions, limit=limit)
-
-
-def cum_scan_multi(sdf: SparkDF, value_cols, order_cols, op: str,
-                   out_cols=None, num_partitions=None) -> SparkDF:
-    """Frame-level cumulative ``op`` over MANY columns in ONE fused
-    segmented scan: one range shuffle, one partial-aggregate pass (all
-    columns' partials in a single JVM aggregate), one mapInPandas pass
-    with an independent scalar carry per column.  The multi-column
-    sibling of :func:`cum_scan` — k columns cost what one costs, plus
-    k scalars per partition on the driver."""
+def cum_scan_multi(sdf: SparkDF, value_cols, order_cols, op: str, *,
+                   out_cols, num_partitions=None) -> SparkDF:
+    """Global cumulative ``op`` (sum/prod/max/min) over every column
+    in ``value_cols`` in ONE fused segmented scan: one range shuffle,
+    one partial-aggregate pass (all columns' partials in a single JVM
+    aggregate), one mapInPandas pass with an independent scalar carry
+    per column — k columns cost what one costs, plus k scalars per
+    partition on the driver.  pandas NaN-hole semantics: null rows
+    stay null, the running value skips them."""
     if op not in _CUM_OPS:
         raise ValueError(f"unknown cum op {op!r}")
     agg_fn, local_scan, combine, batch_partial = _CUM_OPS[op]
-    value_cols = list(value_cols)
-    out_cols = (list(out_cols) if out_cols is not None
-                else [f"{c}__cum" for c in value_cols])
-    order_cols = ([order_cols] if isinstance(order_cols, str)
-                  else list(order_cols))
     sdf = _nan_as_null(sdf, value_cols)
     base = _pin(sdf, [F.col(c) for c in order_cols], num_partitions)
 
@@ -1155,8 +1055,8 @@ def cum_scan_multi(sdf: SparkDF, value_cols, order_cols, op: str,
 def _collect_edges_multi(base: SparkDF, value_cols, k_head: int,
                          k_tail: int):
     """One pass over the pinned layout emitting every column's
-    first/last k rows together.  Returns
-    ``{col: (heads, tails)}`` keyed like :func:`_collect_edges`."""
+    first/last k rows together.  Returns ``{col: (heads, tails)}``,
+    each a dict pid -> list of values in partition order."""
     n_part = base.rdd.getNumPartitions()
     need = (k_head + k_tail) * max(n_part, 1)
     if need > _MAX_BORDER_ROWS:
@@ -1220,21 +1120,17 @@ def _collect_edges_multi(base: SparkDF, value_cols, k_head: int,
 
 def shift_delta_scan_multi(sdf: SparkDF, value_cols, order_cols,
                            periods: int = 1, kind: str = "shift",
-                           fill_value=None, out_cols=None,
+                           fill_value=None, *, out_cols,
                            num_partitions=None) -> SparkDF:
-    """Frame-level shift / diff / pct_change over MANY columns in ONE
-    fused border-exchange scan: one range shuffle, one edge pass
-    shipping every column's k border rows together, one mapInPandas
-    pass.  The multi-column sibling of :func:`shift_scan` /
-    :func:`delta_scan`."""
+    """Global shift / diff / pct_change over every column in
+    ``value_cols`` in ONE fused border-exchange scan: one range
+    shuffle, one edge pass shipping every column's k border rows
+    together, one mapInPandas pass.  ``diff`` keeps integer inputs
+    exact (masked Int64); ``pct`` is always double with IEEE division
+    (x/0 -> inf), matching the engine's truediv contract."""
     if kind not in ("shift", "diff", "pct"):
         raise ValueError(
             f"kind must be 'shift', 'diff' or 'pct', got {kind!r}")
-    value_cols = list(value_cols)
-    out_cols = (list(out_cols) if out_cols is not None
-                else [f"{c}__o" for c in value_cols])
-    order_cols = ([order_cols] if isinstance(order_cols, str)
-                  else list(order_cols))
     base = _pin(sdf, [F.col(c) for c in order_cols], num_partitions)
     in_types = [sdf.schema[c].dataType.simpleString()
                 for c in value_cols]
@@ -1330,11 +1226,10 @@ def rolling_pair_scan(sdf: SparkDF, xcol: str, ycol: str, order_cols,
 
 
 def fill_scan_multi(sdf: SparkDF, value_cols, order_cols,
-                    direction: str = "ffill", out_cols=None,
-                    num_partitions=None, limit=None) -> SparkDF:
-    """Frame-level global ffill/bfill: every column's one-scalar carry
-    travels in a single partials row — the fill sibling of
-    :func:`cum_scan_multi` (one range shuffle, one partials pass, one
+                    direction: str = "ffill", limit=None, *, out_cols,
+                    num_partitions=None) -> SparkDF:
+    """Global ffill/bfill: every column's one-scalar carry travels in
+    a single partials row (one range shuffle, one partials pass, one
     fill pass for k columns).
 
     ``limit=`` (pandas: cap on consecutive fills) extends the carry to
@@ -1349,11 +1244,6 @@ def fill_scan_multi(sdf: SparkDF, value_cols, order_cols,
                               or isinstance(limit, bool) or limit < 1):
         raise ValueError(
             f"Limit must be a positive integer, got {limit!r}")
-    value_cols = list(value_cols)
-    out_cols = (list(out_cols) if out_cols is not None
-                else [f"{c}__o" for c in value_cols])
-    order_cols = ([order_cols] if isinstance(order_cols, str)
-                  else list(order_cols))
     base = _pin(sdf, [F.col(c) for c in order_cols], num_partitions)
     in_types = [sdf.schema[c].dataType.simpleString()
                 for c in value_cols]

@@ -133,7 +133,7 @@ def stateful_gap_fill(stream: DataFrame) -> DataFrame:
 
     State per user is ONE scalar (the running last non-null) — the
     same carry the batch segmented scan ships per partition
-    (operators/segscan.fill_scan), so batch and streaming agree row
+    (operators/segscan.fill_scan_multi), so batch and streaming agree row
     for row on a time-ordered stream.  Rows are emitted as they
     arrive, once each (the update-mode declaration is what
     applyInPandasWithState requires for per-trigger emission; rows

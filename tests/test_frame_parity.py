@@ -39,6 +39,68 @@ def test_frame_scan_parity(spark, verb, args):
     _cmp(getattr(df, verb)(*args), getattr(PDF, verb)(*args))
 
 
+def _holey_frame(n=400, seed=5):
+    """``x``: a float column with scattered holes and one null run
+    long enough to cross a range-partition border; ``d``: dense (the
+    ewm scan's contract)."""
+    rng = np.random.default_rng(seed)
+    x = rng.normal(size=n)
+    x[rng.random(n) < 0.2] = np.nan
+    x[90:130] = np.nan
+    return pd.DataFrame({"x": x, "d": rng.normal(size=n).cumsum()})
+
+
+_ONE_SCAN_VERBS = {
+    "cumsum": ("x", lambda o: o.cumsum()),
+    "cumprod": ("x", lambda o: o.cumprod()),
+    "cummax": ("x", lambda o: o.cummax()),
+    "cummin": ("x", lambda o: o.cummin()),
+    "shift": ("x", lambda o: o.shift(3)),
+    "shift_back_fill": ("x", lambda o: o.shift(-2, fill_value=0.0)),
+    "diff": ("x", lambda o: o.diff()),
+    "diff_back": ("x", lambda o: o.diff(-2)),
+    "pct_change": ("d", lambda o: o.pct_change()),
+    "ffill": ("x", lambda o: o.ffill()),
+    "ffill_limit": ("x", lambda o: o.ffill(limit=3)),
+    "bfill_limit": ("x", lambda o: o.bfill(limit=3)),
+    "interpolate": ("x", lambda o: o.interpolate()),
+    "interpolate_both": (
+        "x", lambda o: o.interpolate(limit=2, limit_direction="both")),
+    "interpolate_backward": (
+        "x", lambda o: o.interpolate(limit_direction="backward")),
+    "rank": ("x", lambda o: o.rank(method="average")),
+    "rolling_sum": ("x", lambda o: o.rolling(5).sum()),
+    "rolling_mean_mp": ("x", lambda o: o.rolling(5, min_periods=2).mean()),
+    "rolling_std": ("x", lambda o: o.rolling(5).std()),
+    "rolling_median": ("x", lambda o: o.rolling(5).median()),
+    "rolling_count": ("x", lambda o: o.rolling(5).count()),
+    "rolling_quantile": ("x", lambda o: o.rolling(5).quantile(0.3)),
+    "rolling_apply": (
+        "x", lambda o: o.rolling(4, min_periods=1).apply(np.nanmax)),
+    "ewm_mean": ("d", lambda o: o.ewm(alpha=0.3).mean()),
+}
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+@pytest.mark.parametrize("verb", list(_ONE_SCAN_VERBS))
+def test_series_scan_is_one_column_frame_scan(spark, verb):
+    """Every global scan verb runs one path: a Series gives exactly
+    the one-column frame's result and both match pandas, on a
+    multi-partition input with null holes.  A Series scan and a frame
+    scan of one plan meeting in the pin cache raise no warning."""
+    col, fn = _ONE_SCAN_VERBS[verb]
+    pdf = _holey_frame()
+    df = pas.DataFrame.from_pandas(pdf)
+    got_s = fn(df[col]).to_pandas().sort_index()
+    got_f = fn(df[[col]]).to_pandas().sort_index()[col]
+    np.testing.assert_array_equal(got_s.to_numpy(float),
+                                  got_f.to_numpy(float))
+    want = fn(pdf[col])
+    np.testing.assert_allclose(got_s.to_numpy(float),
+                               want.to_numpy(float), rtol=1e-12,
+                               equal_nan=True)
+
+
 def test_frame_pct_change(spark):
     df = pas.DataFrame.from_pandas(PDF)
     _cmp(df.pct_change(1), PDF.pct_change(1, fill_method=None))

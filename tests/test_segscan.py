@@ -785,6 +785,31 @@ def test_pin_cache_count_guard_trips(spark, monkeypatch):
     segscan._PIN_CACHE.clear()
 
 
+def test_pin_cache_key_tells_aliases_apart(spark):
+    """Canonicalization erases alias names, so one plan projected
+    under two aliases has one semanticHash and one plan JSON; the key
+    still tells the two layouts apart — no schema-mismatch warning,
+    and each pin keeps its own column names."""
+    import warnings as _w
+
+    from pyspark.sql import functions as F
+
+    from pandas_alchemy_spark.operators import segscan
+    segscan._PIN_CACHE.clear()
+    base = spark.range(50).select(F.col("id").alias("__idx_0"),
+                                  (F.col("id") * 1.5).alias("v"))
+    order = [F.col("__idx_0")]
+    with _w.catch_warnings():
+        _w.simplefilter("error", RuntimeWarning)
+        a = segscan._pin(base.select("__idx_0", F.col("v").alias("a")),
+                         order)
+        b = segscan._pin(base.select("__idx_0", F.col("v").alias("b")),
+                         order)
+    assert a.columns == ["__idx_0", "a", "__pid"]
+    assert b.columns == ["__idx_0", "b", "__pid"]
+    segscan._PIN_CACHE.clear()
+
+
 def test_pin_cache_reuse_still_works(spark):
     """No collision forced: two scans of the same frame in the same
     order reuse one pinned layout (the memoization contract)."""

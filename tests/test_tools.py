@@ -141,3 +141,28 @@ def test_ab_empty_leg_raises(spark):
     with pytest.raises(ValueError, match="empty"):
         compare({"a": lambda: spark.range(0),
                  "b": lambda: spark.range(0)}, n=1)
+
+
+def test_load_gate_scales_with_cores(monkeypatch):
+    """The load gate's default threshold is a quarter of the cores
+    (1.0 on 4 cores, where a run at load 1.99 used to pass), and
+    ``SPARK_GRAFT_MAX_LOAD`` still overrides it."""
+    monkeypatch.syspath_prepend(REPO)
+    import bench
+
+    def no_sleep(_):
+        raise AssertionError("wait_s=0 must not sleep")
+
+    monkeypatch.delenv("SPARK_GRAFT_MAX_LOAD", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LOAD_WAIT", raising=False)
+    monkeypatch.setattr(bench.time, "sleep", no_sleep)
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: (1.99, 0.0, 0.0))
+    monkeypatch.setattr(bench.os, "cpu_count", lambda: 4)
+    gate = bench._gate_on_load(wait_s=0)
+    assert gate["load_gate_max"] == 1.0
+    assert gate["load_gate_timed_out"] and gate["load_gate_waited_s"] == 0
+    monkeypatch.setattr(bench.os, "cpu_count", lambda: 32)
+    gate = bench._gate_on_load(wait_s=0)
+    assert gate["load_gate_max"] == 8.0 and not gate["load_gate_timed_out"]
+    monkeypatch.setenv("SPARK_GRAFT_MAX_LOAD", "1.5")
+    assert bench._gate_on_load(wait_s=0)["load_gate_max"] == 1.5

@@ -29,9 +29,7 @@ def main():
     os.makedirs(EVDIR, exist_ok=True)
     # quiet-box discipline (r8 verdict item 7) — see bench.py
     from bench import _cpu_mark, _gate_on_load
-    gate = _gate_on_load(
-        float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0")),
-        float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "600")))
+    gate = _gate_on_load(wait_s=600)
     from pyspark.sql import functions as F
     import pandas_alchemy_spark as pas
     spark = pas.init_db(app_name="dedup_sf10", **{

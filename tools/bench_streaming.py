@@ -47,9 +47,7 @@ def main():
                   else "/root/repo/.scratch/stream_events")
     # quiet-box discipline (r8 verdict item 7) — see bench.py
     from bench import _cpu_mark, _gate_on_load
-    gate = _gate_on_load(
-        float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0")),
-        float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "600")))
+    gate = _gate_on_load(wait_s=600)
     import pandas_alchemy_spark as pas
     spark = pas.init_db(app_name="streaming_bench",
                         **{"spark.driver.memory": "24g"})

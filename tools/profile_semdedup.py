@@ -34,9 +34,7 @@ def main():
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from bench import _gate_on_load
-    gate = _gate_on_load(
-        float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0")),
-        float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "600")))
+    gate = _gate_on_load(wait_s=600)
     from pyspark.sql import functions as F
     import pandas_alchemy_spark as pas
     spark = pas.init_db(app_name="profile_semdedup",
