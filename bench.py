@@ -283,8 +283,7 @@ def build_bench_queries(spark, sf_dir):
         from pandas_alchemy_spark.ext import dedup
         docs = spark_.read.parquet(f"{sf_dir_}/documents.parquet")
         idx = dedup.build_reference_index(
-            docs.filter("doc_id % 10 <> 0"), num_hashes=16, bands=4,
-            fast_hash=True)
+            docs.filter("doc_id % 10 <> 0"), num_hashes=16, bands=4)
         out = dedup.cross_dedup_pairs(
             docs.filter("doc_id % 10 = 0"), index=idx, threshold=0.4)
         # register the index's persisted frames with the bounded

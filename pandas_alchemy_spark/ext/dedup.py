@@ -7,8 +7,8 @@ MinHash+LSH, SimHash, and n-gram Jaccard near-dup detection over a
 Scale design (100 TB intent):
 - Hot paths are either expression-level (whole-stage codegen via
   higher-order array functions) or ONE Arrow ``mapInPandas`` pass per
-  document batch (the md5 MinHash transport, r14) — never row-at-a-
-  time Python UDFs.
+  document batch (the md5 MinHash and SimHash kernels) — never row-
+  at-a-time Python UDFs.
 - SimHash signatures are computed entirely *narrow* (per-row array
   fold) — zero shuffle until the final candidate join.
 - MinHash/LSH shuffles only on (band, band_hash) buckets — the classic
@@ -23,6 +23,7 @@ correctness oracle can reproduce signatures bit-for-bit.
 from __future__ import annotations
 
 import sys
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -173,16 +174,29 @@ _TOKENS = "filter(split(lower(regexp_replace({col}, '[^a-zA-Z0-9]+', ' ')), ' ')
 #: reproducible in DuckDB as: ('0x' || substr(md5(s),1,15))::BIGINT
 _H60 = "cast(conv(substr(md5({s}), 1, 15), 16, 10) as bigint)"
 
-#: fast-path 60-bit hash: xxhash64 masked to non-negative 60 bits.
-#: Native codegen (no hex round-trip) — the md5 form exists ONLY so
-#: the DuckDB oracle can reproduce signatures bit-for-bit; production
-#: runs at scale should pass fast_hash=True (hash QUALITY is
-#: equivalent for MinHash; only the oracle equality breaks).
+#: xxhash64 masked to non-negative 60 bits: the hash family
+#: ``fast_hash=True`` picks on operators whose only transport is a SQL
+#: hash expression (sampling, span dedup, decontamination, TF-IDF,
+#: the pipeline splits and classifiers).  It saves md5's hex
+#: round-trip, but no DuckDB oracle reproduces it.  The signature
+#: operators (MinHash, SimHash, DSIR bucketing) are md5-only: their
+#: Arrow kernels beat this SQL form (``AB_HASH_TRANSPORT_r15.json``).
 _H60_FAST = "(xxhash64({s}) & 1152921504606846975)"
 
 
 def _h60(s: str, fast: bool = False) -> str:
     return (_H60_FAST if fast else _H60).format(s=s)
+
+
+def _ignored_fast_hash(fast_hash, where: str) -> None:
+    """Warn when a caller passes ``fast_hash=`` to a signature
+    operator.  MinHash, SimHash and DSIR bucketing have one transport,
+    the md5 Arrow kernel, so the keyword is accepted and ignored."""
+    if fast_hash is not None:
+        warnings.warn(
+            f"{where}: fast_hash is deprecated and ignored; signatures "
+            "always use the md5 Arrow kernel", DeprecationWarning,
+            stacklevel=3)
 
 
 #: Catalyst's InferFiltersFromGenerate synthesizes size(generator)>0
@@ -254,16 +268,17 @@ def with_shingles(df: DataFrame, text_col: str, out: str = "__sh",
 
 def hashed_shingle_sets(df: DataFrame, text_col: str, id_col: str,
                         shingle_n: int = 3,
-                        fast_hash: bool = False) -> DataFrame:
+                        fast_hash: bool | None = None) -> DataFrame:
     """(id, hs array<long>) — the DISTINCT shingle set as 60-bit
     hashes, built by explode + collect_set (one codegen'd aggregate;
     dedup happens in the agg hash map, not via interpreted
     array_distinct).  All downstream set algebra (Jaccard) runs on
     longs — far cheaper to shuffle/cache than shingle strings, and
     identical up to md5 collisions (~(n^2)/2^60, negligible)."""
+    _ignored_fast_hash(fast_hash, "hashed_shingle_sets")
     sh = with_shingles(df, text_col, "__shraw", shingle_n, distinct=False)
     ex = sh.select(F.col(id_col), F.explode("__shraw").alias("s"))
-    hashed = ex.select(id_col, F.expr(_h60("s", fast_hash)).alias("h"))
+    hashed = ex.select(id_col, F.expr(_h60("s")).alias("h"))
     return hashed.groupBy(id_col).agg(F.collect_set("h").alias("hs"))
 
 
@@ -274,75 +289,14 @@ _P31 = 2147483647
 def minhash_signature(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 32,
                       shingle_n: int = 3,
-                      fast_hash: bool = False) -> DataFrame:
+                      fast_hash: bool | None = None) -> DataFrame:
     """(id, signature array<long>, hs) — universal-hash MinHash:
     ONE md5 per shingle reduced to 31 bits, then K affine hashes
-    h_k(x) = ((2k+1)·x + c_k) mod (2^31-1).
-
-    Transport notes (see :func:`_minhash_base`): the md5 default runs
-    as one Arrow ``mapInPandas`` pass (r14 — no explode, no exchange,
-    hashlib md5 bit-identical to SQL ``md5()``); ``fast_hash=True``
-    keeps the codegen explode + K-MIN-aggregate SQL pipeline.  The
-    earlier finding still binds the SQL form: higher-order array
-    lambdas are interpreted per element AND Catalyst's
-    CollapseProject re-inlines the hashed array into every k-lambda
-    (K x md5 recompute); explode + plain aggregates keeps everything
-    in whole-stage codegen with map-side partial MIN."""
-    return _minhash_base(df, text_col, id_col, num_hashes,
-                         shingle_n, fast_hash)
-
-
-def _minhash_base(df, text_col, id_col, num_hashes, shingle_n,
-                  fast_hash) -> DataFrame:
-    """The shared shingle→hash→K-MIN pipeline behind
-    :func:`minhash_signature` and :func:`minhash_lsh_pairs` — ONE
-    implementation so the hash family can never drift between the
-    signature API and the LSH path.
-
-    Two transports, same (id, signature, hs) values:
-
-    - md5 (``fast_hash=False``, the DuckDB-reproducible default):
-      ONE Arrow ``mapInPandas`` pass — tokenize, shingle, md5 via
-      ``hashlib`` (bit-identical to Spark's ``md5()``), K affine
-      minima and the distinct hash set all inside the document's own
-      row.  No explode, no groupBy exchange (the SQL form shipped one
-      partially-aggregated row per doc through an Exchange and paid
-      an md5→hex→conv round-trip per shingle in codegen; the kernel
-      measured 2.6x at sf0.1 and 7.8x at 500k docs,
-      ``AB_MINHASH_KERNEL_r14.json``, outputs asserted bit-equal).
-      ``hs`` comes back sorted ascending — a deterministic order
-      where ``collect_set`` was partition-order-dependent; every
-      consumer is set-algebraic (``array_intersect``/``array_union``).
-    - xxhash64 (``fast_hash=True``): the original codegen explode +
-      K-MIN-aggregate SQL pipeline (:func:`_minhash_base_sql`) —
-      xxhash64 has no bit-identical Python counterpart here, and the
-      hex round-trip the kernel exists to kill is absent from this
-      path.
-    """
-    if fast_hash:
-        return _minhash_base_sql(df, text_col, id_col, num_hashes,
-                                 shingle_n, fast_hash)
-    return _minhash_base_kernel(df, text_col, id_col, num_hashes,
-                                shingle_n)
-
-
-def _minhash_base_sql(df, text_col, id_col, num_hashes, shingle_n,
-                      fast_hash) -> DataFrame:
-    """The codegen explode + K-MIN-aggregate formulation (see
-    :func:`_minhash_base` for when it runs).  Kept verbatim: it is
-    the ``fast_hash`` transport and the differential pin the kernel
-    is tested against."""
-    sh = with_shingles(_tune(df), text_col, "__shraw", shingle_n, distinct=False)
-    ex = sh.select(F.col(id_col), F.explode("__shraw").alias("s"))
-    hashed = ex.select(id_col, F.expr(_h60("s", fast_hash)).alias("h"))
-    aggs = [F.min(F.expr(
-        f"pmod((2 * {k} + 1) * (h % {_P31}) + (12345 + {k} * 7919), {_P31})")).alias(f"__m{k}")
-        for k in range(num_hashes)]
-    aggs.append(F.collect_set("h").alias("hs"))
-    return hashed.groupBy(id_col).agg(*aggs).select(
-        F.col(id_col),
-        F.array(*[F.col(f"__m{k}") for k in range(num_hashes)]).alias("signature"),
-        F.col("hs"))
+    h_k(x) = ((2k+1)·x + c_k) mod (2^31-1), computed by one Arrow
+    ``mapInPandas`` pass (see :func:`_minhash_base`).  ``fast_hash``
+    is deprecated and ignored."""
+    _ignored_fast_hash(fast_hash, "minhash_signature")
+    return _minhash_base(df, text_col, id_col, num_hashes, shingle_n)
 
 
 def _minhash_kernel_fn(text_col: str, id_col: str, num_hashes: int,
@@ -438,28 +392,46 @@ def _spread(sel: DataFrame) -> DataFrame:
     return sel
 
 
-def _minhash_base_kernel(df, text_col, id_col, num_hashes,
-                         shingle_n) -> DataFrame:
-    """Arrow transport of :func:`_minhash_base` (md5 family only).
-    Projects to exactly (id, text) before the opaque kernel (guide
-    §4.1 — ``mapInPandas`` defeats column pruning otherwise).  A
-    single- or few-file scan is re-spread to ``defaultParallelism``
-    first: ALL of the kernel's work happens map-side, so scan
-    parallelism is the only parallelism it gets (the SQL form had the
-    same scan-side skew but hid it behind the aggregate's exchange);
-    the repartition ships only (id, text) — the lightest possible
-    proxy for this pipeline — and is skipped when the scan is already
-    wide enough."""
+def _map_docs(df: DataFrame, id_col: str | None, text_col: str, fn,
+              fields) -> DataFrame:
+    """The Arrow batch function ``fn`` over ``df``'s (id, text)
+    columns (text only when ``id_col`` is None), yielding the id
+    field plus ``fields``.  Projects to exactly those columns before
+    the opaque kernel (guide §4.1 — ``mapInPandas`` defeats column
+    pruning otherwise), then re-spreads a few-file scan
+    (:func:`_spread`): ALL of a kernel's work happens map-side, so
+    scan parallelism is the only parallelism it gets."""
     from pyspark.sql import types as T
-    sel = _spread(df.select(id_col, text_col))
-    id_field = [f for f in df.schema.fields if f.name == id_col][0]
-    schema = T.StructType([
-        id_field,
-        T.StructField("signature", T.ArrayType(T.LongType())),
-        T.StructField("hs", T.ArrayType(T.LongType()))])
-    return sel.mapInPandas(
+    sel = df.select(*[c for c in (id_col, text_col) if c is not None])
+    ids = sel.schema.fields[:-1]
+    return _spread(sel).mapInPandas(fn, T.StructType(ids + fields))
+
+
+def _minhash_base(df, text_col, id_col, num_hashes,
+                  shingle_n) -> DataFrame:
+    """The shared shingle→hash→K-MIN pipeline behind
+    :func:`minhash_signature` and every LSH path — ONE implementation
+    so the hash family can never drift between the signature API and
+    the LSH paths.
+
+    ONE Arrow ``mapInPandas`` pass: tokenize, shingle, md5 via
+    ``hashlib`` (bit-identical to Spark's ``md5()``, so the DuckDB
+    oracle reproduces it), K affine minima and the distinct hash set
+    all inside the document's own row.  No explode, no groupBy
+    exchange (the SQL form shipped one partially-aggregated row per
+    doc through an Exchange and paid an md5→hex→conv round-trip per
+    shingle in codegen; the kernel measured 2.6x at sf0.1 and 7.8x at
+    500k docs, ``AB_MINHASH_KERNEL_r14.json``, and beats the xxhash64
+    SQL form too, ``AB_HASH_TRANSPORT_r15.json``).  ``hs`` comes back
+    sorted ascending — a deterministic order where ``collect_set``
+    was partition-order-dependent; every consumer is set-algebraic
+    (``array_intersect``/``array_union``)."""
+    from pyspark.sql import types as T
+    longs = T.ArrayType(T.LongType())
+    return _map_docs(
+        df, id_col, text_col,
         _minhash_kernel_fn(text_col, id_col, num_hashes, shingle_n),
-        schema)
+        [T.StructField("signature", longs), T.StructField("hs", longs)])
 
 
 def _banded(base: DataFrame, id_col: str, out_id: str,
@@ -484,7 +456,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       bands: int = 8, shingle_n: int = 3,
                       threshold: float = 0.5,
                       bucket_cap: int | None = 2000,
-                      fast_hash: bool = False) -> DataFrame:
+                      fast_hash: bool | None = None) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding.
 
     signature -> ``bands`` bands of ``num_hashes/bands`` rows; docs
@@ -510,7 +482,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
       connectivity for clustering at any size (r13 — previously the
       whole bucket dropped and the flood vanished from the pair
       set).  Pre-collapse exact dups to keep full pairwise recall.
+
+    ``fast_hash`` is deprecated and ignored.
     """
+    _ignored_fast_hash(fast_hash, "minhash_lsh_pairs")
     if bands < 1 or num_hashes < 1 or num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes ({num_hashes}) must be a positive multiple "
@@ -518,12 +493,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
             "every document into one empty-key bucket, and a "
             "non-divisible split silently discards signature rows")
     rows = num_hashes // bands
-    # ONE aggregate (shared _minhash_base) produces both the K
-    # minhash values (over h mod 2^31-1; min over the multiset ==
-    # min over the set) and the distinct hashed-shingle set for the
-    # exact-Jaccard verify.
-    base = _minhash_base(df, text_col, id_col, num_hashes,
-                         shingle_n, fast_hash)
+    # ONE pass (shared _minhash_base) produces both the K minhash
+    # values (over h mod 2^31-1) and the distinct hashed-shingle set
+    # for the exact-Jaccard verify.
+    base = _minhash_base(df, text_col, id_col, num_hashes, shingle_n)
     base = base.persist()
     _register_cache(base)
     banded = _banded(base, id_col, id_col, bands, rows)
@@ -548,50 +521,27 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
 
 def simhash_signature(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", bits: int = 60,
-                      fast_hash: bool = False) -> DataFrame:
+                      fast_hash: bool | None = None) -> DataFrame:
     """(id, sh) 60-bit SimHash of the token multiset (the underlying
     token hash is 60-bit, so bits above 59 would be constant zero —
     a "64-bit" signature here was 60 effective bits with 4 dead
     aggregates).
 
-    Transports (the minhash :func:`_minhash_base` split, r14): the
-    md5 default runs as ONE Arrow ``mapInPandas`` pass — tokenize,
-    md5 per DISTINCT token weighted by its occurrence count, the
-    ``bits`` majority votes and the bit-pack all inside the
-    document's own row; no token explode, no id-keyed aggregate
-    exchange (the kernel measured 2.7x at sf0.1 and 20.3x at 500k
-    docs — the SQL form's 60 SUM(CASE) aggregates ran over every
-    exploded token occurrence; ``AB_SIMHASH_KERNEL_r14.json``,
-    signatures asserted bit-equal).  ``fast_hash=True`` keeps the codegen SQL pipeline
-    (:func:`_simhash_signature_sql`) — explode tokens, ONE md5 per
-    token, ``bits`` SUM(CASE) aggregates (map-side partials); the
-    earlier finding still binds it: higher-order array lambdas are
-    interpreted per-element and were ~10x slower than the explode
-    form."""
-    if fast_hash:
-        return _simhash_signature_sql(df, text_col, id_col, bits,
-                                      fast_hash)
-    return _simhash_signature_kernel(df, text_col, id_col, bits)
-
-
-def _simhash_signature_sql(df: DataFrame, text_col: str,
-                           id_col: str, bits: int,
-                           fast_hash: bool) -> DataFrame:
-    """The codegen explode + SUM(CASE) formulation (see
-    :func:`simhash_signature` for when it runs).  Kept verbatim: it
-    is the ``fast_hash`` transport and the differential pin the
-    kernel is tested against."""
-    th = _h60("t", fast_hash)
-    tok = _tune(df).select(F.col(id_col),
-                           F.explode(tokens_expr(text_col)).alias("t"))
-    tok = tok.select(id_col, F.expr(th).alias("h"))
-    sums = tok.groupBy(id_col).agg(*[
-        F.sum(F.expr(f"case when (shiftright(h, {b}) & 1) = 1 then 1 else -1 end")).alias(f"s{b}")
-        for b in range(bits)])
-    packed = " + ".join(
-        f"(case when s{b} > 0 then shiftleft(cast(1 as bigint), {b}) else cast(0 as bigint) end)"
-        for b in range(bits))
-    return sums.select(id_col, F.expr(packed).alias("sh"))
+    ONE Arrow ``mapInPandas`` pass — tokenize, md5 per DISTINCT token
+    weighted by its occurrence count, the ``bits`` majority votes and
+    the bit-pack all inside the document's own row; no token explode,
+    no id-keyed aggregate exchange (the kernel measured 2.7x at sf0.1
+    and 20.3x at 500k docs against the md5 SQL form — its 60
+    SUM(CASE) aggregates ran over every exploded token occurrence;
+    ``AB_SIMHASH_KERNEL_r14.json``, signatures asserted bit-equal —
+    and beats the xxhash64 SQL form too,
+    ``AB_HASH_TRANSPORT_r15.json``).  ``fast_hash`` is deprecated
+    and ignored."""
+    from pyspark.sql import types as T
+    _ignored_fast_hash(fast_hash, "simhash_signature")
+    return _map_docs(df, id_col, text_col,
+                     _simhash_kernel_fn(text_col, id_col, bits),
+                     [T.StructField("sh", T.LongType())])
 
 
 def _simhash_kernel_fn(text_col: str, id_col: str, bits: int):
@@ -653,25 +603,10 @@ def _simhash_kernel_fn(text_col: str, id_col: str, bits: int):
     return fn
 
 
-def _simhash_signature_kernel(df, text_col, id_col, bits) -> DataFrame:
-    """Arrow transport of :func:`simhash_signature` (md5 family
-    only).  Same boundary discipline as :func:`_minhash_base_kernel`:
-    narrow (id, text) projection before the opaque kernel, and a
-    single-/few-file scan re-spread to ``defaultParallelism`` first
-    (all kernel work is map-side)."""
-    from pyspark.sql import types as T
-    sel = _spread(df.select(id_col, text_col))
-    id_field = [f for f in df.schema.fields if f.name == id_col][0]
-    schema = T.StructType([id_field,
-                           T.StructField("sh", T.LongType())])
-    return sel.mapInPandas(
-        _simhash_kernel_fn(text_col, id_col, bits), schema)
-
-
 def simhash_pairs(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", max_hamming: int = 3,
                   bucket_cap: int | None = 2000,
-                  fast_hash: bool = False) -> DataFrame:
+                  fast_hash: bool | None = None) -> DataFrame:
     """Near-dup pairs by SimHash: band the 60-bit signature into 4
     15-bit chunks (pigeonhole: hamming<=3 -> >=1 chunk equal), join on
     chunk equality, verify with bit_count(a XOR b).  Chunk buckets
@@ -706,9 +641,11 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     - a chunk bucket holding more than ``bucket_cap`` DISTINCT
       signatures emits representative→member signature candidates
       (O(B)) instead of the O(B²) combination explode; they pass
-      the same hamming verify as clique candidates."""
-    sig = simhash_signature(df, text_col, id_col,
-                            fast_hash=fast_hash)
+      the same hamming verify as clique candidates.
+
+    ``fast_hash`` is deprecated and ignored."""
+    _ignored_fast_hash(fast_hash, "simhash_pairs")
+    sig = simhash_signature(df, text_col, id_col)
     groups = (sig.groupBy("sh")
               .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
               .persist())
@@ -1192,7 +1129,7 @@ def cross_dedup_pairs(new: DataFrame, reference: DataFrame | None = None,
                       num_hashes: int = 32, bands: int = 8,
                       shingle_n: int = 3, threshold: float = 0.5,
                       bucket_cap: int | None = 2000,
-                      fast_hash: bool = False,
+                      fast_hash: bool | None = None,
                       index=None) -> DataFrame:
     """Near-duplicate pairs ACROSS two corpora — the incremental-
     ingestion shape :func:`minhash_lsh_pairs` cannot express without
@@ -1221,10 +1158,12 @@ def cross_dedup_pairs(new: DataFrame, reference: DataFrame | None = None,
     signatures/buckets are static across incremental sweeps, so
     re-deriving them per sweep is pure waste at 100 TB).  The hash
     family then comes FROM the index; this function's
-    ``num_hashes``/``bands``/``shingle_n``/``fast_hash``/
-    ``bucket_cap`` are ignored, and the output is identical to the
-    inline path with the same parameters (test-pinned).
+    ``num_hashes``/``bands``/``shingle_n``/``bucket_cap`` are
+    ignored, and the output is identical to the inline path with the
+    same parameters (test-pinned).  ``fast_hash`` is deprecated and
+    ignored.
     """
+    _ignored_fast_hash(fast_hash, "cross_dedup_pairs")
     if (reference is None) == (index is None):
         raise ValueError(
             "pass exactly one of reference= (raw corpus) or index= "
@@ -1235,7 +1174,6 @@ def cross_dedup_pairs(new: DataFrame, reference: DataFrame | None = None,
         num_hashes = index.num_hashes
         bands = index.bands
         shingle_n = index.shingle_n
-        fast_hash = index.fast_hash
         ref_buckets = index.ref_buckets
         shb = index.ref_sets.select("id_ref", F.col("hs_r"))
     elif bands < 1 or num_hashes < 1 or num_hashes % bands != 0:
@@ -1244,11 +1182,11 @@ def cross_dedup_pairs(new: DataFrame, reference: DataFrame | None = None,
             f"of bands ({bands})")
     rows = num_hashes // bands
     bn = _minhash_base(new, text_col, id_col, num_hashes,
-                       shingle_n, fast_hash).persist()
+                       shingle_n).persist()
     _register_cache(bn)
     if index is None:
         br = _minhash_base(reference, text_col, id_col, num_hashes,
-                           shingle_n, fast_hash).persist()
+                           shingle_n).persist()
         _register_cache(br)
         ref_buckets = (_banded(br, id_col, "id_ref", bands, rows)
                        .groupBy("band", "bh")
@@ -1403,7 +1341,7 @@ def dedup_against(new: DataFrame, reference: DataFrame | None = None,
                   num_hashes: int = 32, bands: int = 8,
                   shingle_n: int = 3, threshold: float = 0.5,
                   bucket_cap: int | None = 2000,
-                  fast_hash: bool = False,
+                  fast_hash: bool | None = None,
                   index=None) -> DataFrame:
     """Keep only the ``new`` documents that are NOT near-duplicates
     of anything in ``reference`` (see :func:`cross_dedup_pairs` for
@@ -1411,12 +1349,13 @@ def dedup_against(new: DataFrame, reference: DataFrame | None = None,
     ``index=`` prebuilt-:class:`ReferenceIndex` path).  One LEFT
     ANTI join on the distinct matched ids — AQE broadcasts the
     matched-id set when it is small, which is the common case for an
-    incremental crawl against a deduplicated corpus."""
+    incremental crawl against a deduplicated corpus.  ``fast_hash``
+    is deprecated and ignored."""
+    _ignored_fast_hash(fast_hash, "dedup_against")
     pairs = cross_dedup_pairs(
         new, reference, text_col=text_col, id_col=id_col,
         num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-        threshold=threshold, bucket_cap=bucket_cap,
-        fast_hash=fast_hash, index=index)
+        threshold=threshold, bucket_cap=bucket_cap, index=index)
     hit = (pairs.select(F.col("id_new").alias(id_col)).distinct())
     return new.join(hit, id_col, "left_anti")
 
@@ -1477,7 +1416,7 @@ class ReferenceIndex:
 
     def __init__(self, ref_buckets: DataFrame, ref_sets: DataFrame,
                  num_hashes: int, bands: int, shingle_n: int,
-                 fast_hash: bool, bucket_cap: int | None,
+                 bucket_cap: int | None,
                  ref_over: DataFrame | None = None,
                  n_base: int | None = None, n_appended: int = 0):
         self.ref_buckets = ref_buckets
@@ -1485,7 +1424,6 @@ class ReferenceIndex:
         self.num_hashes = num_hashes
         self.bands = bands
         self.shingle_n = shingle_n
-        self.fast_hash = fast_hash
         self.bucket_cap = bucket_cap
         self.ref_over = ref_over
         #: docs indexed at build time (None on a lazy build until the
@@ -1534,7 +1472,6 @@ class ReferenceIndex:
             json.dump({"num_hashes": self.num_hashes,
                        "bands": self.bands,
                        "shingle_n": self.shingle_n,
-                       "fast_hash": self.fast_hash,
                        "bucket_cap": self.bucket_cap,
                        "has_over": self.ref_over is not None,
                        "n_base": self.n_base,
@@ -1582,8 +1519,7 @@ class ReferenceIndex:
         its consumers stop."""
         rows = self.num_hashes // self.bands
         nb = _minhash_base(new_docs, text_col, id_col,
-                           self.num_hashes, self.shingle_n,
-                           self.fast_hash).persist()
+                           self.num_hashes, self.shingle_n).persist()
         if materialize:
             dup = (nb.select(F.col(id_col).alias("id_ref"))
                    .join(self.ref_sets.select("id_ref"), "id_ref",
@@ -1644,8 +1580,8 @@ class ReferenceIndex:
                      .localCheckpoint(eager=materialize))
         idx = ReferenceIndex(ref_buckets2, ref_sets2,
                              self.num_hashes, self.bands,
-                             self.shingle_n, self.fast_hash,
-                             self.bucket_cap, ref_over=over_new,
+                             self.shingle_n, self.bucket_cap,
+                             ref_over=over_new,
                              n_base=self.n_base,
                              n_appended=self.n_appended)
         idx._lazy_accounting = self._lazy_accounting
@@ -1724,8 +1660,8 @@ class ReferenceIndex:
                      .localCheckpoint(eager=materialize))
         idx = ReferenceIndex(ref_buckets2, ref_sets2,
                              self.num_hashes, self.bands,
-                             self.shingle_n, self.fast_hash,
-                             self.bucket_cap, ref_over=over_new,
+                             self.shingle_n, self.bucket_cap,
+                             ref_over=over_new,
                              n_appended=0)
         if materialize:
             idx.n_base = ref_sets2.count()
@@ -1821,7 +1757,7 @@ def build_reference_index(reference: DataFrame,
                           num_hashes: int = 16, bands: int = 4,
                           shingle_n: int = 3,
                           bucket_cap: int | None = 2000,
-                          fast_hash: bool = False,
+                          fast_hash: bool | None = None,
                           materialize: bool = True) -> ReferenceIndex:
     """Build a :class:`ReferenceIndex` from a reference corpus — the
     same shared ``_minhash_base`` / banding / cap machinery every
@@ -1829,14 +1765,16 @@ def build_reference_index(reference: DataFrame,
 
     ``materialize=True`` (default) runs the build NOW (two counts),
     so a streaming gate's first micro-batch doesn't pay it; pass
-    False to keep it lazy when the index feeds a batch job anyway."""
+    False to keep it lazy when the index feeds a batch job anyway.
+    ``fast_hash`` is deprecated and ignored."""
+    _ignored_fast_hash(fast_hash, "build_reference_index")
     if bands < 1 or num_hashes < 1 or num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes ({num_hashes}) must be a positive multiple "
             f"of bands ({bands})")
     rows = num_hashes // bands
     br = _minhash_base(reference, text_col, id_col, num_hashes,
-                       shingle_n, fast_hash).persist()
+                       shingle_n).persist()
     grouped = (_banded(br, id_col, "id_ref", bands, rows)
                .groupBy("band", "bh")
                .agg(F.array_sort(F.collect_list("id_ref"))
@@ -1871,8 +1809,7 @@ def build_reference_index(reference: DataFrame,
                           F.col("signature").alias("sig_r"))
                 .join(surv_bands, "id_ref")).persist()
     idx = ReferenceIndex(ref_buckets, ref_sets, num_hashes, bands,
-                         shingle_n, fast_hash, bucket_cap,
-                         ref_over=ref_over)
+                         shingle_n, bucket_cap, ref_over=ref_over)
     if materialize:
         ref_buckets.count()
         idx.n_base = ref_sets.count()
@@ -1893,11 +1830,19 @@ def load_reference_index(spark, path: str,
                          materialize: bool = True) -> ReferenceIndex:
     """Load a :meth:`ReferenceIndex.save` directory: read the two
     parquet tables (persisted; ``materialize`` warms them) and the
-    params sidecar."""
+    params sidecar.  An index saved with ``"fast_hash": true`` holds
+    xxhash64 signatures, which no operator computes any more, so it
+    is refused (rebuild it); a sidecar saying false, or without the
+    key, loads."""
     import json
     import os
     with open(os.path.join(path, "_dedup_index.json")) as fh:
         meta = json.load(fh)
+    if meta.get("fast_hash"):
+        raise ValueError(
+            f"reference index at {path!r} holds xxhash64 signatures "
+            "(saved with fast_hash=True); signatures are md5-only "
+            "now, so rebuild it with build_reference_index")
     ref_buckets = spark.read.parquet(
         os.path.join(path, "ref_buckets")).persist()
     ref_sets = spark.read.parquet(
@@ -1914,7 +1859,6 @@ def load_reference_index(spark, path: str,
     return ReferenceIndex(ref_buckets, ref_sets,
                           int(meta["num_hashes"]), int(meta["bands"]),
                           int(meta["shingle_n"]),
-                          bool(meta["fast_hash"]),
                           meta["bucket_cap"], ref_over=ref_over,
                           n_base=meta.get("n_base"),
                           n_appended=int(meta.get("n_appended", 0)))

@@ -337,47 +337,13 @@ def write_training_shards(df: DataFrame, path: str,
      .write.mode(mode).partitionBy("shard").parquet(path))
 
 
-def _grams_expr(toks: str) -> str:
-    """Unigram+bigram feature list over an already-tokenized array
-    column (the DSIR featurization: Xie et al. 2023, "Data Selection
-    for Language Models via Importance Resampling", §3 — hashed
-    n-gram features with n<=2).  The size guard matters: Spark's
-    ``sequence(1, 0)`` infers step -1 and yields ``[1, 0]`` instead
-    of the empty series DuckDB's ``generate_series`` produces."""
-    bi = (f"case when size({toks}) >= 2 then "
-          f"transform(sequence(1, size({toks}) - 1), "
-          f"i -> concat(element_at({toks}, i), ' ', "
-          f"element_at({toks}, i + 1))) "
-          f"else array() end")
-    return f"concat({toks}, {bi})"
-
-
-def _dsir_bucketed_sql(df: DataFrame, text_col: str,
-                       id_col: str | None, buckets: int,
-                       fast_hash: bool) -> DataFrame:
-    """The codegen tokenize→gram-explode→hash→pmod bucketing (one row
-    per gram occurrence; see ``importance_weights`` for when it
-    runs).  Kept verbatim: it is the ``fast_hash`` transport and the
-    differential pin :func:`_dsir_bucket_kernel` is tested against."""
-    from .dedup import _claim_col, _h60
-    from .text import _tok
-    _claim_col(df, "__pas_toks", "importance_weights")
-    toked = df.withColumn("__pas_toks", F.expr(_tok(text_col)))
-    cols = ([F.col(id_col)] if id_col is not None else []) + [
-        F.explode(F.expr(_grams_expr("__pas_toks"))).alias("g")]
-    ex = toked.select(*cols)
-    return ex.select(
-        *([F.col(id_col)] if id_col is not None else []),
-        F.pmod(F.expr(_h60("g", fast_hash)),
-               F.lit(buckets)).alias("b"))
-
-
 def _dsir_bucket_kernel(df: DataFrame, text_col: str,
                         id_col: str | None, buckets: int) -> DataFrame:
-    """Arrow transport of ``importance_weights``' feature bucketing
-    (md5 family only): tokenize (the ``_TOKENS`` regex/lower/split/
-    filter), unigram+bigram grams (the exact :func:`_grams_expr`
-    geometry), 60-bit md5 per gram via hashlib (bit-identical to SQL
+    """``importance_weights``' feature bucketing: tokenize (the
+    ``_TOKENS`` regex/lower/split/filter), unigram+bigram grams (each
+    token, then each adjacent pair joined by one space — the DSIR
+    featurization of Xie et al. 2023, §3: hashed n-gram features
+    with n<=2), 60-bit md5 per gram via hashlib (bit-identical to SQL
     ``md5()``), bucket = h mod ``buckets`` (h >= 0, so Python ``%``
     == SQL ``pmod``) — and EXACT integer counts, all inside one
     ``mapInPandas`` pass.
@@ -388,9 +354,8 @@ def _dsir_bucket_kernel(df: DataFrame, text_col: str,
     (bounded by ``buckets`` per batch) — map-side partial counts the
     caller SUMs, identical totals to counting exploded gram rows.
     NULL-text and tokenless docs emit nothing (``explode`` over a
-    NULL/empty gram array).  Same boundary discipline as the dedup
-    kernels: narrow projection, single-file scans re-spread to
-    ``defaultParallelism``."""
+    NULL/empty gram array).  Runs through ``dedup._map_docs``, like
+    the dedup kernels."""
     from collections import Counter
 
     import hashlib
@@ -436,30 +401,24 @@ def _dsir_bucket_kernel(df: DataFrame, text_col: str,
                 yield pd.DataFrame({id_col: ids_out, "b": bs,
                                     "c": cs})
 
-    sel = dedup._spread(df.select(
-        *([id_col] if id_col is not None else []), text_col))
-    fields = []
-    if id_col is not None:
-        fields.append([f for f in df.schema.fields
-                       if f.name == id_col][0])
-    fields += [T.StructField("b", T.LongType()),
-               T.StructField("c", T.LongType())]
-    return sel.mapInPandas(fn, T.StructType(fields))
+    return dedup._map_docs(df, id_col, text_col, fn,
+                           [T.StructField("b", T.LongType()),
+                            T.StructField("c", T.LongType())])
 
 
 def importance_weights(docs: DataFrame, target: DataFrame,
                        text_col: str = "text", id_col: str = "doc_id",
                        buckets: int = 1 << 16,
-                       fast_hash: bool = False) -> DataFrame:
+                       fast_hash: bool | None = None) -> DataFrame:
     """DSIR-style importance weights: score every raw document by how
     target-like its hashed n-gram distribution is (Xie et al. 2023 —
     the data-selection recipe behind most curated pretraining mixes).
 
     Features are unigrams+bigrams hashed into ``buckets`` buckets
-    (md5-60bit by default so any engine reproduces the bucketing;
-    ``fast_hash=True`` switches to xxhash64 for production runs).
-    Two bucket-count models are estimated — the ``target`` corpus
-    (what you want more of) and the raw corpus itself — and each
+    (md5-60bit, so any engine reproduces the bucketing; ``fast_hash``
+    is deprecated and ignored).  Two bucket-count models are
+    estimated — the ``target`` corpus (what you want more of) and the
+    raw corpus itself — and each
     document's log importance weight is the add-one-smoothed
     log-likelihood ratio of its features:
 
@@ -486,37 +445,27 @@ def importance_weights(docs: DataFrame, target: DataFrame,
     Returns ``(id_col, n_grams, logw)``; feed to
     :func:`resample_corpus` to select.
     """
-    from .dedup import _tune
+    from .dedup import _ignored_fast_hash, _tune
+    _ignored_fast_hash(fast_hash, "importance_weights")
     _tune(docs)
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
 
-    # feature-bucketing transports (the minhash/simhash r14 split):
-    # the md5 default hashes grams in ONE Arrow mapInPandas pass —
-    # hashlib md5 is bit-identical to SQL md5(), and everything the
-    # kernel emits is an exact BIGINT count, so the downstream model
-    # joins and the bit-stability-contracted logw fold (still SQL)
-    # compute from IDENTICAL inputs.  fast_hash keeps the codegen
-    # explode+count pipeline (xxhash64 has no Python twin).  Measured
-    # on the per-doc bucketing stage (AB_DSIR_BUCKET_r14.json,
-    # interleaved, checksums equal): 2.5x at sf0.1, 6.8x at 500k
-    # docs.
-    if fast_hash:
-        tcnt = (_dsir_bucketed_sql(target, text_col, None, buckets,
-                                   fast_hash)
-                .groupBy("b").agg(F.count(F.lit(1)).alias("tc")))
-        per_doc = (_dsir_bucketed_sql(docs, text_col, id_col,
-                                      buckets, fast_hash)
-                   .groupBy(id_col, "b")
-                   .agg(F.count(F.lit(1)).alias("c")))
-    else:
-        # target side: batch-partial Counter rows -> one tiny SUM
-        # (identical totals to counting the exploded rows)
-        tcnt = (_dsir_bucket_kernel(target, text_col, None, buckets)
-                .groupBy("b").agg(F.sum("c").alias("tc")))
-        # raw side: exact per-(doc, bucket) counts straight from the
-        # kernel - the id-keyed aggregate exchange disappears
-        per_doc = _dsir_bucket_kernel(docs, text_col, id_col, buckets)
+    # feature bucketing: the grams are hashed in ONE Arrow
+    # mapInPandas pass — hashlib md5 is bit-identical to SQL md5(),
+    # and everything the kernel emits is an exact BIGINT count, so the
+    # downstream model joins and the bit-stability-contracted logw
+    # fold (still SQL) compute from IDENTICAL inputs.  The SQL
+    # explode+count it replaced was 2.5x slower at sf0.1 and 6.8x at
+    # 500k docs (AB_DSIR_BUCKET_r14.json), and its xxhash64 form 1.4x
+    # and 1.5x (AB_HASH_TRANSPORT_r15.json).
+    # target side: batch-partial Counter rows -> one tiny SUM
+    # (identical totals to counting the exploded rows)
+    tcnt = (_dsir_bucket_kernel(target, text_col, None, buckets)
+            .groupBy("b").agg(F.sum("c").alias("tc")))
+    # raw side: exact per-(doc, bucket) counts straight from the
+    # kernel - no id-keyed aggregate exchange
+    per_doc = _dsir_bucket_kernel(docs, text_col, id_col, buckets)
     tcnt = tcnt.persist()
     from .similarity import _register_cache
     _register_cache(tcnt)
@@ -532,7 +481,7 @@ def importance_weights(docs: DataFrame, target: DataFrame,
     # ONE corpus pass instead of two (r13; guide §1.2 "don't compute
     # things twice"): the raw-corpus model is NOT its own
     # tokenize+hash pass — the per-doc (doc, bucket) count frame
-    # (built above by either transport) already contains every
+    # (built above by the kernel) already contains every
     # count, and summing them per bucket gives the IDENTICAL
     # exact-BIGINT totals.  Persist per_doc (it also feeds the
     # scoring join) and derive the model from it.

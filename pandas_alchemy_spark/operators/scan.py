@@ -112,9 +112,8 @@ def ewm_mean(sdf: SparkDF, value_col: str, order_cols, alpha: float,
     length; ``stat`` may also be "sum" there — same recurrence minus
     the weight normalization).  Global: :func:`ewm_mean_multi` over
     the one column (mean only — Ewm.sum composes it with the
-    closed-form weight total).  Null values in ``value_col`` are not
-    supported — filter first (pandas' ignore_na semantics need a
-    weight channel we don't carry).
+    closed-form weight total).  Nulls follow pandas' default
+    ``ignore_na=False`` on both paths.
     """
     _check_alpha(alpha)
     if stat not in ("mean", "sum"):
@@ -184,7 +183,7 @@ def ewm_var(sdf: SparkDF, value_col: str, order_cols, alpha: float,
     are a pure function of the global row position, so only the data
     channels need carrying).  bias=False applies pandas' reliability
     correction den²/(den²−Σw²).  Nulls unsupported — filter first
-    (same contract as ewm_mean)."""
+    (the closed-form weight sums count every row)."""
     _check_alpha(alpha)
     order_cols = ([order_cols] if isinstance(order_cols, str)
                   else list(order_cols))
@@ -281,11 +280,28 @@ def ewm_var(sdf: SparkDF, value_col: str, order_cols, alpha: float,
     return base.mapInPandas(pass_b, out_fields)
 
 
+def _ewm_sums(x: pd.Series, alpha: float, num: float, den: float,
+              decay: np.ndarray):
+    """One batch of one column: the running weighted value total and
+    weight total over its NON-NULL rows, both continued from the
+    carried totals ``num``/``den`` (``decay`` = w^1..w^k), plus the
+    non-null mask.  Weights decay per row position, nulls included
+    (pandas ``ignore_na=False``)."""
+    obs = x.notna().to_numpy()
+    e = dict(alpha=alpha, adjust=True)
+    n_loc = x.ewm(**e).sum().fillna(0.0).to_numpy()
+    d_loc = pd.Series(obs, dtype="float64").ewm(**e).sum().to_numpy()
+    return n_loc + num * decay, d_loc + den * decay, obs
+
+
 def _partition_scan_multi(it, alpha, ncols):
     """Pass A for :func:`ewm_mean_multi`: one carry row per partition
-    with every column's weighted tail."""
+    with every column's weighted value and weight totals at the
+    partition's end and at its last non-null row (``l*``; position
+    ``p*``, 0 when the partition holds no value)."""
     w = 1.0 - alpha
-    tails = [0.0] * ncols
+    tails = [(0.0, 0.0)] * ncols
+    last = [(0.0, 0.0, 0)] * ncols
     n = 0
     pid = None
     for pdf in it:
@@ -293,16 +309,21 @@ def _partition_scan_multi(it, alpha, ncols):
             continue
         pid = int(pdf["__pid"].iloc[0])
         k = len(pdf)
-        den_end = (1.0 - w ** k) / (1.0 - w) if w != 0.0 else 1.0
+        decay = w ** np.arange(1, k + 1, dtype="float64")
         for j in range(ncols):
-            x = pdf[f"__x{j}"].astype("float64")
-            m = x.ewm(alpha=alpha, adjust=True).mean()
-            tails[j] = (tails[j] * (w ** k)
-                        + float(m.iloc[-1]) * den_end)
+            num, den, obs = _ewm_sums(pdf[f"__x{j}"].astype("float64"),
+                                      alpha, *tails[j], decay)
+            if obs.any():
+                q = int(np.flatnonzero(obs)[-1])
+                last[j] = (num[q], den[q], n + q + 1)
+            tails[j] = (num[-1], den[-1])
         n += k
     if pid is not None:
         out = {"pid": [pid], "n": [n]}
-        out.update({f"t{j}": [tails[j]] for j in range(ncols)})
+        for j in range(ncols):
+            out.update({f"t{j}": [tails[j][0]], f"d{j}": [tails[j][1]],
+                        f"l{j}": [last[j][0]], f"ld{j}": [last[j][1]],
+                        f"p{j}": [last[j][2]]})
         yield pd.DataFrame(out)
 
 
@@ -315,10 +336,13 @@ def ewm_mean_multi(sdf: SparkDF, value_cols, order_cols, alpha: float,
     samples, the checkpoint makes the layout a fact, and an EWM over
     the same frame and order as other scan verbs reuses their
     shuffle); pass A folds each partition into one carry row holding
-    every column's weighted tail (P rows to the driver, never row
+    every column's weighted tails (P rows to the driver, never row
     data); pass B rebuilds the exact global recurrence from each
-    partition's prefix.  Same null contract as :func:`ewm_mean`
-    (filter nulls first)."""
+    partition's prefix.
+
+    Nulls follow pandas (``adjust=True, ignore_na=False``): the
+    weight total runs over non-null rows only, a null row repeats
+    the last mean, and leading nulls stay NaN."""
     _check_alpha(alpha)
     w = 1.0 - alpha
     ncols = len(value_cols)
@@ -327,54 +351,53 @@ def ewm_mean_multi(sdf: SparkDF, value_cols, order_cols, alpha: float,
     proj = base.select(
         "__pid", *[F.col(c).cast("double").alias(f"__x{j}")
                    for j, c in enumerate(value_cols)])
-    schema = ("pid int, n long, "
-              + ", ".join(f"t{j} double" for j in range(ncols)))
+    schema = "pid int, n long, " + ", ".join(
+        f"t{j} double, d{j} double, l{j} double, ld{j} double, "
+        f"p{j} long" for j in range(ncols))
     carries = proj.mapInPandas(
         lambda it: _partition_scan_multi(it, alpha, ncols),
         schema).collect()
     carries.sort(key=lambda r: r["pid"])
+    # per column: (value total, weight total, last mean) before each
+    # partition; the last mean is kept apart because the totals of a
+    # long null run can underflow to 0/0
     prefix: dict[int, list] = {}
-    pref_n: dict[int, int] = {}
-    acc = [0.0] * ncols
-    off = 0
+    acc = [(0.0, 0.0, math.nan)] * ncols
     for r in carries:
         prefix[r["pid"]] = list(acc)
-        pref_n[r["pid"]] = off
-        for j in range(ncols):
-            acc[j] = acc[j] * (w ** r["n"]) + r[f"t{j}"]
-        off += r["n"]
+        for j, (num, den, mean) in enumerate(acc):
+            if r[f"p{j}"]:
+                f = w ** r[f"p{j}"]
+                mean = ((r[f"l{j}"] + num * f)
+                        / (r[f"ld{j}"] + den * f))
+            f = w ** r["n"]
+            acc[j] = (num * f + r[f"t{j}"], den * f + r[f"d{j}"], mean)
 
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in sdf.schema.fields)
     fields += "".join(f", {oc} double" for oc in out_cols)
 
     def pass_b(it):
-        carry = None  # (tails list, t_local)
+        state = None
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            pid = int(pdf["__pid"].iloc[0])
-            if carry is None:
-                carry = (list(prefix.get(pid, [0.0] * ncols)), 0)
-            tails, t0 = carry
-            k = len(pdf)
-            pos = np.arange(1, k + 1, dtype="float64")
-            den_local = ((1.0 - w ** pos) / (1.0 - w) if w != 0.0
-                         else np.ones(k))
-            decay = w ** pos
-            gpos = pref_n.get(pid, 0) + t0 + pos
-            den = ((1.0 - w ** gpos) / (1.0 - w) if w != 0.0
-                   else np.ones(k))
+            if state is None:
+                state = list(prefix.get(int(pdf["__pid"].iloc[0]),
+                                        [(0.0, 0.0, math.nan)] * ncols))
+            decay = w ** np.arange(1, len(pdf) + 1, dtype="float64")
             res = pdf.drop(columns=["__pid"]).copy()
-            new_tails = []
             for j, (c, oc) in enumerate(zip(value_cols, out_cols)):
-                x = pdf[c].astype("float64")
-                m = x.ewm(alpha=alpha, adjust=True).mean().to_numpy()
-                num = m * den_local + tails[j] * decay
-                res[oc] = num / den
-                new_tails.append(tails[j] * (w ** k)
-                                 + m[-1] * den_local[-1])
-            carry = (new_tails, t0 + k)
+                num, den, mean = state[j]
+                num, den, obs = _ewm_sums(pdf[c].astype("float64"),
+                                          alpha, num, den, decay)
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    m = np.where(obs, num / den, np.nan)
+                out = pd.Series(m).ffill()
+                if mean == mean:
+                    out = out.fillna(mean)
+                res[oc] = out.to_numpy()
+                state[j] = (num[-1], den[-1], out.iloc[-1])
             yield res
 
     return base.mapInPandas(pass_b, fields)

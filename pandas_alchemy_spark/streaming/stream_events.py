@@ -285,7 +285,7 @@ def streaming_dedup_against(stream: DataFrame,
                             shingle_n: int = 3,
                             threshold: float = 0.5,
                             bucket_cap: int | None = 2000,
-                            fast_hash: bool = False,
+                            fast_hash: bool | None = None,
                             stream_partitions: int | None = None,
                             index=None,
                             pin_scope=None) -> DataFrame:
@@ -341,9 +341,9 @@ def streaming_dedup_against(stream: DataFrame,
     (optionally :meth:`~..ext.dedup.ReferenceIndex.save` d to
     parquet) and every stream (re)start reuses it.  The hash-family
     parameters then come FROM the index (this function's
-    ``num_hashes``/``bands``/``shingle_n``/``fast_hash``/
-    ``bucket_cap`` are ignored — a mismatched family would silently
-    zero recall, so the index's params are authoritative); index
+    ``num_hashes``/``bands``/``shingle_n``/``bucket_cap`` are
+    ignored — a mismatched family would silently zero recall, so the
+    index's params are authoritative); index
     lifecycle is caller-owned (``index.release()``), nothing is
     pinned here.
 
@@ -355,9 +355,13 @@ def streaming_dedup_against(stream: DataFrame,
     measured 4x idle cores at 8 files/batch on a 32-core box.  The
     added exchange carries only raw batch rows (cheap next to the
     verify).
+
+    ``fast_hash`` is deprecated and ignored.
     """
     from ..ext.dedup import (_banded, _cap_buckets, _h60,
-                             _minhash_base, with_shingles)
+                             _ignored_fast_hash, _minhash_base,
+                             with_shingles)
+    _ignored_fast_hash(fast_hash, "streaming_dedup_against")
     if (reference is None) == (index is None):
         raise ValueError(
             "pass exactly one of reference= (raw corpus, indexed at "
@@ -367,7 +371,6 @@ def streaming_dedup_against(stream: DataFrame,
         num_hashes = index.num_hashes
         bands = index.bands
         shingle_n = index.shingle_n
-        fast_hash = index.fast_hash
         ref_buckets = index.ref_buckets
         ref_sets = index.ref_sets
         rows = num_hashes // bands
@@ -398,7 +401,7 @@ def streaming_dedup_against(stream: DataFrame,
         if pin_scope is None:
             pin_scope = object()
         br = _minhash_base(reference, text_col, id_col, num_hashes,
-                           shingle_n, fast_hash).persist()
+                           shingle_n).persist()
         _pin_cache(br, pin_scope)  # feeds BOTH derived tables below
         ref_buckets = (_banded(br, id_col, "id_ref", bands, rows)
                        .groupBy("band", "bh")
@@ -434,7 +437,7 @@ def streaming_dedup_against(stream: DataFrame,
     sh = with_shingles(stream, text_col, "__shraw", shingle_n,
                        distinct=False)
     hs_expr = ("array_distinct(transform(__shraw, s -> "
-               + _h60("s", fast_hash) + "))")
+               + _h60("s") + "))")
     sig_udf = _signature_kernel(num_hashes)
     # NULL text filtered on the RAW column only.  Deliberately NO
     # filter on size(__hs): PushDownPredicate inlines a derived-column

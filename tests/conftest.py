@@ -41,6 +41,26 @@ def jobs_started_by(spark, group: str, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _send_queued_releases():
+    """Send now the JVM-object releases (``m d``) that py4j has queued
+    for its finalizer thread.  That thread polls its queue once a
+    second, so a backlog queued by earlier work (or by the collection
+    in :func:`py4j_commands`) would otherwise be sent, and counted,
+    while the measured function runs."""
+    from pyspark import SparkContext
+    queue = SparkContext._gateway._gateway_client.finalizer_deque
+    while True:
+        try:
+            task = queue.pop()
+        except IndexError:
+            return
+        if not isinstance(task, tuple):  # the thread's shutdown mark
+            queue.append(task)
+            return
+        client, target_id = task
+        client.garbage_collect_object(target_id, False)
+
+
 def py4j_commands(fn):
     """Run ``fn()``; return its result and the py4j commands it sent to
     the JVM, counted by command: a call by its method name (``filter``,
@@ -58,6 +78,7 @@ def py4j_commands(fn):
 
     gc.collect()
     gc.disable()
+    _send_queued_releases()
     ClientServerConnection.send_command = counted
     try:
         out = fn()

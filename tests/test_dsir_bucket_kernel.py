@@ -1,13 +1,14 @@
-"""Differential pins for the r14 Arrow DSIR feature-bucketing
-transport (`ext.pipeline._dsir_bucket_kernel`) against the codegen
-explode formulation (`_dsir_bucketed_sql`) it replaced on the md5
-path — exact BIGINT bucket counts, so `importance_weights`' model
+"""Differential pins for the Arrow DSIR feature-bucketing kernel
+(`ext.pipeline._dsir_bucket_kernel`) against the codegen explode
+formulation it replaced (`tests/sql_oracles.dsir_bucketed_sql`) —
+exact BIGINT bucket counts, so `importance_weights`' model
 joins and logw fold compute from identical inputs."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from pandas_alchemy_spark.ext import pipeline
+from tests.sql_oracles import dsir_bucketed_sql
 
 _DOCS = [
     (1, "The quick brown fox jumps over the lazy dog"),
@@ -29,8 +30,7 @@ def _docs(spark):
 
 def test_per_doc_counts_bit_identical(spark):
     docs = _docs(spark)
-    sql = (pipeline._dsir_bucketed_sql(docs, "text", "doc_id", 4096,
-                                       False)
+    sql = (dsir_bucketed_sql(docs, "text", "doc_id", 4096)
            .groupBy("doc_id", "b").agg(F.count(F.lit(1)).alias("c"))
            .collect())
     ker = pipeline._dsir_bucket_kernel(docs, "text", "doc_id",
@@ -42,8 +42,7 @@ def test_per_doc_counts_bit_identical(spark):
 
 def test_target_totals_bit_identical(spark):
     docs = _docs(spark)
-    sql = (pipeline._dsir_bucketed_sql(docs, "text", None, 512,
-                                       False)
+    sql = (dsir_bucketed_sql(docs, "text", None, 512)
            .groupBy("b").agg(F.count(F.lit(1)).alias("c")).collect())
     ker = (pipeline._dsir_bucket_kernel(docs, "text", None, 512)
            .groupBy("b").agg(F.sum("c").alias("c")).collect())
@@ -64,8 +63,7 @@ def test_importance_weights_values_unchanged(spark):
     try:
         # force the old md5 SQL transport through the kernel seam
         def sql_transport(df, text_col, id_col, buckets):
-            base = pipeline._dsir_bucketed_sql(df, text_col, id_col,
-                                               buckets, False)
+            base = dsir_bucketed_sql(df, text_col, id_col, buckets)
             if id_col is None:
                 return (base.groupBy("b")
                         .agg(F.count(F.lit(1)).alias("c")))

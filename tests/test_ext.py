@@ -576,25 +576,6 @@ def test_curate_corpus_end_to_end(spark):
     assert stats["n_tokens"] > 0 and stats["n_bins"] > 0
 
 
-def test_fast_hash_minhash_agrees_with_md5_path(spark):
-    """xxhash64 fast path: same candidate QUALITY as the md5/oracle
-    path — the exact-Jaccard verify makes the pair set nearly
-    identical (signatures differ, the verified pairs shouldn't)."""
-    from pandas_alchemy_spark.ext import dedup
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    slow = {(r["id_a"], r["id_b"]) for r in
-            dedup.minhash_lsh_pairs(docs, num_hashes=16, bands=4,
-                                    threshold=0.4).collect()}
-    fast = {(r["id_a"], r["id_b"]) for r in
-            dedup.minhash_lsh_pairs(docs, num_hashes=16, bands=4,
-                                    threshold=0.4,
-                                    fast_hash=True).collect()}
-    # both paths verify with exact Jaccard, so overlap must be high
-    assert slow and fast
-    inter = len(slow & fast)
-    assert inter / max(len(slow), len(fast)) >= 0.9
-
-
 # --------------------------------------------------- corpus mixture
 
 def test_mix_corpora_weights(docs):
@@ -1312,11 +1293,6 @@ def test_importance_weights_validation_and_fast_hash(spark, docs):
     from pandas_alchemy_spark.ext import pipeline
     with _pt.raises(ValueError):
         pipeline.importance_weights(docs, docs, buckets=1)
-    target = docs.filter("doc_id % 11 = 0")
-    w = pipeline.importance_weights(docs, target, buckets=1024,
-                                    fast_hash=True)
-    assert w.columns == ["doc_id", "n_grams", "logw"]
-    assert w.count() > 0
 
 
 def test_resample_corpus_gumbel_topk(spark, docs):
@@ -2117,6 +2093,59 @@ def test_reference_index_append_equals_rebuild(spark, docs):
         i_app.append(b_side.limit(1))
     for i in (i_a, i_app, i_reb, loaded):
         i.release()
+
+
+def _rewrite_sidecar(path, edit):
+    import json
+    import os
+    side = os.path.join(path, "_dedup_index.json")
+    with open(side) as fh:
+        meta = json.load(fh)
+    edit(meta)
+    with open(side, "w") as fh:
+        json.dump(meta, fh)
+
+
+def test_load_reference_index_refuses_xxhash64_index(spark, docs,
+                                                     tmp_path):
+    """An index saved with fast_hash=True holds xxhash64 signatures,
+    which no operator computes any more: loading it must fail loudly
+    (naming the path) instead of gating with a drifted family."""
+    ref = docs.filter("doc_id % 3 <> 0").select("doc_id", "text")
+    idx = dedup.build_reference_index(ref, num_hashes=16, bands=4)
+    path = str(tmp_path / "xxh_idx")
+    idx.save(path)
+    idx.release()
+    _rewrite_sidecar(path, lambda m: m.update(fast_hash=True))
+    with pytest.raises(ValueError, match="rebuild") as err:
+        dedup.load_reference_index(spark, path)
+    assert path in str(err.value)
+
+
+def test_load_reference_index_without_hash_key(spark, docs, tmp_path):
+    """A sidecar without the fast_hash key (every save since
+    signatures went md5-only) or with it false loads, and gates
+    exactly like the index it was saved from."""
+    ref = docs.filter("doc_id % 3 <> 0").select("doc_id", "text")
+    new = docs.filter("doc_id % 3 = 0").select("doc_id", "text")
+    idx = dedup.build_reference_index(ref, num_hashes=16, bands=4)
+    want = sorted(map(tuple, dedup.cross_dedup_pairs(
+        new, index=idx, threshold=0.3).collect()))
+    assert want
+    path = str(tmp_path / "md5_idx")
+    idx.save(path)
+    idx.release()
+    import json
+    import os
+    with open(os.path.join(path, "_dedup_index.json")) as fh:
+        assert "fast_hash" not in json.load(fh)
+    for edit in (lambda m: None, lambda m: m.update(fast_hash=False)):
+        _rewrite_sidecar(path, edit)
+        loaded = dedup.load_reference_index(spark, path)
+        got = sorted(map(tuple, dedup.cross_dedup_pairs(
+            new, index=loaded, threshold=0.3).collect()))
+        loaded.release()
+        assert got == want
 
 
 def _semdedup_pairs_sql(df, centroids, threshold, nprobe=1,

@@ -466,11 +466,17 @@ def test_frame_ewm_mean(spark):
     rng = np.random.default_rng(9)
     pdf = pd.DataFrame({"a": rng.normal(size=300),
                         "b": rng.normal(size=300).cumsum()})
+    # the same columns with their own 20% null masks (plus leading
+    # nulls in a): each column carries its own non-null weight total
+    holes = pdf.mask(rng.random((300, 2)) < 0.2)
+    holes.loc[:4, "a"] = np.nan
+    for src in (pdf, holes):
+        got = (pas.DataFrame.from_pandas(src).ewm(0.3).mean()
+               .to_pandas().sort_index())
+        want = src.ewm(alpha=0.3, adjust=True).mean()
+        np.testing.assert_allclose(got.to_numpy(float),
+                                   want.to_numpy(float), rtol=1e-10)
     df = pas.DataFrame.from_pandas(pdf)
-    got = df.ewm(0.3).mean().to_pandas().sort_index()
-    want = pdf.ewm(alpha=0.3, adjust=True).mean()
-    np.testing.assert_allclose(got.to_numpy(float),
-                               want.to_numpy(float), rtol=1e-10)
     plan = (df.ewm(0.3).mean()._sdf._jdf.queryExecution()
             .executedPlan().toString())
     assert "SinglePartition" not in plan and "Window" not in plan

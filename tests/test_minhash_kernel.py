@@ -1,6 +1,6 @@
-"""Differential pins for the r14 Arrow md5-MinHash transport
-(`ext.dedup._minhash_base_kernel`) against the codegen SQL
-formulation (`_minhash_base_sql`) it replaced on the md5 path.
+"""Differential pins for the Arrow md5-MinHash kernel
+(`ext.dedup._minhash_base`) against the codegen SQL formulation it
+replaced (`tests/sql_oracles.minhash_base_sql`).
 
 The kernel must reproduce the SQL pipeline BIT-FOR-BIT: same
 tokenizer (regex/lower/split/filter), same shingle geometry
@@ -13,7 +13,8 @@ from __future__ import annotations
 
 import pytest
 
-from pandas_alchemy_spark.ext import dedup
+from pandas_alchemy_spark.ext import dedup, pipeline
+from tests.sql_oracles import minhash_base_sql
 
 # adversarial corpus: empty text, punctuation-only, NULL, non-ASCII
 # (mixed scripts and an emoji — the tokenizer strips them to spaces),
@@ -53,10 +54,10 @@ def docs(spark):
                                                   (32, 5)])
 def test_kernel_bit_identical_to_sql(spark, docs, num_hashes,
                                      shingle_n):
-    sql = dedup._minhash_base_sql(docs, "text", "doc_id", num_hashes,
-                                  shingle_n, False).collect()
+    sql = minhash_base_sql(docs, "text", "doc_id", num_hashes,
+                           shingle_n).collect()
     ker = dedup._minhash_base(docs, "text", "doc_id", num_hashes,
-                              shingle_n, False).collect()
+                              shingle_n).collect()
     assert _canon(sql) == _canon(ker)
     # tokenless docs (2, 3) must be ABSENT from both (explode over an
     # empty shingle array); the NULL-text doc (4) must be PRESENT
@@ -69,8 +70,8 @@ def test_kernel_bit_identical_to_sql(spark, docs, num_hashes,
 
 
 def test_kernel_hs_sorted_distinct(spark, docs):
-    for r in dedup._minhash_base(docs, "text", "doc_id", 8, 3,
-                                 False).collect():
+    for r in dedup._minhash_base(docs, "text", "doc_id", 8,
+                                 3).collect():
         assert list(r["hs"]) == sorted(set(r["hs"]))
 
 
@@ -78,25 +79,47 @@ def test_kernel_string_ids_and_schema(spark):
     sdf = spark.createDataFrame(
         [("a", "alpha beta gamma delta"), ("b", "beta gamma")],
         "k string, body string")
-    out = dedup._minhash_base(sdf, "body", "k", 4, 2, False)
+    out = dedup._minhash_base(sdf, "body", "k", 4, 2)
     assert [f.name for f in out.schema.fields] == ["k", "signature",
                                                    "hs"]
     assert out.schema["k"].dataType.simpleString() == "string"
-    sql = dedup._minhash_base_sql(sdf, "body", "k", 4, 2, False)
+    sql = minhash_base_sql(sdf, "body", "k", 4, 2)
     assert _canon(out.collect(), "k") == _canon(sql.collect(), "k")
 
 
-def test_fast_hash_still_takes_sql_path(spark, docs):
-    # xxhash64 has no Python twin; the dispatch must keep it codegen
-    plan = dedup._minhash_base(docs, "text", "doc_id", 8, 3,
-                               True)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "MapInPandas" not in plan
-    assert "xxhash64" in plan.lower()
+# every public signature operator, called the way an old caller would
+_SIGNATURE_OPS = {
+    "minhash_signature": lambda d, **kw: dedup.minhash_signature(
+        d, num_hashes=8, **kw),
+    "minhash_lsh_pairs": lambda d, **kw: dedup.minhash_lsh_pairs(
+        d, num_hashes=8, bands=4, **kw),
+    "simhash_signature": lambda d, **kw: dedup.simhash_signature(
+        d, **kw),
+    "simhash_pairs": lambda d, **kw: dedup.simhash_pairs(d, **kw),
+    "cross_dedup_pairs": lambda d, **kw: dedup.cross_dedup_pairs(
+        d, d, num_hashes=8, bands=4, **kw),
+    "dedup_against": lambda d, **kw: dedup.dedup_against(
+        d, d, num_hashes=8, bands=4, **kw),
+    "build_reference_index": lambda d, **kw: dedup.build_reference_index(
+        d, num_hashes=8, bands=4, materialize=False, **kw).ref_sets,
+    "importance_weights": lambda d, **kw: pipeline.importance_weights(
+        d, d, buckets=64, **kw),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_SIGNATURE_OPS))
+def test_fast_hash_is_deprecated_and_ignored(spark, docs, op):
+    # one transport per signature operator: the keyword warns and the
+    # plan is the md5 Arrow kernel, never the xxhash64 SQL pipeline
+    with pytest.warns(DeprecationWarning, match="fast_hash"):
+        out = _SIGNATURE_OPS[op](docs, fast_hash=True)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    assert "xxhash64" not in plan.lower()
 
 
 def test_md5_path_plan_is_one_arrow_pass(spark, docs):
-    out = dedup._minhash_base(docs, "text", "doc_id", 8, 3, False)
+    out = dedup._minhash_base(docs, "text", "doc_id", 8, 3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "HashAggregate" not in plan
@@ -109,7 +132,7 @@ def test_lsh_pairs_identical_through_public_api(spark, docs):
     import pandas_alchemy_spark.ext.dedup as dd
     real = dd._minhash_base
     try:
-        dd._minhash_base = dd._minhash_base_sql
+        dd._minhash_base = minhash_base_sql
         want = sorted(map(tuple, dd.minhash_lsh_pairs(
             docs, num_hashes=16, bands=4,
             threshold=0.3).collect()))

@@ -76,11 +76,19 @@ def test_q13_includes_zero_order_customers(spark):
 def test_series_ewm_global_scan_matches_pandas(spark):
     import numpy as np
     rng = np.random.default_rng(3)
-    pdf = pd.DataFrame({"x": rng.normal(10, 3, 5000).round(3)})
-    s = pas.DataFrame.from_pandas(pdf).x.ewm(alpha=0.2).mean()
-    want = pdf.x.ewm(alpha=0.2, adjust=True).mean()
-    got = s.to_pandas()
-    assert np.abs(got.to_numpy() - want.to_numpy()).max() < 1e-10
+    dense = rng.normal(10, 3, 5000).round(3)
+    # 20% nulls, three of them leading: a null row repeats the last
+    # mean, leading nulls stay NaN (pandas ignore_na=False)
+    holes = rng.normal(0, 1, 400)
+    holes[rng.random(400) < 0.2] = np.nan
+    holes[:3] = np.nan
+    for x, alpha in ((dense, 0.2), (holes, 0.3)):
+        pdf = pd.DataFrame({"x": x})
+        got = (pas.DataFrame.from_pandas(pdf).x.ewm(alpha=alpha)
+               .mean().to_pandas())
+        want = pdf.x.ewm(alpha=alpha, adjust=True).mean()
+        assert (got.isna() == want.isna()).all()
+        assert np.nanmax(np.abs(got.to_numpy() - want.to_numpy())) < 1e-10
 
 
 def test_series_ewm_no_single_partition_window(spark):

@@ -1,6 +1,6 @@
-"""Differential pins for the r14 Arrow md5-SimHash transport
-(`ext.dedup._simhash_signature_kernel`) against the codegen SQL
-formulation (`_simhash_signature_sql`) it replaced on the md5 path.
+"""Differential pins for the Arrow md5-SimHash kernel
+(`ext.dedup.simhash_signature`) against the codegen SQL formulation
+it replaced (`tests/sql_oracles.simhash_signature_sql`).
 Same discipline as test_minhash_kernel.py: the kernel must reproduce
 the SQL pipeline bit-for-bit (same tokenizer, same 60-bit md5, same
 per-occurrence majority votes, same packing)."""
@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 
 from pandas_alchemy_spark.ext import dedup
+from tests.sql_oracles import simhash_signature_sql
 
 _DOCS = [
     (1, "The quick brown fox jumps over the lazy dog"),
@@ -35,8 +36,8 @@ def docs(spark):
 
 def test_kernel_bit_identical_to_sql(spark, docs):
     sql = sorted((r["doc_id"], r["sh"]) for r in
-                 dedup._simhash_signature_sql(
-                     docs, "text", "doc_id", 60, False).collect())
+                 simhash_signature_sql(
+                     docs, "text", "doc_id", 60).collect())
     ker = sorted((r["doc_id"], r["sh"]) for r in
                  dedup.simhash_signature(docs).collect())
     assert sql == ker
@@ -49,19 +50,12 @@ def test_kernel_bit_identical_to_sql(spark, docs):
 
 def test_kernel_narrow_bits(spark, docs):
     sql = sorted((r["doc_id"], r["sh"]) for r in
-                 dedup._simhash_signature_sql(
-                     docs, "text", "doc_id", 12, False).collect())
+                 simhash_signature_sql(
+                     docs, "text", "doc_id", 12).collect())
     ker = sorted((r["doc_id"], r["sh"]) for r in
                  dedup.simhash_signature(docs, bits=12).collect())
     assert sql == ker
     assert all(0 <= sh < (1 << 12) for _, sh in ker)
-
-
-def test_fast_hash_still_takes_sql_path(spark, docs):
-    plan = dedup.simhash_signature(docs, fast_hash=True) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan
-    assert "xxhash64" in plan.lower()
 
 
 def test_md5_path_plan_is_one_arrow_pass(spark, docs):
@@ -76,10 +70,8 @@ def test_simhash_pairs_identical_through_public_api(spark, docs):
     import pandas_alchemy_spark.ext.dedup as dd
     real = dd.simhash_signature
 
-    def sql_sig(df, text_col="text", id_col="doc_id", bits=60,
-                fast_hash=False):
-        return dd._simhash_signature_sql(df, text_col, id_col, bits,
-                                         fast_hash)
+    def sql_sig(df, text_col="text", id_col="doc_id", bits=60):
+        return simhash_signature_sql(df, text_col, id_col, bits)
     try:
         dd.simhash_signature = sql_sig
         want = sorted(map(tuple, dd.simhash_pairs(

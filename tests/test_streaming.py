@@ -712,8 +712,8 @@ def test_streaming_dedup_against_prebuilt_index(spark, tmp_path):
     idx.save(path)
     idx.release()
     loaded = dd.load_reference_index(spark, path)
-    assert (loaded.num_hashes, loaded.bands, loaded.shingle_n,
-            loaded.fast_hash) == (16, 4, 3, False)
+    assert (loaded.num_hashes, loaded.bands,
+            loaded.shingle_n) == (16, 4, 3)
     via_loaded = drain(index=loaded, threshold=0.4)
     assert via_loaded == raw
     loaded.release()
@@ -724,6 +724,10 @@ def test_streaming_dedup_against_prebuilt_index(spark, tmp_path):
         streaming_dedup_against(stream)
     with pytest.raises(ValueError, match="exactly one"):
         streaming_dedup_against(stream, reference=ref_sl, index=idx)
+    # the signature family is md5-only: fast_hash warns, changes nothing
+    with pytest.warns(DeprecationWarning, match="fast_hash"), \
+            pytest.raises(ValueError, match="exactly one"):
+        streaming_dedup_against(stream, fast_hash=True)
 
 
 def test_streaming_dedup_against_checkpoint_restart(spark, tmp_path):

@@ -11,13 +11,13 @@ over the first leg's, and the box's ``cpus``, ``cpu_mark`` and loadavg.
 CLI (the session comes from ``pas.init_db``; prints one JSON line)::
 
     python tools/ab.py --input "$SF_DIR/documents.parquet" --n 3 \\
-        sql='dedup._simhash_signature_sql(df, "text", "doc_id", 60, False)' \\
+        sql='sql_oracles.simhash_signature_sql(df, "text", "doc_id", 60)' \\
         kernel='dedup.simhash_signature(df)'
 
 Each ``NAME=EXPR`` leg is a Python expression over ``df``
-(``spark.read.parquet(input)``) with ``spark``, ``pas``, ``F`` and the
+(``spark.read.parquet(input)``) with ``spark``, ``pas``, ``F``, the
 ``ext``/``operators`` modules (``dedup``, ``similarity``, ``text``,
-``asof``, ...) in scope.  Spark's own
+``asof``, ...) and the test oracles ``sql_oracles`` in scope.  Spark's own
 ``PYSPARK_SUBMIT_ARGS="--driver-memory 8g pyspark-shell"`` sizes the
 driver heap for doc-scale inputs.
 """
@@ -84,7 +84,8 @@ def _scope(spark, df) -> dict:
     import pandas_alchemy_spark as pas
     from pyspark.sql import functions as F
 
-    scope = {"spark": spark, "df": df, "pas": pas, "F": F}
+    scope = {"spark": spark, "df": df, "pas": pas, "F": F,
+             "sql_oracles": importlib.import_module("tests.sql_oracles")}
     for sub in ("ext", "operators"):
         pkg = importlib.import_module(f"pandas_alchemy_spark.{sub}")
         for info in pkgutil.iter_modules(pkg.__path__):

@@ -73,8 +73,7 @@ def main():
     waves = [w.unionAll(planted(5, 1_002_000_000_000 + i * 10))
              for i, w in enumerate(waves)]
     t0 = time.time()
-    idx = dedup.build_reference_index(base, num_hashes=16, bands=4,
-                                      fast_hash=True)
+    idx = dedup.build_reference_index(base, num_hashes=16, bands=4)
     build_s = round(time.time() - t0, 2)
     ref_rows = []
     cum = base
@@ -96,7 +95,7 @@ def main():
             q_chain_s = round(time.time() - t0, 2)
             t0 = time.time()
             reb = dedup.build_reference_index(
-                cum, num_hashes=16, bands=4, fast_hash=True)
+                cum, num_hashes=16, bands=4)
             rebuild_s = round(time.time() - t0, 2)
             hits_reb = {(r.id_new, r.id_ref)
                         for r in dedup.cross_dedup_pairs(
@@ -142,8 +141,7 @@ def main():
                      held_q, index=comp, threshold=0.4).collect()}
     q_comp_s = round(time.time() - t0, 2)
     t0 = time.time()
-    reb = dedup.build_reference_index(cum, num_hashes=16, bands=4,
-                                      fast_hash=True)
+    reb = dedup.build_reference_index(cum, num_hashes=16, bands=4)
     fire_rebuild_s = round(time.time() - t0, 2)
     hits_reb = {(r.id_new, r.id_ref)
                 for r in dedup.cross_dedup_pairs(

@@ -72,14 +72,13 @@ def main():
             extra[f"{name}_capped_{what}"] = int(n)
         print(f"{name}: {times[name]}s", file=sys.stderr)
 
-    # DSIR: target = the 'en' slice; production fast_hash path
+    # DSIR: target = the 'en' slice
     target = docs.filter(F.col("lang") == "en")
     iw_holder = {}
 
     def _iw():
         iw = pipeline.importance_weights(docs, target,
-                                         buckets=1 << 16,
-                                         fast_hash=True)
+                                         buckets=1 << 16)
         iw_holder["iw"] = iw.persist()
         # materialize WITHOUT the noop helper: noop() clearCache()s,
         # which would evict this persist and make every selection leg
@@ -126,8 +125,7 @@ def main():
 
     def _xd():
         xp = dedup.cross_dedup_pairs(new_sl, ref_sl, num_hashes=16,
-                                     bands=4, threshold=0.4,
-                                     fast_hash=True)
+                                     bands=4, threshold=0.4)
         extra["xdup_pairs"] = xp.count()
 
     run("cross_dedup", _xd)
@@ -135,8 +133,7 @@ def main():
         lambda: extra.__setitem__(
             "against_kept",
             dedup.dedup_against(new_sl, ref_sl, num_hashes=16,
-                                bands=4, threshold=0.4,
-                                fast_hash=True).count()))
+                                bands=4, threshold=0.4).count()))
 
     # the quality/featurization trio at 500k docs.  Plan-audit
     # assertion (r8 verdict item 1): the pushed-filter fixes must be

@@ -201,8 +201,7 @@ def main():
                        .parquet(new_dir))
             out = stream_events.streaming_dedup_against(
                 xstream, ref_sl, num_hashes=16, bands=4,
-                threshold=0.4, fast_hash=True,
-                stream_partitions=32)
+                threshold=0.4, stream_partitions=32)
             t0 = time.time()
             q = (out.writeStream.format("noop")
                  .option("checkpointLocation",
@@ -246,7 +245,7 @@ def main():
             ref_sl = batch_docs.filter("doc_id % 10 <> 0")
             t0 = time.time()
             idx = _dd.build_reference_index(
-                ref_sl, num_hashes=16, bands=4, fast_hash=True)
+                ref_sl, num_hashes=16, bands=4)
             build_s = round(time.time() - t0, 2)
             results["dedup_index_build"] = build_s
             xstream = (spark.readStream.schema(batch_docs.schema)
