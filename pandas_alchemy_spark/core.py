@@ -737,11 +737,15 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             "scans) or groupby(...).expanding()")
 
     def ewm(self, alpha: float):
-        """pandas ``df.ewm(alpha)`` (mean only) over the numeric
-        columns: every column's exact recurrence in ONE fused
-        segmented scan (one carry row per partition holding all
-        columns' weighted tails)."""
-        return _FrameEwm(self, alpha)
+        """pandas ``df.ewm(alpha)`` over the numeric columns: each of
+        mean/sum/var/std runs every column's exact recurrence in ONE
+        fused segmented scan (one carry row per partition holding all
+        columns' weighted totals) — the Series handle over more
+        columns."""
+        from .operators.analytic import Ewm
+        handle = Ewm(self, alpha)
+        self._require_numeric("ewm")
+        return handle
 
     def rank(self, method: str = "min", ascending: bool = True,
              pct: bool = False):
@@ -1675,19 +1679,3 @@ class _FrameRolling:
         if name in self._AGGS:
             return lambda: self._agg(name)
         raise AttributeError(name)
-
-
-class _FrameEwm:
-    """``df.ewm(alpha)`` handle (mean only) — one fused multi-column
-    exact scan."""
-
-    def __init__(self, df, alpha):
-        from .operators.scan import _check_alpha
-        _check_alpha(float(alpha))
-        df._require_numeric("ewm")
-        self._df = df
-        self._alpha = float(alpha)
-
-    def mean(self):
-        from .operators.scan import ewm_mean_multi
-        return self._df._scan(ewm_mean_multi, self._alpha)

@@ -580,11 +580,12 @@ class SeriesGroupBy(_WindowVerbs):
                             lineage=lineage)._carry(df, reordered=True)
 
     def ewm(self, alpha: float):
-        """pandas ``groupby(k)[c].ewm(alpha).mean()`` — the JVM window
-        power-trick form (operators/scan.ewm_mean_grouped): one shuffle
-        on the keys, codegen, no UDF.  Bounded group lengths (pow
-        overflow past ~log(DBL_MAX)/-log(1-alpha) rows/group); route
-        through scan.ewm_mean(by=) for unbounded sequences."""
+        """pandas ``groupby(k)[c].ewm(alpha)`` — the mean is the JVM
+        window power-trick form (operators/scan.ewm_mean_grouped): one
+        shuffle on the keys, codegen, no UDF.  Bounded group lengths
+        (pow overflow past ~log(DBL_MAX)/-log(1-alpha) rows/group);
+        ``mean(exact=True)``, sum, var and std run pandas' own
+        recurrence per group for unbounded sequences."""
         return _GroupedEwm(self, alpha)
 
     def rolling(self, window, min_periods: int | None = None):
@@ -641,7 +642,7 @@ class SeriesGroupBy(_WindowVerbs):
 
 
 class _GroupedEwm:
-    """``df.groupby(k)[c].ewm(alpha)`` handle (mean only)."""
+    """``df.groupby(k)[c].ewm(alpha)`` handle."""
 
     def __init__(self, sgb: SeriesGroupBy, alpha: float):
         from .scan import _check_alpha
@@ -649,66 +650,41 @@ class _GroupedEwm:
         self._sgb = sgb
         self._alpha = float(alpha)
 
-    def _scan(self, builder):
-        """Shared plumbing: project (index, keys, value), run the
-        scan ``builder(tmp, order_cols, by_cols)``, and wrap the
-        result Series (lineage flags copied once, here)."""
-        sgb = self._sgb
-        df = sgb._df
-        n = df._n_idx()
-        idx = [df._idx_at(i).alias(I.idx_name(i)) for i in range(n)]
-        keys = [k.alias(f"__k_{j}") for j, k in enumerate(sgb._keys())]
-        val = df._col_at(df._columns.get_loc(sgb._label)).alias("__v")
-        tmp = df._sdf.select(*idx, *keys, val)
-        out = builder(tmp, [I.idx_name(i) for i in range(n)],
-                      [f"__k_{j}" for j in range(len(keys))])
-        body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
-                          F.col("__ewm").alias(I.col_name(0)))
-        return sgb._Series(df._index, None, body,
-                           sgb._label)._carry(df, reordered=True)
+    def _exact(self, stat: str, **kw):
+        """pandas' own recurrence per group — one applyInPandas on
+        the keys, exact for any group length, bounded per-group
+        state."""
+        alpha = self._alpha
+        return self._sgb._apply_grouped(
+            lambda pdf: getattr(pdf["__v"].astype("float64")
+                                .ewm(alpha=alpha, adjust=True),
+                                stat)(**kw))
 
     def mean(self, exact: bool = False):
         """Grouped EWM mean.  Default: the codegen'd window pow-trick
-        (one shuffle, no UDF) with a runtime guard that RAISES on any
-        group longer than ``scan.pow_trick_max_rows(alpha)`` rather
-        than silently overflowing to NaN.  ``exact=True``: the
-        applyInPandas per-group recurrence (scan.ewm_mean(by=)) —
-        exact for any group length."""
-        from .scan import ewm_mean, ewm_mean_grouped
+        (scan.ewm_mean_grouped: one shuffle, no UDF) with a runtime
+        guard that RAISES on any group longer than
+        ``scan.pow_trick_max_rows(alpha)`` rather than silently
+        overflowing to NaN.  ``exact=True``: the per-group
+        recurrence, exact for any group length."""
         if exact:
-            return self._scan(
-                lambda tmp, order, by: ewm_mean(
-                    tmp, "__v", order, self._alpha, by=by,
-                    out_col="__ewm"))
-        return self._scan(
-            lambda tmp, order, by: ewm_mean_grouped(
-                tmp, "__v", order, by, self._alpha, out_col="__ewm"))
+            return self._exact("mean")
+        from .scan import ewm_mean_grouped
+        sgb = self._sgb
+        return sgb._wrap(lambda c: ewm_mean_grouped(
+            c, sgb._keys(), _order_cols(sgb._df), self._alpha))
 
     def sum(self):
-        """Grouped EWM weighted sum — the exact per-group recurrence
-        (scan.ewm_mean(by=, stat='sum'))."""
-        from .scan import ewm_mean
-        return self._scan(
-            lambda tmp, order, by: ewm_mean(
-                tmp, "__v", order, self._alpha, by=by,
-                out_col="__ewm", stat="sum"))
+        return self._exact("sum")
 
     def var(self, bias: bool = False):
-        """Grouped EWM variance — the exact applyInPandas transport
-        (one shuffle on the keys, bounded per-group state; the
+        """Grouped EWM variance — the exact per-group recurrence (the
         pow-trick fast path is mean-only: the bias correction's Σw²
         channel doubles its overflow surface)."""
-        return self._second_moment(bias, std=False)
+        return self._exact("var", bias=bias)
 
     def std(self, bias: bool = False):
-        return self._second_moment(bias, std=True)
-
-    def _second_moment(self, bias: bool, std: bool):
-        from .scan import ewm_var
-        return self._scan(
-            lambda tmp, order, by: ewm_var(
-                tmp, "__v", order, self._alpha, by=by,
-                out_col="__ewm", std=std, bias=bias))
+        return self._exact("std", bias=bias)
 
     def agg(self, func):
         """Same string dispatch as the global ``Ewm.agg`` — the
@@ -724,47 +700,39 @@ class _GroupedEwm:
 
 
 class Ewm:
-    """``series.ewm(alpha)`` handle — the EXACT distributed segmented
-    scan (operators/scan.ewm_mean_multi): range-partitioned on the
-    index order, per-partition recurrence, one scalar carry per
-    partition to the driver, second pass rebuilds the global
-    recurrence.  No single-partition window — unlike the global cum*
-    verbs, this one holds at 100 TB."""
+    """``obj.ewm(alpha)`` handle of a Series or a numeric DataFrame:
+    every statistic is ONE exact distributed segmented scan
+    (operators/scan.ewm_multi through ``BaseFrame._scan``; a Series is
+    the one-column case) — range-partitioned on the index order, one
+    carry row of four weighted totals per column and partition to the
+    driver, a second pass rebuilds the global recurrence.  No
+    single-partition window — unlike the global cum* verbs, this one
+    holds at 100 TB."""
 
-    def __init__(self, series, alpha: float):
+    def __init__(self, obj, alpha: float):
         from .scan import _check_alpha
         _check_alpha(float(alpha))
-        self._s = series
+        self._obj = obj
         self._alpha = float(alpha)
 
+    def _stat(self, stat: str, bias: bool = False):
+        from .scan import ewm_multi
+        return self._obj._scan(ewm_multi, self._alpha, stat=stat,
+                               bias=bias)
+
     def mean(self):
-        from .scan import ewm_mean_multi
-        return self._s._scan(ewm_mean_multi, self._alpha)
-
-    def var(self, bias: bool = False):
-        """pandas ``ewm(alpha).var(bias=)`` — the mean scan's
-        machinery with a SECOND moment channel (operators/scan.
-        ewm_var): 2-scalar carries per partition, closed-form weight
-        sums, no single-partition window."""
-        return self._second_moment(bias, std=False)
-
-    def std(self, bias: bool = False):
-        return self._second_moment(bias, std=True)
+        return self._stat("mean")
 
     def sum(self):
-        """pandas ``ewm(alpha, adjust=True).sum()`` — the weighted sum
-        is the mean times its closed-form weight total
-        Σ_{k<t} (1−α)^k = (1 − (1−α)^t)/α, with t the 1-based row
-        position from the expanding-count scan: two segmented scans +
-        one index-aligned projection, still no single-partition
-        window.  (α=1 collapses to the identity: sum == mean.)"""
-        m = self.mean()
-        if self._alpha == 1.0:
-            return m
-        rn = self._s.expanding(1).count()
-        w = 1.0 - self._alpha
-        den = (1.0 - (w ** rn)) / self._alpha
-        return m * den
+        """pandas ``ewm(alpha, adjust=True).sum()``: the weighted sum
+        Σw·x itself."""
+        return self._stat("sum")
+
+    def var(self, bias: bool = False):
+        return self._stat("var", bias)
+
+    def std(self, bias: bool = False):
+        return self._stat("std", bias)
 
     def corr(self, other=None, bias: bool = False):
         raise NotImplementedError(
@@ -786,20 +754,6 @@ class Ewm:
             "ewm.agg supports a named aggregate string")
 
     aggregate = agg
-
-    def _second_moment(self, bias: bool, std: bool):
-        from ..core import Series
-        from .scan import ewm_var
-        s = self._s
-        n = s._n_idx()
-        idx = [s._idx_at(i).alias(I.idx_name(i)) for i in range(n)]
-        tmp = s._sdf.select(*idx, s._the_col.alias("__v"))
-        out = ewm_var(tmp, "__v", [I.idx_name(i) for i in range(n)],
-                      self._alpha, out_col="__ewm", std=std,
-                      bias=bias)
-        body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
-                          F.col("__ewm").alias(I.col_name(0)))
-        return Series(s._index, None, body, s.name)._carry(s)
 
 
 _OFFSET_UNITS_US = {

@@ -1,27 +1,30 @@
-"""Exponentially-weighted mean as a distributed scan.
+"""Exponentially-weighted statistics as distributed scans.
 
-pandas' ``Series.ewm(alpha).mean()`` is a sequential recurrence — the
-one window-family verb Spark has no native operator for.  Three
-formulations, picked by shape:
+pandas' ``ewm(alpha)`` statistics are sequential recurrences — the
+one window family Spark has no native operator for.  Two kernels:
 
-- ``ewm_mean_grouped`` (JVM window, no UDF): the adjust=True weighted
-  sum ``num_t = pow(w, rn_t) * running_sum(x_i * pow(w, -rn_i))``
+- ``ewm_multi``: the one global kernel.  mean, sum, var and std
+  (``bias`` both ways) of one or many columns from an exact two-pass
+  segmented scan over four weighted totals per column.  Pass A
+  computes one carry row per partition; the driver folds the P carries
+  into prefix states (P ~ thousands, scalars only — never row data);
+  pass B rebuilds the exact global recurrence from each partition's
+  prefix.  No global window, no single-task funnel — this is how a
+  sequential recurrence scales to 100 TB.
+- ``ewm_mean_grouped`` (JVM window, no UDF): the grouped mean as the
+  adjust=True weighted sum ``sum(x * pow(w, -rn)) / sum(pow(w, -rn))``
   over an ordered per-group window.  Running window sums evaluate in
   frame order on every engine, so the result is BIT-IDENTICAL to the
   same SQL on DuckDB — it is the oracle-checkable form.  Bounded:
   ``pow(w, -rn)`` overflows past ``rn > log(DBL_MAX)/-log(w)`` rows
   per group (~700 rows at alpha=0.65, ~9700 at alpha=0.07), so it is
-  the small-bounded-groups fast path.
-- ``ewm_mean`` with ``by=``: applyInPandas per group — pandas' own
-  stable recurrence, any group length, state bounded by the group.
-- ``ewm_mean_multi`` (``ewm_mean`` without ``by=``): an exact
-  two-pass segmented scan over one or many columns.  Pass A
-  computes one carry per partition (the partition-local unnormalized
-  tail sum); the driver folds the P carries into prefix states (P ~
-  thousands, scalars only — never row data); pass B rebuilds the
-  exact global recurrence from each partition's prefix.  No global
-  window, no single-task funnel — this is how a sequential recurrence
-  scales to 100 TB.
+  the small-bounded-groups fast path; the exact grouped statistics
+  run pandas' own recurrence per group
+  (``analytic._GroupedEwm``, one applyInPandas on the keys).
+
+Nulls follow pandas (``adjust=True, ignore_na=False``) everywhere:
+weights decay per row position, null rows included, and only
+non-null rows add weight.
 
 No counterpart in the reference (pandas-alchemy has no ewm); the
 pandas API contract is the spec.
@@ -34,6 +37,7 @@ import sys
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -41,7 +45,7 @@ from pyspark.sql import functions as F
 
 def _check_alpha(alpha: float) -> None:
     """pandas contract: ``ewm`` requires ``0 < alpha <= 1`` (outside it
-    the closed-form denominators divide by zero or alternate sign)."""
+    the weights 1 - alpha grow or alternate sign)."""
     if not (0.0 < alpha <= 1.0):
         raise ValueError(
             f"alpha must satisfy 0 < alpha <= 1, got {alpha!r}")
@@ -63,286 +67,134 @@ def pow_trick_max_rows(alpha: float) -> int:
                       / -math.log(w)))
 
 
-def ewm_mean_grouped(sdf: SparkDF, value_col: str, order_cols,
-                     by, alpha: float, out_col: str = "ewm") -> SparkDF:
-    """adjust=True EWM mean per group, as pure JVM window expressions:
-    ``sum(x*pow(w,-rn)) / sum(pow(w,-rn))`` over the ordered running
-    frame (the common ``pow(w, rn)`` rescale cancels exactly).
+def ewm_mean_grouped(x: Column, by, order, alpha: float) -> Column:
+    """adjust=True EWM mean of ``x`` per group of ``by`` in ``order``,
+    as pure JVM window expressions: ``sum(x*pow(w,-rn)) /
+    sum(pow(w,-rn))`` over the ordered running frame (the common
+    ``pow(w, rn)`` rescale cancels exactly), the weight total over
+    non-null rows only — a null row repeats the last mean and a
+    leading null stays null, as in pandas.
 
-    One shuffle on the group keys, two window passes over it, fully
-    codegen — the bounded-group fast path.  ``pow(w,-rn)`` overflows
+    One shuffle on the group keys, codegen.  ``pow(w,-rn)`` overflows
     past ``rn > log(DBL_MAX)/-log(w)`` rows per group, so a runtime
     guard RAISES (``raise_error``) on any group longer than
     :func:`pow_trick_max_rows` instead of silently returning inf/inf =
-    NaN; use ``ewm_mean(by=...)`` beyond that bound."""
+    NaN; ``mean(exact=True)`` runs past that bound."""
     _check_alpha(alpha)
     w = 1.0 - alpha
-    by = [by] if isinstance(by, str) else list(by)
-    order_cols = ([order_cols] if isinstance(order_cols, str)
-                  else list(order_cols))
+    owin = Window.partitionBy(*by).orderBy(*order)
+    run = owin.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     if w == 0.0:
-        # alpha == 1: adjust=True mean_t == x_t exactly (zero memory)
-        return sdf.withColumn(out_col, F.col(value_col).cast("double"))
+        # alpha == 1: the mean is the last non-null value (zero memory)
+        return F.last(x, ignorenulls=True).over(run).cast("double")
     nmax = pow_trick_max_rows(alpha)
-    win = (Window.partitionBy(*by).orderBy(*order_cols)
-           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    rn = F.row_number().over(
-        Window.partitionBy(*by).orderBy(*order_cols))
-    d = sdf.withColumn("__rn", rn)
-    num = F.sum(F.col(value_col) * F.pow(F.lit(w), -F.col("__rn"))).over(win)
-    den = F.sum(F.pow(F.lit(w), -F.col("__rn"))).over(win)
-    guarded = F.when(
-        F.col("__rn") > F.lit(nmax),
+    rn = F.row_number().over(owin)
+    wt = F.pow(F.lit(w), -rn)
+    num = F.sum(x * wt).over(run)
+    den = F.sum(F.when(x.isNotNull(), wt)).over(run)
+    return F.when(
+        rn > F.lit(nmax),
         F.raise_error(F.lit(
             f"ewm pow-trick overflow: a group exceeds {nmax} rows at "
-            f"alpha={alpha}; use the exact scan path "
-            "(ewm_mean(by=...) / .ewm(alpha).mean(exact=True))"))
+            f"alpha={alpha}; use the exact per-group path "
+            "groupby(...)[col].ewm(alpha).mean(exact=True)"))
         .cast("double")
     ).otherwise(num / den)
-    return d.withColumn(out_col, guarded).drop("__rn")
 
 
-def ewm_mean(sdf: SparkDF, value_col: str, order_cols, alpha: float,
-             by=None, out_col: str = "ewm",
-             num_partitions: int | None = None,
-             stat: str = "mean") -> SparkDF:
-    """pandas ``ewm(alpha, adjust=True).mean()`` over ``order_col``.
-
-    ``by=`` groups: one applyInPandas per group (exact for any group
-    length; ``stat`` may also be "sum" there — same recurrence minus
-    the weight normalization).  Global: :func:`ewm_mean_multi` over
-    the one column (mean only — Ewm.sum composes it with the
-    closed-form weight total).  Nulls follow pandas' default
-    ``ignore_na=False`` on both paths.
-    """
-    _check_alpha(alpha)
-    if stat not in ("mean", "sum"):
-        raise ValueError(f"stat must be 'mean' or 'sum', got {stat!r}")
-    if stat != "mean" and by is None:
-        raise ValueError("global ewm stat 'sum' composes at the Ewm "
-                         "level; the scan computes the mean")
-    order_cols = ([order_cols] if isinstance(order_cols, str)
-                  else list(order_cols))
-    if by is not None:
-        byl = [by] if isinstance(by, str) else list(by)
-        cols = sdf.columns
-
-        def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(order_cols, kind="mergesort")
-            pdf[out_col] = getattr(
-                pdf[value_col].astype("float64")
-                .ewm(alpha=alpha, adjust=True), stat)()
-            return pdf
-
-        schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in sdf.schema.fields) + f", {out_col} double"
-        return (sdf.groupBy(*byl).applyInPandas(per_group, schema)
-                .select(*cols, out_col))
-
-    return ewm_mean_multi(sdf, [value_col], order_cols, alpha,
-                          out_cols=[out_col],
-                          num_partitions=num_partitions)
-
-
-def _partition_scan2(it, alpha):
-    """Per-partition pass A for :func:`ewm_var`: fold every Arrow
-    batch, emitting ONE carry row (pid, n, tail1=Σw^Δ·x, tail2=Σw^Δ·x²)."""
+def _ewm_sums(x: pd.Series, alpha: float, carry) -> tuple:
+    """One batch of one column: the running totals Σw·x, Σw·x², Σw
+    and Σw² over its NON-NULL rows (the rows of a 4×k array), each
+    continued from the carried totals ``carry``, plus the non-null
+    mask.  Weights decay per row position, nulls included (pandas
+    ``ignore_na=False``): by w, and by w² for Σw²."""
     w = 1.0 - alpha
-    t1 = t2 = 0.0
-    n = 0
-    pid = None
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        pid = int(pdf["__pid"].iloc[0])
-        x = pdf["__x"].astype("float64")
-        k = len(x)
-        den_end = (1.0 - w ** k) / (1.0 - w) if w != 0.0 else 1.0
-        m1 = x.ewm(alpha=alpha, adjust=True).mean()
-        m2 = (x * x).ewm(alpha=alpha, adjust=True).mean()
-        t1 = t1 * (w ** k) + float(m1.iloc[-1]) * den_end
-        t2 = t2 * (w ** k) + float(m2.iloc[-1]) * den_end
-        n += k
-    if pid is not None:
-        yield pd.DataFrame({"pid": [pid], "n": [n],
-                            "t1": [t1], "t2": [t2]})
-
-
-def ewm_var(sdf: SparkDF, value_col: str, order_cols, alpha: float,
-            by=None, out_col: str = "ewmv", std: bool = False,
-            bias: bool = False,
-            num_partitions: int | None = None) -> SparkDF:
-    """pandas ``ewm(alpha, adjust=True).var(bias=False)`` (or std).
-
-    ``by=`` groups: one applyInPandas per group — exact for any group
-    length, bounded per-group state, one shuffle (the 100 TB path for
-    keyed data).  Global: the mean scan's segmented machinery with a
-    SECOND moment channel — per-partition tails of Σw^Δ·x and
-    Σw^Δ·x², one 2-scalar carry per partition, and the closed-form
-    weight sums den=(1−w^t)/(1−w), den²ᵢ=(1−w^{2t})/(1−w²) (weights
-    are a pure function of the global row position, so only the data
-    channels need carrying).  bias=False applies pandas' reliability
-    correction den²/(den²−Σw²).  Nulls unsupported — filter first
-    (the closed-form weight sums count every row)."""
-    _check_alpha(alpha)
-    order_cols = ([order_cols] if isinstance(order_cols, str)
-                  else list(order_cols))
-    w = 1.0 - alpha
-
-    def _finish(r):
-        return np.sqrt(r) if std else r
-
-    if by is not None:
-        byl = [by] if isinstance(by, str) else list(by)
-        cols = sdf.columns
-
-        def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(order_cols, kind="mergesort")
-            x = pdf[value_col].astype("float64")
-            e = x.ewm(alpha=alpha, adjust=True)
-            v = e.var(bias=bias)
-            pdf[out_col] = _finish(v.to_numpy())
-            return pdf
-
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in sdf.schema.fields) + f", {out_col} double"
-        return sdf.groupBy(*byl).applyInPandas(per_group, schema)
-
-    from .segscan import _pin
-    base = _pin(sdf, [F.col(c) for c in order_cols], num_partitions)
-    carries = (base.select("__pid", F.col(value_col).cast("double")
-                           .alias("__x"))
-               .mapInPandas(lambda it: _partition_scan2(it, alpha),
-                            "pid int, n long, t1 double, t2 double")
-               .collect())
-    carries.sort(key=lambda r: r["pid"])
-    pref1: dict[int, float] = {}
-    pref2: dict[int, float] = {}
-    pref_n: dict[int, int] = {}
-    p1 = p2 = 0.0
-    off = 0
-    for r in carries:
-        pref1[r["pid"]] = p1
-        pref2[r["pid"]] = p2
-        pref_n[r["pid"]] = off
-        p1 = p1 * (w ** r["n"]) + r["t1"]
-        p2 = p2 * (w ** r["n"]) + r["t2"]
-        off += r["n"]
-
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in sdf.schema.fields) + f", {out_col} double"
-
-    def pass_b(it):
-        carry = None  # (tail1, tail2, t_local)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            if carry is None:
-                carry = (pref1.get(pid, 0.0), pref2.get(pid, 0.0), 0)
-            in1, in2, t0 = carry
-            x = pdf[value_col].astype("float64")
-            k = len(x)
-            pos = np.arange(1, k + 1, dtype="float64")
-            den_local = ((1.0 - w ** pos) / (1.0 - w) if w != 0.0
-                         else np.ones(k))
-            m1 = x.ewm(alpha=alpha, adjust=True).mean().to_numpy()
-            m2 = (x * x).ewm(alpha=alpha,
-                             adjust=True).mean().to_numpy()
-            decay = w ** pos
-            num1 = m1 * den_local + in1 * decay
-            num2 = m2 * den_local + in2 * decay
-            gpos = pref_n.get(pid, 0) + t0 + pos
-            if w != 0.0:
-                den = (1.0 - w ** gpos) / (1.0 - w)
-                den2 = (1.0 - (w * w) ** gpos) / (1.0 - w * w) \
-                    if w != 1.0 else gpos
-            else:
-                den = np.ones(k)
-                den2 = np.ones(k)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                mean = num1 / den
-                var_b = num2 / den - mean * mean
-                var_b = np.maximum(var_b, 0.0)  # fp cancellation guard
-                if bias:
-                    out = var_b
-                else:
-                    out = var_b * den * den / (den * den - den2)
-            res = pdf.drop(columns=["__pid"]).copy()
-            res[out_col] = _finish(out)
-            carry = (in1 * (w ** k) + m1[-1] * den_local[-1],
-                     in2 * (w ** k) + m2[-1] * den_local[-1],
-                     t0 + k)
-            yield res
-
-    return base.mapInPandas(pass_b, out_fields)
-
-
-def _ewm_sums(x: pd.Series, alpha: float, num: float, den: float,
-              decay: np.ndarray):
-    """One batch of one column: the running weighted value total and
-    weight total over its NON-NULL rows, both continued from the
-    carried totals ``num``/``den`` (``decay`` = w^1..w^k), plus the
-    non-null mask.  Weights decay per row position, nulls included
-    (pandas ``ignore_na=False``)."""
     obs = x.notna().to_numpy()
-    e = dict(alpha=alpha, adjust=True)
-    n_loc = x.ewm(**e).sum().fillna(0.0).to_numpy()
-    d_loc = pd.Series(obs, dtype="float64").ewm(**e).sum().to_numpy()
-    return n_loc + num * decay, d_loc + den * decay, obs
+    seen = pd.Series(obs, dtype="float64")
+    local = [x.ewm(alpha=alpha, adjust=True).sum().fillna(0.0),
+             (x * x).ewm(alpha=alpha, adjust=True).sum().fillna(0.0),
+             seen.ewm(alpha=alpha, adjust=True).sum(),
+             seen.ewm(alpha=1.0 - w * w, adjust=True).sum()]
+    return (np.array([s.to_numpy() for s in local])
+            + _decayed(carry, w, np.arange(1, len(x) + 1)), obs)
+
+
+def _decayed(sums, w: float, pos) -> np.ndarray:
+    """The four totals ``sums`` after ``pos`` more rows: one column
+    per position when ``pos`` is an array."""
+    d = w ** np.asarray(pos, dtype="float64")
+    return np.stack([sums[0] * d, sums[1] * d, sums[2] * d,
+                     sums[3] * d * d])
+
+
+def _ewm_stat(s: np.ndarray, stat: str, bias: bool) -> np.ndarray:
+    """The statistic at a non-null row from its four totals ``s``:
+    mean = Σw·x/Σw; biased var = Σw·x²/Σw − mean² (clamped at 0
+    against cancellation); unbiased var = biased var · (Σw)²/((Σw)² −
+    Σw²), NaN when that denominator is not positive; std = √var.  For
+    the sum it is the mean, which is NaN before the first value."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        mean = s[0] / s[2]
+        if stat in ("mean", "sum"):
+            return mean
+        var = np.maximum(s[1] / s[2] - mean * mean, 0.0)
+        if not bias:
+            sq = s[2] * s[2]
+            d = sq - s[3]
+            var = np.where(d > 0, var * sq / d, np.nan)
+    return np.sqrt(var) if stat == "std" else var
 
 
 def _partition_scan_multi(it, alpha, ncols):
-    """Pass A for :func:`ewm_mean_multi`: one carry row per partition
-    with every column's weighted value and weight totals at the
-    partition's end and at its last non-null row (``l*``; position
-    ``p*``, 0 when the partition holds no value)."""
-    w = 1.0 - alpha
-    tails = [(0.0, 0.0)] * ncols
-    last = [(0.0, 0.0, 0)] * ncols
+    """Pass A for :func:`ewm_multi`: one carry row per partition with
+    every column's four totals at the partition's end (``t*``) and at
+    its last non-null row (``l*``; position ``p*``, 0 when the
+    partition holds no value)."""
+    tails = [np.zeros(4)] * ncols
+    last = [(np.zeros(4), 0)] * ncols
     n = 0
     pid = None
     for pdf in it:
         if len(pdf) == 0:
             continue
         pid = int(pdf["__pid"].iloc[0])
-        k = len(pdf)
-        decay = w ** np.arange(1, k + 1, dtype="float64")
         for j in range(ncols):
-            num, den, obs = _ewm_sums(pdf[f"__x{j}"].astype("float64"),
-                                      alpha, *tails[j], decay)
+            s, obs = _ewm_sums(pdf[f"__x{j}"].astype("float64"), alpha,
+                               tails[j])
             if obs.any():
                 q = int(np.flatnonzero(obs)[-1])
-                last[j] = (num[q], den[q], n + q + 1)
-            tails[j] = (num[-1], den[-1])
-        n += k
+                last[j] = (s[:, q], n + q + 1)
+            tails[j] = s[:, -1]
+        n += len(pdf)
     if pid is not None:
         out = {"pid": [pid], "n": [n]}
         for j in range(ncols):
-            out.update({f"t{j}": [tails[j][0]], f"d{j}": [tails[j][1]],
-                        f"l{j}": [last[j][0]], f"ld{j}": [last[j][1]],
-                        f"p{j}": [last[j][2]]})
+            out.update({f"t{j}": [tails[j].tolist()],
+                        f"l{j}": [last[j][0].tolist()],
+                        f"p{j}": [last[j][1]]})
         yield pd.DataFrame(out)
 
 
-def ewm_mean_multi(sdf: SparkDF, value_cols, order_cols, alpha: float,
-                   *, out_cols,
-                   num_partitions: int | None = None) -> SparkDF:
-    """Global exact EWM mean as a two-pass segmented scan: every
-    column's recurrence in ONE scan.  Range-partition on the scan
-    order and pin the layout (``segscan._pin``: repartitionByRange
-    samples, the checkpoint makes the layout a fact, and an EWM over
-    the same frame and order as other scan verbs reuses their
-    shuffle); pass A folds each partition into one carry row holding
-    every column's weighted tails (P rows to the driver, never row
-    data); pass B rebuilds the exact global recurrence from each
-    partition's prefix.
+def ewm_multi(sdf: SparkDF, value_cols, order_cols, alpha: float, *,
+              out_cols, stat: str = "mean", bias: bool = False,
+              num_partitions: int | None = None) -> SparkDF:
+    """Global exact EWM ``stat`` (mean, sum, var or std; ``bias`` as
+    in pandas) as a two-pass segmented scan: every column's
+    recurrence in ONE scan.  Range-partition on the scan order and pin
+    the layout (``segscan._pin``: repartitionByRange samples, the
+    checkpoint makes the layout a fact, and an EWM over the same frame
+    and order as other scan verbs reuses their shuffle).  Every
+    statistic reads four totals per column — Σw·x, Σw·x², Σw and Σw²
+    over non-null rows: pass A folds each partition into one carry row
+    of them (P rows to the driver, never row data); pass B rebuilds
+    the exact global recurrence from each partition's prefix.
 
-    Nulls follow pandas (``adjust=True, ignore_na=False``): the
-    weight total runs over non-null rows only, a null row repeats
-    the last mean, and leading nulls stay NaN."""
+    Nulls follow pandas (``adjust=True, ignore_na=False``): a null row
+    repeats the statistic at the last value (the sum decays with its
+    weights), and leading nulls stay NaN.  The repeated value is
+    carried, not recomputed, so ``alpha=1`` and long null runs (totals
+    underflowing to 0/0) keep it; deep in such a run pandas recomputes
+    the unbiased factor from underflowed totals and reads NaN."""
     _check_alpha(alpha)
     w = 1.0 - alpha
     ncols = len(value_cols)
@@ -352,26 +204,24 @@ def ewm_mean_multi(sdf: SparkDF, value_cols, order_cols, alpha: float,
         "__pid", *[F.col(c).cast("double").alias(f"__x{j}")
                    for j, c in enumerate(value_cols)])
     schema = "pid int, n long, " + ", ".join(
-        f"t{j} double, d{j} double, l{j} double, ld{j} double, "
-        f"p{j} long" for j in range(ncols))
+        f"t{j} array<double>, l{j} array<double>, p{j} long"
+        for j in range(ncols))
     carries = proj.mapInPandas(
         lambda it: _partition_scan_multi(it, alpha, ncols),
         schema).collect()
     carries.sort(key=lambda r: r["pid"])
-    # per column: (value total, weight total, last mean) before each
-    # partition; the last mean is kept apart because the totals of a
-    # long null run can underflow to 0/0
+    # per column: (four totals, statistic at the last value) before
+    # each partition
+    start = [(np.zeros(4), math.nan)] * ncols
     prefix: dict[int, list] = {}
-    acc = [(0.0, 0.0, math.nan)] * ncols
+    acc = list(start)
     for r in carries:
         prefix[r["pid"]] = list(acc)
-        for j, (num, den, mean) in enumerate(acc):
+        for j, (sums, b) in enumerate(acc):
             if r[f"p{j}"]:
-                f = w ** r[f"p{j}"]
-                mean = ((r[f"l{j}"] + num * f)
-                        / (r[f"ld{j}"] + den * f))
-            f = w ** r["n"]
-            acc[j] = (num * f + r[f"t{j}"], den * f + r[f"d{j}"], mean)
+                at = np.array(r[f"l{j}"]) + _decayed(sums, w, r[f"p{j}"])
+                b = float(_ewm_stat(at, stat, bias))
+            acc[j] = (np.array(r[f"t{j}"]) + _decayed(sums, w, r["n"]), b)
 
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in sdf.schema.fields)
@@ -383,21 +233,19 @@ def ewm_mean_multi(sdf: SparkDF, value_cols, order_cols, alpha: float,
             if len(pdf) == 0:
                 continue
             if state is None:
-                state = list(prefix.get(int(pdf["__pid"].iloc[0]),
-                                        [(0.0, 0.0, math.nan)] * ncols))
-            decay = w ** np.arange(1, len(pdf) + 1, dtype="float64")
+                state = list(prefix.get(int(pdf["__pid"].iloc[0]), start))
+            k = len(pdf)
             res = pdf.drop(columns=["__pid"]).copy()
             for j, (c, oc) in enumerate(zip(value_cols, out_cols)):
-                num, den, mean = state[j]
-                num, den, obs = _ewm_sums(pdf[c].astype("float64"),
-                                          alpha, num, den, decay)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    m = np.where(obs, num / den, np.nan)
-                out = pd.Series(m).ffill()
-                if mean == mean:
-                    out = out.fillna(mean)
-                res[oc] = out.to_numpy()
-                state[j] = (num[-1], den[-1], out.iloc[-1])
+                sums, b = state[j]
+                s, obs = _ewm_sums(pdf[c].astype("float64"), alpha, sums)
+                at = np.maximum.accumulate(
+                    np.where(obs, np.arange(k), -1))
+                vals = np.where(at >= 0, _ewm_stat(s, stat, bias)[at], b)
+                state[j] = (s[:, -1], vals[-1])
+                if stat == "sum":
+                    vals = np.where(np.isnan(vals), np.nan, s[0])
+                res[oc] = vals
             yield res
 
     return base.mapInPandas(pass_b, fields)

@@ -3,13 +3,13 @@
 pandas' global ``cumsum``/``cummax``/``rank`` need a TOTAL row order;
 the naive Spark form is an unpartitioned window — one task sees every
 row, the known scale cliff of the parity layer.  This module ports the
-``scan.ewm_mean_multi`` two-pass segmented technique to the whole
+``scan.ewm_multi`` two-pass segmented technique to the whole
 cum*/rank family:
 
 - **Pin the layout**: range-partition on the scan order (index for
   cum*, value for rank), sort within partitions, ``localCheckpoint``
   so both passes see identical partitions (same trade as
-  ``scan.ewm_mean_multi``: the checkpoint stores partitions on
+  ``scan.ewm_multi``: the checkpoint stores partitions on
   executors; at a real cluster scale point a reliable checkpoint dir
   instead).
 - **Pass A (JVM)**: one aggregate row per partition (sum/max/count/
@@ -53,7 +53,7 @@ a k-row window border (or one non-null scalar) rather than a prefix:
 One segmented scan per window verb: every global kernel a verb
 calls (``cum_scan_multi``, ``shift_delta_scan_multi``,
 ``fill_scan_multi``, ``interpolate_scan_multi``,
-``rolling_scan_multi``, ``rank_scan_multi``, ``scan.ewm_mean_multi``)
+``rolling_scan_multi``, ``rank_scan_multi``, ``scan.ewm_multi``)
 takes ``(sdf, value_cols, order_cols, ..., out_cols=)`` over the
 layout ``BaseFrame._scan`` projects, and a Series is its one-column
 case.

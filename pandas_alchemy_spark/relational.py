@@ -343,46 +343,18 @@ class GroupBy:
 
     def ewm(self, alpha: float):
         """Frame-level grouped EWM (mean only): every non-key column's
-        pow-trick window expression fused into one select — single
-        shuffle on the keys, codegen, the same overflow guard as the
-        per-column form."""
-        from .operators.scan import (_check_alpha,
-                                     pow_trick_max_rows)
+        pow-trick window expression (the per-column
+        ``groupby(k)[c].ewm(alpha).mean()``) fused into one select —
+        single shuffle on the keys, codegen, the same overflow
+        guard."""
+        from .operators.scan import _check_alpha
         _check_alpha(float(alpha))
         gb = self
 
         class _FrameGroupedEwm:
             def mean(self):
-                from pyspark.sql import Window
-                w = 1.0 - float(alpha)
-                from .operators.analytic import _order_cols
-                df = gb._df
-                if w == 0.0:
-                    return gb._transform_frame_fn(
-                        lambda cap: df._col_at(
-                            df._columns.get_loc(cap._label))
-                        .cast("double"))
-                nmax = pow_trick_max_rows(float(alpha))
-                keys = gb._key_cols
-                owin = Window.partitionBy(*keys).orderBy(
-                    *_order_cols(df))
-                run = owin.rowsBetween(Window.unboundedPreceding,
-                                       Window.currentRow)
-                rn = F.row_number().over(owin)
-
-                def make(cap):
-                    c = df._col_at(df._columns.get_loc(cap._label))
-                    num = F.sum(c * F.pow(F.lit(w), -rn)).over(run)
-                    den = F.sum(F.pow(F.lit(w), -rn)).over(run)
-                    return F.when(
-                        rn > F.lit(nmax),
-                        F.raise_error(F.lit(
-                            f"ewm pow-trick overflow: a group "
-                            f"exceeds {nmax} rows at alpha={alpha}; "
-                            "use the per-column exact path "
-                            ".ewm(alpha).mean(exact=True)"))
-                        .cast("double")).otherwise(num / den)
-                return gb._transform_frame_fn(make)
+                return gb._transform_frame_fn(
+                    lambda cap: cap.ewm(alpha).mean())
 
         return _FrameGroupedEwm()
 

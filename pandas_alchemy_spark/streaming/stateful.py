@@ -75,44 +75,39 @@ _EWM_STATE_SCHEMA = "num double, den double"
 
 
 def stateful_ewm(stream: DataFrame, alpha: float = 0.25) -> DataFrame:
-    """Streaming twin of ``operators/scan.ewm_mean(by=user_id)``:
+    """Streaming twin of ``groupby(user_id)["value"].ewm(alpha).mean()``:
     per-user exponentially-weighted mean of ``value``, adjust=True.
 
     State per user is the (num, den) pair of the unnormalized weighted
-    sums — two doubles, O(1) regardless of how many events a user ever
-    produced, folded exactly like the batch segmented scan folds its
-    per-partition carries: num' = num * w^k + batch_tail.  Events are
+    sums Σw·x and Σw — two doubles, O(1) regardless of how many events
+    a user ever produced — and each trigger continues them with the
+    batch scan's own fold (``operators/scan._ewm_sums``).  Events are
     ordered by ts within each trigger; across triggers arrival order
     is the stream order (the same contract as every streaming
-    aggregate here).  Null values are DROPPED — the batch twin
-    declares nulls unsupported (filter first), and dropping keeps the
-    two contracts aligned instead of silently pulling means toward an
-    imputed 0."""
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError(
-            f"alpha must satisfy 0 < alpha <= 1, got {alpha!r}")
-    w = 1.0 - alpha
+    aggregate here).  Nulls follow pandas (``ignore_na=False``) as in
+    batch: a null value adds no weight but decays the weights of the
+    values before it, and the emitted mean is the one at the user's
+    last non-null value.  At ``alpha=1`` a null row zeroes both sums,
+    so a trigger holding only nulls then emits null where pandas
+    repeats the last value."""
+    from ..operators.scan import _check_alpha, _ewm_sums
+    _check_alpha(alpha)
 
     def update(key, pdf_iter, state: GroupState):
-        if state.exists:
-            num, den = state.get
-        else:
-            num, den = 0.0, 0.0
+        num, den = state.get if state.exists else (0.0, 0.0)
+        mean = num / den if den else None
         for pdf in pdf_iter:
-            pdf = pdf.sort_values("ts", kind="mergesort")
-            x = pdf["value"].astype("float64").dropna()
-            k = len(x)
-            if k == 0:
+            if len(pdf) == 0:
                 continue
-            mean = x.ewm(alpha=alpha, adjust=True).mean()
-            local_den = (1.0 - w ** k) / (1.0 - w)
-            local_num = float(mean.iloc[-1]) * local_den
-            decay = w ** k
-            num = num * decay + local_num
-            den = den * decay + local_den
+            x = pdf.sort_values("ts", kind="mergesort")["value"]
+            s, obs = _ewm_sums(x.astype("float64"), alpha,
+                               (num, 0.0, den, 0.0))
+            if obs.any():
+                q = int(obs.nonzero()[0][-1])
+                mean = float(s[0, q] / s[2, q])
+            num, den = float(s[0, -1]), float(s[2, -1])
         state.update((num, den))
-        yield pd.DataFrame({"user_id": [key[0]],
-                            "ewm_value": [num / den if den else None]})
+        yield pd.DataFrame({"user_id": [key[0]], "ewm_value": [mean]})
 
     return (stream.groupBy("user_id").applyInPandasWithState(
         update,

@@ -41,8 +41,7 @@ def test_frame_scan_parity(spark, verb, args):
 
 def _holey_frame(n=400, seed=5):
     """``x``: a float column with scattered holes and one null run
-    long enough to cross a range-partition border; ``d``: dense (the
-    ewm scan's contract)."""
+    long enough to cross a range-partition border; ``d``: dense."""
     rng = np.random.default_rng(seed)
     x = rng.normal(size=n)
     x[rng.random(n) < 0.2] = np.nan
@@ -78,6 +77,12 @@ _ONE_SCAN_VERBS = {
     "rolling_apply": (
         "x", lambda o: o.rolling(4, min_periods=1).apply(np.nanmax)),
     "ewm_mean": ("d", lambda o: o.ewm(alpha=0.3).mean()),
+    "ewm_sum": ("x", lambda o: o.ewm(alpha=0.3).sum()),
+    # the variance is Σw·x²/Σw − mean²: its rounding error scales with
+    # mean² + var, so it meets pandas' updating form to 1e-9, not 1e-12
+    "ewm_var": ("x", lambda o: o.ewm(alpha=0.3).var(), 1e-9),
+    "ewm_std_bias": ("x", lambda o: o.ewm(alpha=0.3).std(bias=True),
+                     1e-9),
 }
 
 
@@ -88,7 +93,7 @@ def test_series_scan_is_one_column_frame_scan(spark, verb):
     the one-column frame's result and both match pandas, on a
     multi-partition input with null holes.  A Series scan and a frame
     scan of one plan meeting in the pin cache raise no warning."""
-    col, fn = _ONE_SCAN_VERBS[verb]
+    col, fn, *tol = _ONE_SCAN_VERBS[verb]
     pdf = _holey_frame()
     df = pas.DataFrame.from_pandas(pdf)
     got_s = fn(df[col]).to_pandas().sort_index()
@@ -97,7 +102,8 @@ def test_series_scan_is_one_column_frame_scan(spark, verb):
                                   got_f.to_numpy(float))
     want = fn(pdf[col])
     np.testing.assert_allclose(got_s.to_numpy(float),
-                               want.to_numpy(float), rtol=1e-12,
+                               want.to_numpy(float),
+                               rtol=tol[0] if tol else 1e-12,
                                equal_nan=True)
 
 

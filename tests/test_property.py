@@ -366,3 +366,99 @@ def test_fill_limit_differential_generated(spark):
         assert _norm(got_b.tolist()) == _norm(want_b.tolist())
 
     check()
+
+
+# ------------------------------ EWM statistics on holey input -------
+
+_EWM_STATS = (("mean", {}), ("sum", {}), ("var", {}),
+              ("var", {"bias": True}), ("std", {}),
+              ("std", {"bias": True}))
+
+
+def _ewm_agrees(got, x, alpha, stat, kw):
+    """The engine's EWM ``stat`` of ``x`` against pandas.  The
+    tolerance follows the conditioning of the four weighted totals the
+    scan carries (Σw·x, Σw·x², Σw, Σw²): the variance is
+    Σw·x²/Σw − mean², whose rounding error scales with max x² (std is
+    compared squared, as a variance), and the unbiased factor
+    (Σw)²/((Σw)² − Σw²) amplifies it.  The unbiased statistics skip
+    the rows where pandas' own factor is rounding noise: at or after a
+    value where fewer than two values carry weight (pandas reads 0 or
+    NaN for the same exact value), and deep in a null run, where
+    pandas recomputes the factor from weight totals that underflow
+    while the engine repeats the value at the last observation."""
+    import numpy as np
+    want = getattr(x.ewm(alpha=alpha, adjust=True), stat)(**kw).to_numpy()
+    got = np.asarray(got, dtype="float64")
+    big = float(np.nanmax(np.abs(x))) if x.notna().any() else 0.0
+    keep = np.ones(len(x), dtype=bool)
+    if stat in ("mean", "sum"):
+        tol = 1e-12 * big / alpha
+    else:
+        if stat == "std":
+            got, want = got * got, want * want
+        factor = 1.0
+        if not kw.get("bias"):
+            seen = x.notna()
+            sw = seen.astype("float64").ewm(alpha=alpha).sum()
+            sw2 = (seen.astype("float64")
+                   .ewm(alpha=1.0 - (1.0 - alpha) ** 2).sum())
+            rel = (1.0 - sw2 / (sw * sw)).where(seen).ffill().to_numpy()
+            keep = (rel > 1e-6) & (sw.to_numpy() ** 2 > 1e-290)
+            factor = 1.0 / np.where(keep, rel, 1.0)
+        tol = 1e-12 * big * big * factor
+    assert (np.isnan(got) == np.isnan(want))[keep].all(), (stat, kw)
+    both = keep & ~np.isnan(want)
+    assert (np.abs(got - want) <= tol + 1e-9 * np.abs(want))[both].all(), \
+        (stat, kw, np.abs(got - want)[both].max())
+
+
+def _check_ewm_handles(x, alpha, stat, kw):
+    """``stat`` of the Series ``x`` and of the frame holding ``x`` and
+    an all-null column, both against pandas."""
+    import numpy as np
+    pdf = pd.DataFrame({"a": x, "b": np.nan})
+    df = pas.DataFrame.from_pandas(pdf)
+    got_s = getattr(df["a"].ewm(alpha), stat)(**kw).to_pandas()
+    got_f = getattr(df.ewm(alpha), stat)(**kw).to_pandas()
+    for got, c in ((got_s, "a"), (got_f["a"], "a"), (got_f["b"], "b")):
+        _ewm_agrees(got.sort_index(), pdf[c], alpha, stat, kw)
+
+
+def test_ewm_holey_generated(spark):
+    """Every global EWM statistic of both handles on holey input —
+    leading nulls, an all-null column, ``alpha=1`` and a null run that
+    underflows w^k — with small Arrow batches over the 4 test
+    partitions, so the carries cross batches and partitions."""
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", 5)
+    try:
+        lead_holes = pd.Series([None, None, 1.5, None, -2.0, 4.0, None,
+                                None, 0.5, 3.0, None, -1.0],
+                               dtype="float64")
+        long_run = pd.Series([1.5, -2.0, None, 4.0] + [None] * 450
+                             + [3.0, 0.5, None, 4.0], dtype="float64")
+        for stat, kw in _EWM_STATS:
+            _check_ewm_handles(lead_holes, 1.0, stat, kw)
+            _check_ewm_handles(long_run, 0.9, stat, kw)
+
+        @_SLOW
+        @given(xs=st.lists(st.one_of(st.floats(min_value=-100,
+                                               max_value=100,
+                                               allow_nan=False),
+                                     st.none()),
+                           min_size=1, max_size=40),
+               lead=st.integers(min_value=0, max_value=3),
+               alpha=st.one_of(st.just(1.0),
+                               st.floats(min_value=0.05, max_value=1.0)),
+               which=st.integers(min_value=0,
+                                 max_value=len(_EWM_STATS) - 1))
+        def check(xs, lead, alpha, which):
+            stat, kw = _EWM_STATS[which]
+            _check_ewm_handles(pd.Series([None] * lead + xs,
+                                         dtype="float64"),
+                               alpha, stat, kw)
+
+        check()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
+                       10000)

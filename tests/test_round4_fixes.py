@@ -102,15 +102,27 @@ def test_series_ewm_no_single_partition_window(spark):
 def test_groupby_ewm_matches_pandas(spark):
     import numpy as np
     rng = np.random.default_rng(5)
-    pdf = pd.DataFrame({"g": rng.integers(0, 20, 2000),
-                        "x": rng.normal(50, 9, 2000).round(2)})
-    pdf.index.name = "i"
-    df = pas.DataFrame.from_pandas(pdf.reset_index()).set_index("i")
-    got = (df.groupby("g")["x"].ewm(alpha=0.4).mean().to_pandas()
-           .sort_index())
-    want = (pdf.sort_index().groupby("g")["x"]
-            .transform(lambda s: s.ewm(alpha=0.4, adjust=True).mean()))
-    assert np.abs(got.to_numpy() - want.to_numpy()).max() < 1e-9
+    dense = pd.DataFrame({"g": rng.integers(0, 20, 2000),
+                          "x": rng.normal(50, 9, 2000).round(2)})
+    # 20% nulls, three of them leading, in four groups: a null row
+    # repeats its group's last mean (at alpha=1 too), a leading null
+    # stays NaN
+    x = rng.normal(0, 1, 400)
+    x[rng.random(400) < 0.2] = np.nan
+    x[:3] = np.nan
+    holes = pd.DataFrame({"g": rng.integers(0, 4, 400), "x": x})
+    for pdf, alpha in ((dense, 0.4), (holes, 0.3), (holes, 1.0)):
+        pdf.index.name = "i"
+        df = pas.DataFrame.from_pandas(pdf.reset_index()).set_index("i")
+        want = (pdf.sort_index().groupby("g")["x"].transform(
+            lambda s: s.ewm(alpha=alpha, adjust=True).mean()))
+        # the per-column form and the frame-level form
+        for out in (df.groupby("g")["x"].ewm(alpha=alpha).mean(),
+                    df.groupby("g").ewm(alpha).mean()["x"]):
+            got = out.to_pandas().sort_index()
+            assert (got.isna().to_numpy() == want.isna().to_numpy()).all()
+            assert np.nanmax(np.abs(got.to_numpy()
+                                    - want.to_numpy())) < 1e-9
 
 
 def test_groupby_rolling_matches_pandas(spark):

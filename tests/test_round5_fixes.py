@@ -6,7 +6,7 @@
   instead of silently returning NaN; ``mean(exact=True)`` is the
   unbounded escape hatch.
 - GroupBy.filter hands ``fn`` the group's ORIGINAL index.
-- stateful_ewm drops null values (batch-contract alignment).
+- stateful_ewm follows pandas on null values, as the batch scan does.
 - content-addressed sample thresholds round half-even, matching
   DuckDB's CAST(frac * 2**60 AS BIGINT) exactly.
 """
@@ -35,7 +35,8 @@ def test_ewm_alpha_validation(spark, alpha):
     with pytest.raises(ValueError, match="alpha"):
         df.groupby("k")["v"].ewm(alpha)
     with pytest.raises(ValueError, match="alpha"):
-        scan.ewm_mean(df.to_spark(), "v", "k", alpha)
+        scan.ewm_multi(df.to_spark(), ["v"], ["k"], alpha,
+                       out_cols=["ewm"])
 
 
 def test_ewm_alpha_one_is_identity(spark):
@@ -114,9 +115,10 @@ def test_stateful_ewm_alpha_validation(spark):
         stateful.stateful_ewm(None, alpha=0.0)
 
 
-def test_stateful_ewm_drops_nulls(spark, tmp_path):
-    """Null values are dropped, matching the batch twin's 'filter
-    first' precondition — not imputed as 0."""
+def test_stateful_ewm_nulls_follow_pandas(spark, tmp_path):
+    """Null values follow pandas' ``ignore_na=False``, as in the batch
+    scan: no weight of their own, but they decay the weights before
+    them — neither dropped nor imputed as 0."""
     from pandas_alchemy_spark.streaming import stateful, stream_events
     pdf = pd.DataFrame({
         "event_id": range(6),
@@ -143,7 +145,7 @@ def test_stateful_ewm_drops_nulls(spark, tmp_path):
         q.awaitTermination(120)
         got = spark.table("t_r5_null_ewm").toPandas()
         final = float(got.groupby("user_id").last()["ewm_value"].iloc[0])
-        want = float(pdf["value"].dropna()
+        want = float(pdf["value"]
                      .ewm(alpha=0.25, adjust=True).mean().iloc[-1])
         assert abs(final - want) < 1e-12
     finally:

@@ -602,19 +602,27 @@ def test_frame_interpolate_one_scan(spark):
 def test_ewm_var_global_differential(spark):
     import numpy as np
     rng = np.random.default_rng(11)
-    ps = pd.Series(rng.normal(size=400).cumsum())
-    s = pas.Series.from_pandas(ps)
-    for alpha in (0.1, 0.5):
-        for bias in (False, True):
-            got = s.ewm(alpha).var(bias=bias).to_pandas() \
-                .sort_index().to_numpy()
-            want = ps.ewm(alpha=alpha, adjust=True) \
-                .var(bias=bias).to_numpy()
-            np.testing.assert_allclose(got, want, rtol=1e-8,
+    walk = rng.normal(size=400).cumsum()
+    # 20% nulls, three of them leading: weights decay per row position,
+    # null rows included; a null row repeats the last biased variance
+    holes = rng.normal(size=400)
+    holes[rng.random(400) < 0.2] = np.nan
+    holes[:3] = np.nan
+    for x in (walk, holes):
+        ps = pd.Series(x)
+        s = pas.Series.from_pandas(ps)
+        for alpha in (0.1, 0.5):
+            for bias in (False, True):
+                got = s.ewm(alpha).var(bias=bias).to_pandas() \
+                    .sort_index().to_numpy()
+                want = ps.ewm(alpha=alpha, adjust=True) \
+                    .var(bias=bias).to_numpy()
+                np.testing.assert_allclose(got, want, rtol=1e-8,
+                                           equal_nan=True)
+            gs = s.ewm(alpha).std().to_pandas().sort_index().to_numpy()
+            ws = ps.ewm(alpha=alpha, adjust=True).std().to_numpy()
+            np.testing.assert_allclose(gs, ws, rtol=1e-8,
                                        equal_nan=True)
-        gs = s.ewm(alpha).std().to_pandas().sort_index().to_numpy()
-        ws = ps.ewm(alpha=alpha, adjust=True).std().to_numpy()
-        np.testing.assert_allclose(gs, ws, rtol=1e-8, equal_nan=True)
 
 
 def test_ewm_var_multibatch(spark):
@@ -647,12 +655,19 @@ def test_ewm_var_grouped_differential(spark):
 
 
 def test_ewm_var_no_single_partition(spark):
+    # every global statistic of both handles is one segmented scan:
+    # no window, no single-partition funnel, no join of two scans
     import numpy as np
     s = pas.Series.from_pandas(pd.Series(np.arange(64.0)))
-    plan = (s.ewm(0.4).var()._sdf._jdf.queryExecution()
-            .executedPlan().toString())
-    assert "SinglePartition" not in plan
-    assert "Window" not in plan
+    df = pas.DataFrame.from_pandas(pd.DataFrame(
+        {"a": np.arange(64.0), "b": np.arange(64.0)[::-1]}))
+    for h in (s.ewm(0.4), df.ewm(0.4)):
+        for out in (h.var(), h.sum()):
+            plan = (out._sdf._jdf.queryExecution()
+                    .executedPlan().toString())
+            assert "SinglePartition" not in plan
+            assert "Window" not in plan
+            assert "Join" not in plan
 
 
 # -------------------- round-5 review findings (NaN/boolean/mp=0)

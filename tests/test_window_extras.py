@@ -146,6 +146,19 @@ def test_ewm_sum_global(spark):
     np.testing.assert_allclose(
         got1.to_numpy(), ps.ewm(alpha=1.0, adjust=True).sum()
         .to_numpy(), rtol=1e-12)
+    # 20% nulls, three of them leading: the weights decay per row
+    # position, null rows included, and only non-null rows add weight
+    rng = np.random.default_rng(41)
+    x = rng.normal(size=400)
+    x[rng.random(400) < 0.2] = np.nan
+    x[:3] = np.nan
+    ph = pd.Series(x)
+    sh = pas.Series.from_pandas(ph)
+    for alpha in (0.3, 1.0):
+        got = sh.ewm(alpha=alpha).sum().to_pandas().sort_index()
+        np.testing.assert_allclose(
+            got.to_numpy(), ph.ewm(alpha=alpha, adjust=True).sum()
+            .to_numpy(), rtol=1e-9, atol=1e-12)
 
 
 def test_ewm_sum_grouped(spark):
